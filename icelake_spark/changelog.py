@@ -26,22 +26,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .table import (DeleteFileTask, FileScanTask, IcebergTable, TableScan,
-                    read_data_files)
+from .fileio import to_spark_paths
+from .planning import canon_data_path, canon_data_path_col
+from .table import DeleteFileTask, FileScanTask, IcebergTable, TableScan
 from .types.manifest import (MANIFEST_CONTENT_DELETES, STATUS_ADDED,
                              read_manifest, read_manifest_list)
 
 CHANGE_TYPE = "_change_type"
 COMMIT_SNAPSHOT = "_commit_snapshot_id"
 COMMIT_ORDER = "_commit_order"
-
-
-def _spark_path(path: str) -> str:
-    """Recorded file path → the spelling the JVM readers accept (FileIO
-    translation: s3→s3a, register_io customs → their to_spark_path)."""
-    from .fileio import resolve_io
-
-    return resolve_io(path).to_spark_path(path)
 
 
 def _added_in(table: IcebergTable, snap):
@@ -65,24 +58,6 @@ def _added_in(table: IcebergTable, snap):
     return data, pos, eq
 
 
-def _read(spark, table, spark_schema, tasks, with_position=False) -> DataFrame:
-    """read_data_files honoring the rename name-mapping (files written
-    before a rename_column resolve through their former column name)."""
-    scan = TableScan(table)
-    read_schema, coalesce_map = scan._with_name_mapping(table.schema(),
-                                                        spark_schema)
-    df = read_data_files(spark, read_schema, tasks,
-                         with_position=with_position)
-    if coalesce_map:
-        keep = [c for c in df.columns
-                if c in {f.name for f in spark_schema.fields}
-                or c.startswith("__")]
-        df = df.select(*[
-            F.coalesce(c, *coalesce_map[c]).alias(c)
-            if c in coalesce_map else F.col(c) for c in keep])
-    return df
-
-
 def _with_meta(df: DataFrame, change: str, snap, order: int,
                cols: list[str]) -> DataFrame:
     # snapshot id lit MUST cast long: this repo's sequential ids fit
@@ -103,8 +78,10 @@ def changes(table: IcebergTable, spark: SparkSession,
     _commit_snapshot_id + _commit_order (per-changelog commit index).
     from_snapshot_id=None starts before the first snapshot."""
     meta = table.metadata
-    spark_schema = table.schema().to_spark()
+    schema = table.schema()
+    spark_schema = schema.to_spark()
     cols = [f.name for f in spark_schema.fields]
+    reader = TableScan(table)
     empty = spark.createDataFrame([], spark_schema) \
         .select("*", F.lit("x").alias(CHANGE_TYPE),
                 F.lit(0).cast("long").alias(COMMIT_SNAPSHOT),
@@ -165,8 +142,8 @@ def changes(table: IcebergTable, spark: SparkSession,
 
         # inserts: added files, minus rows pos-deleted by the SAME commit
         if added_data:
-            ins = _read(spark, table, spark_schema, added_data,
-                        with_position=bool(added_pos))
+            ins = reader.read_mapped(spark, schema, spark_schema, added_data,
+                                     with_position=bool(added_pos))
             if added_pos:
                 scan = TableScan(table, snapshot_id=snap.snapshot_id)
                 ins = scan._apply_deletes(spark, ins, added_data,
@@ -183,52 +160,38 @@ def changes(table: IcebergTable, spark: SparkSession,
                 added_pos or added_eq or op in ("delete", "overwrite")):
             pdata, ppos, peq = parent_scan.plan_files(spark)
 
-        # deletes via added delete files, applied to pre-snapshot data.
+        # deletes via added delete files: the SAME delete plan joins as
+        # the read path, semi instead of anti, over pre-snapshot data.
         # Parent-era deletes are anti-joined out FIRST so a row deleted
         # by an earlier snapshot can never re-surface as a new delete.
-        if (added_pos or added_eq) and parent_scan is not None:
-            # ONE pos-delete frame per commit: the srcs inventory and
-            # both pos semi/anti joins share its plan — a per-file
-            # read+collect loop ran N driver round-trips (review r9),
-            # and srcs building its own scan tripled the parquet reads
-            # (review r12)
-            pos_df = (_pos_delete_df(spark, added_pos)
-                      if added_pos else None)
-            if added_pos:
-                from .planning import canon_data_path
-
-                srcs = {r[0] for r in pos_df.select("__del_file")
-                        .distinct().collect()}
-                hit = [t for t in pdata
-                       if canon_data_path(t.data_file.file_path) in srcs]
-                if hit:
-                    d = _read(spark, table, spark_schema, hit,
-                              with_position=True)
-                    if ppos or peq:
-                        d = parent_scan._apply_deletes(spark, d, hit, ppos, peq,
-                                                       drop_helpers=False)
-                    deleted = _semi_join_pos(spark, d, hit, added_pos,
-                                             _bcast_limit(table),
-                                             pos_df=pos_df)
-                    parts.append(_with_meta(deleted, "delete", snap, order, cols))
-            if added_eq and pdata:  # empty parent: nothing to delete from
-                d = _read(spark, table, spark_schema, pdata,
-                          with_position=True)
-                if ppos or peq:
-                    d = parent_scan._apply_deletes(spark, d, pdata, ppos, peq,
-                                                   drop_helpers=False)
-                if added_pos:
-                    # one commit may legally carry a pos delete AND an
-                    # eq delete covering the same physical row
-                    # (external writers mix them); the pos lane above
-                    # already emitted those rows' delete events, so
-                    # the eq lane excludes them (review r11)
-                    d = _semi_join_pos(spark, d, pdata, added_pos,
-                                       _bcast_limit(table),
-                                       how="left_anti", pos_df=pos_df)
-                deleted = _semi_join_eq(spark, d, pdata, added_eq,
-                                        _bcast_limit(table), table=table)
+        if added_pos and parent_scan is not None:
+            # only the parent files the pos deletes name are read
+            srcs = {r[0] for r in spark.read.parquet(*to_spark_paths(
+                [t.delete_file.file_path for t in added_pos]))
+                .select(canon_data_path_col(F.col("file_path")))
+                .distinct().collect()}
+            hit = [t for t in pdata
+                   if canon_data_path(t.data_file.file_path) in srcs]
+            if hit:
+                d = parent_scan._apply_deletes(
+                    spark, reader.read_mapped(spark, schema, spark_schema,
+                                              hit, with_position=True),
+                    hit, ppos, peq, drop_helpers=False)
+                deleted = parent_scan._apply_deletes(
+                    spark, d, hit, added_pos, [], how="left_semi")
                 parts.append(_with_meta(deleted, "delete", snap, order, cols))
+        if added_eq and pdata:  # empty parent: nothing to delete from
+            # one commit may legally carry a pos delete AND an eq delete
+            # covering the same physical row (external writers mix
+            # them); the pos lane above already emitted those rows'
+            # delete events, so the eq lane excludes them (review r11)
+            d = parent_scan._apply_deletes(
+                spark, reader.read_mapped(spark, schema, spark_schema,
+                                          pdata, with_position=True),
+                pdata, ppos + added_pos, peq, drop_helpers=False)
+            deleted = parent_scan._apply_deletes(
+                spark, d, pdata, [], added_eq, how="left_semi")
+            parts.append(_with_meta(deleted, "delete", snap, order, cols))
 
         # CoW: files removed by this snapshot -> their surviving rows
         if parent_scan is not None and op in ("delete", "overwrite"):
@@ -238,8 +201,8 @@ def changes(table: IcebergTable, spark: SparkSession,
             removed = [t for t in pdata
                        if t.data_file.file_path not in live_now]
             if removed:
-                d = _read(spark, table, spark_schema, removed,
-                          with_position=bool(ppos or peq))
+                d = reader.read_mapped(spark, schema, spark_schema, removed,
+                                       with_position=bool(ppos or peq))
                 if ppos or peq:
                     d = parent_scan._apply_deletes(spark, d, removed, ppos, peq)
                 parts.append(_with_meta(d, "delete", snap, order, cols))
@@ -250,187 +213,6 @@ def changes(table: IcebergTable, spark: SparkSession,
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    return out
-
-
-def _canon_col(c):
-    from .planning import canon_data_path_col
-
-    return canon_data_path_col(c)
-
-
-def _bcast_limit(table) -> int:
-    return int(table.metadata.properties.get(
-        "read.delete.broadcast-threshold-bytes", 32 * 1024 * 1024))
-
-
-def _maybe_broadcast(side_df: DataFrame, tasks, limit: int) -> DataFrame:
-    """Broadcast a delete side only while its planned file bytes stay
-    under the limit (same gate and table property as
-    TableScan._apply_deletes): a bulk delete can exceed broadcast
-    limits, where shuffle is the right plan. Over the limit the
-    shuffle-hash hint is REQUIRED, not just omitting the broadcast —
-    Catalyst's own size estimate can undercut autoBroadcastJoinThreshold
-    and re-broadcast the side this gate exists to keep off the driver
-    (code-review r9; same fix table.py carries since r3)."""
-    total = sum(t.delete_file.file_size_in_bytes or 0 for t in tasks)
-    return (F.broadcast(side_df) if total <= limit
-            else side_df.hint("shuffle_hash"))
-
-
-def _pos_delete_df(spark, pos: list[DeleteFileTask]) -> DataFrame:
-    """One frame over a commit's position-delete files:
-    (__del_file, __del_pos, __del_seq) with canon'd paths and each
-    file's sequence number joined in — built once per commit and
-    shared by the srcs inventory and both pos joins (review r12)."""
-    from .planning import canon_data_path
-
-    pseq = spark.createDataFrame(
-        [(canon_data_path(t.delete_file.file_path), t.sequence_number)
-         for t in pos],
-        "__src string, __del_seq long")
-    return (spark.read.parquet(
-        *[_spark_path(t.delete_file.file_path) for t in pos])
-        .withColumn("__src", _canon_col(F.col("_metadata.file_path")))
-        .select(_canon_col(F.col("file_path")).alias("__del_file"),
-                F.col("pos").alias("__del_pos"), "__src")
-        .join(F.broadcast(pseq), on="__src", how="left"))
-
-
-def _semi_join_pos(spark, df: DataFrame, data: list[FileScanTask],
-                   pos: list[DeleteFileTask], limit: int,
-                   how: str = "left_semi",
-                   pos_df: DataFrame | None = None) -> DataFrame:
-    """Rows of df matched by the position-delete files (the inverse of
-    TableScan._apply_deletes' anti-join, same sequence gate).
-    how="left_anti" inverts the selection (the eq lane uses it to
-    exclude rows the SAME commit already pos-deleted — review r11)."""
-    from .planning import canon_data_path
-
-    if "__data_seq" not in df.columns:  # _apply_deletes may have joined it
-        seq_df = spark.createDataFrame(
-            [(canon_data_path(t.data_file.file_path), t.sequence_number)
-             for t in data],
-            "__file_c string, __data_seq long")
-        df = df.withColumn("__file_c", _canon_col(F.col("__file"))) \
-               .join(F.broadcast(seq_df), on="__file_c", how="left")
-    if pos_df is None:
-        pos_df = _pos_delete_df(spark, pos)
-    cond = ((df["__file_c"] == pos_df["__del_file"])
-            & (df["__pos"] == pos_df["__del_pos"])
-            & (df["__data_seq"] <= pos_df["__del_seq"]))
-    return df.join(_maybe_broadcast(pos_df, pos, limit), on=cond,
-                   how=how)
-
-
-def _semi_join_eq(spark, df: DataFrame, data: list[FileScanTask],
-                  eq: list[DeleteFileTask], limit: int,
-                  table: "IcebergTable | None" = None) -> DataFrame:
-    """Rows of df matched by equality-delete files (strictly-older gate,
-    grouped by key-set: one semi-join per distinct equality_ids).
-
-    Key columns resolve from the delete files' equality_ids against the
-    CURRENT schema (old names coalesced via the rename name-mapping,
-    same rule as TableScan._apply_deletes): an eq-delete file written
-    before a RENAME COLUMN carries the old key name, and joining df on
-    the file's raw column names either fails analysis or silently keys
-    on an all-null pad — the delete event vanishes from the changelog."""
-    import json as _json
-
-    from .planning import canon_data_path
-    from .table import PROP_NAME_MAPPING
-
-    if "__data_seq" not in df.columns:  # _apply_deletes may have joined it
-        seq_df = spark.createDataFrame(
-            [(canon_data_path(t.data_file.file_path), t.sequence_number)
-             for t in data],
-            "__file_c string, __data_seq long")
-        df = df.withColumn("__file_c", _canon_col(F.col("__file"))) \
-               .join(F.broadcast(seq_df), on="__file_c", how="left")
-    out = None
-    # group by key-set AND the delete file's partition tuple — the
-    # same spec scoping the read path applies (review r12): a
-    # partitioned eq-delete file tombstones only its own partition's
-    # data files, so its delete EVENTS must not claim same-keyed rows
-    # elsewhere either
-    from .planning import canonical_partition, scoped_partition_key
-
-    groups: dict[tuple, list[DeleteFileTask]] = {}
-    for t in eq:
-        gk = (tuple(t.delete_file.equality_ids or ()),
-              scoped_partition_key(t.delete_file.partition))
-        groups.setdefault(gk, []).append(t)
-    for (eq_ids, part_key), tasks in groups.items():
-        keys = spark.read.option("mergeSchema", "true").parquet(
-            *[_spark_path(t.delete_file.file_path) for t in tasks])
-        if table is not None and eq_ids:
-            schema = table.schema()
-            key_cols = [schema.name_by_id(fid) for fid in eq_ids]
-            if any(c is None for c in key_cols):
-                missing = [fid for fid, c in zip(eq_ids, key_cols)
-                           if c is None]
-                raise ValueError(
-                    f"equality-delete files key on dropped column ids "
-                    f"{missing}; rewrite deletes before dropping key "
-                    f"columns")
-            raw_map = table.metadata.properties.get(PROP_NAME_MAPPING)
-            mapping = _json.loads(raw_map) if raw_map else {}
-            # a former name REUSED by a different current column must
-            # not coalesce into the key (same guard as _rename_map /
-            # _with_name_mapping): wherever the real key column is
-            # legitimately NULL, the unrelated new column's value would
-            # substitute and corrupt the delete key (code-review r9)
-            current = {f.name for f in schema.fields}
-            for c, fid in zip(key_cols, eq_ids):
-                olds = [n for n in mapping.get(str(fid), [])
-                        if n in keys.columns and n != c
-                        and n not in current]
-                if c in keys.columns and olds:
-                    keys = keys.withColumn(
-                        c, F.coalesce(F.col(c), *[F.col(o) for o in olds]))
-                elif olds:
-                    keys = keys.withColumn(
-                        c, F.coalesce(*[F.col(o) for o in olds]))
-            keys = keys.select(*key_cols)
-        else:
-            key_cols = keys.columns
-        min_seq = min(t.sequence_number for t in tasks)
-        # NULL-SAFE key equality, matching the read path's anti-join
-        # (table.py eqNullSafe): an eq-delete of a NULL-keyed row must
-        # emit its delete event — plain on=cols makes NULL != NULL and
-        # the CDC replica silently keeps the row forever
-        rhs = _maybe_broadcast(
-            keys.distinct().select(
-                *[F.col(c).alias(f"__k_{c}") for c in key_cols]),
-            tasks, limit)
-        cond = None
-        for c in key_cols:
-            term = F.col(c).eqNullSafe(F.col(f"__k_{c}"))
-            cond = term if cond is None else (cond & term)
-        scoped_df = df
-        if part_key is not None:
-            from .planning import canon_data_path as _cdp
-            scoped = [_cdp(t.data_file.file_path) for t in data
-                      if canonical_partition(t.data_file.partition
-                                             or None) == part_key]
-            if not scoped:
-                continue
-            scoped_df = df.where(F.col("__file_c").isin(scoped))
-        matched = (scoped_df.where(F.col("__data_seq") < F.lit(min_seq))
-                   .join(rhs, on=cond, how="left_semi"))
-        out = matched if out is None else out.unionByName(matched)
-    if out is None:
-        return df.limit(0)
-    if len(groups) > 1:
-        # one physical row may match eq-delete files of MORE THAN ONE
-        # equality_ids group (legal for external writers mixing key
-        # sets); the per-group semi-joins each emit it, so the union
-        # must dedup on physical row identity or the changelog carries
-        # duplicate delete events for the same row (review r12 — the
-        # group-vs-group twin of the r11 pos-vs-eq dedup)
-        ident = (["__file_c", "__pos"] if "__pos" in out.columns
-                 else out.columns)
-        out = out.dropDuplicates(ident)
     return out
 
 

@@ -8,17 +8,28 @@ Registers the Iceberg table layer as a first-class Spark data source:
           .option("snapshot_id", "...")          # optional time travel
           .load())
 
-Planning (snapshot → pruned file list) runs on the driver exactly like
-TableScan; `pushFilters` feeds simple comparisons into the zone-map file
-pruner before Spark sees the partitions; each InputPartition is one data
-file read via pyarrow with its MoR deletes applied in-place.
+Batch reads (IcelakeReader): planning (snapshot → pruned file list)
+runs on the driver exactly like TableScan; `pushFilters` feeds simple
+comparisons into the zone-map file pruner before Spark sees the
+partitions. The merge-on-read deletes come from the same
+planning.DeletePlan the Spark join builder uses (sequence gates,
+equality groups, partition scopes, canonical paths): each
+InputPartition is one data file plus the deletes that apply to it,
+read via pyarrow and masked with Arrow kernels — a row-index mask for
+position deletes and a null-safe Arrow join for equality keys.
+
+Streams: `spark.readStream.format("icelake")` is the partition-based
+IcelakePartitionStreamReader — appended files, or with
+option("changelog", "true") one CDC partition per snapshot.
+`df.writeStream.format("icelake")` is the transactional
+IcelakeStreamWriter.
 
 NOTE ON THE FAST PATH: rows here flow through Python workers (the Python
 DataSource contract), which cannot match the JVM vectorized parquet
 reader. `IcebergTable.to_df()` remains the performance path — this
 source exists for API completeness (SQL `USING icelake`, format-based
 readers, catalog-less tools). Parity target: the DSv2 upgrade path noted
-in SURVEY §4 / /root/reference's engine integrations.
+in SURVEY §4 and the reference's engine integrations.
 """
 
 from __future__ import annotations
@@ -26,6 +37,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Any, Iterator
 
+import numpy as np
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -33,7 +45,6 @@ from pyspark.sql.datasource import (
     DataSourceStreamWriter,
     EqualTo,
     InputPartition,
-    SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
 
@@ -42,18 +53,23 @@ try:  # pushdown filter classes vary by minor version
 except ImportError:  # pragma: no cover
     GreaterThan = GreaterThanOrEqual = LessThan = LessThanOrEqual = ()
 
+from .planning import canon_data_path, eq_delete_applies, plan_deletes
+
 
 @dataclass
 class _FileTask(InputPartition):
+    """One data file plus the deletes that apply to it, taken from the
+    scan's planning.DeletePlan — sequence-gated and partition-scoped on
+    the driver, so the task only reads and masks."""
     file_path: str
-    sequence_number: int
-    pos_deletes: list[tuple[str, int]]  # (delete file, delete seq)
-    eq_deletes: list[tuple[str, tuple[str, ...], int]]  # (file, key cols, seq)
-    # driver-resolved (pos, delete_seq) list for THIS file, when the
-    # delete set was small enough to group once on the driver — avoids
-    # every task re-reading every delete file (N tasks × M files)
-    resolved_pos: list[tuple[int, int]] | None = None
     file_format: str = "PARQUET"  # PARQUET | ORC | AVRO (add_files)
+    # deleted row positions, resolved ONCE on the driver while the
+    # position-delete set is under the broadcast threshold (no task
+    # re-reads every delete file: N tasks x M files); None otherwise
+    positions: Any = None
+    pos_files: tuple[str, ...] = ()  # read by the task when unresolved
+    # (key columns, equality-delete files), one entry per key group
+    eq_deletes: tuple[tuple[tuple[str, ...], tuple[str, ...]], ...] = ()
 
 
 class IcelakeDataSource(DataSource):
@@ -123,10 +139,6 @@ class IcelakeDataSource(DataSource):
         (changelog mode), nothing materialized driver-side."""
         self._install_io_registry()
         return IcelakePartitionStreamReader(self.options, schema)
-
-    def simpleStreamReader(self, schema) -> "IcelakeStreamReader":  # noqa: N802
-        self._install_io_registry()
-        return IcelakeStreamReader(self.options, schema)
 
     def streamWriter(self, schema, overwrite: bool) -> "IcelakeStreamWriter":  # noqa: N802
         self._install_io_registry()
@@ -471,8 +483,7 @@ class IcelakeReader(DataSourceReader):
                 int(end) if end is not None else None,
                 skip_overwrites=self.options.get(
                     "skip_overwrite_snapshots", "false").lower() == "true")
-            return [_FileTask(p, 0, [], [], resolved_pos=[],
-                              file_format=fmt) for p, fmt in files]
+            return [_FileTask(p, fmt) for p, fmt in files]
         kwargs: dict[str, Any] = {}
         if "snapshot_id" in self.options:
             kwargs["snapshot_id"] = int(self.options["snapshot_id"])
@@ -482,76 +493,38 @@ class IcelakeReader(DataSourceReader):
             kwargs["ref"] = self.options["ref"]
         if self.filter_parts:
             kwargs["filter"] = " AND ".join(self.filter_parts)
-        scan = t.new_scan(**kwargs)
-        data, pos, eq = scan.plan_files()
-        schema = t.schema()
-        from .planning import canonical_partition, scoped_partition_key
-
-        pos_list = [(p.delete_file.file_path, p.sequence_number) for p in pos]
-        eq_entries = []
-        for e in eq:
-            eq_ids = tuple(e.delete_file.equality_ids or ())
-            cols = tuple(schema.name_by_id(fid) or "" for fid in eq_ids)
-            if cols and not all(cols):
-                # a live eq-delete file keyed on a since-DROPPED column
-                # cannot be applied; silently skipping it (the pre-r13
-                # behavior) resurrected every row it tombstoned — the
-                # native path raises the same error (table.py
-                # _apply_deletes; code-review r8)
-                missing = [fid for fid, c in zip(eq_ids, cols) if not c]
-                raise ValueError(
-                    f"equality-delete files key on dropped column ids "
-                    f"{missing}; rewrite deletes (rewrite_position_"
-                    f"deletes / compaction) before dropping key columns")
-            if cols:
-                eq_entries.append((e.delete_file.file_path, cols,
-                                   e.sequence_number,
-                                   scoped_partition_key(
-                                       e.delete_file.partition)))
-
-        def _eq_for(d):
-            # partition-scoped eq deletes ship only to data files of
-            # their own partition — the same spec scoping the native
-            # read path applies (review r12); global deletes (empty /
-            # all-None tuples) ship everywhere
-            dk = canonical_partition(d.data_file.partition or None)
-            return [(p, c, s) for p, c, s, k in eq_entries
-                    if k is None or k == dk]
-        # small delete sets: group (pos, seq) by target file ONCE on the
-        # driver so each task ships/reads only its own deletes; big sets
-        # keep the lazy per-task path (driver memory stays bounded).
-        # cutoff reads the SAME table property as TableScan._apply_deletes
-        # and the changelog reader so tuning it governs every read path
-        pos_map: dict[str, list[tuple[int, int]]] | None = None
-        threshold = int(t.metadata.properties.get(
-            "read.delete.broadcast-threshold-bytes", 32 * 1024 * 1024))
-        total_del = sum(p.delete_file.file_size_in_bytes or 0 for p in pos)
-        if pos and total_del <= threshold:
-            import pyarrow.parquet as pq
-
-            pos_map = {}
-            for p in pos:
-                dt = pq.read_table(self._src(p.delete_file.file_path),
-                                   columns=["file_path", "pos"])
-                for src, ps in zip(dt["file_path"].to_pylist(),
-                                   dt["pos"].to_pylist()):
-                    pos_map.setdefault(_norm(src), []).append(
-                        (ps, p.sequence_number))
-        return [_FileTask(d.data_file.file_path, d.sequence_number,
-                          [] if pos_map is not None else pos_list,
-                          _eq_for(d),
-                          resolved_pos=(pos_map.get(
-                              _norm(d.data_file.file_path), [])
-                              if pos_map is not None else None),
-                          file_format=(d.data_file.file_format
-                                       or "PARQUET").upper())
-                for d in data]
+        data, pos, eq = t.new_scan(**kwargs).plan_files()
+        plan = plan_deletes(data, pos, eq, t.schema(), t.metadata.properties)
+        # a small position-delete set is read ONCE here, not per task
+        by_file = ({p.delete_file.file_path: _positions_by_file(
+                        self._src(p.delete_file.file_path))
+                    for p in plan.pos}
+                   if plan.pos and plan.pos_broadcast else None)
+        tasks = []
+        for d in data:
+            pos_d, eq_d = plan.deletes_for(d)
+            path = d.data_file.file_path
+            positions = None
+            if by_file is not None:
+                hits = [by_file[p.delete_file.file_path].get(
+                    canon_data_path(path)) for p in pos_d]
+                hits = [h for h in hits if h is not None]
+                positions = np.concatenate(hits) if hits else None
+            tasks.append(_FileTask(
+                path, (d.data_file.file_format or "PARQUET").upper(),
+                positions=positions,
+                pos_files=(() if by_file is not None else
+                           tuple(p.delete_file.file_path for p in pos_d)),
+                eq_deletes=tuple(
+                    (g.key_cols, tuple(t.delete_file.file_path for t in ts))
+                    for g, ts in eq_d)))
+        return tasks
 
     def read(self, partition: _FileTask) -> Iterator:
         """Read one data file with pyarrow (format-dispatched: the table
         layer legitimately holds ORC/AVRO files via add_files and
-        write.format.default), apply MoR deletes, yield Arrow record
-        batches (Spark converts via Arrow)."""
+        write.format.default), mask out its MoR deletes with Arrow
+        kernels, yield Arrow record batches (Spark converts via Arrow)."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -569,62 +542,42 @@ class IcelakeReader(DataSourceReader):
         else:
             table = pq.read_table(self._src(partition.file_path))
 
-        # position deletes targeting this file, seq-gated
-        drop_rows: set[int] = set()
-        if partition.resolved_pos is not None:
-            drop_rows = {p for p, dseq in partition.resolved_pos
-                         if partition.sequence_number <= dseq}
-        else:
-            for dpath, dseq in partition.pos_deletes:
-                if partition.sequence_number > dseq:
-                    continue
-                dt = pq.read_table(self._src(dpath),
-                                   columns=["file_path", "pos"])
-                fp = dt["file_path"].to_pylist()
-                pos = dt["pos"].to_pylist()
-                for f, p in zip(fp, pos):
-                    if _norm(f) == _norm(partition.file_path):
-                        drop_rows.add(p)
-        if drop_rows:
-            mask = pa.array((i not in drop_rows
-                                 for i in range(table.num_rows)), type=pa.bool_())
-            table = table.filter(mask)
+        n = table.num_rows
+        keep = np.ones(n, dtype=bool)
+        positions = [] if partition.positions is None \
+            else [partition.positions]
+        canon = canon_data_path(partition.file_path)
+        for f in partition.pos_files:
+            hit = _positions_by_file(self._src(f)).get(canon)
+            if hit is not None:
+                positions.append(hit)
+        for ps in positions:
+            keep[ps[(ps >= 0) & (ps < n)]] = False
 
-        # equality deletes: data_seq < delete_seq. A key column missing
-        # from an old file reads as NULL — it must MATCH AS NULL, not be
-        # dropped from the key (narrowing the key over-deletes: every
-        # row sharing the present columns would match).
-        id_map_k = _parquet_id_map(table.schema, foreign)  # loop-invariant
-        for dpath, cols, dseq in partition.eq_deletes:
-            if not partition.sequence_number < dseq:
-                continue
-            cols = list(cols)
-            # delete files hold only key cols — resolve them with the
-            # SAME field-id/rename stack as data columns: after
-            # ALTER TABLE ... RENAME COLUMN the current key name is not
-            # in old delete files, and an all-None pad would resurrect
-            # every deleted row AND spuriously delete NULL-key rows
-            # (code-review r8)
-            dt = pq.read_table(self._src(dpath))
-            id_map_d = _parquet_id_map(
-                dt.schema, _is_foreign_file(self.options["path"], dpath))
-            del_cols = {}
-            for c in cols:
-                arr = _resolve_column(dt, c, self.rename_map,
-                                      self.field_ids.get(c), id_map_d)
-                del_cols[c] = (arr.to_pylist() if arr is not None
-                               else [None] * dt.num_rows)
-            deleted = set(zip(*[del_cols[c] for c in cols]))
-            key_cols = {}
-            for c in cols:  # field-id/rename-aware resolution
-                arr = _resolve_column(table, c, self.rename_map,
-                                      self.field_ids.get(c), id_map_k)
-                key_cols[c] = (arr.to_pylist() if arr is not None
-                               else [None] * table.num_rows)
-            keys = zip(*[key_cols[c] for c in cols])
-            mask = pa.array((k not in deleted for k in keys),
-                            type=pa.bool_())
-            table = table.filter(mask)
+        # equality deletes: key columns (data AND delete side) resolve
+        # with the SAME field-id/rename stack as data columns — after
+        # RENAME COLUMN old delete files lack the current name, and an
+        # all-None pad would resurrect every deleted row (code-review
+        # r8). A key column missing from an old file reads as NULL and
+        # must MATCH AS NULL, not narrow the key (which over-deletes).
+        id_map = _parquet_id_map(table.schema, foreign)
+
+        def key(t, c, ids):
+            arr = _resolve_column(t, c, self.rename_map,
+                                  self.field_ids.get(c), ids)
+            return arr if arr is not None else pa.nulls(t.num_rows)
+
+        for cols, files in partition.eq_deletes:
+            dels = []
+            for f in files:
+                dt = pq.read_table(self._src(f))
+                ids = _parquet_id_map(
+                    dt.schema, _is_foreign_file(self.options["path"], f))
+                dels.append([key(dt, c, ids) for c in cols])
+            keep[_eq_delete_hits([key(table, c, id_map) for c in cols],
+                                 [list(k) for k in zip(*dels)])] = False
+        if not keep.all():
+            table = table.filter(pa.array(keep))
 
         # project/pad to the requested schema — the shared resolution
         # stack (field-id / rename / struct rebind / spec-physical
@@ -632,6 +585,68 @@ class IcelakeReader(DataSourceReader):
         yield from _project_table_to_schema(
             table, self.spark_schema, self.rename_map, self.field_ids,
             self.ice_fields, foreign).to_batches()
+
+
+def _positions_by_file(src) -> dict[str, "np.ndarray"]:
+    """{canon data path: deleted row positions} of one position-delete
+    file, grouped by Arrow — no per-row Python."""
+    import pyarrow.parquet as pq
+
+    g = (pq.read_table(src, columns=["file_path", "pos"])
+         .group_by("file_path").aggregate([("pos", "list")]))
+    if not g.num_rows:
+        return {}
+    lists = g["pos_list"].combine_chunks()
+    values = lists.flatten().to_numpy(zero_copy_only=False)
+    offsets = lists.offsets.to_numpy() - lists.offsets[0].as_py()
+    out: dict[str, np.ndarray] = {}
+    for path, lo, hi in zip(g["file_path"].to_pylist(), offsets[:-1],
+                            offsets[1:]):
+        k = canon_data_path(path)
+        out[k] = (np.concatenate([out[k], values[lo:hi]]) if k in out
+                  else values[lo:hi])
+    return out
+
+
+def _eq_delete_hits(data_keys: list, delete_keys: list[list]) -> "np.ndarray":
+    """Row indices whose key tuple (`data_keys`, one array per key
+    column) equals some delete key tuple (`delete_keys`: per key column,
+    one array per delete file), with Spark's eqNullSafe semantics: NULL
+    matches NULL, NaN matches NaN, -0.0 matches 0.0.
+
+    Table.join never matches NULL keys, so each key column joins as two
+    keys: its value with nulls filled, plus its is_null flag."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def chunks(x) -> list:
+        return x.chunks if isinstance(x, pa.ChunkedArray) else [x]
+
+    def spark_eq(x):
+        if pa.types.is_floating(x.type):
+            x = pc.if_else(pc.equal(x, 0), pa.scalar(0.0, x.type), x)
+            x = pc.if_else(pc.is_nan(x), pa.scalar(float("nan"), x.type), x)
+        return x
+
+    left = {"__i": pa.array(np.arange(len(data_keys[0])))}
+    right = {}
+    for j, (a, bs) in enumerate(zip(data_keys, delete_keys)):
+        # one type per key column (files written before a type
+        # promotion hold the narrower type; absent columns are null)
+        typ = pa.unify_schemas(
+            [pa.schema([("k", x.type)]) for x in (a, *bs)],
+            promote_options="permissive").field("k").type
+        a = spark_eq(pa.chunked_array(chunks(a.cast(typ)), type=typ))
+        b = spark_eq(pa.chunked_array(
+            [c for x in bs for c in chunks(x.cast(typ))], type=typ))
+        left[f"n{j}"], right[f"n{j}"] = pc.is_null(a), pc.is_null(b)
+        valid = pc.drop_null(pa.chunked_array(a.chunks + b.chunks, type=typ))
+        if len(valid):
+            left[f"k{j}"] = pc.fill_null(a, valid[0])
+            right[f"k{j}"] = pc.fill_null(b, valid[0])
+    hits = pa.table(left).join(pa.table(right), keys=list(right),
+                               join_type="left semi")
+    return hits["__i"].to_numpy()
 
 
 def _project_table_to_schema(table, spark_schema, rename_map, field_ids,
@@ -826,8 +841,8 @@ def _plan_changelog_tasks(table, start_off: int, end_off: int) -> list:
     alive: dict[str, tuple[str, int]] = {}  # canon → (path, seq)
     first_walked = True
     # sort by the STREAM offset (seq on v2, commit timestamp on v1
-    # where every seq is 0), matching _changelog_rows: the early break
-    # below is only safe when the walk order is the offset order
+    # where every seq is 0): the early break below is only safe when
+    # the walk order is the offset order
     for snap in sorted(table.metadata.snapshots,
                        key=lambda x: (_stream_offset_of(table, x),
                                       x.sequence_number)):
@@ -861,7 +876,7 @@ def _plan_changelog_tasks(table, start_off: int, end_off: int) -> list:
                     if foreign:
                         if e.is_alive:
                             # predates this snapshot: alive BEFORE it
-                            alive[_norm(p)] = (p, seq)
+                            alive[canon_data_path(p)] = (p, seq)
                         continue
                     alive_updates.append((e.status, p, seq, 0))
                     if e.status == STATUS_ADDED:
@@ -894,9 +909,9 @@ def _plan_changelog_tasks(table, start_off: int, end_off: int) -> list:
         pos_acc.extend(p for p, _s in added_pos)
         for status, p, seq, _c in alive_updates:
             if status == STATUS_DELETED:
-                alive.pop(_norm(p), None)
+                alive.pop(canon_data_path(p), None)
             else:  # ADDED or EXISTING (rewrite): (re)record identically
-                alive[_norm(p)] = (p, seq)
+                alive[canon_data_path(p)] = (p, seq)
     return out
 
 
@@ -933,7 +948,7 @@ def _eq_key_cols(file_cols, names: list[str], rmap: dict):
 
 def _make_file_rows(names: list[str], rmap: dict,
                     table_store: str = "", io=None):
-    """Rename-aware cached row reader shared by the changelog decoders:
+    """Rename-aware cached row reader of the changelog stream decoder:
     file_rows(path) → list of row tuples in `names` order (a requested
     column absent from the file pads None, or reads via its former
     name). Caches per path — the eq-delete branch revisits files."""
@@ -966,6 +981,22 @@ def _make_file_rows(names: list[str], rmap: dict,
     return file_rows
 
 
+_NAN_KEY = object()
+
+
+def _eq_key(vals) -> tuple:
+    """Key tuple under Spark's equality: every NaN equals every NaN.
+    Python's float NaN never equals itself, so a NaN key would never
+    match its delete; None == None and -0.0 == 0.0 already hold."""
+    return tuple(_NAN_KEY if isinstance(v, float) and v != v else v
+                 for v in vals)
+
+
+def _key_set(kt, cols: list[str]) -> set[tuple]:
+    """Key tuples of an equality-delete file's `cols`."""
+    return {_eq_key(k) for k in zip(*[kt[c].to_pylist() for c in cols])}
+
+
 def _changelog_snapshot_rows(names: list[str], rmap: dict,
                              task: "_ChangeSnapshotTask",
                              table_store: str = "", io=None) -> list[tuple]:
@@ -974,8 +1005,8 @@ def _changelog_snapshot_rows(names: list[str], rmap: dict,
     planned, linear manifest I/O): own added-file lists, prior delete
     FILES (pos files build the positional dead-set; eq files become
     key sets consulted per candidate row under the data file's
-    sequence gate), and the alive-before map. Identical verdicts to
-    _changelog_rows' accumulated walk, with ZERO manifest I/O here."""
+    sequence gate), and the alive-before map. ZERO manifest I/O here.
+    Verdicts match the batch `IcebergTable.changes`."""
     import pyarrow.parquet as pq
 
     file_rows = _make_file_rows(names, rmap, table_store, io)
@@ -992,18 +1023,17 @@ def _changelog_snapshot_rows(names: list[str], rmap: dict,
         t = pq.read_table(_src(p), columns=["file_path", "pos"])
         for src, pos in zip(t["file_path"].to_pylist(),
                             t["pos"].to_pylist()):
-            prior_dead.add((_norm(src), pos))
+            prior_dead.add((canon_data_path(src), pos))
     prior_eq: list[tuple[list[int], set, int]] = []
     for p, dseq in task.prior_eq_files:
         kt = pq.read_table(_src(p))
         kc, ki = _eq_key_cols(kt.column_names, names, rmap)
-        keys = {tuple(kt[c][i].as_py() for c in kc)
-                for i in range(kt.num_rows)}
-        prior_eq.append((ki, keys, dseq))
+        prior_eq.append((ki, _key_set(kt, kc), dseq))
 
     def dead_by_prior_eq(row: tuple, fseq: int) -> bool:
         # eq deletes kill strictly-older data only (data_seq < del_seq)
-        return any(fseq < dseq and tuple(row[j] for j in ki) in keys
+        return any(eq_delete_applies(fseq, dseq)
+                   and _eq_key(row[j] for j in ki) in keys
                    for ki, keys, dseq in prior_eq if ki)
 
     same_commit_deleted: set[tuple[str, int]] = set()
@@ -1012,13 +1042,13 @@ def _changelog_snapshot_rows(names: list[str], rmap: dict,
         t = pq.read_table(_src(p))
         for src, pos in zip(t["file_path"].to_pylist(),
                             t["pos"].to_pylist()):
-            key = _norm(src)
+            key = canon_data_path(src)
             same_commit_deleted.add((key, pos))
             pos_by_src.setdefault(key, []).append(pos)
 
     rows: list[tuple] = []
     for p, _seq in added_data:
-        ckey = _norm(p)
+        ckey = canon_data_path(p)
         for i, r in enumerate(file_rows(p)):
             if (ckey, i) in same_commit_deleted:
                 continue
@@ -1046,10 +1076,9 @@ def _changelog_snapshot_rows(names: list[str], rmap: dict,
         for p, del_seq in added_eq:
             kt = pq.read_table(_src(p))
             kc, ki = _eq_key_cols(kt.column_names, names, rmap)
-            keys = {tuple(kt[c][i].as_py() for c in kc)
-                    for i in range(kt.num_rows)}
+            keys = _key_set(kt, kc)
             for ckey, (real, fseq) in older.items():
-                if fseq >= del_seq:
+                if not eq_delete_applies(fseq, del_seq):
                     continue
                 for i, r in enumerate(file_rows(real)):
                     # same_commit_deleted: a commit may legally carry a
@@ -1064,7 +1093,7 @@ def _changelog_snapshot_rows(names: list[str], rmap: dict,
                         continue
                     if dead_by_prior_eq(r, fseq):
                         continue
-                    if tuple(r[j] for j in ki) in keys:
+                    if _eq_key(r[j] for j in ki) in keys:
                         rows.append(r + ("delete",))
                         eq_dead_local.add((ckey, i))
     return rows
@@ -1099,13 +1128,15 @@ class IcelakePartitionStreamReader(DataSourceStreamReader):
     by append snapshots in (start_seq, end_seq], one InputPartition per
     file, read on EXECUTORS as Arrow batches. Exactly-once comes from
     deterministic replay: partitions(start, end) re-derives the same
-    file list from the same immutable snapshot range.
+    file list from the same immutable snapshot range. With
+    option("changelog", "true") each micro-batch is one partition per
+    snapshot, decoded on executors from a driver-planned payload
+    (_plan_changelog_tasks / _changelog_snapshot_rows).
 
-    This replaces the driver-materializing SimpleDataSourceStreamReader
-    for the data path (a large append snapshot would otherwise OOM the
-    driver); the simple reader remains only as the changelog prototype.
-    Parity: Iceberg's Spark streaming source semantics over the
-    reference's snapshot model (table.rs:281-304)."""
+    It is the only stream reader: nothing is materialized on the
+    driver, so a large append snapshot cannot OOM it. Parity: Iceberg's
+    Spark streaming source semantics over the reference's snapshot
+    model (table.rs:281-304)."""
 
     def __init__(self, options: dict, schema):
         from .table import IcebergTable
@@ -1283,324 +1314,6 @@ class IcelakePartitionStreamReader(DataSourceStreamReader):
         pass
 
 
-class IcelakeStreamReader(SimpleDataSourceStreamReader):
-    """`spark.readStream.format("icelake")`: snapshot-based micro-batch
-    source. Offsets are table sequence numbers — each micro-batch reads
-    the data files ADDED by append snapshots in (start_seq, end_seq];
-    non-append snapshots (overwrite/delete/replace) are skipped, matching
-    Iceberg's append-only streaming-read contract. Exactly-once comes
-    from deterministic replay: readBetweenOffsets re-derives the same
-    file list from the same immutable snapshot range."""
-
-    def __init__(self, options: dict, schema):
-        self.options = options
-        self.spark_schema = schema
-        self.path = options["path"]
-
-    def initialOffset(self) -> dict:  # noqa: N802
-        # start from the beginning of history unless pinned
-        start = int(self.options.get("starting_sequence_number", 0))
-        return {"seq": start}
-
-    def _table(self):
-        from .table import IcebergTable
-
-        return IcebergTable.load(self.path)
-
-    _offset_of = staticmethod(_stream_offset_of)
-
-    def _end_offset(self, table) -> int:
-        return _stream_end_offset(table)
-
-    def _files_between(self, table, start_seq: int, end_seq: int) -> list[str]:
-        return [p for p, _fmt in
-                _stream_files_between(table, start_seq, end_seq)]
-
-    def _rows(self, files: list[str]) -> list[tuple]:
-        # materialized (not a generator): the simple-reader contract
-        # prefetches and caches each micro-batch on the driver, which
-        # pickles the row collection. Size a micro-batch accordingly;
-        # the partition-based DataSourceStreamReader is the upgrade path
-        # when per-batch volume outgrows the driver.
-        import pyarrow.parquet as pq
-
-        src_t = self._table()
-        rmap = _rename_map(src_t)
-        fids = {f.name: f.field_id for f in src_t.schema().fields}
-        ice_fields = {f.name: f.field_type for f in src_t.schema().fields}
-        rows: list[tuple] = []
-        for path in files:
-            t = pq.read_table(_arrow_src(path))
-            projected = _project_table_to_schema(
-                t, self.spark_schema, rmap, fids, ice_fields,
-                _is_foreign_file(self.path, path))
-            rows.extend(tuple(d.values()) for d in projected.to_pylist())
-        return rows
-
-    @property
-    def _changelog(self) -> bool:
-        return self.options.get("changelog", "").lower() in ("true", "1")
-
-    def read(self, start: dict):
-        table = self._table()
-        end_seq = self._end_offset(table)
-        start_seq = int(start["seq"])
-        if end_seq <= start_seq:
-            # must be a true iterator: the no-advance path probes next()
-            return iter(()), start
-        if self._changelog:
-            return (self._change_rows(table, start_seq, end_seq),
-                    {"seq": end_seq})
-        files = self._files_between(table, start_seq, end_seq)
-        return self._rows(files), {"seq": end_seq}
-
-    def readBetweenOffsets(self, start: dict, end: dict):  # noqa: N802
-        table = self._table()
-        if self._changelog:
-            return self._change_rows(table, int(start["seq"]),
-                                     int(end["seq"]))
-        files = self._files_between(table, int(start["seq"]),
-                                    int(end["seq"]))
-        return self._rows(files)
-
-    def commit(self, end: dict) -> None:
-        pass
-
-    # --------------------------------------------------- changelog mode
-
-    def _change_rows(self, table, start_seq: int, end_seq: int) -> list[tuple]:
-        names = [f.name for f in self.spark_schema.fields
-                 if f.name != "_change_type"]
-        return _changelog_rows(table, names, _rename_map(table),
-                               start_seq, end_seq)
-
-
-def _changelog_rows(table, names: list[str], rmap: dict,
-                    start_seq: int, end_seq: int) -> list[tuple]:
-    """CDC reconstruction: rows + _change_type for every snapshot in
-    (start_seq, end_seq]:
-
-    - append snapshots → added files' rows as inserts
-    - added pos-delete files → referenced rows (pyarrow take) as
-      deletes, skipping positions already deleted earlier
-    - added eq-delete files → key-matched rows of strictly-older
-      data files as deletes
-    CoW rewrites are not decoded by the STREAMING reader (batch
-    `IcebergTable.changes` covers them); tables streamed as CDC
-    should keep `write.delete.mode=merge-on-read` (the default).
-
-    This is the SIMPLE (driver-side) decoder; the partition-based
-    stream reader's executor tasks use _changelog_snapshot_rows with
-    driver-planned prior-delete payloads instead.
-    """
-    import pyarrow.parquet as pq
-
-    from .types.manifest import (MANIFEST_CONTENT_DELETES, STATUS_ADDED,
-                                 read_manifest, read_manifest_list)
-
-    # (file,pos) pairs pos-deleted by one snapshot (for the running
-    # dead-set accumulated while walking snapshots in seq order —
-    # re-deriving "all deletes before seq" per snapshot would rescan
-    # every prior snapshot's manifests each time: quadratic I/O)
-    def snap_pos_deletes(s) -> set[tuple[str, int]]:
-        dead: set[tuple[str, int]] = set()
-        for mle in read_manifest_list(table._resolve(s.manifest_list)):
-            if (mle.added_snapshot_id != s.snapshot_id
-                    or mle.content != MANIFEST_CONTENT_DELETES):
-                continue
-            _, entries = read_manifest(table._resolve(mle.manifest_path))
-            for e in entries:
-                if e.data_file.content != 1:
-                    continue
-                t = pq.read_table(table._resolve(e.data_file.file_path))
-                for src, pos in zip(t["file_path"].to_pylist(),
-                                    t["pos"].to_pylist()):
-                    dead.add((_norm(src), pos))
-        return dead
-
-    # rename-aware cached reader shared with the partition-stream
-    # decoder (the cache matters: the eq-delete branch walks every
-    # parent-era file once PER delete file)
-    _reader = _make_file_rows(names, rmap)
-
-    def file_rows(path, positions=None, skip: set | None = None):
-        all_rows = _reader(path)
-        key = _norm(path)
-        idx = (range(len(all_rows)) if positions is None else positions)
-        return [all_rows[i] for i in idx
-                if i < len(all_rows)
-                and not (skip and (key, i) in skip)]
-
-    rows: list[tuple] = []
-    # sort by the STREAM offset (== sequence number on v2; commit
-    # timestamp on v1 where every seq is 0) so the early-exit break
-    # below is safe on both format versions
-    snaps = sorted(table.metadata.snapshots,
-                   key=lambda s: (_stream_offset_of(table, s),
-                                  s.sequence_number))
-    main_ids = table.metadata.ancestry_ids()
-    dead_acc: set[tuple[str, int]] = set()  # pos deletes seen so far
-    # eq-delete files from snapshots OUTSIDE the window (e.g. an
-    # earlier micro-batch): a key they killed must not re-emit a
-    # delete event when a later eq delete hits it again — batch
-    # boundaries must not change the changelog (code-review r8)
-    eq_prior: list[tuple[list[int], set, int]] = []
-
-    def fold_eq_prior(s) -> None:
-        from .types.manifest import (MANIFEST_CONTENT_DELETES as _MCD,
-                                     read_manifest as _rm,
-                                     read_manifest_list as _rml)
-
-        for mle in _rml(table._resolve(s.manifest_list)):
-            if (mle.added_snapshot_id != s.snapshot_id
-                    or mle.content != _MCD):
-                continue
-            for e in _rm(table._resolve(mle.manifest_path))[1]:
-                if e.data_file.content != 2 or e.status != STATUS_ADDED:
-                    continue
-                dseq = (e.sequence_number if e.sequence_number is not None
-                        else mle.sequence_number)
-                kt = pq.read_table(table._resolve(e.data_file.file_path))
-                # rename-aware key resolution (ADVICE r8): see
-                # _eq_key_cols — old-name columns map to their renamed
-                # field's index, symmetric with the key tuples
-                kc, ki = _eq_key_cols(kt.column_names, names, rmap)
-                keys = {tuple(kt[c][i].as_py() for c in kc)
-                        for i in range(kt.num_rows)}
-                eq_prior.append((ki, keys, dseq))
-
-    def dead_by_prior_eq(r: tuple, fseq: int) -> bool:
-        return any(fseq < dseq and tuple(r[j] for j in ki) in keys
-                   for ki, keys, dseq in eq_prior if ki)
-
-    for s in snaps:
-        if s.snapshot_id not in main_ids:
-            continue  # WAP branch-staged snapshot: not published
-        if _stream_offset_of(table, s) > end_seq:
-            # snaps are offset-sorted: snapshots PAST the window can't
-            # affect it, and folding them would decode every future
-            # snapshot's delete parquet on every micro-batch — wasted
-            # I/O growing with history ahead of the window (ADVICE r8)
-            break
-        in_range = start_seq < _stream_offset_of(table, s) <= end_seq
-        op = (s.summary or {}).get("operation", "append")
-        # a snapshot that REMOVED data files (compaction 'replace',
-        # CoW delete/overwrite rewrite) re-adds survivor files whose
-        # rows already streamed — emitting those adds would produce
-        # phantom inserts. Like 'replace', such snapshots are not
-        # decoded (the CoW-removed rows' delete events are a batch
-        # changes() feature, not reconstructable from adds alone).
-        rewrote = int((s.summary or {}).get(
-            "deleted-data-files", 0) or 0) > 0
-        if not in_range or op == "replace" or rewrote:
-            # still fold this snapshot's pos AND eq deletes into the
-            # running dead state for later snapshots in the range
-            dead_acc |= snap_pos_deletes(s)
-            fold_eq_prior(s)
-            continue
-        added_data, added_pos, added_eq = [], [], []
-        for mle in read_manifest_list(table._resolve(s.manifest_list)):
-            if mle.added_snapshot_id != s.snapshot_id:
-                continue
-            _, entries = read_manifest(table._resolve(mle.manifest_path))
-            for e in entries:
-                if e.status != STATUS_ADDED:
-                    continue
-                p = table._resolve(e.data_file.file_path)
-                seq = (e.sequence_number if e.sequence_number is not None
-                       else mle.sequence_number)
-                if e.data_file.content == 0:
-                    added_data.append((p, seq))
-                elif e.data_file.content == 1:
-                    added_pos.append((p, seq))
-                else:
-                    added_eq.append((p, seq))
-
-        # ONE read per pos-delete file: same-commit exclusion set AND
-        # the per-source position lists the delete branch consumes
-        same_commit_deleted: set[tuple[str, int]] = set()
-        pos_by_src: dict[str, list[int]] = {}
-        for p, _seq in added_pos:
-            t = pq.read_table(p)
-            for src, pos in zip(t["file_path"].to_pylist(),
-                                t["pos"].to_pylist()):
-                key = _norm(src)
-                same_commit_deleted.add((key, pos))
-                pos_by_src.setdefault(key, []).append(pos)
-
-        for p, _seq in added_data:
-            for r in file_rows(p, skip=same_commit_deleted):
-                rows.append(r + ("insert",))
-
-        # rows this snapshot's eq deletes remove — folded into the
-        # running dead-set so a LATER eq delete of the same key can't
-        # re-emit the same dead row as a phantom delete event
-        eq_dead: set[tuple[str, int]] = set()
-        if added_pos or added_eq:
-            prior_dead = dead_acc
-            # data files alive before this snapshot: canon key →
-            # (readable path, seq). The canon key matches _norm of
-            # delete-file content; the real path is what pyarrow
-            # opens (the canon form is not a filesystem path).
-            older: dict[str, tuple[str, int]] = {}
-            parent = next((x for x in snaps
-                           if x.snapshot_id == s.parent_snapshot_id), None)
-            if parent is not None:
-                for mle in read_manifest_list(
-                        table._resolve(parent.manifest_list)):
-                    if mle.content == MANIFEST_CONTENT_DELETES:
-                        continue
-                    _, entries = read_manifest(
-                        table._resolve(mle.manifest_path))
-                    for e in entries:
-                        if not e.is_alive or e.data_file.content != 0:
-                            continue
-                        seq = (e.sequence_number
-                               if e.sequence_number is not None
-                               else mle.sequence_number)
-                        real = table._resolve(e.data_file.file_path)
-                        older[_norm(real)] = (real, seq)
-
-            for src, positions in pos_by_src.items():
-                if src not in older:
-                    continue  # same-commit churn already excluded
-                real, fseq = older[src]
-                for r in file_rows(real, sorted(positions),
-                                   skip=prior_dead):
-                    if dead_by_prior_eq(r, fseq):
-                        continue  # killed before this window
-                    rows.append(r + ("delete",))
-
-            for p, del_seq in added_eq:
-                kt = pq.read_table(p)
-                key_cols, ki = _eq_key_cols(kt.column_names, names, rmap)
-                keys = {tuple(kt[c][i].as_py() for c in key_cols)
-                        for i in range(kt.num_rows)}
-                for ckey, (real, dseq) in older.items():
-                    if dseq >= del_seq:
-                        continue
-                    for i, r in enumerate(file_rows(real)):
-                        # same_commit_deleted: the pos branch above
-                        # already emitted this row's delete when the
-                        # SAME commit carries a pos delete and an eq
-                        # delete covering one physical row (legal for
-                        # external writers) — don't emit it twice
-                        # (review r11; mirrors _changelog_snapshot_rows)
-                        if (ckey, i) in prior_dead \
-                                or (ckey, i) in eq_dead \
-                                or (ckey, i) in same_commit_deleted:
-                            continue
-                        if dead_by_prior_eq(r, dseq):
-                            continue  # killed before this window
-                        if tuple(r[j] for j in ki) in keys:
-                            rows.append(r + ("delete",))
-                            # tracked so a later snapshot's eq delete
-                            # can't re-emit this row
-                            eq_dead.add((ckey, i))
-        dead_acc = dead_acc | same_commit_deleted | eq_dead
-    return rows
-
-
 @dataclass
 class _WrittenFile(WriterCommitMessage):
     # one task may write several files (one per partition value)
@@ -1768,17 +1481,6 @@ class IcelakeStreamWriter(DataSourceStreamWriter):
                 continue
             for (p, _n) in m.files:
                 self._discard(p)
-
-
-def _norm(p: str) -> str:
-    """Canonical data-path form for delete matching — every _norm site
-    compares a delete-file CONTENT path (writer-era absolute) against a
-    planned (re-rooted) path, so both go through the location-
-    independent form (review r3: a relocated table silently stopped
-    applying position deletes)."""
-    from .planning import canon_data_path
-
-    return canon_data_path(p)
 
 
 def register(spark) -> None:

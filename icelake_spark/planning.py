@@ -22,9 +22,11 @@ spark.submit.pyFiles; in local mode workers import it from the repo.
 
 from __future__ import annotations
 
+import json
 import os
 import pickle
 import re
+from dataclasses import dataclass
 from typing import Any
 
 from .types import (
@@ -567,6 +569,140 @@ def canonical_partition(partition: dict | None) -> str:
     groupable/joinable in the plan DataFrame without a struct schema
     that varies per spec."""
     return str(sorted((partition or {}).items()))
+
+
+# ----------------------------------------------------- merge-on-read plan
+
+
+DELETE_BROADCAST_PROP = "read.delete.broadcast-threshold-bytes"
+DELETE_BROADCAST_DEFAULT = 32 * 1024 * 1024
+
+
+def pos_delete_applies(data_seq, delete_seq):
+    """Sequence gate of a position delete (J4): it covers data files at
+    or below its own sequence number. Operates on ints and on Spark
+    Columns alike, so every read path shares this one rule."""
+    return data_seq <= delete_seq
+
+
+def eq_delete_applies(data_seq, delete_seq):
+    """Sequence gate of an equality delete (J3): strictly OLDER data
+    only — rows the same commit (re)inserts survive it."""
+    return data_seq < delete_seq
+
+
+@dataclass
+class EqDeleteGroup:
+    """Equality-delete files sharing one key set and one partition
+    scope: every read path applies ONE join per group, not one per file
+    (a table with N upsert commits would otherwise chain N joins)."""
+    key_cols: tuple[str, ...]                  # names in the read schema
+    former_names: tuple[tuple[str, ...], ...]  # per key: pre-rename names
+    tasks: list                                # DeleteFileTask
+    # canon paths of the data files a partition-scoped group applies
+    # to; None for a global group
+    data_files: frozenset[str] | None
+    broadcast: bool
+
+
+@dataclass
+class DeletePlan:
+    """The merge-on-read delete plan of one scan, computed once from its
+    planned (data, pos, eq) tasks and read schema. Consumers: the Spark
+    join builder (TableScan._apply_deletes — reads, DML, changelog) and
+    the Python DataSource, which ships each task its own deletes."""
+    data_seq: list[tuple[str, int]]  # (canon data path, data seq)
+    pos: list                        # DeleteFileTask
+    pos_broadcast: bool
+    eq_groups: list[EqDeleteGroup]
+
+    def deletes_for(self, task) -> tuple[list, list]:
+        """(pos tasks, [(group, eq tasks)]) that apply to one data task,
+        sequence-gated and partition-scoped."""
+        seq = task.sequence_number
+        canon = canon_data_path(task.data_file.file_path)
+        pos = [p for p in self.pos
+               if pos_delete_applies(seq, p.sequence_number)]
+        eq = []
+        for g in self.eq_groups:
+            if g.data_files is not None and canon not in g.data_files:
+                continue
+            ts = [t for t in g.tasks
+                  if eq_delete_applies(seq, t.sequence_number)]
+            if ts:
+                eq.append((g, ts))
+        return pos, eq
+
+
+def plan_deletes(data, pos, eq, schema: Schema,
+                 properties: dict[str, str]) -> DeletePlan:
+    """Build the DeletePlan of a scan.
+
+    - Each delete side is broadcast only while its planned
+      file_size_in_bytes total stays under
+      `read.delete.broadcast-threshold-bytes` (default 32 MiB): a bulk
+      delete_where or a large upsert batch produces delete sets beyond
+      broadcast limits, where a shuffle join is the correct plan.
+    - Equality deletes group by (equality_ids, partition scope). Key
+      names resolve against the schema the rows are READ with: a
+      time-travel scan across a rename still names the key by its old
+      name (review r11). Former names from the rename name-mapping are
+      kept so delete files written before the rename still resolve.
+    - A partitioned equality-delete file applies only to data files of
+      its own partition (review r12); a scoped group with no such data
+      file drops out.
+    - A live equality-delete file keyed on a since-DROPPED column cannot
+      be applied; silently skipping it would resurrect every row it
+      tombstoned (code-review r8), so planning fails loudly."""
+    from .table import PROP_NAME_MAPPING
+
+    limit = int(properties.get(DELETE_BROADCAST_PROP,
+                               DELETE_BROADCAST_DEFAULT))
+
+    def small(tasks) -> bool:
+        return sum(t.delete_file.file_size_in_bytes or 0
+                   for t in tasks) <= limit
+
+    mapping = json.loads(properties.get(PROP_NAME_MAPPING) or "{}")
+    current = {f.name for f in schema.fields}
+    by_key: dict[tuple, list] = {}
+    for t in eq:
+        gk = (tuple(t.delete_file.equality_ids or ()),
+              scoped_partition_key(t.delete_file.partition))
+        by_key.setdefault(gk, []).append(t)
+    groups = []
+    for (eq_ids, part_key), tasks in by_key.items():
+        if not eq_ids:
+            continue
+        names = [schema.name_by_id(fid) for fid in eq_ids]
+        missing = [fid for fid, c in zip(eq_ids, names) if c is None]
+        if missing:
+            raise ValueError(
+                f"equality-delete files key on dropped column ids "
+                f"{missing}; rewrite deletes (rewrite_position_"
+                f"deletes / compaction) before dropping key columns")
+        scoped = None
+        if part_key is not None:
+            scoped = frozenset(
+                canon_data_path(d.data_file.file_path) for d in data
+                if canonical_partition(d.data_file.partition or None)
+                == part_key)
+            if not scoped:
+                continue
+        # a former name REUSED by a different current column must never
+        # stand in for the key: wherever the real key is legitimately
+        # NULL, the unrelated column's value would substitute
+        # (code-review r9)
+        former = tuple(
+            tuple(n for n in mapping.get(str(fid), [])
+                  if n != c and n not in current)
+            for c, fid in zip(names, eq_ids))
+        groups.append(EqDeleteGroup(tuple(names), former, tasks, scoped,
+                                    small(tasks)))
+    return DeletePlan(
+        [(canon_data_path(d.data_file.file_path), d.sequence_number)
+         for d in data],
+        list(pos), small(pos), groups)
 
 
 def _distributed_manifest_df(spark, mles: list[ManifestListEntry],

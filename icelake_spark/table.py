@@ -1122,29 +1122,33 @@ class TableScan:
 
     def _apply_deletes(self, spark: SparkSession, df: DataFrame,
                        data: list[FileScanTask], pos: list[DeleteFileTask],
-                       eq: list[DeleteFileTask],
+                       eq: list[DeleteFileTask], how: str = "left_anti",
                        drop_helpers: bool = True,
                        read_schema=None) -> DataFrame:
-        """MoR: anti-join out deleted rows.
+        """MoR: join a scan's deletes onto rows read with __file/__pos
+        (read_data_files' with_position; __pos is _metadata.row_index —
+        stable, no per-file sort).
 
-        - position deletes (J4): (file_path, pos) pairs, applied to data
-          files with data_seq <= delete_seq;
-        - equality deletes (J3): key tuples, applied to data files with
-          data_seq < delete_seq (strictly older data).
-        Row position uses _metadata.row_index (stable, no per-file sort).
-        A delete side is broadcast only while its planned
-        file_size_in_bytes total is under
-        `read.delete.broadcast-threshold-bytes` (default 32 MiB) — a
-        bulk delete_where or a large upsert batch can produce delete
-        sets beyond broadcast limits, where a shuffle anti-join (left
-        to AQE) is the correct plan.
+        how="left_anti" keeps the rows NO delete covers (reads, DML
+        working sets, changelog parents); how="left_semi" keeps the rows
+        SOME delete covers (changelog delete events). Sequence gates,
+        equality groups, partition scopes and broadcast decisions all
+        come from planning.plan_deletes, shared with the DataSource.
+        drop_helpers=False keeps __file/__pos/__file_c/__data_seq for a
+        follow-up join (changelog, CoW/MoR DML).
         """
-        bcast_limit = int(self.table.metadata.properties.get(
-            "read.delete.broadcast-threshold-bytes", 32 * 1024 * 1024))
+        from .fileio import to_spark_paths
+        from .planning import (canon_data_path, canon_data_path_col,
+                               eq_delete_applies, plan_deletes,
+                               pos_delete_applies)
 
-        def _maybe_broadcast(side_df, tasks_):
-            total = sum(t.delete_file.file_size_in_bytes or 0 for t in tasks_)
-            if total <= bcast_limit:
+        schema = read_schema if read_schema is not None \
+            else self.table.schema()
+        plan = plan_deletes(data, pos, eq, schema,
+                            self.table.metadata.properties)
+
+        def side(side_df: DataFrame, broadcast: bool) -> DataFrame:
+            if broadcast:
                 return F.broadcast(side_df)
             # over the gate: FORCE the shuffle join. Catalyst's own size
             # estimate of a bare parquet scan can come in under
@@ -1152,151 +1156,102 @@ class TableScan:
             # this gate exists to prevent (an unbounded bulk-delete set
             # broadcast = driver OOM at scale)
             return side_df.hint("shuffle_hash")
-        from .planning import canon_data_path, canon_data_path_col
 
-        # __file/__pos were attached per-format-branch by read_data_files.
-        # Every file-path comparison below runs on the location-
-        # independent canon form __file_c: delete-file CONTENT records
-        # writer-era absolute paths, and a relocated table (golden
-        # fixture, restored backup) would otherwise never match them —
-        # deletes silently unapplied (review r3). __file keeps the REAL
-        # path: CoW rewrites and new position-delete content need it.
-        df = df.withColumn("__file_c", canon_data_path_col(F.col("__file")))
-        # data-file sequence numbers: path → seq. Small scans inline the
-        # map as a literal create_map lookup — a broadcast join here
-        # costs a BroadcastExchange + job per scan, which dominates the
-        # whole query at few-file scale (the bench's single-file MoR
-        # cycle spent ~0.3 s per exchange); big scans keep the broadcast
-        # join (a million-entry literal would bloat the plan instead)
-        _check_canon_collisions(data)
-        seq_rows = [(canon_data_path(t.data_file.file_path),
-                     t.sequence_number) for t in data]
-        df = _attach_seq_map(spark, df, seq_rows, "__file_c", "__data_seq")
+        def read_deletes(tasks: list[DeleteFileTask], reader) -> DataFrame:
+            """Delete-file rows plus __src, the canon path of the delete
+            file holding each row (joined to its sequence number)."""
+            return (reader.parquet(*to_spark_paths(
+                        [t.delete_file.file_path for t in tasks]))
+                    .withColumn("__src", canon_data_path_col(
+                        F.col("_metadata.file_path"))))
 
-        from .fileio import to_spark_paths
+        def with_del_seq(side_df: DataFrame, tasks) -> DataFrame:
+            return _attach_seq_map(
+                spark, side_df,
+                [(canon_data_path(t.delete_file.file_path),
+                  t.sequence_number) for t in tasks],
+                "__src", "__del_seq")
 
-        if pos:
-            pd_paths = to_spark_paths([t.delete_file.file_path for t in pos])
-            # delete-file seq per source parquet file (same inline-map
-            # threshold as the data side)
-            pseq_rows = [(canon_data_path(t.delete_file.file_path),
-                          t.sequence_number) for t in pos]
-            pos_df = (spark.read.parquet(*pd_paths)
-                      .withColumn("__src", canon_data_path_col(
-                          F.col("_metadata.file_path")))
-                      .select(canon_data_path_col(F.col("file_path"))
-                              .alias("__del_file"),
-                              F.col("pos").alias("__del_pos"), "__src"))
-            pos_df = _attach_seq_map(spark, pos_df, pseq_rows,
-                                     "__src", "__del_seq") \
-                .select("__del_file", "__del_pos", "__del_seq")
-            cond = ((df["__file_c"] == pos_df["__del_file"])
-                    & (df["__pos"] == pos_df["__del_pos"])
-                    & (df["__data_seq"] <= pos_df["__del_seq"]))
-            df = df.join(_maybe_broadcast(pos_df, pos), on=cond,
-                         how="left_anti")
+        # Every file-path comparison runs on the location-independent
+        # canon form __file_c: delete-file CONTENT records writer-era
+        # absolute paths, and a relocated table (golden fixture,
+        # restored backup) would otherwise never match them — deletes
+        # silently unapplied (review r3). __file keeps the REAL path:
+        # CoW rewrites and new position-delete content need it.
+        if "__data_seq" not in df.columns:
+            _check_canon_collisions(data)
+            df = _attach_seq_map(
+                spark, df.withColumn("__file_c",
+                                     canon_data_path_col(F.col("__file"))),
+                plan.data_seq, "__file_c", "__data_seq")
 
-        # group equality-delete files by key-set: ONE anti-join per
-        # distinct equality_ids instead of one per delete file (a table
-        # with N upsert commits would otherwise chain N joins).
-        # Key names resolve against the schema the DataFrame was READ
-        # with: a time-travel scan across a rename builds df under the
-        # snapshot's schema, where the key column still has its old
-        # name — resolving against the current schema found only the
-        # new name and crashed the join (review r11)
-        schema = read_schema if read_schema is not None \
-            else self.table.schema()
-        # ... and by the delete file's PARTITION tuple: the spec scopes
-        # a partitioned equality-delete file to data files of its own
-        # partition — applying it globally deleted same-keyed rows in
-        # OTHER partitions of spec-compliant external tables (review
-        # r12). Deletes written with an empty partition (this repo's
-        # own writer, unpartitioned specs) stay global.
-        from .planning import canonical_partition, scoped_partition_key
-
-        groups: dict[tuple, list[DeleteFileTask]] = {}
-        for task in eq:
-            gk = (tuple(task.delete_file.equality_ids or ()),
-                  scoped_partition_key(task.delete_file.partition))
-            groups.setdefault(gk, []).append(task)
-        for (eq_ids, part_key), tasks in groups.items():
-            key_cols = [schema.name_by_id(fid) for fid in eq_ids]
-            if not key_cols:
-                continue
-            if any(c is None for c in key_cols):
-                # a live eq-delete file keyed on a since-DROPPED column
-                # cannot be applied; silently skipping it would
-                # resurrect every row it tombstoned (code-review r8)
-                missing = [fid for fid, c in zip(eq_ids, key_cols)
-                           if c is None]
-                raise ValueError(
-                    f"equality-delete files key on dropped column ids "
-                    f"{missing}; rewrite deletes (rewrite_position_"
-                    f"deletes / compaction) before dropping key columns")
-            eq_seq_rows = [(canon_data_path(t.delete_file.file_path),
-                            t.sequence_number) for t in tasks]
+        # (delete side, join condition); right-side columns carry
+        # unique __del_/__eq_ names, so conditions bind by name
+        joins: list[tuple[DataFrame, Any]] = []
+        if plan.pos:
+            pos_df = with_del_seq(
+                read_deletes(plan.pos, spark.read)
+                .select(canon_data_path_col(F.col("file_path"))
+                        .alias("__del_file"),
+                        F.col("pos").alias("__del_pos"), "__src"),
+                plan.pos)
+            cond = ((F.col("__file_c") == F.col("__del_file"))
+                    & (F.col("__pos") == F.col("__del_pos"))
+                    & pos_delete_applies(F.col("__data_seq"),
+                                         F.col("__del_seq")))
+            joins.append((side(pos_df.select("__del_file", "__del_pos",
+                                             "__del_seq"),
+                               plan.pos_broadcast), cond))
+        for g in plan.eq_groups:
+            # mergeSchema: delete files from BEFORE a RENAME COLUMN
+            # carry the old key name, files after it the new one — merge
+            # both and coalesce new-name-first (the name-mapping rule the
+            # data side applies). Without it the groupBy on the current
+            # name fails, or keys on an all-null pad and resurrects rows.
+            del_df = read_deletes(g.tasks,
+                                  spark.read.option("mergeSchema", "true"))
+            for c, former in zip(g.key_cols, g.former_names):
+                olds = [F.col(o) for o in former if o in del_df.columns]
+                if olds:
+                    cur = [F.col(c)] if c in del_df.columns else []
+                    del_df = del_df.withColumn(c, F.coalesce(*cur, *olds))
             # a key deleted at seq S covers all data with seq < S; keep
             # the max seq per key so one row per key suffices
-            # mergeSchema: delete files from BEFORE a RENAME COLUMN
-            # carry the old key name; files after it the new one —
-            # merge both and coalesce new-name-first below (the same
-            # name-mapping rule the data side applies). Without this
-            # the groupBy on the current name fails (or silently keys
-            # on an all-null pad), resurrecting deleted rows.
-            del_df = (spark.read.option("mergeSchema", "true")
-                      .parquet(*to_spark_paths(
-                          [t.delete_file.file_path for t in tasks]))
-                      .withColumn("__src", canon_data_path_col(
-                          F.col("_metadata.file_path"))))
-            import json as _json
-
-            raw_map = self.table.metadata.properties.get(
-                PROP_NAME_MAPPING)
-            mapping = _json.loads(raw_map) if raw_map else {}
-            # a former name REUSED by a different current column must
-            # never coalesce into the key: wherever the real key column
-            # is legitimately NULL, the unrelated new column's value
-            # would substitute (code-review r9 — reachable via
-            # delta._live before r9's read_mapped routing; kept as
-            # defense in depth, same guard as _rename_map)
-            current_names = {f.name for f in schema.fields}
-            for c, fid in zip(key_cols, eq_ids):
-                olds = [n for n in mapping.get(str(fid), [])
-                        if n in del_df.columns and n != c
-                        and n not in current_names]
-                if c in del_df.columns and olds:
-                    del_df = del_df.withColumn(
-                        c, F.coalesce(F.col(c), *[F.col(o) for o in olds]))
-                elif olds:
-                    del_df = del_df.withColumn(
-                        c, F.coalesce(*[F.col(o) for o in olds]))
-            del_df = (_attach_seq_map(spark, del_df, eq_seq_rows,
-                                      "__src", "__del_seq")
-                      .groupBy(*key_cols)
-                      .agg(F.max("__del_seq").alias("__del_seq")))
-            renamed = del_df.select(
-                *[F.col(c).alias(f"__eq_{c}") for c in key_cols], "__del_seq")
+            keys = (with_del_seq(del_df, g.tasks)
+                    .groupBy(*g.key_cols)
+                    .agg(F.max("__del_seq").alias("__del_seq"))
+                    .select(*[F.col(c).alias(f"__eq_{c}")
+                              for c in g.key_cols], "__del_seq"))
+            # NULL-safe: an eq-delete of a NULL-keyed row must match it
             cond = None
-            for c in key_cols:
-                clause = df[c].eqNullSafe(renamed[f"__eq_{c}"])
+            for c in g.key_cols:
+                clause = F.col(c).eqNullSafe(F.col(f"__eq_{c}"))
                 cond = clause if cond is None else (cond & clause)
-            cond = cond & (df["__data_seq"] < renamed["__del_seq"])
-            if part_key is not None:
-                # partition-scoped group: rows may only match if their
-                # file lives in the delete's partition
-                scoped = [canon_data_path(t.data_file.file_path)
-                          for t in data
-                          if canonical_partition(t.data_file.partition
-                                                 or None) == part_key]
-                if not scoped:
-                    continue
-                cond = cond & df["__file_c"].isin(scoped)
-            df = df.join(_maybe_broadcast(renamed, tasks), on=cond,
-                         how="left_anti")
+            cond = cond & eq_delete_applies(F.col("__data_seq"),
+                                            F.col("__del_seq"))
+            if g.data_files is not None:
+                cond = cond & F.col("__file_c").isin(sorted(g.data_files))
+            joins.append((side(keys, g.broadcast), cond))
 
+        if how == "left_anti":
+            for side_df, cond in joins:
+                df = df.join(side_df, on=cond, how="left_anti")
+        elif not joins:
+            df = df.limit(0)
+        else:
+            matched = [df.join(side_df, on=cond, how=how)
+                       for side_df, cond in joins]
+            df = matched[0]
+            for m in matched[1:]:
+                df = df.unionByName(m)
+            if len(matched) > 1:
+                # one physical row may match several delete sides
+                # (external writers mix key sets, or pos and eq deletes,
+                # in one commit): it is still ONE delete event
+                df = df.dropDuplicates(["__file_c", "__pos"])
         if drop_helpers:
             return df.drop("__file", "__pos", "__data_seq", "__file_c")
-        return df  # changelog semi-joins still need __file*/__pos/__data_seq
+        return df
 
 
 def _check_canon_collisions(data: "list[FileScanTask]") -> None:

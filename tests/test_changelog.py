@@ -379,12 +379,12 @@ def test_changelog_batch_boundaries_no_phantom_deletes(spark, warehouse):
     """Splitting the changelog stream into micro-batches must not
     change its content: a key eq-deleted in an earlier batch must not
     re-emit a delete event when a later batch's eq delete hits the
-    same (already dead) key — both stream decoders gate on the
-    pre-window eq-delete files (code-review r8)."""
+    same (already dead) key — the stream decoder gates on the
+    pre-window eq-delete files (code-review r8), also when each window
+    is planned by a fresh reader (a restart between micro-batches)."""
     from pyspark.sql import types as T
 
     from icelake_spark.datasource import (IcelakePartitionStreamReader,
-                                          IcelakeStreamReader,
                                           _stream_end_offset)
 
     src = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
@@ -404,11 +404,13 @@ def test_changelog_batch_boundaries_no_phantom_deletes(spark, warehouse):
     schema = T.StructType(list(t.schema().to_spark().fields)
                           + [T.StructField("_change_type", T.StringType())])
 
-    def run_windows(windows):
-        reader = IcelakePartitionStreamReader(
-            {"path": t.path, "changelog": "true"}, schema)
+    def run_windows(windows, fresh_reader=False):
+        reader = None
         out = []
         for s_, e_ in windows:
+            if reader is None or fresh_reader:
+                reader = IcelakePartitionStreamReader(
+                    {"path": t.path, "changelog": "true"}, schema)
             for p in reader.partitions({"seq": s_}, {"seq": e_}):
                 out.extend(reader.read(p))
         return sorted((r[0], r[1], r[2]) for r in out)
@@ -419,13 +421,8 @@ def test_changelog_batch_boundaries_no_phantom_deletes(spark, warehouse):
     want = sorted((r.id, r.v, r._change_type)
                   for r in t.changes(spark).collect())
     assert one_batch == want
-    # the simple (driver-side) decoder agrees under the same split
-    simple = IcelakeStreamReader({"path": t.path, "changelog": "true"},
-                                 schema)
-    rows1 = simple.readBetweenOffsets({"seq": 0}, {"seq": offs[1]})
-    rows2 = simple.readBetweenOffsets({"seq": offs[1]}, {"seq": end})
-    got = sorted((r[0], r[1], r[2])
-                 for r in list(rows1) + list(rows2))
+    # a fresh reader per window agrees under the same split
+    got = run_windows([(0, offs[1]), (offs[1], end)], fresh_reader=True)
     assert got == want
 
 
@@ -452,11 +449,11 @@ def test_changelog_batch_boundary_suppression_survives_rename(
     directly built length-mismatched key tuples that never matched —
     the prior-eq suppression silently vanished and the second window
     re-emitted a phantom delete for the already-dead row (ADVICE r8).
-    Both stream decoders must agree with the one-batch result."""
+    The stream decoder must agree with the one-batch result, with one
+    reader across both windows and with a fresh reader per window."""
     from pyspark.sql import types as T
 
     from icelake_spark.datasource import (IcelakePartitionStreamReader,
-                                          IcelakeStreamReader,
                                           _stream_end_offset,
                                           _stream_offset_of)
 
@@ -484,12 +481,13 @@ def test_changelog_batch_boundary_suppression_survives_rename(
     assert want.count((1, "a", "delete")) == 1
     assert want.count((1, "a2", "delete")) == 1
 
-    simple = IcelakeStreamReader({"path": t.path, "changelog": "true"},
-                                 schema)
-    split = sorted(
-        (r[0], r[1], r[2]) for r in
-        list(simple.readBetweenOffsets({"seq": 0}, {"seq": offs[1]}))
-        + list(simple.readBetweenOffsets({"seq": offs[1]}, {"seq": end})))
+    split = []
+    for s_, e_ in [(0, offs[1]), (offs[1], end)]:
+        fresh = IcelakePartitionStreamReader(
+            {"path": t.path, "changelog": "true"}, schema)
+        for p in fresh.partitions({"seq": s_}, {"seq": e_}):
+            split.extend((r[0], r[1], r[2]) for r in fresh.read(p))
+    split.sort()
     assert split == want, (split, want)
 
     reader = IcelakePartitionStreamReader(
@@ -511,7 +509,7 @@ def test_changelog_window_skips_future_snapshot_io(
     import pyarrow.parquet as _pq
     from pyspark.sql import types as T
 
-    from icelake_spark.datasource import (IcelakeStreamReader,
+    from icelake_spark.datasource import (IcelakePartitionStreamReader,
                                           _stream_offset_of)
 
     src = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
@@ -531,8 +529,8 @@ def test_changelog_window_skips_future_snapshot_io(
 
     schema = T.StructType(list(t.schema().to_spark().fields)
                           + [T.StructField("_change_type", T.StringType())])
-    reader = IcelakeStreamReader({"path": t.path, "changelog": "true"},
-                                 schema)
+    reader = IcelakePartitionStreamReader(
+        {"path": t.path, "changelog": "true"}, schema)
     seen = []
     real = _pq.read_table
 
@@ -542,7 +540,8 @@ def test_changelog_window_skips_future_snapshot_io(
 
     monkeypatch.setattr(_pq, "read_table", spy)
     off1 = _stream_offset_of(t, first)
-    rows = list(reader.readBetweenOffsets({"seq": 0}, {"seq": off1}))
+    rows = [r for p in reader.partitions({"seq": 0}, {"seq": off1})
+            for r in reader.read(p)]
     assert sorted(r[0] for r in rows) == [1, 2]
     touched = {p for p in seen if p in future_deletes}
     assert not touched, f"future snapshots decoded: {touched}"
@@ -553,11 +552,11 @@ def test_changelog_stream_fails_loud_on_dropped_eq_key_column(
     """An eq-delete file keyed on a since-DROPPED column cannot be
     applied: silently dropping the column from the key would WIDEN the
     match (any row sharing the remaining key values treated as dead —
-    phantom delete events). The stream decoders must fail loudly, as
+    phantom delete events). The stream decoder must fail loudly, as
     the batch read path and changes() already do (code-review r9)."""
     from pyspark.sql import types as T
 
-    from icelake_spark.datasource import (IcelakeStreamReader,
+    from icelake_spark.datasource import (IcelakePartitionStreamReader,
                                           _stream_end_offset)
 
     src = spark.createDataFrame([(1, "a", "eu"), (2, "b", "us")],
@@ -574,8 +573,9 @@ def test_changelog_stream_fails_loud_on_dropped_eq_key_column(
 
     schema = T.StructType(list(t.schema().to_spark().fields)
                           + [T.StructField("_change_type", T.StringType())])
-    reader = IcelakeStreamReader({"path": t.path, "changelog": "true"},
-                                 schema)
+    reader = IcelakePartitionStreamReader(
+        {"path": t.path, "changelog": "true"}, schema)
     end = _stream_end_offset(t)
     with pytest.raises(ValueError, match="region"):
-        list(reader.readBetweenOffsets({"seq": 0}, {"seq": end}))
+        for p in reader.partitions({"seq": 0}, {"seq": end}):
+            list(reader.read(p))

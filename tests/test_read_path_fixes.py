@@ -166,3 +166,60 @@ def test_stream_casts_promoted_types(spark, warehouse, tmp_path):
     rows = {(r.id, r.c) for r in spark.sql(
         "select * from promstream").collect()}
     assert rows == {(1, 5), (2, 6), (3, 7)}
+
+
+def test_read_paths_agree_on_nan_and_null_keys(spark, warehouse):
+    """Every read path applies equality deletes with Spark's key
+    equality — NULL matches NULL, NaN matches NaN — so to_df, the
+    DataSource, changes() and the changelog stream all agree. The
+    DataSource and the stream decoder once matched keys by Python
+    tuple-in-set, where NaN != NaN, and kept an upserted NaN row's
+    stale version alive."""
+    from pyspark.sql import types as T
+
+    from icelake_spark import datasource
+    from icelake_spark.datasource import (IcelakePartitionStreamReader,
+                                          _stream_end_offset)
+
+    datasource.register(spark)
+    nan = float("nan")
+    cases = [
+        # (ddl, key columns, rows, upsert batch, rows the upsert replaces)
+        ("k double, v long", ["k"],
+         [(1.0, 1), (nan, 2), (None, 3)],
+         [(nan, 20), (None, 30)],
+         [(nan, 2), (None, 3)]),
+        ("a long, b string, v long", ["a", "b"],
+         [(1, "x", 1), (1, None, 2), (None, None, 3), (2, "y", 4)],
+         [(1, None, 20), (None, None, 30)],
+         [(1, None, 2), (None, None, 3)]),
+    ]
+
+    def norm(rows):  # NaN and None order and compare via repr
+        return sorted(repr(tuple(r)) for r in rows)
+
+    for i, (ddl, keys, rows, batch, replaced) in enumerate(cases):
+        t = warehouse.create_table(f"db.nankey{i}", _schema(spark, ddl))
+        t.append(spark.createDataFrame(rows, ddl))
+        t.upsert(spark.createDataFrame(batch, ddl), key_cols=keys)
+        t = t.refresh()
+        live = [r for r in rows if r not in replaced] + batch
+        assert norm(t.to_df(spark).collect()) == norm(live), ddl
+        ds = spark.read.format("icelake").option("path", t.path).load()
+        assert norm(ds.collect()) == norm(live), ddl
+
+        ncols = len(t.schema().fields)
+        events = ([(*r, "insert") for r in rows + batch]
+                  + [(*r, "delete") for r in replaced])
+        batch_changes = [tuple(r)[:ncols + 1]
+                         for r in t.changes(spark).collect()]
+        assert norm(batch_changes) == norm(events), ddl
+        schema = T.StructType(
+            list(t.schema().to_spark().fields)
+            + [T.StructField("_change_type", T.StringType())])
+        reader = IcelakePartitionStreamReader(
+            {"path": t.path, "changelog": "true"}, schema)
+        stream = [r for p in reader.partitions(
+                      {"seq": 0}, {"seq": _stream_end_offset(t)})
+                  for r in reader.read(p)]
+        assert norm(stream) == norm(events), ddl
