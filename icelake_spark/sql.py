@@ -1,535 +1,417 @@
-"""SQL-statement entry points for DML the DataFrame API already
-implements — currently MERGE INTO over delta.merge (W7/W8).
+"""SQL statements against icelake tables, parsed by Spark's own parser.
 
-Parity target: the reference drives its equality-delta writer from
-Spark SQL in integration tests (/root/reference/icelake/tests/
-delta_test_v2.rs:101-226: MERGE INTO t1 USING t2 ... WHEN MATCHED THEN
-UPDATE/DELETE, WHEN NOT MATCHED THEN INSERT); this module gives the
-PySpark engine the same SQL face without a full SQL-DML parser: the
-supported (and validated) grammar —
+`execute` parses a statement once with Spark SQL's parser (`parsePlan`)
+and dispatches on the unresolved plan's class to the delta, table,
+maintenance and catalog APIs; any other query runs through `_select`.
+Expression text (conditions, SET / VALUES expressions, time-travel
+timestamps) is cut from the statement by the parser's source spans
+(`origin().startIndex()..stopIndex()`), so the writers get the user's
+own text; MERGE aliases become delta.merge's `t.` / `s.` qualifiers by
+replacing only the spans of column references that name an alias.
 
-    MERGE INTO <target_ident> [AS t] USING <source_view> [AS s]
-    ON <key equalities: t.k = s.k [AND ...]>
-    [WHEN MATCHED [AND <condition>] THEN
-        UPDATE SET * | UPDATE SET col = expr[, ...] | DELETE]...
-    [WHEN NOT MATCHED THEN INSERT * | INSERT (cols) VALUES (exprs)]
-
-Multiple WHEN MATCHED clauses are ordered with first-match-wins
-semantics (Spark's contract); only the last may omit its AND condition.
-
-`UPDATE SET *` / `INSERT *` (whole-row replace/insert) mirror
-merge-on-read CDC semantics: an update is an equality delete of the old
-row plus an insert of the source row, one transactional commit. The
-column-level forms (`UPDATE SET col = expr`, `INSERT (cols) VALUES`)
-keep unset columns at the target row's old value / NULL respectively;
-their expressions and conditions may reference both sides through the
-declared aliases. Anything outside the grammar raises ValueError naming
-the unsupported clause instead of silently mis-executing.
+Text handling left: regexes for the Iceberg-extension ALTER TABLE
+clauses Spark 4.1 does not parse (SET PARTITION SPEC, CREATE/DROP
+BRANCH|TAG, WRITE ... ORDERED BY | UNORDERED), tried only after Spark
+fails on an ALTER TABLE; and one parse retry that rewrites this
+module's `bucket[N](col)` spelling to `bucket(N, col)` and masks the
+table-property keys Spark reserves (`owner`, `location`, ...).
 """
 
 from __future__ import annotations
 
 import itertools
 import re
-from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
 from . import delta
 
-_MERGE_RE = re.compile(
-    r"^\s*MERGE\s+INTO\s+(?P<target>[\w.$/-]+)"
-    r"(?:\s+(?:AS\s+)?(?!USING\b)(?P<talias>\w+))?"
-    r"\s+USING\s+(?P<source>[\w.]+)"
-    r"(?:\s+(?:AS\s+)?(?!ON\b)(?P<salias>\w+))?"
-    r"\s+ON\s+(?P<on>.+?)"
-    r"(?P<clauses>\s+WHEN\s+.*)?$",
-    re.IGNORECASE | re.DOTALL)
-
-_INSERT_COLS_RE = re.compile(
-    r"^INSERT\s*\((?P<cols>[^)]+)\)\s*VALUES\s*\((?P<vals>.+)\)\s*$",
-    re.IGNORECASE | re.DOTALL)
-
-_ON_EQ_RE = re.compile(
-    r"^\s*(?:(?P<q1>[\w.]+)\.)?(?P<c1>\w+)\s*=\s*(?:(?P<q2>[\w.]+)\.)?(?P<c2>\w+)\s*$")
+# ------------------------------------------------------------ parsing
 
 
-def _parse_on(on_text: str, talias: str, salias: str) -> list[str]:
-    """ON must be a conjunction of target.col = source.col equalities on
-    the SAME column name (equality-delete keys)."""
-    keys = []
-    for term in re.split(r"\s+AND\s+", on_text.strip(), flags=re.IGNORECASE):
-        m = _ON_EQ_RE.match(term)
-        if not m:
-            raise ValueError(f"unsupported ON term (need t.col = s.col): {term!r}")
-        c1, c2 = m.group("c1"), m.group("c2")
-        if c1 != c2:
-            raise ValueError(
-                f"ON must join the same column name on both sides "
-                f"(equality-delete key), got {term!r}")
-        q1, q2 = m.group("q1"), m.group("q2")
-        for q in (q1, q2):
-            if q and q not in (talias, salias):
-                raise ValueError(f"unknown qualifier {q!r} in ON term {term!r}")
-        keys.append(c1)
-    if not keys:
-        raise ValueError("empty ON clause")
-    return keys
+def _seq(s) -> list:
+    """A Scala Seq from the JVM as a Python list."""
+    return [s.apply(i) for i in range(s.size())]
 
 
-def _skip_quoted(text: str, i: int) -> int:
-    """text[i] opens a string literal; return the index just PAST its
-    closing quote. Handles SQL '' doubling and backslash escapes (both
-    accepted by Spark SQL). An unterminated literal raises — a walker
-    that kept going would silently mis-split the statement."""
-    q, n = text[i], len(text)
-    j = i + 1
-    while j < n:
-        ch = text[j]
-        if ch == "\\" and j + 1 < n:
-            j += 2
-            continue
-        if ch == q:
-            if j + 1 < n and text[j + 1] == q:  # '' doubling
-                j += 2
-                continue
-            return j + 1
-        j += 1
-    raise ValueError(f"unterminated string literal starting at offset {i}")
+def _opt(o):
+    return o.get() if o.isDefined() else None
 
 
-def _top_level_positions(text: str, kw: str) -> list[int]:
-    """Word-boundary positions of keyword `kw` at TOP LEVEL — outside
-    quotes, parens, brackets, and CASE...END expressions (so `WHEN`
-    inside a CASE expression or a string literal never splits a
-    clause; CASE/END nest without parentheses)."""
-    out, depth, i, n, k = [], 0, 0, len(text), len(kw)
-    up, kwu = text.upper(), kw.upper()
+def _kind(node) -> str:
+    return node.getClass().getSimpleName()
 
-    def _word(ch: str) -> bool:
-        return ch.isalnum() or ch == "_"
 
-    def _kw_at(pos: int, word: str) -> bool:
-        return (up[pos:pos + len(word)] == word
-                and (pos == 0 or not _word(text[pos - 1]))
-                and (pos + len(word) == n or not _word(text[pos + len(word)])))
+def _span(node) -> tuple[int, int] | None:
+    """[start, stop) of the statement text `node` was parsed from."""
+    o = node.origin()
+    a, b = o.startIndex(), o.stopIndex()
+    return (a.get(), b.get() + 1) if a.isDefined() and b.isDefined() \
+        else None
 
-    while i < n:
-        ch = text[i]
-        if ch in "'\"":
-            i = _skip_quoted(text, i)
-            continue
-        elif ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif _kw_at(i, "CASE") and (i == 0 or text[i - 1] != "."):
-            depth += 1
-            i += 4
-            continue
-        elif _kw_at(i, "END") and depth > 0 \
-                and (i == 0 or text[i - 1] != "."):
-            # a qualified identifier `s.end` (or `s.case` above) is a
-            # COLUMN, not the keyword, and END at depth 0 cannot close
-            # anything — without both guards one column named `end`
-            # drove the depth negative and every later top-level
-            # WHEN/THEN went unseen, rejecting legal MERGE statements
-            # (review r11)
-            depth -= 1
-            i += 3
-            continue
-        elif depth == 0 and _kw_at(i, kwu):
-            out.append(i)
-            i += k
-            continue
-        i += 1
+
+def _src(text: str, node) -> str:
+    a, b = _span(node)
+    return text[a:b]
+
+
+_NAME_GETTERS = dict.fromkeys(
+    ("UnresolvedRelation", "UnresolvedTable", "UnresolvedTableOrView",
+     "UnresolvedNamespace"), "multipartIdentifier") | dict.fromkeys(
+    ("UnresolvedIdentifier", "UnresolvedProcedure", "UnresolvedAttribute"),
+    "nameParts") | {"UnresolvedFieldName": "name"}
+
+
+def _parts(node) -> list[str]:
+    kind = _kind(node)
+    if kind not in _NAME_GETTERS:
+        raise ValueError(f"unsupported table reference ({kind})")
+    return _seq(getattr(node, _NAME_GETTERS[kind])())
+
+
+def _ident(node) -> str:
+    return ".".join(_parts(node))
+
+
+def _quote(name: str) -> str:
+    return name if re.fullmatch(r"[A-Za-z_]\w*", name) \
+        else "`" + name.replace("`", "``") + "`"
+
+
+def _render(parts: list[str]) -> str:
+    return ".".join(_quote(p) for p in parts)
+
+
+_BRACKET_TRANSFORM_RE = re.compile(
+    r"\b(bucket|truncate)\s*\[\s*(\d+)\s*\]\s*\(", re.IGNORECASE)
+# Spark refuses these keys in TBLPROPERTIES; Iceberg stores them like any
+# other property, so the retry masks them and _props unmasks them
+_PROPS_RE = re.compile(
+    r"\bTBLPROPERTIES\s*\((?:\s*'[^']*'\s*=\s*'[^']*'\s*,?)+\s*\)",
+    re.IGNORECASE)
+_RESERVED_KEY_RE = re.compile(
+    r"'(owner|location|provider|external|is_managed_location)'(?=\s*=)")
+_MASK = "\ue000"
+
+
+def _parse(spark: SparkSession, statement: str):
+    """(unresolved plan, the text its spans index); a failed parse is
+    retried once with the rewrites above, then raised as ValueError."""
+    from pyspark.errors import ParseException
+
+    parser = spark._jsparkSession.sessionState().sqlParser()
+    try:
+        return parser.parsePlan(statement), statement
+    except ParseException as e:
+        alt = _PROPS_RE.sub(
+            lambda m: _RESERVED_KEY_RE.sub(rf"'\1{_MASK}'", m.group(0)),
+            _BRACKET_TRANSFORM_RE.sub(r"\1(\2, ", statement))
+        if alt != statement:
+            try:
+                return parser.parsePlan(alt), alt
+            except ParseException:
+                pass
+        raise _parse_error(statement, e) from None
+
+
+# Spark error condition (or message fragment) → this module's wording
+_PARSE_ERRORS = (
+    ("NON_LAST_MATCHED_CLAUSE_OMIT_CONDITION", "only the last WHEN "
+     "MATCHED clause may omit its AND condition (first-match-wins)"),
+    ("NON_LAST_NOT_MATCHED_BY_SOURCE_CLAUSE_OMIT_CONDITION", "only the "
+     "last WHEN NOT MATCHED BY SOURCE clause may omit its AND condition"),
+    ("NON_LAST_NOT_MATCHED_BY_TARGET_CLAUSE_OMIT_CONDITION",
+     "duplicate WHEN NOT MATCHED clause"),
+    ("MERGE_WITHOUT_WHEN", "MERGE needs at least one WHEN clause"),
+    ("number of inserted values",
+     "INSERT column list and VALUES arity differ"),
+    ("UNSUPPORTED_DATATYPE", "unsupported column type"),
+    ("(CTAS)", "CREATE TABLE ... AS SELECT does not take a column list"),
+)
+# ... else by statement keyword
+_PARSE_ERRORS_BY_HEAD = {
+    "MERGE": "unsupported MERGE clause", "UPDATE": "unsupported UPDATE",
+    "DELETE": "unsupported DELETE", "ALTER": "unsupported ALTER TABLE",
+    "INSERT": "INSERT INTO needs VALUES or SELECT",
+    "CALL": "unsupported CALL syntax; expected CALL system.<proc>(args)"}
+
+
+def _head(statement: str) -> str:
+    m = re.match(r"\s*(\w+)", statement)
+    return m.group(1).upper() if m else ""
+
+
+def _parse_error(statement: str, e) -> ValueError:
+    """The one translation of a Spark ParseException into ValueError,
+    worded as this module's own checks word the same mistake."""
+    msg = next((ln.strip() for ln in str(e).splitlines() if ln.strip()), "")
+    found = f"{e.getCondition() or ''} {msg}"
+    if re.match(r"\s*CREATE\s+OR\s+REPLACE\s+TABLE\s+IF\s+NOT\s+EXISTS\b",
+                statement, re.IGNORECASE):
+        ours = "CREATE OR REPLACE TABLE cannot take IF NOT EXISTS"
+    else:
+        ours = next((w for needle, w in _PARSE_ERRORS if needle in found),
+                    _PARSE_ERRORS_BY_HEAD.get(_head(statement),
+                                              "cannot parse statement"))
+    return ValueError(f"{ours}: {msg}")
+
+
+def _attributes(node):
+    """Column references (UnresolvedAttribute) of a parsed expression."""
+    if _kind(node) == "UnresolvedAttribute":
+        yield node
+        return
+    for c in _seq(node.children()):
+        yield from _attributes(c)
+
+
+def _rewrite(text: str, node, sub) -> str | None:
+    """`node`'s source text with each column reference's span replaced
+    by `sub(name_parts)` (None keeps it); None for no node."""
+    if node is None:
+        return None
+    lo, hi = _span(node)
+    out, pos = [], lo
+    for (a, b), parts in sorted((_span(r), _parts(r))
+                                for r in _attributes(node)):
+        new = sub(parts)
+        if new is not None:
+            out += [text[pos:a], new]
+            pos = b
+    out.append(text[pos:hi])
+    return "".join(out)
+
+
+def _props(m) -> dict[str, str]:
+    """A parsed property map, reserved keys unmasked."""
+    out, it = {}, m.iterator()
+    while it.hasNext():
+        kv = it.next()
+        out[kv._1().replace(_MASK, "")] = kv._2()
     return out
 
 
-def _requalify(text: str, talias: str, salias: str) -> str:
-    """Rewrite the statement's declared aliases to the canonical `t.` /
-    `s.` qualifiers delta's column-level merge exposes (single pass, so
-    crossed aliases like AS s / AS t swap correctly). String literals
-    are copied verbatim — a condition like note = 'by src.sync' must
-    keep its literal text, not become 'by s.sync'."""
-    pat = re.compile(rf"\b(?:{re.escape(talias)}|{re.escape(salias)})\.")
+def _spark_type(jdt):
+    """A parsed DataType in pyspark (CHAR/VARCHAR as STRING, as fromDDL)."""
+    from pyspark import SparkContext
+    from pyspark.sql.types import _parse_datatype_json_string
 
-    def _sub(seg: str) -> str:
-        return pat.sub(
-            lambda m: "t." if m.group(0)[:-1] == talias else "s.", seg)
-
-    out, i, start, n = [], 0, 0, len(text)
-    while i < n:
-        if text[i] in "'\"":
-            out.append(_sub(text[start:i]))
-            j = _skip_quoted(text, i)
-            out.append(text[i:j])  # literal: verbatim
-            i = start = j
-            continue
-        i += 1
-    out.append(_sub(text[start:]))
-    return "".join(out)
+    util = SparkContext._jvm.org.apache.spark.sql.catalyst.util
+    return _parse_datatype_json_string(
+        util.CharVarcharUtils.replaceCharVarcharWithString(jdt).json())
 
 
-def _parse_when_clauses(clauses: str, talias: str, salias: str):
-    """Parse the WHEN ... clause tail into (matched_clauses,
-    when_not_matched, insert_cols) for delta.merge. Clause boundaries
-    and assignment splits are quote/paren-aware."""
-    matched_clauses: list[tuple] = []
-    by_source_clauses: list[tuple] = []
-    when_not_matched = None
-    insert_cols = None
-    positions = _top_level_positions(clauses, "WHEN")
-    if clauses.strip() and (not positions
-                            or clauses[:positions[0]].strip()):
-        raise ValueError(
-            f"unsupported MERGE clause: {clauses.strip()[:80]!r}")
-    segments = [clauses[a:b].strip() for a, b in
-                zip(positions, positions[1:] + [len(clauses)])]
-    for seg in segments:
-        body = seg[4:].strip()  # past WHEN
-        # WHEN NOT MATCHED BY SOURCE [AND c] THEN DELETE | UPDATE SET
-        # (Spark 3.4 / Iceberg): acts on TARGET rows with no source
-        # match — conditions and SET exprs see only the target side
-        bs = re.match(r"^NOT\s+MATCHED\s+BY\s+SOURCE\b(?P<rest>.*)$",
-                      body, re.IGNORECASE | re.DOTALL)
-        if bs:
-            rest = bs.group("rest")
-            then_pos = _top_level_positions(rest, "THEN")
-            if not then_pos:
-                raise ValueError(
-                    f"NOT MATCHED BY SOURCE clause missing THEN: "
-                    f"{seg[:80]!r}")
-            head, action_text = (rest[:then_pos[0]].strip(),
-                                 rest[then_pos[0] + 4:].strip())
-            cond = None
-            if head:
-                am = re.match(r"^AND\s+(?P<cond>.+)$", head,
-                              re.IGNORECASE | re.DOTALL)
-                if not am:
-                    raise ValueError(
-                        f"unsupported MERGE clause: {seg[:80]!r}")
-                cond = am.group("cond").strip()
-            if re.fullmatch(r"DELETE", action_text, re.IGNORECASE):
-                by_source_clauses.append(("delete", cond, None))
-                continue
-            um = re.match(r"^UPDATE\s+SET\s+(?P<sets>.+)$", action_text,
-                          re.IGNORECASE | re.DOTALL)
-            if not um:
-                raise ValueError(f"unsupported MERGE clause: {seg[:80]!r}")
-            sets = {}
-            for part in _split_assignments(um.group("sets")):
-                am2 = re.match(r"^\s*(?:[\w.]+\.)?(?P<col>\w+)\s*=\s*"
-                               r"(?P<expr>.+?)\s*$", part, re.DOTALL)
-                if not am2:
-                    raise ValueError(
-                        f"unsupported SET assignment: {part!r}")
-                if am2.group("col") in sets:
-                    raise ValueError(
-                        f"duplicate SET column {am2.group('col')!r}")
-                # RAW expr — merge_into validates against the actual
-                # source/target column sets before requalifying (a
-                # textual check post-requalify can't tell a rewritten
-                # source ref from a target struct column named `s`)
-                sets[am2.group("col")] = am2.group("expr").strip()
-            by_source_clauses.append(("update", cond, sets))
-            continue
-        nm = re.match(r"^NOT\s+MATCHED\s+(?:BY\s+TARGET\s+)?THEN\s+"
-                      r"(?P<act>.+)$", body, re.IGNORECASE | re.DOTALL)
-        if nm:
-            if when_not_matched is not None:
-                raise ValueError("duplicate WHEN NOT MATCHED clause")
-            act = nm.group("act").strip()
-            if re.fullmatch(r"INSERT\s+\*", act, re.IGNORECASE):
-                when_not_matched = "insert"
-                continue
-            im = _INSERT_COLS_RE.match(act)
-            if not im:
-                raise ValueError(f"unsupported MERGE clause: {seg[:80]!r}")
-            cols = [re.sub(r"^[\w.]+\.", "", c.strip())
-                    for c in im.group("cols").split(",")]
-            vals = [_requalify(v, talias, salias)
-                    for v in _split_assignments(im.group("vals"))]
-            if len(cols) != len(vals):
-                raise ValueError("INSERT column list and VALUES arity differ")
-            when_not_matched = "insert"
-            insert_cols = (cols, vals)
-            continue
-        mm = re.match(r"^MATCHED\b(?P<rest>.*)$", body,
-                      re.IGNORECASE | re.DOTALL)
-        if not mm:
-            raise ValueError(f"unsupported MERGE clause: {seg[:80]!r}")
-        rest = mm.group("rest")
-        then_pos = _top_level_positions(rest, "THEN")
-        if not then_pos:
-            raise ValueError(f"WHEN MATCHED clause missing THEN: {seg[:80]!r}")
-        head, action_text = (rest[:then_pos[0]].strip(),
-                             rest[then_pos[0] + 4:].strip())
-        cond = None
-        if head:
-            am = re.match(r"^AND\s+(?P<cond>.+)$", head,
-                          re.IGNORECASE | re.DOTALL)
-            if not am:
-                raise ValueError(f"unsupported MERGE clause: {seg[:80]!r}")
-            cond = am.group("cond").strip()
-        if re.fullmatch(r"DELETE", action_text, re.IGNORECASE):
-            matched_clauses.append(("delete", cond, None))
-        elif re.fullmatch(r"UPDATE\s+SET\s+\*", action_text,
-                          re.IGNORECASE | re.DOTALL):
-            matched_clauses.append(("update", cond, None))
-        else:
-            um = re.match(r"^UPDATE\s+SET\s+(?P<sets>.+)$", action_text,
-                          re.IGNORECASE | re.DOTALL)
-            if not um:
-                raise ValueError(f"unsupported MERGE clause: {seg[:80]!r}")
-            sets = {}
-            for part in _split_assignments(um.group("sets")):
-                am2 = re.match(r"^\s*(?:[\w.]+\.)?(?P<col>\w+)\s*=\s*"
-                               r"(?P<expr>.+?)\s*$", part, re.DOTALL)
-                if not am2:
-                    raise ValueError(f"unsupported SET assignment: {part!r}")
-                col = am2.group("col")
-                if col in sets:
-                    raise ValueError(f"duplicate SET column {col!r}")
-                sets[col] = _requalify(am2.group("expr"), talias, salias)
-            matched_clauses.append(("update", cond, sets))
-    for i, (_act, cond, _sets) in enumerate(matched_clauses):
-        # surface the ordering error at parse time, before table load
-        # (delta.merge re-checks for DataFrame-API callers)
-        if cond is None and i != len(matched_clauses) - 1:
-            raise ValueError("only the last WHEN MATCHED clause may omit "
-                             "its AND condition (first-match-wins)")
-    for i, (_act, cond, _sets) in enumerate(by_source_clauses):
-        if cond is None and i != len(by_source_clauses) - 1:
-            raise ValueError("only the last WHEN NOT MATCHED BY SOURCE "
-                             "clause may omit its AND condition")
-    return matched_clauses, when_not_matched, insert_cols, by_source_clauses
+def _iceberg_type(jdt) -> str:
+    """A parsed column type as an Iceberg primitive type string, through
+    from_spark_type as CREATE TABLE's schema is."""
+    from .types.datatypes import PrimitiveType, from_spark_type
+
+    try:
+        t = from_spark_type(_spark_type(jdt), lambda: 0)
+    except ValueError:
+        t = None
+    if not isinstance(t, PrimitiveType):
+        raise ValueError(f"unsupported column type {jdt.simpleString()!r}")
+    return str(t)
 
 
-_EXPR_KEYWORDS = frozenset(
-    "AND OR NOT NULL TRUE FALSE CASE WHEN THEN ELSE END IS IN LIKE "
-    "BETWEEN ASC DESC DISTINCT INTERVAL DIV".split())
+def _missing(e: Exception, exc=FileNotFoundError, status=404) -> bool:
+    """Does-not-exist (or, with FileExistsError / 409, already-exists) in
+    the storage catalog's or the REST catalog's spelling."""
+    return isinstance(e, exc) or getattr(
+        getattr(e, "response", None), "status_code", None) == status
 
 
-def _blank_literals(text: str) -> str:
-    """Replace string-literal spans with spaces so regex scans over the
-    statement can never match literal text (offsets preserved)."""
-    buf, i, n = [], 0, len(text)
-    while i < n:
-        if text[i] in "'\"":
-            j = _skip_quoted(text, i)
-            buf.append(" " * (j - i))
-            i = j
-        else:
-            buf.append(text[i])
-            i += 1
-    return "".join(buf)
+def _load_if_exists(ident: str, catalog):
+    try:
+        return _load_target(ident, catalog)
+    except Exception as e:
+        if _missing(e):
+            return None
+        raise
 
 
-def _sub_outside_quotes(text: str, pattern: str, repl: str) -> str:
-    """re.sub applied only OUTSIDE string literals (literal spans are
-    copied verbatim — the _requalify walk, generalized)."""
-    pat = re.compile(pattern)
-    out, i, start, n = [], 0, 0, len(text)
-    while i < n:
-        if text[i] in "'\"":
-            out.append(pat.sub(repl, text[start:i]))
-            j = _skip_quoted(text, i)
-            out.append(text[i:j])
-            i = start = j
-            continue
-        i += 1
-    out.append(pat.sub(repl, text[start:]))
-    return "".join(out)
+# ------------------------------------------------------------- MERGE
 
 
-def _source_only_refs(expr: str, talias: str, salias: str,
-                      tcols: set, scols: set) -> list[str]:
-    """Column references in `expr` that can only resolve against the
-    MERGE SOURCE: salias-qualified chains (unless salias collides with
-    a target column name — then `salias.x` is a struct-member deref of
-    the target column) and bare identifiers that name a source column
-    but no target column. Quote-aware; `name(`-style function calls
-    are skipped. Used to validate WHEN NOT MATCHED BY SOURCE clauses,
-    which see only target rows (ADVICE r7: the old textual `s.` match
-    false-rejected target struct columns named `s` and missed
-    unqualified source refs)."""
-    clean = _blank_literals(expr)
-    # Spark resolves identifiers case-insensitively: compare lowercased
-    tl, sl = talias.lower(), salias.lower()
+def _strip(parts: list[str], alias: tuple[str, ...]):
+    """`parts` without a leading qualifier naming `alias` (any suffix of
+    it, case-insensitively, as Spark matches qualifiers), else None."""
+    low, al = [p.lower() for p in parts], [a.lower() for a in alias]
+    for k in range(len(al), 0, -1):
+        if len(low) > k and low[:k] == al[-k:]:
+            return parts[k:]
+    return None
+
+
+def _qualifier(*aliases):
+    """A _rewrite `sub` requalifying references led by alias a with q for
+    each (a, q) ("" drops it); one pass, so crossed aliases swap."""
+    def sub(parts):
+        for alias, q in aliases:
+            rest = _strip(parts, alias)
+            if rest is not None:
+                return q + _render(rest)
+        return None
+    return sub
+
+
+def _on_keys(text: str, cond, talias, salias) -> list[str]:
+    """ON keys: a conjunction of t.col = s.col on the SAME column name."""
+    kind = _kind(cond)
+    if kind == "And":
+        return (_on_keys(text, cond.left(), talias, salias)
+                + _on_keys(text, cond.right(), talias, salias))
+    term = _src(text, cond)
+    cols = []
+    for side in _seq(cond.children()) if kind == "EqualTo" else []:
+        parts = _parts(side) if _kind(side) == "UnresolvedAttribute" else []
+        if len(parts) > 1:
+            rest = _strip(parts, talias)
+            parts = rest if rest is not None else _strip(parts, salias)
+            if parts is None:
+                raise ValueError(f"unknown qualifier in ON term {term!r}")
+        if len(parts) == 1:
+            cols.append(parts[0])
+    if len(cols) != 2:
+        raise ValueError(f"unsupported ON term (need t.col = s.col): {term!r}")
+    if cols[0] != cols[1]:
+        raise ValueError(f"ON must join the same column name on both sides "
+                         f"(equality-delete key), got {term!r}")
+    return cols[:1]
+
+
+def _assignments(assigns, talias=()) -> dict:
+    """SET / INSERT assignments → {column: value node}."""
+    out = {}
+    for a in _seq(assigns):
+        parts = _parts(a.key())
+        col = _strip(parts, talias) if len(parts) > 1 else parts
+        if col is None or len(col) != 1:
+            raise ValueError(
+                f"unsupported SET assignment: {'.'.join(parts)!r}")
+        if col[0] in out:
+            raise ValueError(f"duplicate SET column {col[0]!r}")
+        out[col[0]] = a.value()
+    return out
+
+
+def _source_only_refs(names, talias, salias, tcols, scols) -> list[str]:
+    """References (name parts) only the MERGE source resolves: led by the
+    source alias (unless it names a target column — a struct deref) or
+    by a source-only column; case-insensitive, as Spark resolves."""
+    tl, sl = talias[-1].lower(), salias[-1].lower()
     tlow = {c.lower() for c in tcols}
     slow = {c.lower() for c in scols}
-    refs = []
-    for m in re.finditer(
-            r"\b[A-Za-z_]\w*(?:\s*\.\s*[A-Za-z_]\w*)*", clean):
-        if clean[m.end():].lstrip().startswith("("):
-            continue  # function call
-        chain = m.group(0)
-        head = chain.split(".", 1)[0].strip().lower()
-        if head.upper() in _EXPR_KEYWORDS or head == tl:
-            continue
-        if head == sl and sl not in tlow:
-            refs.append(chain)  # source-alias qualifier (dotted or not)
-        elif head in slow and head not in tlow:
-            # bare source column, or a dotted deref of a source-only
-            # (struct) column — neither resolves on the target frame
-            refs.append(chain)
-    return refs
+    return [".".join(p) for p in names
+            if p[0].lower() != tl
+            and ((p[0].lower() == sl and sl not in tlow)
+                 or (p[0].lower() in slow and p[0].lower() not in tlow))]
+
+
+def _aliased(node):
+    """(relation, alias name parts) of one MERGE side."""
+    if _kind(node) == "SubqueryAlias":
+        return node.child(), (node.alias(),)
+    return node, tuple(_parts(node))
 
 
 def merge_into(spark: SparkSession, statement: str,
                catalog=None, source_df: DataFrame | None = None):
-    """Execute a MERGE INTO statement against an icelake table.
-
-    - `target` resolves via `catalog.load_table(ident)` when a catalog
-      is passed, else as a filesystem table path (IcebergTable.load).
-    - `source` is a registered Spark temp view name, unless `source_df`
-      is given (then the USING name is only documentation).
-
-    Returns the target table (reloaded state is visible via .to_df).
-    """
-    m = _MERGE_RE.match(statement)
-    if not m:
+    """Execute a MERGE INTO statement (see _merge); returns the target
+    table. The target resolves through `catalog` (else as a table path);
+    the USING name is a Spark view unless `source_df` replaces it."""
+    plan, text = _parse(spark, statement)
+    if _kind(plan) != "MergeIntoTable":
         raise ValueError("unsupported MERGE syntax; expected "
                          "MERGE INTO t USING s ON ... WHEN ...")
-    talias = m.group("talias") or m.group("target")
-    salias = m.group("salias") or m.group("source")
-    keys = _parse_on(m.group("on"), talias, salias)
+    return _merge(spark, text, plan, catalog, source_df)
 
-    matched_clauses, when_not_matched, insert_cols, by_source_clauses = \
-        _parse_when_clauses(m.group("clauses") or "", talias, salias)
-    if not matched_clauses and when_not_matched is None \
-            and not by_source_clauses:
-        raise ValueError("MERGE needs at least one WHEN clause")
-    column_level = (insert_cols is not None
-                    or any(sets for _a, _c, sets in matched_clauses)
-                    or bool(by_source_clauses))
-    if column_level:
-        # conditions and exprs run on the full t⋈s join; aliases were
-        # rewritten to the canonical t./s. qualifiers by the parser
-        matched_clauses = [
-            (a, _requalify(c, talias, salias) if c else c, sets)
-            for a, c, sets in matched_clauses]
+
+def _merge(spark, text, plan, catalog=None, source_df=None):
+    """MERGE INTO t USING view ON t.k = s.k [AND ...], with WHEN MATCHED
+    [AND c] THEN UPDATE SET * | SET col = e, ... | DELETE, WHEN NOT
+    MATCHED THEN INSERT * | INSERT (cols) VALUES (...) and WHEN NOT
+    MATCHED BY SOURCE [AND c] THEN UPDATE SET ... | DELETE clauses,
+    first-match-wins. `*` forms are whole-row (conditions read the source
+    row); column-level forms keep unset columns and read both sides."""
+    target, talias = _aliased(plan.targetTable())
+    source, salias = _aliased(plan.sourceTable())
+    if _kind(source) != "UnresolvedRelation":
+        raise ValueError("unsupported MERGE source: USING takes a table "
+                         "or view name")
+    keys = _on_keys(text, plan.mergeCondition(), talias, salias)
+
+    def clause(a):  # (action, condition node, {col: node} | None)
+        kind, cond = _kind(a), _opt(a.condition())
+        if kind == "DeleteAction":
+            return "delete", cond, None
+        if kind == "UpdateStarAction":
+            return "update", cond, None
+        return "update", cond, _assignments(a.assignments(), talias)
+
+    matched = [clause(a) for a in _seq(plan.matchedActions())]
+    by_source = [clause(a) for a in _seq(plan.notMatchedBySourceActions())]
+    when_not_matched = insert = None
+    for a in _seq(plan.notMatchedActions()):
+        if a.condition().isDefined():
+            raise ValueError("unsupported MERGE clause: WHEN NOT MATCHED "
+                             "takes no AND condition")
+        when_not_matched = "insert"
+        if _kind(a) == "InsertAction":
+            insert = _assignments(a.assignments(), talias)
+
+    req = _qualifier((talias, "t."), (salias, "s."))
+    if insert is not None or by_source or any(s for _, _, s in matched):
+        # column-level: conditions and exprs run on the full t⋈s join
+        matched = [(a, _rewrite(text, c, req),
+                    {k: _rewrite(text, v, req) for k, v in s.items()}
+                    if s else None) for a, c, s in matched]
     else:
-        norm = []
-        for act, cond, _sets in matched_clauses:
-            if cond:
-                # whole-row path: the condition evaluates against the
-                # SOURCE row only (delta.merge contract); allow the source
-                # alias as a qualifier, reject the target's (target
-                # non-key columns are never read on this path). Both the
-                # check and the alias strip are quote-aware: a literal
-                # like 'see tgt.notes' must neither false-reject nor be
-                # rewritten (code-review r8).
-                if re.search(rf"\b{re.escape(talias)}\.",
-                             _blank_literals(cond)):
-                    raise ValueError("WHEN MATCHED AND may only reference "
-                                     "source columns")
-                cond = _sub_outside_quotes(
-                    cond, rf"\b{re.escape(salias)}\.", "").strip()
-            norm.append((act, cond, None))
-        matched_clauses = norm
+        # whole-row: conditions read the SOURCE row only (delta.merge
+        # contract) — target refs are refused, the source alias dropped
+        for _a, c, _s in matched:
+            if c is not None and any(_strip(_parts(r), talias) is not None
+                                     for r in _attributes(c)):
+                raise ValueError("WHEN MATCHED AND may only reference "
+                                 "source columns")
+        matched = [(a, _rewrite(text, c, _qualifier((salias, ""))), None)
+                   for a, c, _s in matched]
+    insert_cols = None if insert is None else (
+        list(insert), [_rewrite(text, v, req) for v in insert.values()])
 
-    table, branch = _load_write_target(m.group("target"), catalog)
-    source = (source_df if source_df is not None
-              else spark.table(m.group("source")))
-    if by_source_clauses:
-        # BY SOURCE rows have no source side: validate against the
-        # ACTUAL column sets (target struct columns shadow an
-        # identically-named alias), then requalify
+    table, branch = _load_write_target(_ident(target), catalog)
+    src = source_df if source_df is not None \
+        else spark.table(_render(_parts(source)))
+    if by_source:
+        # BY SOURCE rows have no source side: validate against the actual
+        # column sets; a source alias naming a target column is a struct
         tcols = {f.name for f in table.schema().fields}
-        scols = set(source.columns)
-        # when the source alias collides with a TARGET column name,
-        # `salias.x` in a BY SOURCE expression is a struct deref of
-        # that target column — requalifying it to the canonical `s.`
-        # would point it at the (absent) source side. Rewrite only the
-        # target alias in that case.
-        s_arg = (talias if salias.lower() in {c.lower() for c in tcols}
-                 else salias)
-        requal_by_source = []
-        for act, cond, sets in by_source_clauses:
-            bad = []
-            if cond:
-                bad += _source_only_refs(cond, talias, salias,
-                                         tcols, scols)
-            for v in (sets or {}).values():
-                bad += _source_only_refs(v, talias, salias, tcols, scols)
+        collide = salias[-1].lower() in {c.lower() for c in tcols}
+        req = _qualifier((talias, "t."), (() if collide else salias, "s."))
+        out = []
+        for act, cond, sets in by_source:
+            nodes = [n for n in [cond, *(sets or {}).values()]
+                     if n is not None]
+            bad = _source_only_refs(
+                [_parts(r) for n in nodes for r in _attributes(n)],
+                talias, salias, tcols, set(src.columns))
             if bad:
                 raise ValueError(
                     "WHEN NOT MATCHED BY SOURCE may only reference "
                     f"target columns; source-only refs: {bad}")
-            if cond:
-                cond = _requalify(cond, talias, s_arg)
-            if sets:
-                sets = {k: _requalify(v, talias, s_arg)
-                        for k, v in sets.items()}
-            requal_by_source.append((act, cond, sets))
-        by_source_clauses = requal_by_source
+            out.append((act, _rewrite(text, cond, req),
+                        {k: _rewrite(text, v, req) for k, v in sets.items()}
+                        if sets else None))
+        by_source = out
 
-    delta.merge(table, spark, source, on=keys,
-                matched_clauses=matched_clauses,
-                when_not_matched=when_not_matched,
-                insert_cols=insert_cols,
-                by_source_clauses=by_source_clauses, branch=branch)
+    delta.merge(table, spark, src, on=keys, matched_clauses=matched,
+                when_not_matched=when_not_matched, insert_cols=insert_cols,
+                by_source_clauses=by_source, branch=branch)
     return table
 
 
-_DELETE_RE = re.compile(
-    r"^\s*DELETE\s+FROM\s+(?P<target>[\w.$/-]+)"
-    r"(?:\s+WHERE\s+(?P<cond>.+?))?\s*$",
-    re.IGNORECASE | re.DOTALL)
-
-_UPDATE_RE = re.compile(
-    r"^\s*UPDATE\s+(?P<target>[\w.$/-]+)"
-    r"\s+SET\s+(?P<rest>.+?)\s*$",
-    re.IGNORECASE | re.DOTALL)
-
-
-def _split_top_where(text: str) -> tuple[str, str | None]:
-    """Split `... WHERE cond` on the first TOP-LEVEL WHERE (outside
-    quotes and parens) — a regex split would cut inside a string
-    literal like SET note = 'a WHERE b'."""
-    depth, i, n = 0, 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch in "'\"":
-            i = _skip_quoted(text, i)
-            continue
-        elif ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif depth == 0 and ch in "wW" and text[i:i + 5].upper() == "WHERE" \
-                and (i == 0 or text[i - 1].isspace()) \
-                and (i + 5 == n or text[i + 5].isspace()):
-            return text[:i].rstrip(), text[i + 5:].strip() or None
-        i += 1
-    return text.strip(), None
-
-# one `col = expr` assignment; expressions may contain commas only inside
-# parens/quotes, so the splitter walks the text instead of a bare split(',')
-_ASSIGN_RE = re.compile(r"^\s*(?P<col>[\w]+)\s*=\s*(?P<expr>.+?)\s*$",
-                        re.DOTALL)
-
-
-def _split_assignments(text: str) -> list[str]:
-    """Split `a = f(x, y), b = 2` on TOP-LEVEL commas only."""
-    parts, depth, start, i, n = [], 0, 0, 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch in "'\"":
-            i = _skip_quoted(text, i)
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append(text[start:i])
-            start = i + 1
-        i += 1
-    parts.append(text[start:])
-    return [p for p in (s.strip() for s in parts) if p]
+# ------------------------------------------------------- dispatcher
 
 
 def _load_target(ident: str, catalog):
@@ -541,594 +423,426 @@ def _load_target(ident: str, catalog):
 
 def execute(spark: SparkSession, statement: str, catalog=None,
             source_df: DataFrame | None = None):
-    """SQL-DML dispatcher: MERGE INTO / UPDATE / DELETE FROM against an
-    icelake table (the statement surface the reference exercises through
-    Spark SQL in its integration tests — delta_test_v2.rs:101-226).
+    """Run one SQL statement against icelake tables — the surface the
+    reference drives through Spark SQL (delta_test_v2.rs:101-226): MERGE
+    INTO, UPDATE, DELETE FROM (no WHERE truncates), INSERT INTO |
+    OVERWRITE, CREATE [OR REPLACE] TABLE [AS SELECT], ALTER TABLE, CALL
+    system.<proc>, CREATE | DROP NAMESPACE, DROP TABLE, SHOW TABLES |
+    TBLPROPERTIES, DESCRIBE, ANALYZE TABLE, and any query (_select).
 
-    - `DELETE FROM t [WHERE cond]` → delete_rows (merge-on-read
-      position deletes by default; `write.delete.mode` honored); a
-      missing WHERE truncates via overwrite semantics.
-    - `UPDATE t SET col = expr[, ...] [WHERE cond]` → update_rows
-      (expressions evaluate against the OLD row, standard UPDATE
-      semantics; mode follows `write.update.mode`).
-    Returns the target table.
-    """
-    s = statement.strip()
-    head = s.split(None, 1)[0].upper() if s else ""
-    if head == "MERGE":
-        return merge_into(spark, s, catalog=catalog, source_df=source_df)
-    if head == "DELETE":
-        m = _DELETE_RE.match(s)
-        if not m:
-            raise ValueError("unsupported DELETE syntax; expected "
-                             "DELETE FROM t [WHERE cond]")
-        table, branch = _load_write_target(m.group("target"), catalog)
-        cond = m.group("cond")
-        if cond is None:
-            # full truncate: one overwrite commit removing everything
-            # (on a branch target, only that branch's content)
-            from .transaction import Transaction
+    Names follow Spark's identifier rules: they resolve through
+    `catalog`, or with catalog=None as table paths — and a path must be
+    backtick-quoted (`` DELETE FROM `/data/t` ``). Returns the target
+    table for DML/DDL, the procedure's result for CALL, and a DataFrame
+    for queries and metadata statements."""
+    try:
+        plan, text = _parse(spark, statement)
+    except ValueError:
+        out = _alter_extension(spark, statement, catalog)
+        if out is None:
+            raise
+        return out
+    kind = _kind(plan)
+    if kind == "MergeIntoTable":
+        return _merge(spark, text, plan, catalog, source_df)
+    if kind in _STATEMENTS:
+        return _STATEMENTS[kind](spark, text, plan, catalog)
+    from py4j.java_gateway import is_instance_of
 
-            tx = Transaction(table, branch=branch)
-            tx.remove_all_existing()
-            tx.commit("delete")
-            return table
-        table.delete_where(spark, cond, branch=branch)
+    if not is_instance_of(spark.sparkContext._gateway, plan,
+                          "org.apache.spark.sql.catalyst.plans.logical."
+                          "Command"):
+        return _select(spark, text, plan, catalog)
+    if _head(text) == "ALTER":
+        raise ValueError(f"unsupported ALTER TABLE clause ({kind})")
+    raise ValueError(f"unsupported statement {kind} (SELECT | MERGE INTO | "
+                     "UPDATE | DELETE FROM | INSERT INTO | CREATE TABLE | "
+                     "ALTER TABLE | CALL system.<proc> | CREATE/DROP "
+                     "NAMESPACE | DROP TABLE | SHOW | DESCRIBE | ANALYZE)")
+
+
+def _delete(spark, text, plan, catalog):
+    table, branch = _load_write_target(_ident(plan.table()), catalog)
+    cond = plan.condition()
+    if _kind(cond) == "Literal" and cond.value() is True and (
+            _span(cond) is None or _src(text, cond).lower() != "true"):
+        # no WHERE (Spark's implicit `true`, whose span is not its own):
+        # one commit removing everything (a branch target: its content)
+        from .transaction import Transaction
+
+        Transaction(table, branch=branch).remove_all_existing() \
+            .commit("delete")
         return table
-    if head == "UPDATE":
-        m = _UPDATE_RE.match(s)
-        if not m:
-            raise ValueError("unsupported UPDATE syntax; expected "
-                             "UPDATE t SET col = expr [WHERE cond]")
-        from .delta import update_rows
+    table.delete_where(spark, _src(text, cond), branch=branch)
+    return table
 
-        sets_text, where_cond = _split_top_where(m.group("rest"))
-        assignments = {}
-        for part in _split_assignments(sets_text):
-            am = _ASSIGN_RE.match(part)
-            if not am:
-                raise ValueError(f"unsupported SET assignment: {part!r}")
-            col = am.group("col")
-            if col in assignments:
-                raise ValueError(f"duplicate SET column {col!r}")
-            assignments[col] = am.group("expr")
-        table, branch = _load_write_target(m.group("target"), catalog)
-        update_rows(table, spark, where_cond or "true", assignments,
-                    branch=branch)
+
+def _update(spark, text, plan, catalog):
+    assignments = {k: _src(text, v)
+                   for k, v in _assignments(plan.assignments()).items()}
+    cond = _opt(plan.condition())
+    table, branch = _load_write_target(_ident(plan.table()), catalog)
+    delta.update_rows(table, spark, "true" if cond is None
+                      else _src(text, cond), assignments, branch=branch)
+    return table
+
+
+def _insert_into(spark, text, plan, catalog):
+    """INSERT INTO | OVERWRITE t [(cols)] <query>: the query's rows (via
+    _select) align to the schema — by position, or by the column list
+    with NULLs — cast to the column types, and land in one commit."""
+    from pyspark.sql import functions as F
+
+    if plan.partitionSpec().nonEmpty():
+        raise ValueError("unsupported INSERT clause: PARTITION")
+    cols = _seq(plan.userSpecifiedCols())
+    # the query is all text after the `INSERT ... t [(cols)]` header
+    df = _select(spark, text, plan.query(), catalog, _span(plan)[1])
+    table, branch = _load_write_target(_ident(plan.table()), catalog)
+    fields = table.schema().to_spark().fields
+    cols = cols or [f.name for f in fields]
+    bad = set(cols) - {f.name for f in fields}
+    if bad:
+        raise ValueError(f"unknown INSERT columns: {sorted(bad)}")
+    if len(set(cols)) != len(cols):
+        raise ValueError("duplicate INSERT column")
+    if len(df.columns) != len(cols):
+        raise ValueError(f"INSERT arity {len(df.columns)} != {len(cols)} "
+                         f"target columns")
+    by_name = dict(zip(cols, df.columns))
+    out = df.select(*[(F.col(by_name[f.name]) if f.name in by_name
+                       else F.lit(None)).cast(f.dataType).alias(f.name)
+                      for f in fields])
+    if not plan.overwrite():
+        table.append(out, branch=branch)
         return table
-    if head == "ALTER":
-        return _alter_table(spark, s, catalog=catalog)
-    if head == "CREATE":
-        m = _CREATE_NS_RE.match(s)
-        if m:
-            if catalog is None:
-                raise ValueError("CREATE NAMESPACE requires a catalog")
-            try:
-                catalog.create_namespace(m.group("ns"))
-            except Exception as e:
-                resp = getattr(e, "response", None)
-                exists = (isinstance(e, FileExistsError)
-                          or getattr(resp, "status_code", None) == 409)
-                if not (exists and m.group("ine")):
-                    raise
-            return None
-        return _create_table(spark, s, catalog=catalog)
-    if head == "DROP":
-        return _drop(spark, s, catalog=catalog)
-    if head == "INSERT":
-        return _insert_into(spark, s, catalog=catalog)
-    if head == "CALL":
-        return _call_procedure(spark, s, catalog=catalog)
-    if head in ("SHOW", "DESCRIBE", "DESC"):
-        return _show_describe(spark, s, catalog=catalog)
-    if head == "SELECT" or head == "WITH" or head == "TABLE":
-        return _select(spark, s, catalog=catalog)
-    if head == "ANALYZE":
-        return _analyze(spark, s, catalog=catalog)
-    raise ValueError(f"unsupported statement {head!r} "
-                     "(SELECT | MERGE INTO | UPDATE | DELETE FROM | "
-                     "ALTER TABLE | CREATE TABLE | CREATE NAMESPACE | "
-                     "DROP TABLE | DROP NAMESPACE | INSERT INTO | "
-                     "CALL system.<proc> | ANALYZE TABLE | SHOW | "
-                     "DESCRIBE)")
+    from .transaction import Transaction
+    from .write import write_data_files
+
+    tx = Transaction(table, branch=branch).remove_all_existing()
+    tx.add_data_files(write_data_files(table, out))
+    tx.commit("overwrite")
+    return table
 
 
-_ANALYZE_RE = re.compile(
-    r"^\s*ANALYZE\s+TABLE\s+(?P<t>[\w.$/-]+)\s+COMPUTE\s+STATISTICS"
-    r"(?:\s+FOR\s+(?:ALL\s+COLUMNS|COLUMNS\s+(?P<cols>[\w\s,]+)))?\s*$",
-    re.IGNORECASE)
+def _load_write_target(ident: str, catalog):
+    """(table, branch) for a DML target: Iceberg's `t.branch_<name>`
+    stages the commit on that branch (write-audit-publish), unless a real
+    table has that name; `t.tag_<name>` is refused (tags are immutable)."""
+    try:
+        return _load_target(ident, catalog), None
+    except Exception as e:
+        base, _, last = ident.rpartition(".")
+        bm = _REF_SUFFIX_RE.fullmatch(last) if base else None
+        if not (_missing(e) and bm):
+            raise
+        if bm.group("kind").lower() == "tag":
+            raise ValueError("cannot write to a tag (tags are immutable; "
+                             "use a branch)")
+        return _load_target(base, catalog), bm.group("name")
 
 
-def _analyze(spark, s: str, catalog=None):
+def _analyze(spark, text, plan, catalog):
     """ANALYZE TABLE t COMPUTE STATISTICS [FOR COLUMNS a, b | FOR ALL
     COLUMNS] — Spark's spelling, lowered onto compute_table_stats."""
-    m = _ANALYZE_RE.match(s)
-    if not m:
-        raise ValueError("expected ANALYZE TABLE <t> COMPUTE STATISTICS "
-                         "[FOR COLUMNS a, b | FOR ALL COLUMNS]")
     from . import maintenance
 
-    table = _load_target(m.group("t"), catalog)
-    cols = None
-    if m.group("cols"):
-        cols = [c.strip() for c in m.group("cols").split(",") if c.strip()]
-    return maintenance.compute_table_stats(table, spark, columns=cols)
+    column = _kind(plan) == "AnalyzeColumn"
+    if not column and (plan.noScan() or plan.partitionSpec().nonEmpty()):
+        raise ValueError("expected ANALYZE TABLE <t> COMPUTE STATISTICS "
+                         "[FOR COLUMNS a, b | FOR ALL COLUMNS]")
+    cols = _opt(plan.columnNames()) if column else None
+    return maintenance.compute_table_stats(
+        _load_target(_ident(plan.child()), catalog), spark,
+        columns=None if cols is None else _seq(cols))
 
 
-_CREATE_NS_RE = re.compile(
-    r"^\s*CREATE\s+(?:NAMESPACE|SCHEMA|DATABASE)\s+"
-    r"(?P<ine>IF\s+NOT\s+EXISTS\s+)?(?P<ns>[\w.]+)\s*$", re.IGNORECASE)
-_DROP_TABLE_RE = re.compile(
-    r"^\s*DROP\s+TABLE\s+(?P<ie>IF\s+EXISTS\s+)?(?P<t>[\w.$/-]+)\s*$",
-    re.IGNORECASE)
-_DROP_NS_RE = re.compile(
-    r"^\s*DROP\s+(?:NAMESPACE|SCHEMA|DATABASE)\s+"
-    r"(?P<ie>IF\s+EXISTS\s+)?(?P<ns>[\w.]+)\s*$", re.IGNORECASE)
+def _create_namespace(spark, text, plan, catalog):
+    if catalog is None:
+        raise ValueError("CREATE NAMESPACE requires a catalog")
+    if plan.properties().nonEmpty():
+        raise ValueError("unsupported CREATE NAMESPACE clause")
+    try:
+        catalog.create_namespace(_ident(plan.name()))
+    except Exception as e:
+        if not (_missing(e, FileExistsError, 409) and plan.ifNotExists()):
+            raise
 
 
-def _drop(spark: SparkSession, statement: str, catalog=None):
-    """DROP TABLE [IF EXISTS] t | DROP NAMESPACE [IF EXISTS] ns — over
-    the existing catalog API (storage.py drop_table/drop_namespace;
-    rest.py DELETE endpoints). Closes the create-without-drop asymmetry:
-    the dispatcher could CREATE tables it could never remove."""
+def _drop(spark, text, plan, catalog):
+    """DROP TABLE | NAMESPACE [IF EXISTS] name over the catalog API."""
     if catalog is None:
         raise ValueError("DROP requires a catalog")
-    m = _DROP_TABLE_RE.match(statement)
-    if m:
+    if _kind(plan) == "DropTable":
+        drop, name = catalog.drop_table, _ident(plan.child())
+    elif plan.cascade():
+        raise ValueError("unsupported DROP NAMESPACE clause: CASCADE")
+    else:
+        drop, name = catalog.drop_namespace, _ident(plan.namespace())
+    try:
+        drop(name)
+    except Exception as e:
+        if not (_missing(e) and plan.ifExists()):
+            raise
+
+
+def _show_tables(spark, text, plan, catalog):
+    """SHOW TABLES [IN ns] → (namespace, tableName)."""
+    if catalog is None:
+        raise ValueError("SHOW TABLES requires a catalog")
+    if plan.pattern().isDefined():
+        raise ValueError("unsupported SHOW TABLES clause: LIKE")
+    if _kind(plan.namespace()) == "UnresolvedNamespace":
+        idents = catalog.list_tables(_ident(plan.namespace()))
+    else:
         try:
-            catalog.drop_table(m.group("t"))
-        except Exception as e:
-            resp = getattr(e, "response", None)
-            missing = (isinstance(e, FileNotFoundError)
-                       or getattr(resp, "status_code", None) == 404)
-            if not (missing and m.group("ie")):
-                raise
-        return None
-    m = _DROP_NS_RE.match(statement)
-    if m:
-        try:
-            catalog.drop_namespace(m.group("ns"))
-        except Exception as e:
-            resp = getattr(e, "response", None)
-            missing = (isinstance(e, FileNotFoundError)
-                       or getattr(resp, "status_code", None) == 404)
-            if not (missing and m.group("ie")):
-                raise
-        return None
-    raise ValueError(f"unsupported DROP statement: {statement.strip()[:60]!r}")
+            idents = catalog.list_tables()
+        except TypeError:  # REST catalogs require a namespace
+            idents = [t for ns in catalog.list_namespaces()
+                      for t in catalog.list_tables(ns)]
+    return spark.createDataFrame(
+        [(i.rpartition(".")[0], i.rpartition(".")[2]) for i in idents],
+        "namespace string, tableName string")
 
 
-def _show_describe(spark: SparkSession, statement: str, catalog=None):
-    """Metadata statements, returned as DataFrames:
-
-        SHOW TABLES                      (namespace, tableName)
-        SHOW TBLPROPERTIES <t>           (key, value)
-        DESCRIBE [TABLE] [EXTENDED] <t>  (col_name, data_type, comment)
-                                         + partition spec + snapshot row
-    """
-    s = statement.strip()
-    m = re.match(r"^SHOW\s+TABLES(?:\s+IN\s+(?P<ns>[\w.]+))?\s*$", s,
-                 re.IGNORECASE)
-    if m:
-        if catalog is None:
-            raise ValueError("SHOW TABLES requires a catalog")
-        ns_arg = m.group("ns")
-        if ns_arg is not None:
-            idents = catalog.list_tables(ns_arg)
-        else:
-            try:
-                idents = catalog.list_tables()
-            except TypeError:
-                # REST catalogs require a namespace: enumerate them
-                idents = [t for ns in catalog.list_namespaces()
-                          for t in catalog.list_tables(ns)]
-        rows = []
-        for ident in idents:
-            ns, _, name = ident.rpartition(".")
-            rows.append((ns, name))
-        return spark.createDataFrame(
-            rows, "namespace string, tableName string")
-    m = re.match(r"^SHOW\s+TBLPROPERTIES\s+(?P<t>[\w.$/-]+)\s*$", s,
-                 re.IGNORECASE)
-    if m:
-        table = _load_target(m.group("t"), catalog)
-        props = sorted(table.metadata.properties.items())
-        return spark.createDataFrame(props, "key string, value string")
-    m = re.match(r"^(?:DESCRIBE|DESC)\s+(?:TABLE\s+)?"
-                 r"(?P<ext>EXTENDED\s+)?(?P<t>[\w.$/-]+)\s*$", s,
-                 re.IGNORECASE)
-    if m:
-        table = _load_target(m.group("t"), catalog)
-        spark_schema = table.schema().to_spark()
-        rows = [(f.name, f.dataType.simpleString(), "")
-                for f in spark_schema.fields]
-        spec = table.metadata.default_spec()
-        if spec.fields:
-            rows.append(("# Partition Information", "", ""))
-            for pf in spec.fields:
-                rows.append((pf.name, pf.transform, ""))
-        if m.group("ext"):
-            rows.append(("# Detailed Table Information", "", ""))
-            rows.append(("Location", table.path, ""))
-            rows.append(("Format-version",
-                         str(table.metadata.format_version), ""))
-            snap = table.current_snapshot()
-            rows.append(("Current-snapshot-id",
-                         str(snap.snapshot_id) if snap else "none", ""))
-        return spark.createDataFrame(
-            rows, "col_name string, data_type string, comment string")
-    raise ValueError(f"unsupported statement: {s[:60]!r}")
+def _show_properties(spark, text, plan, catalog):
+    """SHOW TBLPROPERTIES t [(key)] → (key, value)."""
+    props = _load_target(_ident(plan.table()), catalog).metadata.properties
+    key = _opt(plan.propertyKey())
+    return spark.createDataFrame(
+        sorted((k, v) for k, v in props.items() if key in (None, k)),
+        "key string, value string")
 
 
-_CALL_RE = re.compile(
-    r"^\s*CALL\s+(?:[\w]+\.)?system\.(?P<proc>\w+)\s*\((?P<args>.*)\)\s*$",
-    re.IGNORECASE | re.DOTALL)
+def _describe(spark, text, plan, catalog):
+    """DESCRIBE [TABLE] [EXTENDED] t → (col_name, data_type, comment)
+    rows, the partition spec, and (EXTENDED) table information."""
+    table = _load_target(_ident(plan.relation()), catalog)
+    rows = [(f.name, f.dataType.simpleString(), "")
+            for f in table.schema().to_spark().fields]
+    spec = table.metadata.default_spec()
+    if spec.fields:
+        rows += [("# Partition Information", "", "")] + [
+            (pf.name, pf.transform, "") for pf in spec.fields]
+    if plan.isExtended():
+        snap = table.current_snapshot()
+        rows += [("# Detailed Table Information", "", ""),
+                 ("Location", table.path, ""),
+                 ("Format-version", str(table.metadata.format_version), ""),
+                 ("Current-snapshot-id",
+                  str(snap.snapshot_id) if snap else "none", "")]
+    return spark.createDataFrame(
+        rows, "col_name string, data_type string, comment string")
 
 
-def _parse_call_args(text: str) -> tuple[list, dict]:
-    """Positional and `name => value` arguments; values are quoted
-    strings, integers, or booleans."""
-    pos, named = [], {}
-    for part in _split_assignments(text):
-        m = re.match(r"^(?P<name>\w+)\s*=>\s*(?P<val>.+)$", part, re.DOTALL)
-        raw = (m.group("val") if m else part).strip()
-        if re.fullmatch(r"'[^']*'", raw):
-            val: Any = raw[1:-1]
-        elif re.fullmatch(r"-?\d+", raw):
-            val = int(raw)
-        elif raw.lower() in ("true", "false"):
-            val = raw.lower() == "true"
-        else:
-            raise ValueError(f"unsupported CALL argument {part!r}")
-        if m:
-            named[m.group("name").lower()] = val
-        elif named:
+# ------------------------------------------------------------- CALL
+
+# procedure → its parameters in positional order (all take `table` first)
+_PROCEDURES = dict.fromkeys(
+    ("rollback_to_snapshot", "set_current_snapshot", "cherrypick_snapshot",
+     "ancestors_of"), ("snapshot_id",)) | dict.fromkeys(
+    ("rewrite_manifests", "rewrite_position_delete_files"), ()) | {
+    "rewrite_data_files": ("target_file_size_bytes",),
+    "expire_snapshots": ("older_than_ms", "retain_last"),
+    "remove_orphan_files": ("older_than_ms",),
+    "analyze_table": ("columns", "exact"), "fast_forward": ("branch", "to"),
+    "add_files": ("source_table", "format", "source")}
+
+
+def _call(spark, text, plan, catalog):
+    """CALL [cat.]system.<procedure>(...) with positional or `name =>`
+    string / integer / boolean arguments (see _PROCEDURES), as the
+    reference's harness drives maintenance (insert_compact_test.rs:
+    198-211). Returns the procedure's result, or the table."""
+    name = [p.lower() for p in _parts(plan.procedure())]
+    if len(name) not in (2, 3) or name[-2] != "system":
+        raise ValueError("unsupported CALL syntax; expected "
+                         "CALL system.<procedure>(args)")
+    proc = name[-1]
+    if proc not in _PROCEDURES:
+        raise ValueError(f"unknown procedure system.{proc}")
+    params = ("table",) + _PROCEDURES[proc]
+    pos, args = [], {}
+    for a in _seq(plan.args()):
+        key, v = ((a.key().lower(), a.value())
+                  if _kind(a) == "NamedArgumentExpression" else (None, a))
+        if _kind(v) != "Literal" or v.dataType().simpleString() not in (
+                "string", "int", "bigint", "boolean"):
+            raise ValueError(f"unsupported CALL argument {_src(text, v)!r}")
+        val = v.value()  # a bool / int, or a JVM UTF8String
+        val = val if isinstance(val, int) else val.toString()
+        if key is not None:
+            args[key] = val
+        elif args:
             raise ValueError("positional CALL argument after named")
         else:
             pos.append(val)
-    return pos, named
+    extra = pos[len(params):] + sorted(set(args) - set(params))
+    if extra or set(args) & set(params[:len(pos)]):
+        raise ValueError(f"unsupported arguments for system.{proc}: {extra}")
+    args.update(zip(params, pos))
+    if not isinstance(args.get("table"), str):
+        raise ValueError("CALL needs the table as first argument "
+                         "or table => '...'")
+    table = _load_target(args.pop("table"), catalog)
 
+    def need(key):
+        if key not in args:
+            raise ValueError(f"{proc} needs {key}")
+        return args[key]
 
-def _call_procedure(spark: SparkSession, statement: str, catalog=None):
-    """`CALL [cat.]system.<procedure>(...)` — the maintenance entry
-    points the reference's integration harness drives through Spark
-    (insert_compact_test.rs:198-211 calls system.rewrite_data_files).
-
-        CALL system.rewrite_data_files('db.t' [, target_file_size_bytes])
-        CALL system.expire_snapshots(table => 'db.t',
-                                     [older_than_ms => N,] [retain_last => N])
-        CALL system.rollback_to_snapshot('db.t', <snapshot_id>)
-        CALL system.remove_orphan_files('db.t' [, older_than_ms])
-        CALL system.rewrite_manifests('db.t')
-        CALL system.fast_forward('db.t', 'branch', 'to_ref')
-
-    Returns the procedure's result (count) or the table for
-    rollback/fast_forward.
-    """
-    m = _CALL_RE.match(statement)
-    if not m:
-        raise ValueError("unsupported CALL syntax; expected "
-                         "CALL system.<procedure>(args)")
-    proc = m.group("proc").lower()
-    pos, named = _parse_call_args(m.group("args"))
-    ident = named.pop("table", None)
-    if ident is None:
-        if not pos or not isinstance(pos[0], str):
-            raise ValueError("CALL needs the table as first argument "
-                             "or table => '...'")
-        ident, pos = pos[0], pos[1:]
-    table = _load_target(ident, catalog)
-
-    from . import maintenance
+    from . import maintenance as m
 
     if proc == "rewrite_data_files":
-        kw = {}
-        size = named.pop("target_file_size_bytes", None)
-        if size is None and pos:
-            size, pos = pos[0], pos[1:]
-        if size is not None:
-            kw["target_file_size"] = int(size)
-        _reject_leftover(proc, pos, named)
-        return maintenance.rewrite_data_files(table, spark, **kw)
-    if proc == "expire_snapshots":
-        kw = {}
-        for name in ("older_than_ms", "retain_last"):
-            if named.get(name) is not None:
-                kw[name] = int(named.pop(name))
-        if pos:
-            kw.setdefault("older_than_ms", int(pos[0]))
-            pos = pos[1:]
-        if pos:
-            kw.setdefault("retain_last", int(pos[0]))
-            pos = pos[1:]
-        _reject_leftover(proc, pos, named)
-        return maintenance.expire_snapshots(table, **kw)
-    if proc in ("rollback_to_snapshot", "set_current_snapshot",
-                "cherrypick_snapshot"):
-        sid = named.pop("snapshot_id", None)
-        if sid is None:
-            if not pos:
-                raise ValueError(f"{proc} needs snapshot_id")
-            sid, pos = pos[0], pos[1:]
-        _reject_leftover(proc, pos, named)
-        if proc == "cherrypick_snapshot":
-            # publish ONE staged append onto main (WAP per-snapshot)
-            maintenance.cherrypick_snapshot(table, int(sid))
-        elif proc == "rollback_to_snapshot":
-            # ancestry-validated (Iceberg parity): refuses WAP-staged
-            # or rolled-past targets
-            maintenance.rollback_to(table, int(sid))
-        else:
-            # set_current_snapshot: the unrestricted ref move
-            maintenance.set_current_snapshot(table, int(sid))
-        return table
-    if proc == "remove_orphan_files":
-        kw = {}
-        older = named.pop("older_than_ms", None)
-        if older is None and pos:
-            older, pos = pos[0], pos[1:]
-        if older is not None:
-            kw["older_than_ms"] = int(older)
-        _reject_leftover(proc, pos, named)
-        return maintenance.remove_orphan_files(table, **kw)
+        size = args.get("target_file_size_bytes")
+        return m.rewrite_data_files(table, spark, **(
+            {} if size is None else {"target_file_size": int(size)}))
+    if proc in ("expire_snapshots", "remove_orphan_files"):
+        return getattr(m, proc)(table, **{k: int(v)
+                                          for k, v in args.items()})
     if proc == "rewrite_manifests":
-        _reject_leftover(proc, pos, named)
-        return maintenance.rewrite_manifests(table)
+        return m.rewrite_manifests(table)
+    if proc == "rewrite_position_delete_files":
+        return m.rewrite_position_deletes(table, spark)
     if proc == "analyze_table":
         kw = {}
-        cols = named.pop("columns", None)
-        if cols is None and pos:
-            cols, pos = pos[0], pos[1:]
-        if cols is not None:
-            kw["columns"] = [c.strip() for c in str(cols).split(",")
-                             if c.strip()]
-        ex = named.pop("exact", None)
-        if ex is not None:
-            kw["exact"] = str(ex).lower() in ("true", "1")
-        _reject_leftover(proc, pos, named)
-        return maintenance.compute_table_stats(table, spark, **kw)
-    if proc == "rewrite_position_delete_files":
-        _reject_leftover(proc, pos, named)
-        return maintenance.rewrite_position_deletes(table, spark)
-    if proc == "fast_forward":
-        branch = named.pop("branch", None)
-        to = named.pop("to", None)
-        if branch is None:
-            if not pos:
-                raise ValueError("fast_forward needs branch")
-            branch, pos = pos[0], pos[1:]
-        if to is None:
-            if not pos:
-                raise ValueError("fast_forward needs to")
-            to, pos = pos[0], pos[1:]
-        _reject_leftover(proc, pos, named)
-        table.fast_forward(branch, to)
-        return table
-    if proc == "add_files":
-        # Iceberg: add_files(table => t, source_table => '`parquet`.`/p`')
-        # — register external files without rewriting. We accept a
-        # path/glob (source => '/dir/*.parquet' or a directory) or an
-        # explicit list; format defaults to parquet like Iceberg's
-        # backtick-qualified source spelling.
-        src = named.pop("source_table", None) or named.pop("source", None)
-        if src is None:
-            if not pos:
-                raise ValueError("add_files needs source => '<path|glob>'")
-            src, pos = pos[0], pos[1:]
-        fmt = named.pop("format", None) or "PARQUET"
-        _reject_leftover(proc, pos, named)
-        m2 = re.match(r"^`(\w+)`\s*\.\s*`(.+)`$", str(src))
-        if m2:
-            fmt, src = m2.group(1), m2.group(2)
-        from fnmatch import fnmatch
-
-        from .fileio import dirname, norm_path, resolve_io
-
-        src = norm_path(str(src))
-        fio = resolve_io(src)
-        if any(c in src for c in "*?["):
-            base = dirname(src)
-            # list_files is RECURSIVE, and fnmatch's '*' happily
-            # crosses '/' — without the slash-count gate a glob like
-            # /dir/*.parquet would register files from nested
-            # subtrees (an aborted write's _temporary/, another
-            # dataset under /dir) as committed table data (review
-            # r11). Real glob semantics: a wildcard never descends.
-            depth_slashes = src.count("/")
-            paths = [p for p, _ in fio.list_files(base)
-                     if p.count("/") == depth_slashes
-                     and fnmatch(p, src)]
-        else:
-            try:
-                listed = fio.list_files(src)
-            except (FileNotFoundError, NotADirectoryError):
-                listed = []
-            paths = ([p for p, _ in listed
-                      if p.endswith("." + fmt.lower())]
-                     or ([src] if src.endswith("." + fmt.lower())
-                         else []))
-        # deterministic commit order regardless of listing backend
-        paths.sort()
-        if not paths:
-            raise FileNotFoundError(f"add_files: no {fmt} files at {src}")
-        table.add_files(paths, file_format=fmt.upper())
-        return table
+        if "columns" in args:
+            kw["columns"] = [c.strip() for c in str(args["columns"])
+                             .split(",") if c.strip()]
+        if "exact" in args:
+            kw["exact"] = str(args["exact"]).lower() in ("true", "1")
+        return m.compute_table_stats(table, spark, **kw)
     if proc == "ancestors_of":
-        # snapshot lineage of a ref/snapshot (Iceberg's ancestors_of):
-        # rows (snapshot_id, timestamp_ms) current-first
-        sid = named.pop("snapshot_id", None)
-        if sid is None and pos:
-            sid, pos = pos[0], pos[1:]
-        _reject_leftover(proc, pos, named)
-        cur = (table.snapshot(int(sid)) if sid is not None
+        # the lineage of a snapshot (default: current), current first
+        cur = (table.snapshot(int(args["snapshot_id"]))
+               if "snapshot_id" in args
                else table.metadata.current_snapshot())
         by_id = {s.snapshot_id: s for s in table.metadata.snapshots}
         rows = []
         while cur is not None:
             rows.append((cur.snapshot_id, cur.timestamp_ms))
             cur = by_id.get(cur.parent_snapshot_id)
-        return spark.createDataFrame(
-            rows, "snapshot_id long, timestamp_ms long")
-    raise ValueError(f"unknown procedure system.{proc}")
+        return spark.createDataFrame(rows,
+                                     "snapshot_id long, timestamp_ms long")
+    if proc == "fast_forward":
+        table.fast_forward(need("branch"), need("to"))
+    elif proc == "add_files":
+        src = args.get("source_table") or args.get("source")
+        if src is None:
+            raise ValueError("add_files needs source => '<path|glob>'")
+        _add_files(table, str(src), args.get("format") or "PARQUET")
+    else:
+        # rollback is ancestry-validated (Iceberg parity); set_current is
+        # the unrestricted ref move; cherrypick publishes ONE staged
+        # (write-audit-publish) append onto main
+        {"rollback_to_snapshot": m.rollback_to,
+         "set_current_snapshot": m.set_current_snapshot,
+         "cherrypick_snapshot": m.cherrypick_snapshot}[proc](
+            table, int(need("snapshot_id")))
+    return table
 
 
-def _reject_leftover(proc: str, pos: list, named: dict) -> None:
-    if pos or named:
-        raise ValueError(
-            f"unsupported arguments for system.{proc}: "
-            f"{pos + sorted(named)}")
+def _add_files(table, src: str, fmt: str) -> None:
+    """system.add_files: register a directory's, a file's or a glob's
+    files (or Iceberg's '`parquet`.`/path`' spelling) as they are."""
+    from fnmatch import fnmatch
+
+    from .fileio import dirname, norm_path, resolve_io
+
+    m = re.match(r"^`(\w+)`\s*\.\s*`(.+)`$", src)
+    if m:
+        fmt, src = m.group(1), m.group(2)
+    src = norm_path(src)
+    fio = resolve_io(src)
+    if any(c in src for c in "*?["):
+        # list_files is RECURSIVE and fnmatch's '*' crosses '/': the
+        # slash-count gate keeps a wildcard from descending into nested
+        # subtrees (an aborted write's _temporary/, another dataset)
+        paths = [p for p, _ in fio.list_files(dirname(src))
+                 if p.count("/") == src.count("/") and fnmatch(p, src)]
+    else:
+        try:
+            listed = fio.list_files(src)
+        except (FileNotFoundError, NotADirectoryError):
+            listed = []
+        ext = "." + fmt.lower()
+        paths = ([p for p, _ in listed if p.endswith(ext)]
+                 or ([src] if src.endswith(ext) else []))
+    if not paths:
+        raise FileNotFoundError(f"add_files: no {fmt} files at {src}")
+    # deterministic commit order regardless of listing backend
+    table.add_files(sorted(paths), file_format=fmt.upper())
 
 
-def _balanced_close(text: str, i: int) -> int:
-    """Index of the ')' matching the '(' at text[i] (quote-aware)."""
-    depth, j, n = 0, i, len(text)
-    while j < n:
-        ch = text[j]
-        if ch in "'\"":
-            j = _skip_quoted(text, j)
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return j
-        j += 1
-    raise ValueError("unbalanced parentheses in statement")
+# ------------------------------------------------------- CREATE TABLE
+
+_TRANSFORM_NAMES = {"years": "year", "months": "month", "days": "day",
+                    "hours": "hour"}
 
 
-def _convert_spec_parts(parts_text: str) -> list[str]:
-    """PARTITIONED BY / SET PARTITION SPEC part list → the update_spec
-    spellings: accepts BOTH our bucket[8](id) and the standard
-    Spark/Iceberg bucket(8, id) / truncate(4, col) forms."""
-    parts = []
-    for x in _split_assignments(parts_text):
-        m2 = re.match(r"^(bucket|truncate)\s*\(\s*(\d+)\s*,"
-                      r"\s*(\w+)\s*\)$", x, re.IGNORECASE)
-        parts.append(f"{m2.group(1).lower()}[{m2.group(2)}]"
-                     f"({m2.group(3)})" if m2 else x)
-    return parts
+def _spec_part(t) -> str:
+    """A parsed PARTITIONED BY transform in update_spec's spelling:
+    `col`, `month(col)`, `bucket[N](col)`, `truncate[W](col)`, ..."""
+    args = list(t.arguments())
+    refs = [".".join(a.fieldNames()) for a in args
+            if _kind(a) == "FieldReference"]
+    nums = [a.value() for a in args if _kind(a) == "LiteralValue"]
+    if len(refs) != 1 or len(nums) > 1:
+        raise ValueError(f"unsupported partition transform {t.describe()!r}")
+    name = _TRANSFORM_NAMES.get(t.name(), t.name())
+    if name == "identity":
+        return refs[0]
+    return f"{name}[{nums[0]}]({refs[0]})" if nums else f"{name}({refs[0]})"
 
 
-def _create_table(spark: SparkSession, statement: str, catalog=None):
-    """CREATE [OR REPLACE] TABLE [IF NOT EXISTS] ident
-    [(col type[, ...])] [USING iceberg]
-    [PARTITIONED BY (transform(col), ...)] [TBLPROPERTIES ('k'='v', ...)]
-    [AS <select>]
-
-    The statement surface the reference's integration harness issues
-    first (/root/reference/testdata/docker/spark-script/init-table.sql:
-    CREATE TABLE ... USING iceberg driven through Spark SQL). Column
-    types accept the full Spark DDL grammar (decimal/array/map/struct/
-    NOT NULL) via StructType.fromDDL; the partition clause accepts both
-    bucket(8, id) and bucket[8](id) spellings.
-
-    CTAS (`AS SELECT`) derives the schema from the query (which runs
-    through _select, so it may read icelake tables, time travel, and
-    metadata suffixes). `CREATE OR REPLACE` on an existing table is
-    RTAS: ONE atomic commit installs the replacement schema (fresh
-    field ids past last-column-id), the declared partition spec
-    (unpartitioned when absent), and an overwrite snapshot with the
-    new data — snapshot history and refs survive, and time travel to
-    pre-replace snapshots reads the old schema.
-    """
-    if catalog is None:
-        raise ValueError("CREATE TABLE requires a catalog")
-    m = re.match(r"^\s*CREATE\s+(?P<rep>OR\s+REPLACE\s+)?TABLE\s+"
-                 r"(?P<ine>IF\s+NOT\s+EXISTS\s+)?"
-                 r"(?P<target>[\w.$/-]+)\s*", statement, re.IGNORECASE)
-    if not m:
-        raise ValueError("unsupported CREATE TABLE syntax")
-    ident, if_not_exists = m.group("target"), bool(m.group("ine"))
-    or_replace = bool(m.group("rep"))
-    if or_replace and if_not_exists:
-        raise ValueError("CREATE OR REPLACE TABLE cannot take "
-                         "IF NOT EXISTS")
-    rest = statement[m.end():]
-    cols_text = None
-    if rest.startswith("("):
-        close = _balanced_close(rest, 0)
-        cols_text, rest = rest[1:close], rest[close + 1:]
-    tail = rest.strip()
-
-    um = re.match(r"^USING\s+(?P<fmt>\w+)\s*", tail, re.IGNORECASE)
-    if um:
-        if um.group("fmt").lower() != "iceberg":
-            raise ValueError(f"unsupported USING format {um.group('fmt')!r}")
-        tail = tail[um.end():].strip()
-    spec_parts = None
-    pm = re.match(r"^PARTITIONED\s+BY\s*", tail, re.IGNORECASE)
-    if pm:
-        t2 = tail[pm.end():]
-        if not t2.startswith("("):
-            raise ValueError("PARTITIONED BY needs a (...) list")
-        close = _balanced_close(t2, 0)
-        spec_parts = _convert_spec_parts(t2[1:close])
-        tail = t2[close + 1:].strip()
-    props = None
-    tm = re.match(r"^TBLPROPERTIES\s*", tail, re.IGNORECASE)
-    if tm:
-        t2 = tail[tm.end():]
-        if not t2.startswith("("):
-            raise ValueError("TBLPROPERTIES needs a (...) list")
-        close = _balanced_close(t2, 0)
-        props = dict(_PROP_PAIR_RE.findall(t2[1:close]))
-        if not props:
-            raise ValueError("TBLPROPERTIES needs 'k' = 'v' pairs")
-        tail = t2[close + 1:].strip()
-    df = None
-    am = re.match(r"^AS\s+", tail, re.IGNORECASE)
-    if am:
-        if cols_text is not None:
-            raise ValueError(
-                "CREATE TABLE ... AS SELECT does not take a column list")
-        # through _select: the body may read icelake tables (time
-        # travel / metadata suffixes / branches included)
-        df = _select(spark, tail[am.end():], catalog=catalog)
-        tail = ""
-    if tail:
-        raise ValueError(f"unsupported CREATE TABLE clause: {tail[:60]!r}")
-    if cols_text is None and df is None:
-        raise ValueError(
-            "CREATE TABLE needs a (col type, ...) list or AS SELECT")
-
-    from pyspark.sql.types import StructType
+def _create_table(spark, text, plan, catalog):
+    """CREATE [OR REPLACE] TABLE [IF NOT EXISTS] t [(col type, ...)]
+    [USING iceberg] [PARTITIONED BY (...)] [TBLPROPERTIES (...)] [AS
+    <query>] — the reference harness's first statement (init-table.sql).
+    A CTAS query runs through _select; OR REPLACE on an existing table
+    is one atomic replace (_replace_table)."""
+    from pyspark.sql.types import StructField, StructType
 
     from .types import Schema
 
-    if cols_text is not None:
-        try:
-            st = StructType.fromDDL(cols_text)
-        except Exception as e:
-            raise ValueError(
-                f"bad column list {cols_text[:80]!r}: {e}") from e
-    else:
+    if catalog is None:
+        raise ValueError("CREATE TABLE requires a catalog")
+    kind, spec = _kind(plan), plan.tableSpec()
+    fmt = _opt(spec.provider())
+    if fmt is not None and fmt.lower() != "iceberg":
+        raise ValueError(f"unsupported USING format {fmt!r}")
+    if spec.location().isDefined() or spec.comment().isDefined() \
+            or spec.optionExpression().options().nonEmpty():
+        raise ValueError("unsupported CREATE TABLE clause "
+                         "(LOCATION, COMMENT or OPTIONS)")
+    ident = _ident(plan.name())
+    props = _props(spec.properties()) or None
+    spec_parts = [_spec_part(t) for t in _seq(plan.partitioning())] or None
+    df = None
+    if kind.endswith("AsSelect"):
+        df = _select(spark, text, plan.query(), catalog,
+                     _query_start(spark, text, plan.query()))
         st = df.schema
-
-    if or_replace:
-        existing = None
-        try:
-            existing = _load_target(ident, catalog)
-        except FileNotFoundError:
-            pass
-        except Exception as e:  # REST: 404 = not found, else propagate
-            resp = getattr(e, "response", None)
-            if getattr(resp, "status_code", None) != 404:
-                raise
+    else:
+        cols = _seq(plan.columns())
+        if not cols:
+            raise ValueError(
+                "CREATE TABLE needs a (col type, ...) list or AS SELECT")
+        st = StructType([StructField(c.name(), _spark_type(c.dataType()),
+                                     c.nullable()) for c in cols])
+    replace = kind.startswith("Replace")
+    if replace:
+        existing = _load_if_exists(ident, catalog)
         if existing is not None:
             return _replace_table(existing, st, spec_parts, props, df)
-
-    schema = Schema.from_spark(st)
+        if not plan.orCreate():
+            raise ValueError(f"REPLACE TABLE: no table {ident!r}")
     try:
-        table = catalog.create_table(ident, schema, properties=props)
+        table = catalog.create_table(ident, Schema.from_spark(st),
+                                     properties=props)
     except Exception as e:
-        # FileExistsError (storage catalog) or an HTTP 409 conflict
-        # (REST catalog) both mean "already exists"
-        conflict = isinstance(e, FileExistsError)
-        if not conflict:
-            resp = getattr(e, "response", None)
-            conflict = getattr(resp, "status_code", None) == 409
-        if conflict and if_not_exists:
+        if _missing(e, FileExistsError, 409) and not replace \
+                and plan.ignoreIfExists():
             return catalog.load_table(ident)
         raise
     if spec_parts:
@@ -1138,15 +852,23 @@ def _create_table(spark: SparkSession, statement: str, catalog=None):
     return table
 
 
+def _query_start(spark, text: str, query) -> int:
+    """Where a CTAS query starts in `text` — just past the last AS before
+    the query's first span (Spark gives the query no span of its own,
+    and an aggregate's spans leave out its SELECT keyword)."""
+    first = min(sp[0] for node, *_ in _plans(spark, query)
+                for sp in map(_span, [node, *_seq(node.expressions())]) if sp)
+    found = [m.end() for m in re.finditer(r"\bAS\b", text[:first], re.I)]
+    if not found:
+        raise ValueError("CREATE TABLE ... AS <query> needs the AS keyword")
+    return found[-1]
+
+
 def _replace_table(table, st, spec_parts, props, df):
-    """RTAS / REPLACE TABLE on an existing table: one atomic commit
-    swaps in the replacement schema (field ids allocated past
-    last-column-id so they never collide with any id old data files
-    bind), resets the default partition spec to the declared one
-    (unpartitioned when absent — Iceberg REPLACE semantics), removes
-    all existing content, and adds the new data. Snapshot history,
-    refs, and time travel to pre-replace snapshots (under their own
-    schema) all survive, unlike DROP + CREATE."""
+    """REPLACE TABLE [AS SELECT] as one commit: the new schema (field ids
+    past last-column-id, never colliding with old files'), the declared
+    spec (none when absent), no old content, the new data. History, refs
+    and time travel to old snapshots survive, unlike DROP + CREATE."""
     import copy
     from dataclasses import replace as dc_replace
 
@@ -1157,18 +879,13 @@ def _replace_table(table, st, spec_parts, props, df):
 
     meta = table.metadata
     new_schema = Schema.from_spark(st, start_id=meta.last_column_id + 1)
-    tx = (Transaction(table)
-          .set_schema(new_schema)
-          .set_default_spec(*(spec_parts or []))
-          .remove_all_existing())
+    tx = (Transaction(table).set_schema(new_schema)
+          .set_default_spec(*(spec_parts or [])).remove_all_existing())
     if props:
         tx.set_properties(props)
     if df is not None:
-        # the files must be laid out under the REPLACEMENT schema and
-        # spec before the commit exists — write through a staged copy
-        # of the table carrying them (field ids and spec fields match
-        # what the commit installs; only schema/spec ids differ, which
-        # the file layout never encodes)
+        # write under the REPLACEMENT schema and spec through a staged
+        # copy of the table (only their ids differ from the commit's)
         sid = max(s.schema_id for s in meta.schemas) + 1
         staged_schema = dc_replace(new_schema, schema_id=sid)
         fields, next_fid = build_partition_fields(
@@ -1178,453 +895,196 @@ def _replace_table(table, st, spec_parts, props, df):
             fields=fields)
         staged = copy.copy(table)
         staged.metadata = dc_replace(
-            meta,
-            schemas=meta.schemas + (staged_schema,),
+            meta, schemas=meta.schemas + (staged_schema,),
             current_schema_id=sid,
             partition_specs=meta.partition_specs + (staged_spec,),
             default_spec_id=staged_spec.spec_id,
             last_partition_id=next_fid,
-            # the statement's OWN write must honor the properties it
-            # declares (review r12: write_data_files read the staged
-            # metadata's properties, so a RTAS declaring e.g.
-            # write.format.default=orc wrote its replacement data as
-            # the OLD table's parquet while future writes got orc)
+            # the statement's OWN write honors the properties it declares
             properties={**meta.properties, **(props or {})})
         tx.add_data_files(write_data_files(staged, df))
     tx.commit("replace")
     return table
 
 
-def _insert_into(spark: SparkSession, statement: str, catalog=None):
-    """INSERT INTO ident [(cols)] VALUES (...)[, ...] | SELECT ...
+# -------------------------------------------------------- ALTER TABLE
 
-    The SELECT / VALUES body runs through Spark SQL (full Catalyst
-    surface); rows are aligned to the table schema — positionally, or
-    by the explicit column list with NULL for unmentioned columns —
-    cast to the declared types, and appended as one commit.
-    """
-    from pyspark.sql import functions as F
 
-    m = re.match(r"^\s*INSERT\s+(?P<mode>INTO|OVERWRITE)\s+(?:TABLE\s+)?"
-                 r"(?P<target>[\w.$/-]+)\s*",
-                 statement, re.IGNORECASE)
-    if not m:
-        raise ValueError("unsupported INSERT syntax")
-    overwrite = m.group("mode").upper() == "OVERWRITE"
-    ident, rest = m.group("target"), statement[m.end():].strip()
-    cols = None
-    if rest.startswith("("):
-        close = _balanced_close(rest, 0)
-        cols = [re.sub(r"^[\w.]+\.", "", c.strip())
-                for c in rest[1:close].split(",")]
-        rest = rest[close + 1:].strip()
-    head = rest.split(None, 1)[0].upper() if rest else ""
-    if head == "VALUES":
-        df = spark.sql("SELECT * FROM " + rest)
-    elif head in ("SELECT", "WITH", "TABLE"):
-        # through _select so the body may read icelake tables (time
-        # travel and metadata suffixes included); plain Spark views
-        # pass through unchanged
-        df = _select(spark, rest, catalog=catalog)
+def _column(field) -> str:
+    (name, *nested) = _parts(field)
+    if nested:
+        raise ValueError(f"unsupported nested column {_ident(field)!r}")
+    return name
+
+
+def _alter_table(spark, text, plan, catalog):
+    """ALTER TABLE t ADD COLUMN[S] | ALTER COLUMN c TYPE | RENAME COLUMN
+    | DROP COLUMN[S] | SET TBLPROPERTIES over the id-based evolution
+    API; types take CREATE TABLE's path (_iceberg_type)."""
+    kind = _kind(plan)
+    table = _load_target(_ident(plan.table()), catalog)
+    if kind == "AddColumns":
+        for c in _seq(plan.columnsToAdd()):
+            if c.path().isDefined() or c.position().isDefined() \
+                    or c.default().isDefined():
+                raise ValueError("unsupported ADD COLUMN clause "
+                                 "(nested path, FIRST/AFTER or DEFAULT)")
+            table.add_column(c.colName(), _iceberg_type(c.dataType()),
+                             doc=_opt(c.comment()))
+    elif kind == "AlterColumns":
+        for s in _seq(plan.specs()):
+            new_type = _opt(s.newDataType())
+            if new_type is None:
+                raise ValueError("unsupported ALTER COLUMN clause "
+                                 "(only TYPE is supported)")
+            table.update_column_type(_column(s.column()),
+                                     _iceberg_type(new_type))
+    elif kind == "RenameColumn":
+        table.rename_column(_column(plan.column()), plan.newName())
+    elif kind == "DropColumns":
+        for c in _seq(plan.columnsToDrop()):
+            table.drop_column(_column(c))
     else:
-        raise ValueError("INSERT INTO needs VALUES or SELECT")
-    table, branch = _load_write_target(ident, catalog)
-    spark_schema = table.schema().to_spark()
-    types = {f.name: f.dataType for f in spark_schema.fields}
-    if cols is not None:
-        bad = set(cols) - set(types)
-        if bad:
-            raise ValueError(f"unknown INSERT columns: {sorted(bad)}")
-        if len(set(cols)) != len(cols):
-            raise ValueError("duplicate INSERT column")
-        if len(df.columns) != len(cols):
-            raise ValueError("INSERT column list and query arity differ")
-        by_name = dict(zip(cols, df.columns))
-        proj = [
-            (F.col(by_name[f.name]) if f.name in by_name
-             else F.lit(None)).cast(types[f.name]).alias(f.name)
-            for f in spark_schema.fields]
-    else:
-        if len(df.columns) != len(spark_schema.fields):
-            raise ValueError(
-                f"INSERT arity {len(df.columns)} != table arity "
-                f"{len(spark_schema.fields)} (use an explicit column list)")
-        proj = [F.col(c).cast(f.dataType).alias(f.name)
-                for c, f in zip(df.columns, spark_schema.fields)]
-    out = df.select(*proj)
-    if overwrite:
-        # INSERT OVERWRITE: replace the table's content in ONE commit
-        # (remove every existing entry + add the new files atomically);
-        # on a branch target, only that branch's content is replaced
-        from .transaction import Transaction
-        from .write import write_data_files
-
-        tx = Transaction(table, branch=branch)
-        tx.remove_all_existing()
-        tx.add_data_files(write_data_files(table, out))
-        tx.commit("overwrite")
-        return table
-    table.append(out, branch=branch)
+        table.set_properties(_props(plan.properties()))
     return table
-
-
-def _load_write_target(ident: str, catalog):
-    """(table, branch) for a DML write target: a plain identifier
-    writes to main; Iceberg's `t.branch_<name>` selector stages the
-    commit on that branch (write-audit-publish — main is untouched
-    until CALL system.fast_forward). A real table whose NAME looks
-    like branch_x wins over the selector reading, matching
-    _resolve_select_ref. Tags are immutable: `t.tag_<name>` targets
-    are refused."""
-    try:
-        return _load_target(ident, catalog), None
-    except Exception as e:
-        # does-not-exist only: FileNotFoundError (storage) or HTTP 404
-        # (REST) — the same contract as _resolve_select_ref; any other
-        # load failure propagates
-        resp = getattr(e, "response", None)
-        if not (isinstance(e, FileNotFoundError)
-                or getattr(resp, "status_code", None) == 404):
-            raise
-        base, _, last = ident.rpartition(".")
-        bm = _REF_SUFFIX_RE.fullmatch(last) if base else None
-        if not bm:
-            raise
-        if bm.group("kind").lower() == "tag":
-            raise ValueError(
-                "cannot write to a tag (tags are immutable; "
-                "use a branch)")
-        return _load_target(base, catalog), bm.group("name")
 
 
 _ALTER_RE = re.compile(
     r"^\s*ALTER\s+TABLE\s+(?P<target>[\w.$/-]+)\s+(?P<rest>.+?)\s*$",
     re.IGNORECASE | re.DOTALL)
-
-_ADD_COL_RE = re.compile(
-    r"^ADD\s+COLUMN\s+(?P<col>\w+)\s+(?P<type>.+?)$", re.IGNORECASE | re.DOTALL)
-_RENAME_COL_RE = re.compile(
-    r"^RENAME\s+COLUMN\s+(?P<old>\w+)\s+TO\s+(?P<new>\w+)$", re.IGNORECASE)
-_DROP_COL_RE = re.compile(
-    r"^DROP\s+COLUMN\s+(?P<col>\w+)$", re.IGNORECASE)
-_ALTER_COL_TYPE_RE = re.compile(
-    r"^ALTER\s+COLUMN\s+(?P<col>\w+)\s+TYPE\s+(?P<type>.+?)$",
-    re.IGNORECASE | re.DOTALL)
-# Iceberg write-layout DDL: WRITE [DISTRIBUTED BY PARTITION]
-# [[LOCALLY] ORDERED BY a [ASC|DESC] [NULLS FIRST|LAST], ...] |
-# WRITE UNORDERED
-_WRITE_ORDER_RE = re.compile(
-    r"^WRITE\s+(?:(?P<dist>DISTRIBUTED\s+BY\s+PARTITION)\s*)?"
-    r"(?:(?P<loc>LOCALLY\s+)?ORDERED\s+BY\s+(?P<fields>.+?))?$",
-    re.IGNORECASE | re.DOTALL)
-_WRITE_UNORDERED_RE = re.compile(
-    r"^WRITE\s+UNORDERED$", re.IGNORECASE)
-_SORT_FIELD_RE = re.compile(
-    r"^(?:(?P<fn>\w+)\s*\(\s*(?P<arg>\w+)\s*\)|(?P<col>\w+))"
-    r"(?:\s+(?P<dir>ASC|DESC))?"
-    r"(?:\s+NULLS\s+(?P<nulls>FIRST|LAST))?$", re.IGNORECASE)
 _SET_SPEC_RE = re.compile(
     r"^SET\s+PARTITION\s+SPEC\s*\(\s*(?P<parts>.+?)\s*\)$",
     re.IGNORECASE | re.DOTALL)
-_SET_PROPS_RE = re.compile(
-    r"^SET\s+TBLPROPERTIES\s*\(\s*(?P<props>.+?)\s*\)$",
-    re.IGNORECASE | re.DOTALL)
-_PROP_PAIR_RE = re.compile(r"'(?P<k>[^']+)'\s*=\s*'(?P<v>[^']*)'")
-# Iceberg branch/tag DDL: ALTER TABLE t CREATE BRANCH b [AS OF VERSION n]
 _BRANCH_RE = re.compile(
     r"^CREATE\s+(?P<kind>BRANCH|TAG)\s+(?P<name>\w+)"
     r"(?:\s+AS\s+OF\s+VERSION\s+(?P<sid>\d+))?$", re.IGNORECASE)
 _DROP_REF_RE = re.compile(
     r"^DROP\s+(?:BRANCH|TAG)\s+(?P<name>\w+)$", re.IGNORECASE)
-
-# SQL DDL type spelling → the Iceberg type-JSON strings add_column takes.
-# `timestamp` matches CREATE TABLE's StructType.fromDDL path, where
-# Spark's `timestamp` is session-tz (TimestampType → Iceberg
-# timestamptz) and `timestamp_ntz` is the no-zone type — the SAME SQL
-# spelling must yield the SAME Iceberg type in CREATE and ALTER.
-_SQL_TYPE_MAP = {
-    "bigint": "long", "int": "int", "integer": "int", "smallint": "int",
-    "string": "string", "varchar": "string", "double": "double",
-    "float": "float", "real": "float", "boolean": "boolean", "date": "date",
-    "timestamp": "timestamptz", "timestamp_ntz": "timestamp",
-    "timestamptz": "timestamptz", "binary": "binary", "uuid": "uuid",
-    "long": "long",
-}
+_WRITE_UNORDERED_RE = re.compile(r"^WRITE\s+UNORDERED$", re.IGNORECASE)
+_WRITE_ORDER_RE = re.compile(
+    r"^WRITE\s+(?:(?P<dist>DISTRIBUTED\s+BY\s+PARTITION)\s*)?"
+    r"(?:(?P<loc>LOCALLY\s+)?ORDERED\s+BY\s+(?P<fields>.+?))?$",
+    re.IGNORECASE | re.DOTALL)
+_SORT_FIELD_RE = re.compile(
+    r"^(?:(?P<fn>\w+)\s*\(\s*(?P<arg>\w+)\s*\)|(?P<col>\w+))"
+    r"(?:\s+(?P<dir>ASC|DESC))?"
+    r"(?:\s+NULLS\s+(?P<nulls>FIRST|LAST))?$", re.IGNORECASE)
 
 
-def _alter_table(spark: SparkSession, statement: str, catalog=None):
-    """ALTER TABLE over the id-based evolution API:
-
-        ALTER TABLE t ADD COLUMN name type
-        ALTER TABLE t RENAME COLUMN a TO b
-        ALTER TABLE t DROP COLUMN c
-        ALTER TABLE t SET TBLPROPERTIES ('k' = 'v'[, ...])
-        ALTER TABLE t SET PARTITION SPEC (month(ts), bucket[8](id), ...)
-    """
+def _alter_extension(spark, statement: str, catalog):
+    """ALTER TABLE t SET PARTITION SPEC (...) | CREATE BRANCH|TAG b [AS OF
+    VERSION n] | DROP BRANCH|TAG b | WRITE [DISTRIBUTED BY PARTITION]
+    [[LOCALLY] ORDERED BY a [DESC] [NULLS LAST], ...] | WRITE UNORDERED:
+    the Iceberg clauses Spark's grammar lacks (None for anything else)."""
     m = _ALTER_RE.match(statement)
-    if not m:
-        raise ValueError("unsupported ALTER syntax")
+    rest = m.group("rest") if m else ""
+    sm, bm, dm, um, wm = (r.match(rest) for r in (
+        _SET_SPEC_RE, _BRANCH_RE, _DROP_REF_RE, _WRITE_UNORDERED_RE,
+        _WRITE_ORDER_RE))
+    if wm and not (wm.group("dist") or wm.group("fields")):
+        wm = None
+    if not (sm or bm or dm or um or wm):
+        return None
     table = _load_target(m.group("target"), catalog)
-    rest = m.group("rest").strip()
-    am = _ADD_COL_RE.match(rest)
-    if am:
-        raw = am.group("type").strip().lower()
-        dm = re.match(r"^decimal\s*\(\s*(\d+)\s*,\s*(\d+)\s*\)$", raw)
-        if dm:
-            tstr = f"decimal({dm.group(1)}, {dm.group(2)})"
-        elif raw in _SQL_TYPE_MAP:
-            tstr = _SQL_TYPE_MAP[raw]
-        else:
-            raise ValueError(f"unsupported column type {am.group('type')!r}")
-        table.add_column(am.group("col"), tstr)
-        return table
-    tm = _ALTER_COL_TYPE_RE.match(rest)
-    if tm:
-        raw = tm.group("type").strip().lower()
-        dm0 = re.match(r"^decimal\s*\(\s*(\d+)\s*,\s*(\d+)\s*\)$", raw)
-        if dm0:
-            tstr = f"decimal({dm0.group(1)}, {dm0.group(2)})"
-        elif raw in _SQL_TYPE_MAP:
-            tstr = _SQL_TYPE_MAP[raw]
-        else:
-            raise ValueError(f"unsupported column type {tm.group('type')!r}")
-        table.update_column_type(tm.group("col"), tstr)
-        return table
-    rm = _RENAME_COL_RE.match(rest)
-    if rm:
-        table.rename_column(rm.group("old"), rm.group("new"))
-        return table
-    dm = _DROP_COL_RE.match(rest)
-    if dm:
-        table.drop_column(dm.group("col"))
-        return table
-    sm = _SET_SPEC_RE.match(rest)
     if sm:
-        # partition evolution: REPLACES the default spec (update_spec
-        # semantics — old files keep their spec, resolved per manifest).
-        # Split on TOP-LEVEL commas and accept BOTH spellings of the
-        # parameterized transforms: our bucket[8](id) and the standard
-        # Spark/Iceberg bucket(8, id) / truncate(4, col) — same
-        # conversion as CREATE TABLE's PARTITIONED BY clause
-        table.update_spec(*_convert_spec_parts(sm.group("parts")))
-        return table
-    pm = _SET_PROPS_RE.match(rest)
-    if pm:
-        pairs = dict(_PROP_PAIR_RE.findall(pm.group("props")))
-        if not pairs:
-            raise ValueError("SET TBLPROPERTIES needs 'k' = 'v' pairs")
-        table.set_properties(pairs)
-        return table
-    bm = _BRANCH_RE.match(rest)
-    if bm:
-        kind = bm.group("kind").lower()
-        sid = bm.group("sid")
-        sid = int(sid) if sid is not None else None
-        if kind == "branch":
-            table.create_branch(bm.group("name"), snapshot_id=sid)
-        else:
-            table.create_tag(bm.group("name"), snapshot_id=sid)
-        return table
-    dm2 = _DROP_REF_RE.match(rest)
-    if dm2:
-        table.drop_ref(dm2.group("name"))
-        return table
-    if _WRITE_UNORDERED_RE.match(rest):
+        # partition evolution: REPLACES the default spec (old files keep
+        # theirs). The part list is a PARTITIONED BY list: Spark parses it
+        spec, _ = _parse(spark, "CREATE TABLE t PARTITIONED BY ("
+                         + sm.group("parts") + ")")
+        table.update_spec(*map(_spec_part, _seq(spec.partitioning())))
+    elif bm:
+        make = table.create_branch if bm.group("kind").lower() == "branch" \
+            else table.create_tag
+        make(bm.group("name"),
+             snapshot_id=int(bm.group("sid")) if bm.group("sid") else None)
+    elif dm:
+        table.drop_ref(dm.group("name"))
+    elif um:
         # empty order + no forced clustering (Iceberg's WRITE UNORDERED)
         table.replace_sort_order(None)
         table.set_properties({"write.distribution-mode": "none"})
-        return table
-    wm = _WRITE_ORDER_RE.match(rest)
-    if wm and (wm.group("dist") or wm.group("fields")):
+    else:
         if wm.group("fields"):
             sfs = []
-            for part in _split_assignments(wm.group("fields")):
+            for part in wm.group("fields").split(","):
                 fm = _SORT_FIELD_RE.match(part.strip())
                 if not fm:
                     raise ValueError(f"unsupported sort field {part!r}")
                 direction = (fm.group("dir") or "ASC").lower()
                 # Iceberg defaults: ASC → NULLS FIRST, DESC → NULLS LAST
-                nulls = fm.group("nulls")
-                null_order = (f"nulls-{nulls.lower()}" if nulls else
-                              ("nulls-first" if direction == "asc"
-                               else "nulls-last"))
-                col = fm.group("col") or fm.group("arg")
-                transform = (fm.group("fn").lower() if fm.group("fn")
-                             else "identity")
-                sfs.append((col, direction, null_order, transform))
+                nulls = (fm.group("nulls") or
+                         ("first" if direction == "asc" else "last"))
+                sfs.append((fm.group("col") or fm.group("arg"), direction,
+                            f"nulls-{nulls.lower()}",
+                            (fm.group("fn") or "identity").lower()))
             table.replace_sort_order(sfs)
-        # distribution: DISTRIBUTED BY PARTITION → hash; a GLOBAL
-        # ORDERED BY (no LOCALLY) → range (the sort IS the layout);
-        # LOCALLY ORDERED BY alone → none (sort within tasks only)
-        if wm.group("dist"):
-            mode = "hash"
-        elif wm.group("loc"):
-            mode = "none"
-        else:
-            mode = "range"
-        table.set_properties({"write.distribution-mode": mode})
-        return table
-    raise ValueError(f"unsupported ALTER TABLE clause: {rest[:60]!r}")
+        # DISTRIBUTED BY PARTITION → hash; a GLOBAL ORDERED BY → range
+        # (the sort IS the layout); LOCALLY ORDERED BY alone → none
+        table.set_properties({"write.distribution-mode": (
+            "hash" if wm.group("dist") else
+            "none" if wm.group("loc") else "range")})
+    return table
 
 
 # ------------------------------------------------------------ SELECT
 
-# metadata-table suffix → the inspection DataFrame method; the surface
-# the reference's own harness drives through Spark SQL
-# (/root/reference/testdata/toml/partition_day_test.toml:
-# `SELECT partition FROM t1.partitions`;
-# testdata/docker/spark-script/inspect-table.sql reads t.files/
-# t.snapshots/t.manifests the same way).
-_META_SUFFIXES = {
-    "files": "files_df", "partitions": "partitions_df",
-    "snapshots": "snapshots_df", "manifests": "manifests_df",
-    "history": "history_df", "refs": "refs_df",
-    "entries": "entries_df", "data_files": "data_files_df",
-    "delete_files": "delete_files_df",
-    "position_deletes": "position_deletes_df",
-    "all_files": "all_files_df",
-    "all_manifests": "all_manifests_df",
-    "metadata_log_entries": "metadata_log_df",
-}
+# metadata-table suffix → IcebergTable inspection method (the reference
+# harness reads `t1.partitions`, `t.files`, ... through Spark SQL)
+_META_SUFFIXES = {s: f"{s}_df" for s in (
+    "files", "partitions", "snapshots", "manifests", "history", "refs",
+    "entries", "data_files", "delete_files", "position_deletes",
+    "all_files", "all_manifests")} | {"metadata_log_entries": "metadata_log_df"}
 
-# table-level tables: they span all snapshots (or the metadata lineage
-# itself), so time travel on them is a contradiction — raise, never
-# silently ignore (VERDICT r6 wrong #4)
+# table-level tables span all snapshots (or the metadata lineage), so
+# time travel on them is a contradiction: raise, never ignore
 _TABLE_LEVEL_SUFFIXES = frozenset(
     ("snapshots", "history", "refs", "all_files", "all_manifests",
      "metadata_log_entries"))
 
-# NOTE: no ^ anchor — matched via pattern.match(s, pos), where ^ would
-# only ever match at offset 0
-_ASOF_RE = re.compile(
-    r"\s+(?:FOR\s+)?(?:(?:SYSTEM_)?VERSION\s+AS\s+OF\s+"
-    r"(?P<ver>\d+|'[^']*')"
-    r"|(?:SYSTEM_TIME|TIMESTAMP)\s+AS\s+OF\s+(?P<ts>\d+(?:\.\d+)?|'[^']*'))",
-    re.IGNORECASE)
-
-_IDENT_RE = re.compile(r"\s*(?P<ident>[\w.$/-]+)")
-
-# Keywords that may directly follow a table reference; anything else in
-# identifier position is a user alias. Used to decide whether the
-# rewritten temp view needs an `AS <last-segment>` alias so queries
-# qualifying columns by the original table name keep resolving.
-_NON_ALIAS_KW = frozenset("""
-    WHERE GROUP ORDER HAVING LIMIT WINDOW UNION INTERSECT EXCEPT MINUS
-    JOIN INNER LEFT RIGHT FULL CROSS NATURAL SEMI ANTI LATERAL ON USING
-    QUALIFY PIVOT UNPIVOT TABLESAMPLE DISTRIBUTE CLUSTER SORT FOR
-    VERSION TIMESTAMP SYSTEM_TIME SYSTEM_VERSION OFFSET FETCH SELECT
-    VALUES WHEN THEN ELSE END AND OR NOT
-""".split())
-
-# Keywords that terminate a FROM clause at its own nesting depth — a
-# top-level comma after one of these (GROUP BY a, b / ORDER BY x, y) is
-# no longer a table-list separator.
-_FROM_END_KW = frozenset("""
-    WHERE GROUP ORDER HAVING LIMIT WINDOW UNION INTERSECT EXCEPT MINUS
-    QUALIFY DISTRIBUTE CLUSTER SORT OFFSET FETCH SELECT ON USING WHEN
-""".split())
-
-_ALIAS_AS_RE = re.compile(r"\s*AS\s+[\w`]", re.IGNORECASE)
-_NEXT_WORD_RE = re.compile(r"\s*(\w+)")
-_CTE_NAME_RE = re.compile(r"\b(\w+)\s+AS\s*\(", re.IGNORECASE)
-
-# Monotonic token for temp-view names: fixed per-statement names would
-# clobber (then drop) a pre-existing user view of the same name when
-# two _select calls interleave or a user picked the literal name.
-_VIEW_SEQ = itertools.count()
-
-
-def _cte_names(text: str) -> set[str]:
-    """Lower-cased names declared `<name> AS (` outside string literals
-    — the statement's CTEs (plus WINDOW clause names, harmless). These
-    shadow catalog tables in Spark's resolution order, so _select must
-    never rewrite them."""
-    out: set[str] = set()
-    i, seg_start, n = 0, 0, len(text)
-    while i < n:
-        if text[i] in "'\"":
-            for m in _CTE_NAME_RE.finditer(text, seg_start, i):
-                out.add(m.group(1).lower())
-            i = seg_start = _skip_quoted(text, i)
-            continue
-        i += 1
-    for m in _CTE_NAME_RE.finditer(text, seg_start, n):
-        out.add(m.group(1).lower())
-    return out
-
-
-def _resolve_select_ref(ident: str, catalog, spark=None, ctes=()):
-    """(table, meta_suffix, ref) for an icelake reference in a
-    FROM/JOIN, or (None, None, None) when the identifier is not ours
-    (a Spark temp view / CTE — left for Spark to resolve). `ref` is a
-    branch/tag name when the identifier carries Iceberg's
-    `.branch_<name>` / `.tag_<name>` selector suffix.
-
-    Resolution order mirrors Spark's: a CTE declared in this statement
-    or an existing Spark temp view/catalog table of the same name wins
-    over an icelake table. Only *does-not-exist* errors mean "not
-    ours"; a genuine icelake table whose load fails (corrupt metadata,
-    IO error) propagates — degrading it to Spark's
-    TABLE_OR_VIEW_NOT_FOUND would hide the real failure."""
-    if ident.lower() in ctes:
-        return None, None, None
-    if spark is not None and "/" not in ident:
-        try:
-            if spark.catalog.tableExists(ident):
-                return None, None, None
-        except Exception:
-            pass  # unparseable as a Spark identifier — not a view
-
-    def _try(base: str):
-        try:
-            return _load_target(base, catalog)
-        except FileNotFoundError:
-            return None
-        except Exception as e:  # REST: 404 = not found, else propagate
-            resp = getattr(e, "response", None)
-            if getattr(resp, "status_code", None) == 404:
-                return None
-            raise
-
-    t = _try(ident)
-    if t is not None:
-        return t, None, None
-    base, _, last = ident.rpartition(".")
-    if base and last.lower() in _META_SUFFIXES:
-        t = _try(base)
-        if t is not None:
-            return t, last.lower(), None
-    rm = _REF_SUFFIX_RE.fullmatch(last) if base else None
-    if rm:
-        t = _try(base)
-        if t is not None:
-            name = rm.group("name")
-            ref = t.metadata.refs.get(name)
-            if ref is None:
-                raise ValueError(f"table {base!r} has no branch or tag "
-                                 f"named {name!r}")
-            kind = rm.group("kind").lower()
-            if (kind == "branch") != (ref.type == "branch"):
-                raise ValueError(
-                    f"{name!r} is a {ref.type}, not a {kind} "
-                    f"(use .{ref.type}_{name})")
-            return t, None, name
-    return None, None, None
-
-
-# Iceberg's branch/tag read selectors: `FROM t.branch_<name>` /
-# `FROM t.tag_<name>` (the identifier-suffix spelling of
-# VERSION AS OF '<name>')
+# Iceberg's branch/tag selectors `t.branch_<name>` / `t.tag_<name>`
 _REF_SUFFIX_RE = re.compile(r"(?P<kind>branch|tag)_(?P<name>\w+)",
                             re.IGNORECASE)
 
+# temp-view name token: a fixed name could clobber a user's view
+_VIEW_SEQ = itertools.count()
+
+
+def _resolve_select_ref(parts: list[str], catalog, spark):
+    """(table, meta_suffix, ref) for an icelake relation, else Nones. A
+    Spark view or table of the same name wins, as in Spark; only
+    does-not-exist means "not ours" (other load failures propagate)."""
+    try:
+        if spark.catalog.tableExists(_render(parts)):
+            return None, None, None
+    except Exception:
+        pass  # not a Spark identifier — not a view
+    base, last = ".".join(parts[:-1]), parts[-1]
+    t = _load_if_exists(".".join(parts), catalog)
+    if t is not None:
+        return t, None, None
+    if base and last.lower() in _META_SUFFIXES:
+        t = _load_if_exists(base, catalog)
+        if t is not None:
+            return t, last.lower(), None
+    rm = _REF_SUFFIX_RE.fullmatch(last) if base else None
+    t = _load_if_exists(base, catalog) if rm else None
+    if t is None:
+        return None, None, None
+    kind, name = rm.group("kind").lower(), rm.group("name")
+    ref = t.metadata.refs.get(name)
+    if ref is None:
+        raise ValueError(f"table {base!r} has no branch or tag named "
+                         f"{name!r}")
+    if (kind == "branch") != (ref.type == "branch"):
+        raise ValueError(f"{name!r} is a {ref.type}, not a {kind} "
+                         f"(use .{ref.type}_{name})")
+    return t, None, name
+
 
 def _parse_asof_ms(raw: str, spark=None) -> int:
-    """TIMESTAMP AS OF value → epoch millis. Numeric literals are epoch
-    SECONDS (fractional allowed — Spark/Iceberg SQL semantics, not
-    millis); naive timestamp strings resolve in the Spark session
-    timezone (spark.sql.session.timeZone), matching how Spark itself
-    would interpret the literal."""
+    """TIMESTAMP AS OF literal → epoch millis: numbers are epoch SECONDS
+    (Spark/Iceberg semantics); naive timestamp strings resolve in the
+    session time zone (spark.sql.session.timeZone), as Spark reads them."""
     import datetime as _dt
 
     if not raw.startswith("'"):
@@ -1645,137 +1105,114 @@ def _parse_asof_ms(raw: str, spark=None) -> int:
     return int(v.timestamp() * 1000)
 
 
-def _select_ref_spots(s: str) -> list[tuple[int, bool]]:
-    """(position, aliasable) pairs in `s` where a table reference may
-    start: after FROM / JOIN at any paren depth (subqueries' FROMs must
-    resolve too), after a comma inside a FROM clause at the same depth
-    (`FROM a, b` — the oldest join spelling), and after a leading TABLE
-    keyword (not aliasable — `TABLE v AS x` is a syntax error). Quote-
-    aware; clause keywords (WHERE/GROUP/...) end the comma scope at
-    their depth."""
-    spots: list[tuple[int, bool]] = []
-    in_from: dict[int, bool] = {}
-    depth, i, n = 0, 0, len(s)
-    while i < n:
-        ch = s[i]
-        if ch in "'\"":
-            i = _skip_quoted(s, i)
+def _plans(spark, plan, parent=None, ctes=frozenset(), pattern=None):
+    """(node, kind, parent kind, CTE names in scope) for each plan node of
+    a parsed query — CTE bodies and subquery-expression plans included,
+    which `children()` does not reach (nor a RelationTimeTravel's
+    `.relation()`, read by the caller)."""
+    from py4j.java_gateway import is_instance_of
+
+    pattern = pattern or spark._jvm.org.apache.spark.sql.catalyst.trees \
+        .TreePattern.PLAN_EXPRESSION()
+    kind = _kind(plan)
+    yield plan, kind, parent, ctes
+    subs = _seq(plan.children())
+    if kind == "UnresolvedWith":
+        defs = _seq(plan.cteRelations())
+        ctes = ctes | {d._1().lower() for d in defs}
+        subs = [d._2() for d in defs] + subs
+    exprs = _seq(plan.expressions()) if plan.containsPattern(pattern) else []
+    while exprs:
+        e = exprs.pop()
+        if not e.containsPattern(pattern):
             continue
-        if ch in "([":
-            depth += 1
-            in_from[depth] = False
-            i += 1
-            continue
-        if ch in ")]":
-            depth -= 1
-            i += 1
-            continue
-        if ch == "," and in_from.get(depth):
-            spots.append((i + 1, True))
-            i += 1
-            continue
-        if ch.isalpha() or ch == "_":
-            j = i
-            while j < n and (s[j].isalnum() or s[j] == "_"):
-                j += 1
-            word = s[i:j].upper()
-            if word in ("FROM", "JOIN"):
-                spots.append((j, True))
-                in_from[depth] = True
-            elif word == "TABLE" and not s[:i].strip():
-                spots.append((j, False))  # `TABLE t` form: alias invalid
-            elif word in _FROM_END_KW:
-                in_from[depth] = False
-            i = j
-            continue
-        i += 1
-    return spots
+        if is_instance_of(spark.sparkContext._gateway, e,
+                          "org.apache.spark.sql.catalyst.expressions."
+                          "SubqueryExpression"):
+            subs.append(e.plan())
+        else:
+            exprs += _seq(e.children())
+    for sub in subs:
+        yield from _plans(spark, sub, kind, ctes, pattern)
 
 
-def _select(spark: SparkSession, statement: str, catalog=None) -> DataFrame:
-    """SELECT over icelake tables: resolve each icelake identifier in a
-    FROM/JOIN (or after a top-level comma in a FROM list) — with
-    optional `VERSION AS OF n|'ref'` / `TIMESTAMP AS OF ts` time travel
-    and `.files/.partitions/.snapshots/.manifests/.history/.refs`
-    metadata suffixes — register the scan as a temp view, rewrite the
-    statement, and hand the rest of the query to Spark SQL (full
-    Catalyst surface). Identifiers that don't resolve as icelake tables
-    pass through untouched (Spark temp views, CTEs — which take
-    precedence over same-named icelake tables, matching Spark's
-    resolution order). A reference with no explicit alias is rewritten
-    to `<view> AS <last-segment>` so columns qualified by the original
-    table name keep resolving."""
-    s = statement
-    ctes = _cte_names(s)
-    spots = _select_ref_spots(s)
-    out, pos, views = [], 0, []
+def _select(spark: SparkSession, text: str, plan, catalog=None,
+            start: int = 0) -> DataFrame:
+    """Run the query `text[start:]`, parsed as `plan`: each icelake
+    relation (with VERSION | TIMESTAMP AS OF, .branch_x / .tag_x and
+    metadata suffixes) becomes a temp view whose name replaces its span
+    — `<view> AS <last name part>` when it has no alias — and Spark SQL
+    runs the rest. Other names (Spark views, CTEs) pass through."""
+    edits, views = [], []
     try:
-        for spot, aliasable in spots:
-            m = _IDENT_RE.match(s, spot)
-            if not m:
+        for node, kind, parent, ctes in _plans(spark, plan):
+            rel = (node.relation() if kind == "RelationTimeTravel"
+                   else node if kind == "UnresolvedRelation" else None)
+            if rel is None:
                 continue
-            table, suffix, ref = _resolve_select_ref(
-                m.group("ident"), catalog, spark=spark, ctes=ctes)
+            parts = _parts(rel)
+            if len(parts) == 1 and parts[0].lower() in ctes:
+                continue
+            table, suffix, ref = _resolve_select_ref(parts, catalog, spark)
             if table is None:
                 continue
-            end = m.end()
-            am = _ASOF_RE.match(s, end)
-            scan_kwargs = {"ref": ref} if ref is not None else {}
-            if am:
+            scan = {"ref": ref} if ref is not None else {}
+            if kind == "RelationTimeTravel":
                 if ref is not None:
+                    raise ValueError("cannot combine a .branch_/.tag_ "
+                                     "selector with VERSION/TIMESTAMP AS OF")
+                ts, version = _opt(node.timestamp()), _opt(node.version())
+                if ts is not None:
+                    scan["as_of_ms"] = _parse_asof_ms(_src(text, ts), spark)
+                elif text[_span(node)[1] - 1] in "'\"":  # a quoted ref name
+                    scan["ref"] = version
+                else:
+                    scan["snapshot_id"] = int(version)
+                edits.append((*_span(node), ""))
+            if suffix in _TABLE_LEVEL_SUFFIXES:
+                if scan:
                     raise ValueError(
-                        "cannot combine a .branch_/.tag_ selector with "
-                        "VERSION/TIMESTAMP AS OF")
-                end = am.end()
-                if am.group("ver") is not None:
-                    v = am.group("ver")
-                    scan_kwargs["ref" if v.startswith("'")
-                                else "snapshot_id"] = \
-                        v[1:-1] if v.startswith("'") else int(v)
-                else:
-                    scan_kwargs["as_of_ms"] = _parse_asof_ms(
-                        am.group("ts"), spark)
-            view = f"__icelake_select_{next(_VIEW_SEQ)}"
-            if suffix is not None:
-                if suffix in _TABLE_LEVEL_SUFFIXES:
-                    if scan_kwargs:
-                        raise ValueError(
-                            f"time travel is not supported on the table-"
-                            f"level .{suffix} metadata table (it already "
-                            f"spans all snapshots)")
-                    df = getattr(table, _META_SUFFIXES[suffix])(spark)
-                else:
-                    sid = None
-                    if "snapshot_id" in scan_kwargs:
-                        sid = scan_kwargs["snapshot_id"]
-                    elif scan_kwargs:
-                        snap = table.snapshot(
-                            **{k: v for k, v in scan_kwargs.items()
-                               if k in ("as_of_ms", "ref")})
-                        sid = snap.snapshot_id if snap else None
-                    df = getattr(table, _META_SUFFIXES[suffix])(spark, sid)
-                df.createOrReplaceTempView(view)
+                        f"time travel is not supported on the table-level "
+                        f".{suffix} metadata table (it already spans all "
+                        f"snapshots)")
+                df = getattr(table, _META_SUFFIXES[suffix])(spark)
+            elif suffix is not None:
+                sid = scan.get("snapshot_id")
+                if scan and sid is None:
+                    snap = table.snapshot(**scan)
+                    sid = snap.snapshot_id if snap else None
+                df = getattr(table, _META_SUFFIXES[suffix])(spark, sid)
             else:
-                table.to_df(spark, **scan_kwargs) \
-                     .createOrReplaceTempView(view)
+                df = table.to_df(spark, **scan)
+            view = f"__icelake_select_{next(_VIEW_SEQ)}"
+            df.createOrReplaceTempView(view)
             views.append(view)
-            out.append(s[pos:m.start("ident")])
-            out.append(view)
-            # keep original-name qualifiers resolving when the user
-            # declared no alias of their own
-            nxt = _NEXT_WORD_RE.match(s, end)
-            has_alias = bool(_ALIAS_AS_RE.match(s, end)) or (
-                nxt is not None and nxt.group(1).upper() not in _NON_ALIAS_KW)
-            if aliasable and not has_alias:
-                segs = re.split(r"[./]", m.group("ident").rstrip("/"))
-                if ref is not None and len(segs) > 1:
-                    segs = segs[:-1]  # alias by the TABLE, not branch_x
-                last = suffix if suffix is not None else segs[-1]
-                if re.fullmatch(r"\w+", last) and not last[0].isdigit():
-                    out.append(f" AS {last}")
-            pos = end
-        out.append(s[pos:])
+            a, b = _span(rel)
+            # `TABLE t` (the query form) takes no alias
+            if parent != "SubqueryAlias" and not re.search(
+                    r"\bTABLE\s*$", text[:a], re.IGNORECASE):
+                name = suffix or parts[-2 if ref and len(parts) > 1 else -1]
+                view += " AS " + _quote(name.rstrip("/").rsplit("/", 1)[-1])
+            edits.append((a, b, view))
+        out, pos = [], start
+        for a, b, new in sorted(edits):
+            out += [text[pos:a], new]
+            pos = b
+        out.append(text[pos:])
         return spark.sql("".join(out))  # analyzed eagerly: views can drop
     finally:
         for v in views:
             spark.catalog.dropTempView(v)
+
+
+_STATEMENTS = dict.fromkeys(
+    ("CreateTable", "CreateTableAsSelect", "ReplaceTable",
+     "ReplaceTableAsSelect"), _create_table) | dict.fromkeys(
+    ("AddColumns", "AlterColumns", "RenameColumn", "DropColumns",
+     "SetTableProperties"), _alter_table) | {
+    "DeleteFromTable": _delete, "UpdateTable": _update,
+    "InsertIntoStatement": _insert_into, "Call": _call,
+    "CreateNamespace": _create_namespace, "DropTable": _drop,
+    "DropNamespace": _drop, "ShowTables": _show_tables,
+    "ShowTableProperties": _show_properties, "DescribeRelation": _describe,
+    "AnalyzeTable": _analyze, "AnalyzeColumn": _analyze}

@@ -8,7 +8,7 @@ equality-delta (merge-on-read) table, verified by final table state.
 
 import pytest
 
-from icelake_spark.sql import _parse_on, merge_into
+from icelake_spark.sql import merge_into
 from icelake_spark.types import Schema
 
 
@@ -145,8 +145,21 @@ def test_merge_rejects_unsupported(stmt, msg, spark):
         merge_into(spark, stmt)
 
 
-def test_parse_on_strips_qualifiers():
-    assert _parse_on("t.id = s.id AND key = s.key", "t", "s") == ["id", "key"]
+def test_parse_on_strips_qualifiers(warehouse, spark):
+    """ON keys are the column names with any alias qualifier dropped,
+    an unqualified side included."""
+    cat = warehouse
+    _mk(cat, spark, name="s1.tonq")
+    spark.createDataFrame([(1, 10, 111), (1, 99, 999)],
+                          "id long, key long, value long") \
+        .createOrReplaceTempView("m_src_onq")
+    merge_into(spark, """
+        MERGE INTO s1.tonq AS t USING m_src_onq AS s
+        ON t.id = s.id AND key = s.key
+        WHEN MATCHED THEN UPDATE SET *
+    """, catalog=cat)
+    assert _state(cat.load_table("s1.tonq"), spark) == [
+        (1, 10, 111), (2, 20, 200), (3, 30, 300)]
 
 
 def test_merge_multiple_when_matched_first_match_wins(warehouse, spark):

@@ -6,23 +6,18 @@ SQL (/root/reference/testdata/toml/partition_day_test.toml:45
 testdata/docker/spark-script/inspect-table.sql reads t.files /
 t.snapshots / t.manifests; init-table.sql issues the DDL): time travel,
 metadata-table suffixes, comma joins, CTE/temp-view resolution order,
-and the quote-aware statement walkers that keep literals intact.
+literals and comments that must reach Spark intact, and the statements
+a regex front end got wrong.
 """
 
 import os
 
 import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from icelake_spark import sql as isql
-from icelake_spark.sql import (
-    _cte_names,
-    _parse_asof_ms,
-    _requalify,
-    _select_ref_spots,
-    _skip_quoted,
-)
+from icelake_spark.sql import _parse_asof_ms
 from icelake_spark.types import Schema
 
 
@@ -44,96 +39,6 @@ def cat(warehouse, spark):
 def _no_leaked_views(spark):
     return not [v.name for v in spark.catalog.listTables()
                 if v.name.startswith("__icelake_select")]
-
-
-# ----------------------------------------------------- parser units
-
-def test_skip_quoted_doubling():
-    s = "'it''s' rest"
-    assert _skip_quoted(s, 0) == 7
-    assert s[7:] == " rest"
-
-
-def test_skip_quoted_backslash():
-    s = r"'a\'b' x"
-    assert _skip_quoted(s, 0) == 6
-
-
-def test_skip_quoted_unterminated_raises():
-    with pytest.raises(ValueError, match="unterminated"):
-        _skip_quoted("'never closes", 0)
-
-
-def test_requalify_keeps_literals():
-    out = _requalify("a.x = 'by a.sync' AND b.y = a.z", "a", "b")
-    assert out == "t.x = 'by a.sync' AND s.y = t.z"
-
-
-def test_cte_names_outside_literals_only():
-    s = "WITH c1 AS (SELECT 1), c2 AS (SELECT 'x AS (') SELECT * FROM c1"
-    assert _cte_names(s) == {"c1", "c2"}
-
-
-def test_spots_comma_join_scope():
-    s = "SELECT a.id, b.id FROM ta a, tb b WHERE a.id = b.id"
-    spots = _select_ref_spots(s)
-    idents = [s[p:].split()[0].rstrip(",") for p, _ in spots]
-    assert idents == ["ta", "tb"]
-
-
-def test_spots_group_by_comma_not_a_table():
-    s = "SELECT x, y FROM t GROUP BY x, y ORDER BY x, y"
-    assert len(_select_ref_spots(s)) == 1
-
-
-def test_spots_select_list_comma_before_from():
-    s = "SELECT a, b, c FROM t1, t2"
-    idents = [s[p:].split()[0] for p, _ in _select_ref_spots(s)]
-    assert idents == ["t1,", "t2"]
-
-
-def test_spots_subquery_from_and_outer_comma():
-    s = "SELECT * FROM (SELECT id FROM inner_t GROUP BY id, v) s1, t2"
-    idents = sorted(s[p:].split()[0].rstrip(",") for p, _ in _select_ref_spots(s))
-    assert idents == ["(SELECT", "inner_t", "t2"]
-
-
-def test_spots_function_args_commas_ignored():
-    s = "SELECT coalesce(a, b), least(c, d) FROM t1, t2"
-    idents = [s[p:].split()[0].rstrip(",") for p, _ in _select_ref_spots(s)]
-    assert idents == ["t1", "t2"]
-
-
-def test_spots_keywords_inside_literals_ignored():
-    s = "SELECT ' FROM fake JOIN fake2, x ' AS lit FROM real_t"
-    idents = [s[p:].split()[0] for p, _ in _select_ref_spots(s)]
-    assert idents == ["real_t"]
-
-
-@given(st.text(alphabet="ab',\\\"", max_size=30))
-@settings(max_examples=200, deadline=None)
-def test_skip_quoted_fuzz_terminates_or_raises(body):
-    """For any content, _skip_quoted returns an index past i inside the
-    string bounds, or raises ValueError — never hangs or mis-indexes."""
-    s = "'" + body
-    try:
-        j = _skip_quoted(s, 0)
-        assert 1 < j <= len(s)
-        assert s[j - 1] == "'"
-    except ValueError:
-        pass
-
-
-@given(st.text(alphabet=" abFROMJOIN,()'x._", max_size=60))
-@settings(max_examples=200, deadline=None)
-def test_spots_fuzz_bounds(s):
-    """Spot positions are always within the statement; malformed quoting
-    raises ValueError instead of silently mis-splitting."""
-    try:
-        for p, _aliasable in _select_ref_spots(s):
-            assert 0 <= p <= len(s)
-    except ValueError:
-        pass
 
 
 # --------------------------------------------------- SELECT semantics
@@ -217,6 +122,175 @@ def test_nested_subquery_from(cat, spark):
 
 def test_table_statement_form(cat, spark):
     assert isql.execute(spark, "TABLE ns.t1", catalog=cat).count() == 10
+
+
+# Statement-level checks of literals, comments and FROM lists: each must
+# reach Spark's parser intact, whatever the quoting.
+
+def test_skip_quoted_doubling(cat, spark):
+    r = isql.execute(
+        spark, "SELECT 'it''s' AS a, id FROM ns.t1 WHERE id = 0", catalog=cat)
+    assert r.collect()[0] == ("it's", 0)
+
+
+def test_skip_quoted_backslash(cat, spark):
+    r = isql.execute(
+        spark, "SELECT 'a\\'b' AS a, id FROM ns.t1 WHERE id = 0", catalog=cat)
+    assert r.collect()[0] == ("a'b", 0)
+
+
+def test_skip_quoted_unterminated_raises(cat, spark):
+    with pytest.raises(ValueError):
+        isql.execute(spark, "SELECT * FROM ns.t1 WHERE id = 'never closes",
+                     catalog=cat)
+    assert _no_leaked_views(spark)
+
+
+def test_requalify_keeps_literals(cat, spark):
+    """MERGE alias rewriting touches column references only: alias text
+    inside a literal stays as written."""
+    spark.createDataFrame([(1, 7, "by a.sync"), (2, 9, "other")],
+                          "id long, v long, note string") \
+        .createOrReplaceTempView("rq_src")
+    isql.merge_into(spark, """
+        MERGE INTO ns.t1 AS a USING rq_src AS b ON a.id = b.id
+        WHEN MATCHED AND b.note = 'by a.sync' THEN UPDATE SET v = b.v + a.v
+    """, catalog=cat)
+    rows = dict(cat.load_table("ns.t1").to_df(spark).collect())
+    assert rows[1] == 9 and rows[2] == 4
+
+
+def test_cte_names_outside_literals_only(cat, spark):
+    """Both CTE names are declared — the second after a literal holding
+    `x AS (` — and both shadow same-named icelake tables."""
+    for name in ("c1", "c2"):
+        df = spark.range(7).select("id")
+        cat.create_table(name, Schema.from_spark(df.schema)).append(df)
+    r = isql.execute(
+        spark,
+        "WITH c1 AS (SELECT 1 AS one), c2 AS (SELECT 'x AS (' AS s) "
+        "SELECT * FROM c1, c2",
+        catalog=cat)
+    assert r.columns == ["one", "s"] and r.collect()[0] == (1, "x AS (")
+
+
+def test_spots_comma_join_scope(cat, spark):
+    r = isql.execute(
+        spark, "SELECT a.id, b.w FROM ns.t1 a, ns.t2 b WHERE a.id = b.id "
+               "AND a.id > 2 ORDER BY 1", catalog=cat)
+    assert [tuple(x) for x in r.collect()] == [(3, 103), (4, 104)]
+
+
+def test_spots_group_by_comma_not_a_table(cat, spark):
+    r = isql.execute(
+        spark, "SELECT id % 2 AS g, v % 4 AS h, count(*) AS n FROM ns.t1 "
+               "GROUP BY id % 2, v % 4 ORDER BY g, h", catalog=cat)
+    assert [tuple(x) for x in r.collect()] == [(0, 0, 5), (1, 2, 5)]
+
+
+def test_spots_select_list_comma_before_from(cat, spark):
+    r = isql.execute(
+        spark, "SELECT t1.id, t1.v, t2.w FROM ns.t1, ns.t2 "
+               "WHERE t1.id = t2.id ORDER BY 1", catalog=cat)
+    assert [tuple(x) for x in r.collect()][-1] == (4, 8, 104)
+
+
+def test_spots_subquery_from_and_outer_comma(cat, spark):
+    r = isql.execute(
+        spark,
+        "SELECT s1.id, t2.w FROM (SELECT id FROM ns.t1 GROUP BY id, v) s1, "
+        "ns.t2 WHERE s1.id = t2.id AND s1.id > 2 ORDER BY 1",
+        catalog=cat)
+    assert [tuple(x) for x in r.collect()] == [(3, 103), (4, 104)]
+
+
+def test_spots_function_args_commas_ignored(cat, spark):
+    r = isql.execute(
+        spark, "SELECT coalesce(t1.id, 0) AS a, least(t1.v, t2.w) AS b "
+               "FROM ns.t1, ns.t2 WHERE t1.id = t2.id ORDER BY 1", catalog=cat)
+    assert [tuple(x) for x in r.collect()][-1] == (4, 8)
+
+
+def test_spots_keywords_inside_literals_ignored(cat, spark):
+    r = isql.execute(
+        spark,
+        "SELECT ' FROM fake JOIN fake2, x ' AS lit FROM ns.t1 WHERE id = 1",
+        catalog=cat)
+    assert r.collect()[0].lit == " FROM fake JOIN fake2, x "
+
+
+def test_subquery_expressions_and_cte_bodies_resolve(cat, spark):
+    r = isql.execute(
+        spark,
+        "WITH big AS (SELECT id FROM ns.t1 WHERE v >= 10) "
+        "SELECT count(*) AS n FROM big "
+        "WHERE id IN (SELECT id FROM ns.t2) "
+        "AND EXISTS (SELECT 1 FROM ns.t2 WHERE w > 100)",
+        catalog=cat)
+    assert r.collect()[0].n == 0
+    r = isql.execute(
+        spark,
+        "SELECT (SELECT max(w) FROM ns.t2) AS mw, count(*) AS n FROM ns.t1 "
+        "WHERE id IN (SELECT id FROM ns.t2)",
+        catalog=cat)
+    assert tuple(r.collect()[0]) == (104, 5)
+
+
+@pytest.fixture()
+def lexed(warehouse, spark):
+    df = spark.createDataFrame([(1, 10), (2, 20), (3, 30)],
+                               "id long, v long")
+    warehouse.create_table("s.lx", Schema.from_spark(df.schema)).append(df)
+    spark.createDataFrame([(2, 200), (4, 400)], "id long, v long") \
+        .createOrReplaceTempView("lx_src")
+    return warehouse
+
+
+_BASE = [(1, 10), (2, 20), (3, 30)]
+
+
+@pytest.mark.parametrize("stmt,rows", [
+    ("SELECT count(*) FROM `s`.`lx`", [(3,)]),
+    ("UPDATE s.lx SET `v` = 99 WHERE id = 2", [(1, 10), (2, 99), (3, 30)]),
+    ("DELETE FROM s.lx WHERE id = 3;", [(1, 10), (2, 20)]),
+    ("MERGE INTO s.lx t USING lx_src s ON t.id = s.id\n"
+     "-- WHEN MATCHED THEN DELETE\n"
+     "WHEN MATCHED THEN UPDATE SET *", [(1, 10), (2, 200), (3, 30)]),
+    ("MERGE INTO s.lx t USING lx_src s ON t.`id` = s.`id` "
+     "WHEN NOT MATCHED THEN INSERT *", _BASE + [(4, 400)]),
+    ("MERGE INTO s.lx t USING lx_src s ON t.id = s.id "
+     "WHEN MATCHED THEN UPDATE SET `v` = s.v", [(1, 10), (2, 200), (3, 30)]),
+    ("INSERT INTO s.lx /* rows */ VALUES (5, 50)", _BASE + [(5, 50)]),
+    ("CALL system.rewrite_manifests('s.lx') -- compact", _BASE),
+])
+def test_statements_a_regex_front_end_rejected(lexed, spark, stmt, rows):
+    """Backticked names, comments, a trailing `;`: Spark parses each of
+    these, so each must run — the query's rows, else the table's."""
+    out = isql.execute(spark, stmt, catalog=lexed)
+    got = out if isinstance(out, DataFrame) else \
+        lexed.load_table("s.lx").to_df(spark)
+    assert sorted(tuple(r) for r in got.collect()) == rows
+
+
+def test_backticked_path_target_without_catalog(lexed, spark):
+    path = lexed.load_table("s.lx").path
+    isql.execute(spark, f"DELETE FROM `{path}` WHERE id = 1")
+    r = isql.execute(spark, f"SELECT sum(v) AS s FROM `{path}` WHERE id > 0")
+    assert r.collect()[0].s == 50
+
+
+def test_delete_condition_is_the_statement_text(lexed, spark, monkeypatch):
+    """The perfbench cdc workload's DELETE hands delete_where exactly the
+    text after WHERE."""
+    from icelake_spark.table import IcebergTable
+
+    seen = []
+    monkeypatch.setattr(IcebergTable, "delete_where",
+                        lambda self, spark, cond, branch=None: seen.append(cond))
+    lo, width = 1, 2
+    isql.execute(spark, f"DELETE FROM s.lx WHERE id >= {lo} "
+                        f"AND id < {lo + width}", catalog=lexed)
+    assert seen == [f"id >= {lo} AND id < {lo + width}"]
 
 
 # --------------------------------------------------------- time travel
@@ -399,6 +473,20 @@ def test_create_alter_timestamp_mapping_agree(cat, spark):
     assert types["created"] == types["updated"]
     assert types["local_t"] == types["local_u"]
     assert types["created"] != types["local_t"]
+
+
+def test_create_alter_small_int_types_agree(cat, spark):
+    """CREATE TABLE and ALTER ... ADD COLUMN take the same parsed type
+    path: tinyint and short widen to Iceberg int in both."""
+    isql.execute(spark, "CREATE TABLE ns.small (a tinyint, b short) "
+                        "USING iceberg", catalog=cat)
+    isql.execute(spark, "ALTER TABLE ns.small ADD COLUMN c tinyint",
+                 catalog=cat)
+    isql.execute(spark, "ALTER TABLE ns.small ADD COLUMNS (d short)",
+                 catalog=cat)
+    t = cat.load_table("ns.small")
+    types = {f.name: str(f.field_type) for f in t.schema().fields}
+    assert types == {"a": "int", "b": "int", "c": "int", "d": "int"}
 
 
 # ----------------------------------------------------- statement fuzz
