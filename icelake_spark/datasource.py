@@ -20,7 +20,9 @@ position deletes and a null-safe Arrow join for equality keys.
 
 Streams: `spark.readStream.format("icelake")` is the partition-based
 IcelakePartitionStreamReader — appended files, or with
-option("changelog", "true") one CDC partition per snapshot.
+option("changelog", "true") one CDC partition per snapshot, whose
+file tasks take their deletes from the same DeletePlan and are masked
+by the same Arrow code as batch reads (_TableFileReader._dead_mask).
 `df.writeStream.format("icelake")` is the transactional
 IcelakeStreamWriter.
 
@@ -53,7 +55,7 @@ try:  # pushdown filter classes vary by minor version
 except ImportError:  # pragma: no cover
     GreaterThan = GreaterThanOrEqual = LessThan = LessThanOrEqual = ()
 
-from .planning import canon_data_path, eq_delete_applies, plan_deletes
+from .planning import canon_data_path, plan_deletes
 
 
 @dataclass
@@ -70,6 +72,11 @@ class _FileTask(InputPartition):
     pos_files: tuple[str, ...] = ()  # read by the task when unresolved
     # (key columns, equality-delete files), one entry per key group
     eq_deletes: tuple[tuple[tuple[str, ...], tuple[str, ...]], ...] = ()
+
+    @property
+    def has_deletes(self) -> bool:
+        return (self.positions is not None or bool(self.pos_files)
+                or bool(self.eq_deletes))
 
 
 class IcelakeDataSource(DataSource):
@@ -401,14 +408,20 @@ def _resolve_column(table, name: str, rename_map: dict[str, list[str]],
     return None
 
 
-class IcelakeReader(DataSourceReader):
-    def __init__(self, options: dict, schema):
-        self.options = options
-        self.spark_schema = schema
-        self.filter_parts: list[str] = []
+class _TableFileReader:
+    """The executor-side file work both readers share: the table's
+    column identity (field ids, former names, nested member types), the
+    shipped FileIO, the format-dispatched data-file read, the
+    merge-on-read dead-row mask and the projection to the declared
+    schema."""
+
+    def _bind(self, path: str, spark_schema) -> None:
+        from .fileio import is_uri, resolve_io
         from .table import IcebergTable
 
-        t = IcebergTable.load(options["path"])
+        self.path = path
+        self.spark_schema = spark_schema
+        t = IcebergTable.load(path)
         self.rename_map = _rename_map(t)
         schema = t.schema()
         self.field_ids = {f.name: f.field_id for f in schema.fields}
@@ -416,14 +429,99 @@ class IcelakeReader(DataSourceReader):
         self.ice_fields = {f.name: f.field_type for f in schema.fields}
         # FileIO shipped to executors for URI-scheme data/delete reads
         # (resolved HERE so register_io customs travel via pickle)
-        from .fileio import is_uri, resolve_io
-
-        self.table_store = _store_of(options["path"])
-        self.io = resolve_io(options["path"]) if is_uri(options["path"]) \
-            else None
+        self.table_store = _store_of(path)
+        self.io = resolve_io(path) if is_uri(path) else None
 
     def _src(self, path: str):
         return _arrow_src(path, self.table_store, self.io)
+
+    def _read_file(self, task):
+        """(Arrow table, foreign) of one data file, format-dispatched:
+        the table layer legitimately holds ORC/AVRO files via add_files
+        and write.format.default."""
+        import pyarrow.parquet as pq
+
+        fmt = (task.file_format or "PARQUET").upper()
+        foreign = _is_foreign_file(self.path, task.file_path)
+        if fmt == "ORC":
+            from pyarrow import orc as pa_orc
+
+            table = pa_orc.ORCFile(self._src(task.file_path)).read()
+        elif fmt == "AVRO":
+            table = _read_avro_arrow(self.spark_schema, task.file_path,
+                                     self.table_store, self.io,
+                                     self.field_ids, self.rename_map,
+                                     foreign)
+        else:
+            table = pq.read_table(self._src(task.file_path))
+        return table, foreign
+
+    def _dead_mask(self, table, task: _FileTask, foreign: bool,
+                   cache: dict) -> "np.ndarray":
+        """Boolean mask of the rows of data file `table` that `task`'s
+        deletes kill: its position deletes plus its equality-key hits.
+        `cache` holds the delete files this partition already read."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        def cached(path: str, load):
+            if path not in cache:
+                cache[path] = load(path)
+            return cache[path]
+
+        n = table.num_rows
+        dead = np.zeros(n, dtype=bool)
+        positions = [] if task.positions is None else [task.positions]
+        canon = canon_data_path(task.file_path)
+        for f in task.pos_files:
+            hit = cached(f, lambda p: _positions_by_file(self._src(p))
+                         ).get(canon)
+            if hit is not None:
+                positions.append(hit)
+        for ps in positions:
+            dead[ps[(ps >= 0) & (ps < n)]] = True
+
+        # equality deletes: key columns (data AND delete side) resolve
+        # with the SAME field-id/rename stack as data columns — after
+        # RENAME COLUMN old delete files lack the current name, and an
+        # all-None pad would resurrect every deleted row (code-review
+        # r8). A key column missing from an old file reads as NULL and
+        # must MATCH AS NULL, not narrow the key (which over-deletes).
+        id_map = _parquet_id_map(table.schema, foreign)
+
+        def key(t, c, ids):
+            arr = _resolve_column(t, c, self.rename_map,
+                                  self.field_ids.get(c), ids)
+            return arr if arr is not None else pa.nulls(t.num_rows)
+
+        def read_eq(path: str):
+            dt = pq.read_table(self._src(path))
+            return dt, _parquet_id_map(
+                dt.schema, _is_foreign_file(self.path, path))
+
+        for cols, files in task.eq_deletes:
+            dels = []
+            for f in files:
+                dt, ids = cached(f, read_eq)
+                dels.append([key(dt, c, ids) for c in cols])
+            dead[_eq_delete_hits([key(table, c, id_map) for c in cols],
+                                 [list(k) for k in zip(*dels)])] = True
+        return dead
+
+    def _project(self, table, foreign: bool):
+        """Project/pad to the requested schema — the shared resolution
+        stack (field-id / rename / struct rebind / spec-physical
+        normalization / promotion cast; new columns pad as null)."""
+        return _project_table_to_schema(
+            table, self.spark_schema, self.rename_map, self.field_ids,
+            self.ice_fields, foreign)
+
+
+class IcelakeReader(_TableFileReader, DataSourceReader):
+    def __init__(self, options: dict, schema):
+        self.options = options
+        self.filter_parts: list[str] = []
+        self._bind(options["path"], schema)
 
     def pushFilters(self, filters):  # noqa: N802 (API name)
         """Accept simple comparisons and IN lists for zone-map file
@@ -494,97 +592,59 @@ class IcelakeReader(DataSourceReader):
         if self.filter_parts:
             kwargs["filter"] = " AND ".join(self.filter_parts)
         data, pos, eq = t.new_scan(**kwargs).plan_files()
-        plan = plan_deletes(data, pos, eq, t.schema(), t.metadata.properties)
-        # a small position-delete set is read ONCE here, not per task
-        by_file = ({p.delete_file.file_path: _positions_by_file(
-                        self._src(p.delete_file.file_path))
-                    for p in plan.pos}
-                   if plan.pos and plan.pos_broadcast else None)
-        tasks = []
-        for d in data:
-            pos_d, eq_d = plan.deletes_for(d)
-            path = d.data_file.file_path
-            positions = None
-            if by_file is not None:
-                hits = [by_file[p.delete_file.file_path].get(
-                    canon_data_path(path)) for p in pos_d]
-                hits = [h for h in hits if h is not None]
-                positions = np.concatenate(hits) if hits else None
-            tasks.append(_FileTask(
-                path, (d.data_file.file_format or "PARQUET").upper(),
-                positions=positions,
-                pos_files=(() if by_file is not None else
-                           tuple(p.delete_file.file_path for p in pos_d)),
-                eq_deletes=tuple(
-                    (g.key_cols, tuple(t.delete_file.file_path for t in ts))
-                    for g, ts in eq_d)))
-        return tasks
+        plan = plan_deletes(data, pos, eq, t.schema(), t.metadata)
+        by_file = _pos_sets(plan, self._src)
+        return [_file_task(d, plan, by_file) for d in data]
 
     def read(self, partition: _FileTask) -> Iterator:
-        """Read one data file with pyarrow (format-dispatched: the table
-        layer legitimately holds ORC/AVRO files via add_files and
-        write.format.default), mask out its MoR deletes with Arrow
-        kernels, yield Arrow record batches (Spark converts via Arrow)."""
+        """Read one data file with pyarrow, mask out its MoR deletes
+        with Arrow kernels, yield Arrow record batches (Spark converts
+        via Arrow)."""
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        fmt = (partition.file_format or "PARQUET").upper()
-        foreign = _is_foreign_file(self.options["path"], partition.file_path)
-        if fmt == "ORC":
-            from pyarrow import orc as pa_orc
+        table, foreign = self._read_file(partition)
+        dead = self._dead_mask(table, partition, foreign, {})
+        if dead.any():
+            table = table.filter(pa.array(~dead))
+        yield from self._project(table, foreign).to_batches()
 
-            table = pa_orc.ORCFile(self._src(partition.file_path)).read()
-        elif fmt == "AVRO":
-            table = _read_avro_arrow(self.spark_schema, partition.file_path,
-                                     self.table_store, self.io,
-                                     self.field_ids, self.rename_map,
-                                     foreign)
-        else:
-            table = pq.read_table(self._src(partition.file_path))
 
-        n = table.num_rows
-        keep = np.ones(n, dtype=bool)
-        positions = [] if partition.positions is None \
-            else [partition.positions]
-        canon = canon_data_path(partition.file_path)
-        for f in partition.pos_files:
-            hit = _positions_by_file(self._src(f)).get(canon)
-            if hit is not None:
-                positions.append(hit)
-        for ps in positions:
-            keep[ps[(ps >= 0) & (ps < n)]] = False
+def _pos_sets(plan, src, cache: dict | None = None) -> dict | None:
+    """{delete path: {canon data path: positions}} of a plan's position
+    deletes, read ONCE on the driver while the set is under
+    read.delete.broadcast-threshold-bytes (no task re-reads every
+    delete file: N tasks x M files); None over it, when each task reads
+    its own. `cache` keeps files already read across plans."""
+    if not (plan.pos and plan.pos_broadcast):
+        return None
+    cache = {} if cache is None else cache
+    for p in plan.pos:
+        path = p.delete_file.file_path
+        if path not in cache:
+            cache[path] = _positions_by_file(src(path))
+    return cache
 
-        # equality deletes: key columns (data AND delete side) resolve
-        # with the SAME field-id/rename stack as data columns — after
-        # RENAME COLUMN old delete files lack the current name, and an
-        # all-None pad would resurrect every deleted row (code-review
-        # r8). A key column missing from an old file reads as NULL and
-        # must MATCH AS NULL, not narrow the key (which over-deletes).
-        id_map = _parquet_id_map(table.schema, foreign)
 
-        def key(t, c, ids):
-            arr = _resolve_column(t, c, self.rename_map,
-                                  self.field_ids.get(c), ids)
-            return arr if arr is not None else pa.nulls(t.num_rows)
-
-        for cols, files in partition.eq_deletes:
-            dels = []
-            for f in files:
-                dt = pq.read_table(self._src(f))
-                ids = _parquet_id_map(
-                    dt.schema, _is_foreign_file(self.options["path"], f))
-                dels.append([key(dt, c, ids) for c in cols])
-            keep[_eq_delete_hits([key(table, c, id_map) for c in cols],
-                                 [list(k) for k in zip(*dels)])] = False
-        if not keep.all():
-            table = table.filter(pa.array(keep))
-
-        # project/pad to the requested schema — the shared resolution
-        # stack (field-id / rename / struct rebind / spec-physical
-        # normalization / promotion cast; new columns pad as null)
-        yield from _project_table_to_schema(
-            table, self.spark_schema, self.rename_map, self.field_ids,
-            self.ice_fields, foreign).to_batches()
+def _file_task(d, plan, by_file: dict | None) -> _FileTask:
+    """The _FileTask of data task `d` with its deletes from `plan`;
+    position deletes become row positions when `by_file` (_pos_sets)
+    resolved them."""
+    pos_d, eq_d = plan.deletes_for(d)
+    path = d.data_file.file_path
+    positions = None
+    if by_file is not None:
+        hits = [by_file[p.delete_file.file_path].get(canon_data_path(path))
+                for p in pos_d]
+        hits = [h for h in hits if h is not None]
+        positions = np.concatenate(hits) if hits else None
+    return _FileTask(
+        path, (d.data_file.file_format or "PARQUET").upper(),
+        positions=positions,
+        pos_files=(() if by_file is not None else
+                   tuple(p.delete_file.file_path for p in pos_d)),
+        eq_deletes=tuple(
+            (g.key_cols, tuple(t.delete_file.file_path for t in ts))
+            for g, ts in eq_d))
 
 
 def _positions_by_file(src) -> dict[str, "np.ndarray"]:
@@ -819,26 +879,51 @@ def _stream_files_range(table, s1: int, k1: int, s2: int, k2: int,
     return out
 
 
-def _plan_changelog_tasks(table, start_off: int, end_off: int) -> list:
+def _plan_changelog_tasks(table, start_off: int, end_off: int,
+                          src) -> list:
     """Driver-side changelog planning with STRICTLY LINEAR manifest
     I/O: one walk over the main ancestry reads each manifest list and
     each added-by manifest EXACTLY ONCE, maintaining the alive-data-
     file map incrementally (alive(s) = alive(parent) + ADDED − DELETED;
-    EXISTING entries from manifest rewrites are no-ops). Every
-    decodable in-range snapshot becomes one _ChangeSnapshotTask
-    carrying its complete payload — own added-file lists, the prior
-    delete-FILE lists, and (only when it has deletes to decode) the
-    alive-before-it file map — so executor tasks perform ZERO manifest
-    reads. This replaces the per-task prior-snapshot re-walk that made
-    a micro-batch O(snapshots²) in manifest I/O."""
+    EXISTING entries from manifest rewrites are no-ops) and the delete
+    files of every walked snapshot. Every decodable in-range snapshot
+    becomes one _ChangeSnapshotTask of _FileTasks whose deletes come
+    from planning.plan_deletes, so executor tasks perform ZERO manifest
+    reads and mask rows exactly as the batch DataSource does."""
+    from .table import DeleteFileTask, FileScanTask
     from .types.manifest import (STATUS_ADDED, STATUS_DELETED,
                                  read_manifest, read_manifest_list)
 
     out = []
     main_ids = table.metadata.ancestry_ids()
-    pos_acc: list[str] = []
-    eq_acc: list[tuple[str, int]] = []
-    alive: dict[str, tuple[str, int]] = {}  # canon → (path, seq)
+    schema, md = table.schema(), table.metadata
+    prior_pos: list = []   # DeleteFileTasks of every earlier walked
+    prior_eq: list = []    # snapshot, in or before the window
+    alive: dict[str, FileScanTask] = {}  # canon path → alive data file
+    positions: dict = {}   # position-delete file → its resolved rows
+
+    def snapshot_task(snapshot_id: int, added: list, pos: list,
+                      eq: list) -> _ChangeSnapshotTask:
+        """Each added file masked by its own commit's deletes (equality
+        deletes gate out at the same sequence number), and each older
+        file this snapshot's deletes touch, paired with the deletes of
+        every earlier walked snapshot."""
+        older = list(alive.values()) if pos or eq else []
+        plan = plan_deletes(added + older, pos, eq, schema, md)
+        by_file = _pos_sets(plan, src, positions)
+        touched = [(d, ft) for d in older
+                   if (ft := _file_task(d, plan, by_file)).has_deletes]
+        deletes = ()
+        if touched:
+            prior = plan_deletes([d for d, _ in touched], prior_pos,
+                                 prior_eq, schema, md)
+            prior_by_file = _pos_sets(prior, src, positions)
+            deletes = tuple((_file_task(d, prior, prior_by_file), ft)
+                            for d, ft in touched)
+        return _ChangeSnapshotTask(
+            snapshot_id,
+            tuple(_file_task(d, plan, by_file) for d in added), deletes)
+
     first_walked = True
     # sort by the STREAM offset (seq on v2, commit timestamp on v1
     # where every seq is 0): the early break below is only safe when
@@ -855,248 +940,59 @@ def _plan_changelog_tasks(table, start_off: int, end_off: int) -> list:
         decodable = not (
             summary.get("operation", "append") == "replace"
             or int(summary.get("deleted-data-files", 0) or 0) > 0)
-        in_range = start_off < off <= end_off
-        added_data, added_pos, added_eq = [], [], []
-        alive_updates: list[tuple[str, str, int, int]] = []
+        added, added_pos, added_eq, updates = [], [], [], []
         for mle in read_manifest_list(table._resolve(snap.manifest_list)):
             foreign = mle.added_snapshot_id != snap.snapshot_id
             if foreign and not first_walked:
                 continue  # carried forward unchanged: no alive change
-            # the FIRST retained snapshot seeds `alive` from its FULL
-            # manifest list: files added by since-EXPIRED snapshots
-            # survive only via carried-forward manifests whose
-            # added_snapshot_id is no longer in metadata.snapshots —
-            # skipping them would drop their rows' delete events
+            # the FIRST retained snapshot seeds `alive` and the prior
+            # deletes from its FULL manifest list: files added by since-
+            # EXPIRED snapshots survive only via carried-forward
+            # manifests whose added_snapshot_id is no longer in
+            # metadata.snapshots — skipping them would drop their rows'
+            # delete events
             _, entries = read_manifest(table._resolve(mle.manifest_path))
             for e in entries:
                 seq = (e.sequence_number if e.sequence_number is not None
                        else mle.sequence_number)
-                p = table._resolve(e.data_file.file_path)
-                if e.data_file.content == 0:
-                    if foreign:
-                        if e.is_alive:
-                            # predates this snapshot: alive BEFORE it
-                            alive[canon_data_path(p)] = (p, seq)
+                df = e.data_file
+                df.file_path = table._resolve(df.file_path)
+                if foreign:  # predates this snapshot: alive BEFORE it
+                    if not e.is_alive:
                         continue
-                    alive_updates.append((e.status, p, seq, 0))
-                    if e.status == STATUS_ADDED:
-                        added_data.append((p, seq))
-                elif not foreign and e.status == STATUS_ADDED:
-                    if e.data_file.content == 1:
-                        added_pos.append((p, seq))
+                    if df.content == 0:
+                        alive[canon_data_path(df.file_path)] = \
+                            FileScanTask(df, seq, mle.partition_spec_id)
                     else:
-                        added_eq.append((p, seq))
+                        (prior_pos if df.content == 1 else prior_eq) \
+                            .append(DeleteFileTask(df, seq))
+                elif df.content == 0:
+                    task = FileScanTask(df, seq, mle.partition_spec_id)
+                    updates.append((e.status, task))
+                    if e.status == STATUS_ADDED:
+                        added.append(task)
+                elif e.status == STATUS_ADDED:
+                    (added_pos if df.content == 1 else added_eq).append(
+                        DeleteFileTask(df, seq))
         first_walked = False
-        if in_range and decodable:
-            out.append(_ChangeSnapshotTask(
-                snap.snapshot_id,
-                added_data=tuple(added_data),
-                added_pos=tuple(added_pos),
-                added_eq=tuple(added_eq),
-                prior_pos_files=tuple(pos_acc),
-                prior_eq_files=tuple(eq_acc),
-                older=(tuple((c, p, q) for c, (p, q) in alive.items())
-                       if (added_pos or added_eq) else ()),
-            ))
-        # eq-dead tracking accumulates over EVERY walked snapshot, not
-        # just in-range ones: an eq-delete committed before this micro-
-        # batch's window must still suppress a later snapshot's repeat
-        # delete of the same (already dead) key, or batch boundaries
-        # change the changelog (phantom duplicate delete events vs the
-        # batch changes() API, which always folds the parent's full
-        # delete set — code-review r8)
-        eq_acc.extend(added_eq)
-        pos_acc.extend(p for p, _s in added_pos)
-        for status, p, seq, _c in alive_updates:
+        if decodable and start_off < off <= end_off:
+            out.append(snapshot_task(snap.snapshot_id, added, added_pos,
+                                     added_eq))
+        # deletes accumulate over EVERY walked snapshot, not just in-
+        # range ones: a row an earlier micro-batch's delete killed must
+        # not re-emit a delete event when a later snapshot's delete hits
+        # it again, or batch boundaries change the changelog (phantom
+        # duplicate delete events vs the batch changes() API, which
+        # always folds the parent's full delete set — code-review r8)
+        prior_pos.extend(added_pos)
+        prior_eq.extend(added_eq)
+        for status, task in updates:
+            c = canon_data_path(task.data_file.file_path)
             if status == STATUS_DELETED:
-                alive.pop(canon_data_path(p), None)
+                alive.pop(c, None)
             else:  # ADDED or EXISTING (rewrite): (re)record identically
-                alive[canon_data_path(p)] = (p, seq)
+                alive[c] = task
     return out
-
-
-def _eq_key_cols(file_cols, names: list[str], rmap: dict):
-    """Resolve an eq-delete file's column names against the CURRENT
-    schema, rename-aware: a delete file written before a RENAME carries
-    the old column name, which must map to the renamed field's position
-    in `names` (as _make_file_rows does for data files) — indexing
-    `names` directly would either crash (ValueError) or drop the column
-    from the index list while the key tuple kept it, producing
-    length-mismatched tuples that never match (ADVICE r8). Returns
-    (src_cols, ki) aligned: src_cols are the file-side column names to
-    read, ki their row-tuple indexes.
-
-    An UNRESOLVABLE column (the key column was since DROPPED) fails
-    loudly, matching the batch read path and changes(): silently
-    dropping it from the key would WIDEN the delete match — any row
-    sharing the remaining key values is treated as dead, emitting
-    phantom delete events (code-review r9)."""
-    src_cols, ki = [], []
-    for c in file_cols:
-        cur = c if c in names else next(
-            (n for n in names if c in rmap.get(n, ())), None)
-        if cur is None:
-            raise ValueError(
-                f"equality-delete file keys on column {c!r} which is "
-                f"not in the current schema (dropped?); rewrite "
-                f"deletes (rewrite_position_deletes / compaction) "
-                f"before dropping key columns")
-        src_cols.append(c)
-        ki.append(names.index(cur))
-    return src_cols, ki
-
-
-def _make_file_rows(names: list[str], rmap: dict,
-                    table_store: str = "", io=None):
-    """Rename-aware cached row reader of the changelog stream decoder:
-    file_rows(path) → list of row tuples in `names` order (a requested
-    column absent from the file pads None, or reads via its former
-    name). Caches per path — the eq-delete branch revisits files."""
-    import pyarrow.parquet as pq
-
-    cache: dict[str, list[tuple]] = {}
-
-    def file_rows(path: str) -> list[tuple]:
-        rows = cache.get(path)
-        if rows is None:
-            in_file = set(pq.read_schema(
-                _arrow_src(path, table_store, io)).names)
-            src_of = {}
-            for n in names:
-                if n in in_file:
-                    src_of[n] = n
-                else:
-                    src_of[n] = next(
-                        (o for o in rmap.get(n, ()) if o in in_file), None)
-            read_cols = sorted({c for c in src_of.values() if c})
-            t = pq.read_table(_arrow_src(path, table_store, io),
-                              columns=read_cols)
-            cols = {n: (t[src_of[n]].to_pylist() if src_of[n]
-                        else [None] * t.num_rows) for n in names}
-            rows = [tuple(cols[n][i] for n in names)
-                    for i in range(t.num_rows)]
-            cache[path] = rows
-        return rows
-
-    return file_rows
-
-
-_NAN_KEY = object()
-
-
-def _eq_key(vals) -> tuple:
-    """Key tuple under Spark's equality: every NaN equals every NaN.
-    Python's float NaN never equals itself, so a NaN key would never
-    match its delete; None == None and -0.0 == 0.0 already hold."""
-    return tuple(_NAN_KEY if isinstance(v, float) and v != v else v
-                 for v in vals)
-
-
-def _key_set(kt, cols: list[str]) -> set[tuple]:
-    """Key tuples of an equality-delete file's `cols`."""
-    return {_eq_key(k) for k in zip(*[kt[c].to_pylist() for c in cols])}
-
-
-def _changelog_snapshot_rows(names: list[str], rmap: dict,
-                             task: "_ChangeSnapshotTask",
-                             table_store: str = "", io=None) -> list[tuple]:
-    """CDC events of ONE snapshot (executor side of the changelog
-    stream). The entire plan arrives in the task payload (driver-
-    planned, linear manifest I/O): own added-file lists, prior delete
-    FILES (pos files build the positional dead-set; eq files become
-    key sets consulted per candidate row under the data file's
-    sequence gate), and the alive-before map. ZERO manifest I/O here.
-    Verdicts match the batch `IcebergTable.changes`."""
-    import pyarrow.parquet as pq
-
-    file_rows = _make_file_rows(names, rmap, table_store, io)
-
-    def _src(p):
-        return _arrow_src(p, table_store, io)
-
-    added_data = list(task.added_data)
-    added_pos = list(task.added_pos)
-    added_eq = list(task.added_eq)
-
-    prior_dead: set[tuple[str, int]] = set()
-    for p in task.prior_pos_files:
-        t = pq.read_table(_src(p), columns=["file_path", "pos"])
-        for src, pos in zip(t["file_path"].to_pylist(),
-                            t["pos"].to_pylist()):
-            prior_dead.add((canon_data_path(src), pos))
-    prior_eq: list[tuple[list[int], set, int]] = []
-    for p, dseq in task.prior_eq_files:
-        kt = pq.read_table(_src(p))
-        kc, ki = _eq_key_cols(kt.column_names, names, rmap)
-        prior_eq.append((ki, _key_set(kt, kc), dseq))
-
-    def dead_by_prior_eq(row: tuple, fseq: int) -> bool:
-        # eq deletes kill strictly-older data only (data_seq < del_seq)
-        return any(eq_delete_applies(fseq, dseq)
-                   and _eq_key(row[j] for j in ki) in keys
-                   for ki, keys, dseq in prior_eq if ki)
-
-    same_commit_deleted: set[tuple[str, int]] = set()
-    pos_by_src: dict[str, list[int]] = {}
-    for p, _seq in added_pos:
-        t = pq.read_table(_src(p))
-        for src, pos in zip(t["file_path"].to_pylist(),
-                            t["pos"].to_pylist()):
-            key = canon_data_path(src)
-            same_commit_deleted.add((key, pos))
-            pos_by_src.setdefault(key, []).append(pos)
-
-    rows: list[tuple] = []
-    for p, _seq in added_data:
-        ckey = canon_data_path(p)
-        for i, r in enumerate(file_rows(p)):
-            if (ckey, i) in same_commit_deleted:
-                continue
-            rows.append(r + ("insert",))
-
-    if added_pos or added_eq:
-        # data files alive before this snapshot (driver-shipped)
-        older: dict[str, tuple[str, int]] = {
-            c: (p, q) for c, p, q in task.older}
-
-        for src, positions in pos_by_src.items():
-            if src not in older:
-                continue  # same-commit churn already excluded
-            real, fseq = older[src]
-            all_rows = file_rows(real)
-            for i in sorted(positions):
-                if (src, i) in prior_dead or i >= len(all_rows):
-                    continue
-                r = all_rows[i]
-                if dead_by_prior_eq(r, fseq):
-                    continue
-                rows.append(r + ("delete",))
-
-        eq_dead_local: set[tuple[str, int]] = set()
-        for p, del_seq in added_eq:
-            kt = pq.read_table(_src(p))
-            kc, ki = _eq_key_cols(kt.column_names, names, rmap)
-            keys = _key_set(kt, kc)
-            for ckey, (real, fseq) in older.items():
-                if not eq_delete_applies(fseq, del_seq):
-                    continue
-                for i, r in enumerate(file_rows(real)):
-                    # same_commit_deleted: a commit may legally carry a
-                    # POSITION delete and an EQUALITY delete covering
-                    # the same physical row (external writers mix
-                    # them); the pos branch above already emitted that
-                    # row's delete event, so the eq branch must not
-                    # emit a second one (review r11)
-                    if (ckey, i) in prior_dead \
-                            or (ckey, i) in eq_dead_local \
-                            or (ckey, i) in same_commit_deleted:
-                        continue
-                    if dead_by_prior_eq(r, fseq):
-                        continue
-                    if _eq_key(r[j] for j in ki) in keys:
-                        rows.append(r + ("delete",))
-                        eq_dead_local.add((ckey, i))
-    return rows
 
 
 @dataclass
@@ -1107,21 +1003,18 @@ class _StreamFileTask(InputPartition):
 
 @dataclass
 class _ChangeSnapshotTask(InputPartition):
-    """One changelog micro-batch slice: reconstruct ONE snapshot's CDC
-    events on an executor. The driver's _plan_changelog_tasks walks the
-    history ONCE (each manifest read exactly once) and ships the
-    complete payload — the task performs zero manifest I/O and reads
-    only the data/delete FILES it decodes."""
+    """One changelog micro-batch slice: ONE snapshot's CDC events,
+    decoded on an executor from the _FileTasks _plan_changelog_tasks
+    ships — zero manifest I/O, and only the data/delete FILES it
+    masks are read."""
     snapshot_id: int
-    added_data: tuple = ()               # (data file path, seq)
-    added_pos: tuple = ()                # (pos-delete file path, seq)
-    added_eq: tuple = ()                 # (eq-delete file path, delete_seq)
-    prior_pos_files: tuple = ()          # earlier pos-delete file paths
-    prior_eq_files: tuple = ()           # earlier (eq-delete path, seq)
-    older: tuple = ()                    # (canon, path, seq) alive before
+    inserts: tuple = ()  # _FileTask per added data file
+    # (earlier deletes, this snapshot's deletes) _FileTasks of one
+    # older data file
+    deletes: tuple = ()
 
 
-class IcelakePartitionStreamReader(DataSourceStreamReader):
+class IcelakePartitionStreamReader(_TableFileReader, DataSourceStreamReader):
     """`spark.readStream.format("icelake")` — the partition-based
     micro-batch source. Offsets are table sequence numbers (commit
     timestamps on v1); each micro-batch is the set of data files ADDED
@@ -1130,8 +1023,11 @@ class IcelakePartitionStreamReader(DataSourceStreamReader):
     deterministic replay: partitions(start, end) re-derives the same
     file list from the same immutable snapshot range. With
     option("changelog", "true") each micro-batch is one partition per
-    snapshot, decoded on executors from a driver-planned payload
-    (_plan_changelog_tasks / _changelog_snapshot_rows).
+    snapshot: _plan_changelog_tasks gives each of its files the deletes
+    of planning.plan_deletes, and the executor masks them with the
+    batch reader's Arrow mask (_dead_mask) — an insert is an added row
+    its own commit does not delete, a delete an older row this
+    snapshot's deletes kill and no earlier delete did.
 
     It is the only stream reader: nothing is materialized on the
     driver, so a large append snapshot cannot OOM it. Parity: Iceberg's
@@ -1139,23 +1035,11 @@ class IcelakePartitionStreamReader(DataSourceStreamReader):
     model (table.rs:281-304)."""
 
     def __init__(self, options: dict, schema):
-        from .table import IcebergTable
-
         self.options = options
-        self.spark_schema = schema
-        self.path = options["path"]
-        t = IcebergTable.load(self.path)
-        self.rename_map = _rename_map(t)
-        self.field_ids = {f.name: f.field_id for f in t.schema().fields}
-        # iceberg member types for nested rebinding + shipped FileIO —
-        # the same resolution discipline as the batch reader (a struct
-        # member renamed in an externally-written file must bind by its
-        # nested field id in the STREAM too)
-        self.ice_fields = {f.name: f.field_type for f in t.schema().fields}
-        from .fileio import is_uri, resolve_io
-
-        self.table_store = _store_of(self.path)
-        self.io = resolve_io(self.path) if is_uri(self.path) else None
+        # the same column identity and shipped FileIO as the batch
+        # reader (a struct member renamed in an externally-written file
+        # must bind by its nested field id in the STREAM too)
+        self._bind(options["path"], schema)
         # rate limit (Iceberg's max-files-per-micro-batch analogue at
         # snapshot granularity): each trigger advances the offset by at
         # most N sequence numbers, so a backlogged stream catches up in
@@ -1177,9 +1061,6 @@ class IcelakePartitionStreamReader(DataSourceStreamReader):
         # RE-planning those rows when a restart briefly regresses the
         # capped offset below the checkpoint (ADVICE r7 medium).
         self._planned = None
-
-    def _src(self, path: str):
-        return _arrow_src(path, self.table_store, self.io)
 
     def _table(self):
         from .table import IcebergTable
@@ -1271,7 +1152,7 @@ class IcelakePartitionStreamReader(DataSourceStreamReader):
             # one task per DECODABLE snapshot in range; ONE linear walk
             # on the driver reads each manifest exactly once and ships
             # complete task payloads (see _plan_changelog_tasks)
-            return _plan_changelog_tasks(table, s[0], e[0])
+            return _plan_changelog_tasks(table, s[0], e[0], self._src)
         if s[1] or e[1]:
             files = _stream_files_range(table, s[0], s[1], e[0], e[1],
                                         self._sf_cache)
@@ -1284,31 +1165,33 @@ class IcelakePartitionStreamReader(DataSourceStreamReader):
         return [_StreamFileTask(path, fmt) for path, fmt in files]
 
     def read(self, partition):  # executor-side
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
         if isinstance(partition, _ChangeSnapshotTask):
-            names = [f.name for f in self.spark_schema.fields
-                     if f.name != "_change_type"]
-            yield from _changelog_snapshot_rows(names, self.rename_map,
-                                                partition,
-                                                self.table_store, self.io)
+            yield from self._changes(partition)
             return
-        foreign = _is_foreign_file(self.path, partition.file_path)
-        if partition.file_format == "ORC":
-            from pyarrow import orc as pa_orc
+        table, foreign = self._read_file(partition)
+        yield from self._project(table, foreign).to_batches()
 
-            table = pa_orc.ORCFile(self._src(partition.file_path)).read()
-        elif partition.file_format == "AVRO":
-            table = _read_avro_arrow(self.spark_schema, partition.file_path,
-                                     self.table_store, self.io,
-                                     self.field_ids, self.rename_map,
-                                     foreign)
-        else:
-            table = pq.read_table(self._src(partition.file_path))
-        yield from _project_table_to_schema(
-            table, self.spark_schema, self.rename_map, self.field_ids,
-            self.ice_fields, foreign).to_batches()
+    def _changes(self, task: _ChangeSnapshotTask) -> Iterator:
+        """One snapshot's CDC events as Arrow batches: one dead-row mask
+        per file and delete side, so a row that a position AND an
+        equality delete of the same commit both hit is emitted once."""
+        import pyarrow as pa
+
+        cache: dict = {}
+        for kind, prior, this in (
+                [("insert", None, t) for t in task.inserts]
+                + [("delete", p, t) for p, t in task.deletes]):
+            table, foreign = self._read_file(this)
+            dead = self._dead_mask(table, this, foreign, cache)
+            rows = ~dead if prior is None else \
+                dead & ~self._dead_mask(table, prior, foreign, cache)
+            if not rows.any():
+                continue
+            out = self._project(table.filter(pa.array(rows)), foreign)
+            i = out.schema.get_field_index("_change_type")
+            yield from out.set_column(
+                i, "_change_type",
+                pa.repeat(pa.scalar(kind), out.num_rows)).to_batches()
 
     def commit(self, end: dict) -> None:
         pass

@@ -635,7 +635,7 @@ class DeletePlan:
 
 
 def plan_deletes(data, pos, eq, schema: Schema,
-                 properties: dict[str, str]) -> DeletePlan:
+                 metadata: TableMetadata) -> DeletePlan:
     """Build the DeletePlan of a scan.
 
     - Each delete side is broadcast only while its planned
@@ -653,9 +653,11 @@ def plan_deletes(data, pos, eq, schema: Schema,
       file drops out.
     - A live equality-delete file keyed on a since-DROPPED column cannot
       be applied; silently skipping it would resurrect every row it
-      tombstoned (code-review r8), so planning fails loudly."""
+      tombstoned (code-review r8), so planning fails loudly, naming
+      each dropped column by its last name in the schema history."""
     from .table import PROP_NAME_MAPPING
 
+    properties = metadata.properties
     limit = int(properties.get(DELETE_BROADCAST_PROP,
                                DELETE_BROADCAST_DEFAULT))
 
@@ -677,9 +679,12 @@ def plan_deletes(data, pos, eq, schema: Schema,
         names = [schema.name_by_id(fid) for fid in eq_ids]
         missing = [fid for fid, c in zip(eq_ids, names) if c is None]
         if missing:
+            last = {fid: n for s in metadata.schemas for fid in missing
+                    if (n := s.name_by_id(fid)) is not None}
+            dropped = ", ".join(repr(last.get(fid, "?")) for fid in missing)
             raise ValueError(
                 f"equality-delete files key on dropped column ids "
-                f"{missing}; rewrite deletes (rewrite_position_"
+                f"{missing} ({dropped}); rewrite deletes (rewrite_position_"
                 f"deletes / compaction) before dropping key columns")
         scoped = None
         if part_key is not None:

@@ -1144,8 +1144,7 @@ class TableScan:
 
         schema = read_schema if read_schema is not None \
             else self.table.schema()
-        plan = plan_deletes(data, pos, eq, schema,
-                            self.table.metadata.properties)
+        plan = plan_deletes(data, pos, eq, schema, self.table.metadata)
 
         def side(side_df: DataFrame, broadcast: bool) -> DataFrame:
             if broadcast:

@@ -91,6 +91,16 @@ def warehouse(tmp_path):
     return StorageCatalog(str(tmp_path / "wh"))
 
 
+@pytest.fixture()
+def arrow_rows():
+    """Row tuples of the Arrow record batches a DataSource reader's
+    read() yields."""
+    def rows(batches):
+        return [tuple(r.values()) for b in batches for r in b.to_pylist()]
+
+    return rows
+
+
 # the reference's F1 wide_types 5-row seed
 # (/root/reference/testdata/toml/*.toml; FIXTURES.md F1)
 WIDE_SCHEMA_DDL = (

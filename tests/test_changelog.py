@@ -236,7 +236,8 @@ def test_apply_changes_full_resync_after_expired_sync_point(spark, warehouse):
     assert sorted(r.id for r in tgt.to_df(spark).collect()) == [2, 3]
 
 
-def test_changelog_stream_manifest_io_linear_in_window(spark, tmp_path):
+def test_changelog_stream_manifest_io_linear_in_window(spark, tmp_path,
+                                                        arrow_rows):
     """A 10-snapshot changelog window must plan with LINEAR manifest
     I/O: the driver's partitions() walks the history once shipping
     prior delete-file lists, so no .avro manifest is re-read per task
@@ -319,7 +320,7 @@ def test_changelog_stream_manifest_io_linear_in_window(spark, tmp_path):
 
         rows = []
         for p in parts:
-            rows.extend(reader.read(p))
+            rows.extend(arrow_rows(reader.read(p)))
         # executor tasks perform ZERO manifest I/O (payload-driven):
         # across planning + all task reads every manifest is read
         # exactly once — the quadratic design re-read early delete
@@ -336,7 +337,8 @@ def test_changelog_stream_manifest_io_linear_in_window(spark, tmp_path):
         unregister_io("cnt")
 
 
-def test_changelog_stream_deletes_after_snapshot_expiry(spark, warehouse):
+def test_changelog_stream_deletes_after_snapshot_expiry(spark, warehouse,
+                                                        arrow_rows):
     """Delete events for rows whose ADDING snapshot has been expired:
     the file survives only via carried-forward manifests whose
     added_snapshot_id is no longer listed — the stream planner must
@@ -370,12 +372,54 @@ def test_changelog_stream_deletes_after_snapshot_expiry(spark, warehouse):
          "starting_sequence_number": str(s2_seq)}, schema)
     parts = reader.partitions(reader.initialOffset(), reader.latestOffset())
     assert len(parts) == 1
-    rows = list(reader.read(parts[0]))
+    rows = arrow_rows(reader.read(parts[0]))
     deletes = sorted((r[0], r[1]) for r in rows if r[2] == "delete")
     assert deletes == [(3, "v3"), (7, "v7")], rows
 
 
-def test_changelog_batch_boundaries_no_phantom_deletes(spark, warehouse):
+def test_changelog_stream_counts_deletes_of_expired_snapshots(
+        spark, warehouse, arrow_rows):
+    """An equality delete committed by a since-EXPIRED snapshot lives on
+    only in the first retained snapshot's carried-forward manifests.
+    The stream must count it among the earlier deletes, or a later
+    delete of the same key re-emits the row it already killed."""
+    import pyspark.sql.types as T
+
+    from icelake_spark.datasource import IcelakePartitionStreamReader
+    from icelake_spark.maintenance import expire_snapshots
+
+    ddl = "id long, v string"
+    t = warehouse.create_table(
+        "db.expeq", Schema.from_spark(spark.createDataFrame([], ddl).schema))
+    t.append(spark.createDataFrame([(1, "a"), (2, "b")], ddl))
+    t = t.refresh()
+    t.upsert(spark.createDataFrame([(1, "a2")], ddl), key_cols=["id"])
+    t = t.refresh()
+    t.append(spark.createDataFrame([(3, "c")], ddl))
+    t = t.refresh()
+    assert expire_snapshots(t, older_than_ms=10**18, retain_last=1) == 2
+    t = t.refresh()
+    base = t.current_snapshot()
+    t.upsert(spark.createDataFrame([(1, "a3")], ddl), key_cols=["id"])
+    t = t.refresh()
+
+    schema = T.StructType(
+        list(t.schema().to_spark().fields)
+        + [T.StructField("_change_type", T.StringType())])
+    reader = IcelakePartitionStreamReader(
+        {"path": t.path, "changelog": "true",
+         "starting_sequence_number": str(base.sequence_number)}, schema)
+    got = sorted(r for p in reader.partitions(reader.initialOffset(),
+                                              reader.latestOffset())
+                 for r in arrow_rows(reader.read(p)))
+    want = sorted((r.id, r.v, r._change_type) for r in t.changes(
+        spark, from_snapshot_id=base.snapshot_id).collect())
+    assert want == [(1, "a2", "delete"), (1, "a3", "insert")]
+    assert got == want, got
+
+
+def test_changelog_batch_boundaries_no_phantom_deletes(spark, warehouse,
+                                                       arrow_rows):
     """Splitting the changelog stream into micro-batches must not
     change its content: a key eq-deleted in an earlier batch must not
     re-emit a delete event when a later batch's eq delete hits the
@@ -412,7 +456,7 @@ def test_changelog_batch_boundaries_no_phantom_deletes(spark, warehouse):
                 reader = IcelakePartitionStreamReader(
                     {"path": t.path, "changelog": "true"}, schema)
             for p in reader.partitions({"seq": s_}, {"seq": e_}):
-                out.extend(reader.read(p))
+                out.extend(arrow_rows(reader.read(p)))
         return sorted((r[0], r[1], r[2]) for r in out)
 
     one_batch = run_windows([(0, end)])
@@ -442,7 +486,7 @@ def _delete_file_paths(t, snapshot):
 
 
 def test_changelog_batch_boundary_suppression_survives_rename(
-        spark, warehouse):
+        spark, warehouse, arrow_rows):
     """fold_eq_prior must resolve delete-file column names through the
     rename map: an eq-delete file written BEFORE a RENAME of the key
     column carries the OLD name, and indexing the post-rename schema
@@ -486,7 +530,8 @@ def test_changelog_batch_boundary_suppression_survives_rename(
         fresh = IcelakePartitionStreamReader(
             {"path": t.path, "changelog": "true"}, schema)
         for p in fresh.partitions({"seq": s_}, {"seq": e_}):
-            split.extend((r[0], r[1], r[2]) for r in fresh.read(p))
+            split.extend((r[0], r[1], r[2])
+                         for r in arrow_rows(fresh.read(p)))
     split.sort()
     assert split == want, (split, want)
 
@@ -495,13 +540,13 @@ def test_changelog_batch_boundary_suppression_survives_rename(
     rows = []
     for s_, e_ in [(0, offs[1]), (offs[1], end)]:
         for p in reader.partitions({"seq": s_}, {"seq": e_}):
-            rows.extend(reader.read(p))
+            rows.extend(arrow_rows(reader.read(p)))
     got = sorted((r[0], r[1], r[2]) for r in rows)
     assert got == want, (got, want)
 
 
 def test_changelog_window_skips_future_snapshot_io(
-        spark, warehouse, monkeypatch):
+        spark, warehouse, monkeypatch, arrow_rows):
     """Reading an EARLY changelog window must not decode delete parquet
     files of snapshots PAST the window's end — the accumulated-state
     walk is offset-sorted, so it breaks at end_seq instead of folding
@@ -541,7 +586,7 @@ def test_changelog_window_skips_future_snapshot_io(
     monkeypatch.setattr(_pq, "read_table", spy)
     off1 = _stream_offset_of(t, first)
     rows = [r for p in reader.partitions({"seq": 0}, {"seq": off1})
-            for r in reader.read(p)]
+            for r in arrow_rows(reader.read(p))]
     assert sorted(r[0] for r in rows) == [1, 2]
     touched = {p for p in seen if p in future_deletes}
     assert not touched, f"future snapshots decoded: {touched}"

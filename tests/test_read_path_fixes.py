@@ -168,7 +168,7 @@ def test_stream_casts_promoted_types(spark, warehouse, tmp_path):
     assert rows == {(1, 5), (2, 6), (3, 7)}
 
 
-def test_read_paths_agree_on_nan_and_null_keys(spark, warehouse):
+def test_read_paths_agree_on_nan_and_null_keys(spark, warehouse, arrow_rows):
     """Every read path applies equality deletes with Spark's key
     equality — NULL matches NULL, NaN matches NaN — so to_df, the
     DataSource, changes() and the changelog stream all agree. The
@@ -221,5 +221,5 @@ def test_read_paths_agree_on_nan_and_null_keys(spark, warehouse):
             {"path": t.path, "changelog": "true"}, schema)
         stream = [r for p in reader.partitions(
                       {"seq": 0}, {"seq": _stream_end_offset(t)})
-                  for r in reader.read(p)]
+                  for r in arrow_rows(reader.read(p))]
         assert norm(stream) == norm(events), ddl

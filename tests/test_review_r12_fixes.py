@@ -641,11 +641,11 @@ def test_partition_filter_coercion_tz_decimal_boolean(spark, warehouse):
     assert got.count() == 3  # neither a crash nor a full prune
 
 
-def test_eq_delete_partition_scoping(spark, warehouse):
+def test_eq_delete_partition_scoping(spark, warehouse, tmp_path):
     """A partition-scoped equality-delete file tombstones ONLY its own
     partition's data files (the spec rule; review r12): the same key
-    in another partition survives, and the changelog emits exactly one
-    delete event."""
+    in another partition survives, and the changelog — changes() and
+    the changelog stream alike — emits exactly one delete event."""
     from icelake_spark.delta import write_equality_delete_files
     from icelake_spark.transaction import Transaction
     from icelake_spark.types import PartitionField, PartitionSpec, Schema
@@ -675,6 +675,22 @@ def test_eq_delete_partition_scoping(spark, warehouse):
     dels = sorted((r.id, r.region) for r in
                   ch.where("_change_type = 'delete'").collect())
     assert dels == [(7, "eu")], dels
+
+    from icelake_spark import datasource
+
+    datasource.register(spark)
+    q = (spark.readStream.format("icelake").option("path", t.path)
+         .option("changelog", "true").load()
+         .writeStream.format("memory").queryName("eqscope_changes")
+         .option("checkpointLocation", str(tmp_path / "ckpt_eqscope"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    stream = sorted((r.id, r.region, r._change_type) for r in
+                    spark.sql("select * from eqscope_changes").collect())
+    want = sorted((r.id, r.region, r._change_type)
+                  for r in t.changes(spark).collect())
+    assert stream == want, (stream, want)
+    assert [e for e in stream if e[2] == "delete"] == [(7, "eu", "delete")]
 
 
 def test_canon_path_scheme_and_collision_guard(spark):
