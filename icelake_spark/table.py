@@ -979,6 +979,8 @@ class TableScan:
             df = self._apply_deletes(spark, df, data, pos, eq,
                                      read_schema=schema)
 
+        if self.filter:
+            df = df.where(self.filter)
         residual = self._partition_residual(schema)
         if residual is not None:
             # partition_filter is EXACT WHERE semantics, not just
@@ -986,10 +988,11 @@ class TableScan:
             # the field, uncoercible values) would otherwise leak
             # non-matching rows into results after spec evolution
             # (code-review r8). Catalyst pushes this to the scan, so
-            # exactly-pruned files pay nothing.
+            # exactly-pruned files pay nothing. It goes ABOVE the
+            # caller's filter: an integer bucket transform calls
+            # `reflect`, which Catalyst treats as non-deterministic, and
+            # no filter is pushed down through a non-deterministic one.
             df = df.where(residual)
-        if self.filter:
-            df = df.where(self.filter)
         if self.columns:
             df = df.select(*self.columns)
         return df

@@ -1,10 +1,16 @@
 """Iceberg partition transforms as Catalyst expressions.
 
-Every transform except `bucket` compiles to built-in Spark SQL functions
-(JVM-side, whole-stage-codegen'd). `bucket` needs Iceberg's murmur3 byte
-conventions, which differ from Spark's `hash()` (seed 42, different byte
-widths), so it is an Arrow-batched pandas_udf over numpy-vectorized
-murmur3 — the only Python-side kernel in the hot path.
+Every transform runs in the JVM except `bucket` over string, uuid,
+binary and decimal sources. Identity, truncate and the temporal
+transforms compile to built-in Spark SQL functions. `bucket` needs
+Iceberg's murmur3 conventions (seed 0, spec byte encodings), which
+Spark's `hash()` does not follow (seed 42). For the integer family (int,
+long, time, date, timestamp, timestamptz) the value is hashed as an
+8-byte little-endian long, which is exactly Spark's own
+`Murmur3_x86_32.hashLong(v, 0)`; bucket calls it through the built-in
+`reflect` function. Spark's hash of byte strings mixes the tail bytes
+differently from standard murmur3, so string, uuid, binary and decimal
+buckets stay Arrow-batched pandas_udfs over numpy-vectorized murmur3.
 
 Parity targets:
 - semantics + result types: /root/reference/icelake/src/types/in_memory.rs:801-967
@@ -79,29 +85,22 @@ def transform_result_type(transform: str, source_type: Any) -> PrimitiveType:
     return INT
 
 
-# ------------------------------------------------------------ bucket UDFs
+# --------------------------------------------------------- bucket kernels
 
 
-def _bucket_int64_udf(n: int):
-    @pandas_udf(T.IntegerType())
-    def bucket(s: pd.Series) -> pd.Series:
-        # callers ship the column as STRING: an int64 batch containing
-        # any null converts to float64 at the Arrow->pandas boundary,
-        # silently corrupting values above 2^53 BEFORE the udf runs
-        # (wrong bucket -> wrong partition -> pruning misses the row).
-        # Parsing from strings is exact; numeric batches (null-free
-        # legacy callers) still work via int().
-        mask = s.isna()
-        vals = np.array([0 if m else int(v)
-                         for v, m in zip(s.tolist(), mask.tolist())],
-                        dtype=np.int64)
-        h = hash_long_vec(vals).astype("int64")
-        out = ((h & 0x7FFFFFFF) % n).astype("int32")
-        res = pd.Series(out, index=s.index, dtype="Int32")
-        res[mask] = None
-        return res
+_MURMUR3 = "org.apache.spark.unsafe.hash.Murmur3_x86_32"
 
-    return bucket
+
+def _bucket_int64(v: Column, n: int) -> Column:
+    """bucket[N] of a long column in the JVM: Iceberg hashes the 8-byte
+    little-endian long with murmur3_x86_32, seed 0, bit for bit what
+    Spark's `Murmur3_x86_32.hashLong(v, 0)` computes. `reflect` returns
+    the int as a string; a null input yields null (the CASE keeps the
+    primitive-typed call from ever seeing one)."""
+    h = F.call_function("reflect", F.lit(_MURMUR3), F.lit("hashLong"),
+                        v, F.lit(0)).cast("int")
+    return F.when(v.isNotNull(),
+                  (h.bitwiseAND(F.lit(0x7FFFFFFF)) % F.lit(n)).cast("int"))
 
 
 def _arrow_bytes_view(s: pd.Series, pa_type):
@@ -238,11 +237,11 @@ def bucket_column(col: Column, source_type: PrimitiveType, n: int) -> Column:
     """bucket[N] of a column, per-type byte conventions (bucket.rs:28-66)."""
     name = source_type.name
     if name in ("int", "long", "time"):
-        return _bucket_int64_udf(n)(col.cast("long").cast("string"))
+        return _bucket_int64(col.cast("long"), n)
     if name == "date":
         # days since epoch hashed as long
-        return _bucket_int64_udf(n)(
-            F.datediff(col, F.lit("1970-01-01")).cast("long").cast("string"))
+        return _bucket_int64(
+            F.datediff(col, F.lit("1970-01-01")).cast("long"), n)
     if name in ("timestamp", "timestamptz"):
         # microseconds since epoch hashed as long; cast ts -> long yields µs
         # only via unix_micros (tz) / a ntz-safe expression
@@ -250,7 +249,7 @@ def bucket_column(col: Column, source_type: PrimitiveType, n: int) -> Column:
             micros = F.unix_micros(col)
         else:
             micros = F.unix_micros(F.to_utc_timestamp(col, "UTC"))
-        return _bucket_int64_udf(n)(micros.cast("string"))
+        return _bucket_int64(micros, n)
     if name == "string":
         return _bucket_str_udf(n)(col.cast("string"))
     if name == "uuid":
@@ -344,14 +343,14 @@ def apply_transform_py(transform: str, value: Any, source_type: PrimitiveType) -
             h = hash_long_vec(np.array([days], dtype=np.int64))[0]
         elif tname in ("timestamp", "timestamptz"):
             if isinstance(value, dt.datetime):
-                if value.tzinfo is not None:
-                    # aware: TRUE epoch micros — anchoring the epoch at
-                    # the value's own offset would shift the hash input
-                    # by that offset and bucket-prune the wrong files
-                    value = round(value.timestamp() * 1_000_000)
-                else:
-                    value = round((value - dt.datetime(1970, 1, 1))
-                                  .total_seconds() * 1_000_000)
+                # aware: TRUE epoch micros — anchoring the epoch at the
+                # value's own offset would shift the hash input by that
+                # offset and bucket-prune the wrong files. Integer
+                # timedelta division is exact; float seconds round off
+                # microseconds of instants far from 1970
+                utc = None if value.tzinfo is None else dt.timezone.utc
+                epoch = dt.datetime(1970, 1, 1, tzinfo=utc)
+                value = (value - epoch) // dt.timedelta(microseconds=1)
             h = hash_long_vec(np.array([int(value)], dtype=np.int64))[0]
         elif tname == "string":
             h = hash_str(str(value))

@@ -506,14 +506,19 @@ def _coalesce_to_target(df: DataFrame, props, target_file_size):
     byte target. Partitioned writes are already sized by their
     repartition on the transform columns.
 
-    `target_file_size` arrives ALREADY property-resolved from
-    write_data_files (single resolution point), so only the default
-    fallback lives here."""
+    `target_file_size` arrives ALREADY property-resolved from the
+    caller (write_data_files, write_equality_delete_files), so only the
+    default fallback lives here.
+
+    The partition count is read first: under AQE that runs the plan's
+    query stages, which materializes a persisted input, and a
+    materialized cache reports its real size to the estimate below
+    (before that it reports its source's, unknown for an RDD)."""
     tfs = target_file_size if target_file_size else DEFAULT_TARGET_FILE_SIZE
     try:
+        cur = df.rdd.getNumPartitions()
         est = int(df._jdf.queryExecution().optimizedPlan()
                   .stats().sizeInBytes())
-        cur = df.rdd.getNumPartitions()
     except Exception:
         return df
     want = max(1, (est + tfs * _PARQUET_RATIO - 1) // (tfs * _PARQUET_RATIO))

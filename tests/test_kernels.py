@@ -480,3 +480,90 @@ def test_hash_bytes_vec_hypothesis():
 
     check_bytes()
     check_decimal()
+
+
+_INT_FAMILY_DDL = ("i int, l long, t long, d date, ts timestamp_ntz, "
+                   "tz timestamp")
+_INT_FAMILY = (("i", dty.INT), ("l", dty.LONG), ("t", dty.TIME),
+               ("d", dty.DATE), ("ts", dty.TIMESTAMP),
+               ("tz", dty.TIMESTAMPTZ))
+
+
+def _bucket_int_family(spark, rows, n):
+    """Rows of (Spark bucket[n], source value) per integer-family column."""
+    from icelake_spark.types.transforms import bucket_column
+
+    df = spark.createDataFrame(rows, _INT_FAMILY_DDL)
+    out = df.select(*[bucket_column(F.col(c), t, n).alias(c)
+                      for c, t in _INT_FAMILY]).collect()
+    return [[(r[c], src[k], t) for k, (c, t) in enumerate(_INT_FAMILY)]
+            for r, src in zip(out, rows)]
+
+
+def test_bucket_int_family_matches_python_kernel_property(spark):
+    """Property: the JVM bucket of every integer-family source (int,
+    long, time, date with pre-1970 days, timestamp_ntz, timestamptz)
+    equals apply_transform_py for ANY values, nulls and the long
+    extremes included, at N ∈ {1, 16, 1000, 2^31-1}."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    def opt(s):
+        return st.one_of(st.none(), s)
+
+    offsets = st.integers(-14 * 60, 14 * 60).map(
+        lambda m: dt.timezone(dt.timedelta(minutes=m)))
+    row = st.tuples(
+        opt(st.integers(-(2**31), 2**31 - 1)),
+        opt(st.one_of(st.sampled_from([-(2**63), 2**63 - 1, 0, -1, 1]),
+                      st.integers(-(2**63), 2**63 - 1))),
+        opt(st.integers(0, 86_400_000_000 - 1)),
+        opt(st.dates(dt.date(1, 1, 1), dt.date(9999, 12, 31))),
+        opt(st.datetimes(dt.datetime(1, 1, 1), dt.datetime(9999, 12, 31))),
+        opt(st.datetimes(dt.datetime(2, 1, 1), dt.datetime(9998, 12, 31),
+                         timezones=offsets)))
+    extremes = [(-(2**31), -(2**63), 0, dt.date(1969, 12, 31),
+                 dt.datetime(1969, 12, 31, 23, 59, 59, 999999),
+                 dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)),
+                (2**31 - 1, 2**63 - 1, 86_400_000_000 - 1,
+                 dt.date(1, 1, 1), dt.datetime(9999, 12, 31, 23, 59, 59),
+                 dt.datetime(1, 1, 2, tzinfo=dt.timezone.utc)),
+                (None,) * 6]
+
+    @settings(max_examples=12, deadline=None)
+    @given(st.lists(row, min_size=1, max_size=40),
+           st.sampled_from([1, 16, 1000, 2**31 - 1]))
+    def check(rows, n):
+        for cells in _bucket_int_family(spark, rows + extremes, n):
+            for got, v, t in cells:
+                assert got == apply_transform_py(f"bucket[{n}]", v, t), \
+                    (t, v, n)
+
+    check()
+
+
+def test_bucket_int_family_spec_vectors_through_spark(spark):
+    """Iceberg spec Appendix B hash vectors through the Spark path:
+    at N = 2^31-1 a bucket IS the hash's low 31 bits."""
+    n = 2**31 - 1
+    micros_time = (22 * 3600 + 31 * 60 + 8) * 1_000_000
+    rows = [(34, 34, micros_time, dt.date(2017, 11, 16),
+             dt.datetime(2017, 11, 16, 22, 31, 8),
+             dt.datetime(2017, 11, 16, 14, 31, 8,
+                         tzinfo=dt.timezone(dt.timedelta(hours=-8))))]
+    (cells,) = _bucket_int_family(spark, rows, n)
+    want = [2017239379, 2017239379, -662762989, -653330422,
+            -2047944441, -2047944441]
+    assert [got for got, _, _ in cells] == [(h & 0x7FFFFFFF) % n
+                                            for h in want]
+
+
+def test_bucket_int_long_is_jvm_expression(spark):
+    """int/long buckets run in the JVM: no Python evaluation node."""
+    from icelake_spark.types.transforms import bucket_column
+
+    df = spark.createDataFrame([(1, 2)], "i int, l long")
+    plan = df.select(bucket_column(F.col("i"), dty.INT, 16),
+                     bucket_column(F.col("l"), dty.LONG, 16)) \
+        ._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan and "EvalPython" not in plan, plan

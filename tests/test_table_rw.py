@@ -74,11 +74,14 @@ def test_partition_scenarios(spark, warehouse, wide_df, scenario):
         assert all(p.record_count >= 1 for p in parts)
 
 
-def test_cdc_delta_scenario(spark, warehouse):
+def test_cdc_delta_scenario(prod_plan_conf, warehouse):
     """F2 cdc_kv port (delta_test_v2.rs:101-352): mixed insert/delete
     batches; same-batch duplicates last-win; cross-snapshot deletes
-    equality-delete prior rows."""
-    from icelake_spark.delta import OP_DELETE, OP_INSERT, merge_delta
+    equality-delete prior rows. Runs on the production plan settings
+    (AQE on), under which a commit's equality deletes land in one file."""
+    from icelake_spark.delta import OP_APPEND, OP_DELETE, OP_INSERT, merge_delta
+
+    spark = prod_plan_conf
 
     schema_df = spark.createDataFrame([], "id long, key long, value long")
     schema = Schema.from_spark(schema_df.schema)
@@ -103,6 +106,80 @@ def test_cdc_delta_scenario(spark, warehouse):
                                "id long, key long, value long, _op int")
     merge_delta(t, b3, key_cols=["id", "key"])
     assert t.to_df(spark).count() == 2
+
+    # one batch, each fate the keyed window decides for a key
+    b4 = spark.createDataFrame(
+        [(2, 1, 10, OP_INSERT), (2, 1, 0, OP_DELETE),    # INSERT -> DELETE
+         (1, 3, 0, OP_DELETE), (1, 3, 301, OP_INSERT),   # DELETE -> INSERT
+         (5, 5, 50, OP_APPEND), (5, 5, 50, OP_APPEND),   # duplicate appends
+         (5, 5, 51, OP_APPEND),
+         (None, 7, 70, OP_INSERT)],                      # NULL-key insert
+        "id long, key long, value long, _op int")
+    merge_delta(t, b4, key_cols=["id", "key"])
+    t = t.refresh()
+    rows = sorted(((r.id, r.key, r.value) for r in t.to_df(spark).collect()),
+                  key=str)
+    assert rows == sorted([(1, 2, 202), (1, 3, 301), (5, 5, 50), (5, 5, 50),
+                           (5, 5, 51), (None, 7, 70)], key=str)
+    # one equality-delete row per distinct deleted-or-upserted key, in
+    # one file: (2,1) saw a DELETE, (1,3) a DELETE and a last INSERT,
+    # (NULL,7) a last INSERT; OP_APPEND keys supersede nothing
+    snap = t.current_snapshot()
+    assert snap.summary["added-delete-files"] == "1"
+    assert snap.summary["added-equality-deletes"] == "3"
+    (eq,) = [d for d in t.new_scan().plan_files(spark)[2]
+             if d.sequence_number == snap.sequence_number]
+    keys = spark.read.parquet(eq.delete_file.file_path).collect()
+    assert sorted(((r.id, r.key) for r in keys), key=str) == \
+        sorted([(2, 1), (1, 3), (None, 7)], key=str)
+
+    # NULL-key upsert across snapshots: the null-safe key match replaces
+    # the prior (NULL,7) row
+    b5 = spark.createDataFrame([(None, 7, 71, OP_INSERT)],
+                               "id long, key long, value long, _op int")
+    merge_delta(t, b5, key_cols=["id", "key"])
+    rows = {(r.id, r.key): r.value for r in t.refresh().to_df(spark).collect()
+            if r.key == 7}
+    assert rows == {(None, 7): 71}
+
+
+def test_overlapped_dml_jobs_stay_in_callers_job_group(spark, warehouse):
+    """merge_delta and merge-on-read delete_rows run independent write
+    jobs from driver threads; every job they start must carry the
+    caller's job group, or cancelJobGroup cannot reach it."""
+    from icelake_spark.delta import (OP_DELETE, OP_INSERT, delete_rows,
+                                     merge_delta)
+
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+
+    def last_job_id():
+        # the status store is fed asynchronously by the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        jobs = store.jobsList(None)
+        if jobs.isEmpty():
+            return -1
+        return max(jobs.head().jobId(), jobs.last().jobId())
+
+    t = warehouse.create_table("db.groups", Schema.from_spark(
+        spark.createDataFrame([], "id long, v string").schema))
+    t.append(spark.createDataFrame([(i, "a") for i in range(10)],
+                                   "id long, v string"))
+    group = "icelake-overlap-test"
+    first = last_job_id() + 1
+    sc.setJobGroup(group, "overlapped DML")
+    try:
+        merge_delta(t, spark.createDataFrame(
+            [(1, "b", OP_INSERT), (2, None, OP_DELETE)],
+            "id long, v string, _op int"), key_cols=["id"])
+        delete_rows(t.refresh(), spark, "id = 3")
+    finally:
+        sc._jsc.clearJobGroup()
+    started = set(range(first, last_job_id() + 1))
+    in_group = set(sc.statusTracker().getJobIdsForGroup(group))
+    assert started and started <= in_group, sorted(started - in_group)
+    assert sorted(r.id for r in t.refresh().to_df(spark).collect()) == \
+        [0, 1, 4, 5, 6, 7, 8, 9]
 
 
 def test_upsert(spark, warehouse):
