@@ -143,6 +143,12 @@ def write_equality_delete_files(table, keys: DataFrame,
                                 equality_ids=eq_ids)
 
 
+# the local properties that place a job in its caller's job group and
+# scheduler pool (SparkContext.setJobGroup / spark.scheduler.pool)
+_JOB_PROPS = ("spark.jobGroup.id", "spark.job.description",
+              "spark.job.interruptOnCancel", "spark.scheduler.pool")
+
+
 def _overlap(spark, *thunks):
     """Run independent Spark write/collect actions from driver threads
     (guide §2.6): actions are only sequential because the driver calls
@@ -154,18 +160,30 @@ def _overlap(spark, *thunks):
     child plan is fixed at persist time and its row order is
     deterministic per partition), and the BlockManager stores one copy.
 
-    Pool threads start with empty Spark local properties, so each thunk
-    is wrapped HERE, in the caller's thread, to carry the caller's job
-    group, description and tags into the thread that runs it: without
-    that, `cancelJobGroup` could not reach the jobs an op starts."""
+    Pool threads start with empty Spark local properties, so the
+    caller's job-control properties (_JOB_PROPS) are read HERE, in the
+    caller's thread, and each pool thread sets them on its own before
+    its thunk runs: without that, `cancelJobGroup` could not reach the
+    jobs an op starts. Only these are carried. Copying every local
+    property (`pyspark.inheritable_thread_target`) also copies the
+    caller's SQL execution and streaming state — inside a foreachBatch,
+    the micro-batch's `spark.sql.execution.id`, its root id and job
+    tags, the query and batch ids — into ONE Properties object that
+    both threads then mutate; a streaming upsert through it hung."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark import inheritable_thread_target
+    sc = spark.sparkContext
+    props = {k: sc.getLocalProperty(k) for k in _JOB_PROPS}
 
-    inherit = inheritable_thread_target(spark)
-    wrapped = [inherit(t) for t in thunks]
+    def carry(thunk):
+        def run():
+            for k, v in props.items():
+                sc.setLocalProperty(k, v)
+            return thunk()
+        return run
+
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in wrapped]
+        futures = [pool.submit(carry(t)) for t in thunks]
         return [f.result() for f in futures]
 
 

@@ -182,6 +182,31 @@ def test_overlapped_dml_jobs_stay_in_callers_job_group(spark, warehouse):
         [0, 1, 4, 5, 6, 7, 8, 9]
 
 
+def test_overlap_threads_take_only_the_job_control_properties(spark):
+    """Each overlapped thread gets the caller's job group on its own,
+    and none of the caller's SQL execution state: inside a foreachBatch
+    that state is the micro-batch's execution id, which two concurrent
+    writes must not share."""
+    from icelake_spark.delta import _overlap
+
+    sc = spark.sparkContext
+
+    def seen():
+        return (sc.getLocalProperty("spark.jobGroup.id"),
+                sc.getLocalProperty("spark.job.description"),
+                sc.getLocalProperty("spark.sql.execution.id"))
+
+    sc.setJobGroup("icelake-overlap-props", "overlapped thunks")
+    sc.setLocalProperty("spark.sql.execution.id", "424242")
+    try:
+        got = _overlap(spark, seen, seen)
+    finally:
+        sc.setLocalProperty("spark.sql.execution.id", None)
+        sc._jsc.clearJobGroup()
+    assert got == [("icelake-overlap-props", "overlapped thunks", None)] * 2
+    assert seen() == (None, None, None)
+
+
 def test_upsert(spark, warehouse):
     from icelake_spark.delta import upsert
 
