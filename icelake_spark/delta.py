@@ -169,7 +169,8 @@ def _overlap(spark, *thunks):
     caller's SQL execution and streaming state — inside a foreachBatch,
     the micro-batch's `spark.sql.execution.id`, its root id and job
     tags, the query and batch ids — into ONE Properties object that
-    both threads then mutate; a streaming upsert through it hung."""
+    both threads then mutate; test runs stalled in a streaming upsert
+    with it."""
     from concurrent.futures import ThreadPoolExecutor
 
     sc = spark.sparkContext
