@@ -581,7 +581,9 @@ class IcelakeReader(_TableFileReader, DataSourceReader):
                 int(end) if end is not None else None,
                 skip_overwrites=self.options.get(
                     "skip_overwrite_snapshots", "false").lower() == "true")
-            return [_FileTask(p, fmt) for p, fmt in files]
+            return [_FileTask(d.data_file.file_path,
+                              (d.data_file.file_format or "PARQUET").upper())
+                    for d in files]
         kwargs: dict[str, Any] = {}
         if "snapshot_id" in self.options:
             kwargs["snapshot_id"] = int(self.options["snapshot_id"])

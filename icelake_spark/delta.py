@@ -294,20 +294,31 @@ def upsert(table, df: DataFrame, key_cols: list[str] | None = None,
                 **write_kwargs)
 
 
-def _dml_scan_helpers(table, spark, scan, data, pos_t, eq_t,
-                      spark_schema):
-    """Shared DELETE/UPDATE scan scaffolding (review r11 — delete_rows
-    and update_rows previously copy-pasted this block, so a fix to one
-    had to be remembered in the other): `_recorded` maps Spark's JVM
-    path spelling (file:/..., s3a://) back to the manifest-recorded
-    path via the location-independent canon form; `_live` reads tasks
-    with existing pos/eq deletes APPLIED through the rename-safe
-    read_mapped (matching raw files would resurrect rows already
-    deleted or superseded by an upsert in a prior snapshot, and
-    pre-rename files must resolve their former column names —
-    code-review r9)."""
+def _row_level_dml(table, spark, condition: str,
+                   assignments: dict[str, str] | None,
+                   branch: str | None) -> None:
+    """The one row-level DML pipeline behind delete_rows (`assignments`
+    None) and update_rows: plan the scan, persist the live working set,
+    choose copy-on-write or merge-on-read, write, commit once. DELETE
+    and UPDATE differ only in the row function `_rows` (DELETE keeps
+    the survivors, UPDATE projects the SET expressions) and in MoR
+    UPDATE's extra write of the updated copies."""
+    from .fileio import norm_path
     from .planning import canon_data_path, canon_data_path_col
     from .table import _check_canon_collisions
+    from .transaction import Transaction
+    from .write import write_data_files
+
+    update = assignments is not None
+    # a branch target reads the BRANCH's visible rows (the branch
+    # must exist — read-modify DML cannot implicitly fork) and commits
+    # only to that branch
+    scan = table.new_scan(apply_deletes=True,
+                          **({"ref": branch} if branch else {}))
+    data, pos_t, eq_t = scan.plan_files(spark)
+    if not data:
+        return
+    spark_schema = table.schema().to_spark()
 
     # reject canon collisions up front (review r12): with no existing
     # delete files the read path's guard never runs in the DML plane,
@@ -315,11 +326,15 @@ def _dml_scan_helpers(table, spark, scan, data, pos_t, eq_t,
     # matching rows from one file onto ANOTHER file — an incomplete
     # CoW DELETE or ambiguous MoR position deletes
     _check_canon_collisions(data)
+    # Spark's JVM path spelling (file:/..., s3a://) maps back to the
+    # manifest-recorded path via the location-independent canon form
     canon_to_recorded = {canon_data_path(t.data_file.file_path):
                          t.data_file.file_path for t in data}
 
-    def _recorded(f: str) -> str:
-        return canon_to_recorded.get(canon_data_path(f), f)
+    def _recorded_files(df_) -> list[str]:
+        """The distinct manifest-recorded paths of `df_`'s rows."""
+        return [canon_to_recorded.get(canon_data_path(r.f), r.f) for r in
+                df_.select(F.col("__file").alias("f")).distinct().collect()]
 
     def _recorded_paths(df_, path_col: str):
         """Map a path COLUMN from Spark's JVM spelling back to the
@@ -345,6 +360,11 @@ def _dml_scan_helpers(table, spark, scan, data, pos_t, eq_t,
                 .drop("__ck", "__rec"))
 
     def _live(tasks_, keep_helpers: bool) -> DataFrame:
+        """Read tasks with existing pos/eq deletes APPLIED through the
+        rename-safe read_mapped (matching raw files would resurrect rows
+        already deleted or superseded by an upsert in a prior snapshot,
+        and pre-rename files must resolve their former column names —
+        code-review r9)."""
         df_ = scan.read_mapped(spark, table.schema(), spark_schema,
                                tasks_, with_position=True)
         if pos_t or eq_t:
@@ -354,7 +374,102 @@ def _dml_scan_helpers(table, spark, scan, data, pos_t, eq_t,
             df_ = df_.drop("__file", "__pos")
         return df_
 
-    return _recorded, _live, _recorded_paths
+    def _rows(df: DataFrame, only_matching: bool) -> DataFrame:
+        """The row function. DELETE: the survivors. UPDATE: the SET
+        expressions projected over old values (cast to the column's
+        declared type); when rewriting a whole file, non-matching rows
+        pass through via CASE WHEN."""
+        if not update:
+            # SQL DELETE keeps rows where the condition is NULL, so the
+            # survivor filter must be NOT(coalesce(cond, false)) — a bare
+            # NOT(cond) silently drops NULL-condition rows (data loss)
+            return df.where(f"NOT coalesce(({condition}), false)")
+        cols = []
+        for f in spark_schema.fields:
+            if f.name in assignments:
+                new = F.expr(assignments[f.name]).cast(f.dataType)
+                cols.append((new if only_matching else
+                             F.when(F.expr(condition), new)
+                             .otherwise(F.col(f.name))).alias(f.name))
+            else:
+                cols.append(F.col(f.name))
+        return df.select(*cols)
+
+    def _cow_rewrite(tx: Transaction, affected: list[str]) -> None:
+        """Rewrite `affected` files through the row function."""
+        keys = {norm_path(a) for a in affected}
+        tasks = [t for t in data
+                 if norm_path(t.data_file.file_path) in keys]
+        rewritten = (_rows(_live(tasks, keep_helpers=False),
+                           only_matching=False)
+                     .repartition(max(1, len(affected))))
+        tx.remove_data_files(affected)
+        tx.add_data_files(write_data_files(table, rewritten))
+
+    props = table.metadata.properties
+    mode = props.get("write.update.mode" if update else "write.delete.mode",
+                     "merge-on-read")
+    # persist: the working set feeds several jobs (match collect,
+    # pos-delete write, updated-copy write, CoW fallback collect) —
+    # each would otherwise re-read every data file and re-apply
+    # deletes, and a non-deterministic condition could delete one row
+    # set while a sibling job sees another; for UPDATE that is actively
+    # dangerous, because the pos-delete write and the updated-copy
+    # write would evaluate it independently (delete one row set, append
+    # a different one). The merge_delta precedent; review r11
+    raw = _live(data, keep_helpers=True).persist()
+    try:
+        matched = raw.where(condition)
+        tx = Transaction(table, branch=branch)
+        # copy-on-write: v1 always — its manifests cannot encode delete
+        # files — or by the table's mode property
+        if table.metadata.format_version == 1 or mode == "copy-on-write":
+            affected = _recorded_files(matched)
+            if affected:
+                _cow_rewrite(tx, affected)
+                tx.commit("overwrite")
+            return
+
+        # merge-on-read: position deletes for parquet files; non-parquet
+        # files (no row_index in Spark) fall back to copy-on-write in the
+        # SAME commit
+        pq_matches = matched.where(F.col("__pos").isNotNull())
+        sel = [F.col("__file").alias("file_path"), F.col("__pos").alias("pos")]
+        if props.get("write.position-delete.include-row", "false") == "true":
+            # spec's optional row payload (CDC replay / audit readers):
+            # UPDATE's position deletes carry the PRE-image too, so
+            # audit/CDC readers see old values for updates as well
+            sel.append(F.struct(
+                *[f.name for f in spark_schema.fields]).alias("row"))
+        # the writes are their own emptiness probe (r13): zero-row
+        # outputs are dropped by _write_small_parquet / write_data_files,
+        # so an empty match yields [] — the old take(1) pre-probe was a
+        # full extra pass over the matched set just to learn what the
+        # write pass discovers anyway. The pos-delete write, UPDATE's
+        # updated-copy write and the non-parquet fallback collect are
+        # independent jobs over the persisted matched set — overlap them
+        # (guide §2.6, VERDICT r13 #3)
+        jobs = [lambda: write_position_delete_files(
+                    table, _recorded_paths(pq_matches.select(*sel),
+                                           "file_path")),
+                lambda: _recorded_files(matched.where(
+                    F.col("__pos").isNull()))]
+        if update:
+            updated = _rows(pq_matches.drop("__file", "__pos"),
+                            only_matching=True)
+            jobs.append(lambda: write_data_files(table, updated))
+        pos_files, non_pq_files, *updated_files = _overlap(spark, *jobs)
+        if not pos_files and not non_pq_files:
+            return
+        if pos_files:
+            tx.add_delete_files(pos_files)
+            for files in updated_files:  # UPDATE's copies of those rows
+                tx.add_data_files(files)
+        if non_pq_files:
+            _cow_rewrite(tx, non_pq_files)
+        tx.commit("overwrite" if update or non_pq_files else "delete")
+    finally:
+        raw.unpersist()
 
 
 def delete_rows(table, spark, condition: str,
@@ -368,99 +483,7 @@ def delete_rows(table, spark, condition: str,
     `copy-on-write` (v1 always — its manifests cannot encode delete
     files) rewrites the files containing matches without those rows.
     """
-    from .transaction import Transaction
-
-    from .planning import canon_data_path
-
-    # a branch target reads the BRANCH's visible rows (the branch
-    # must exist — read-modify DML cannot implicitly fork) and commits
-    # only to that branch
-    scan = table.new_scan(apply_deletes=True,
-                          **({"ref": branch} if branch else {}))
-    data, pos_t, eq_t = scan.plan_files(spark)
-    if not data:
-        return
-    spark_schema = table.schema().to_spark()
-    _recorded, _live, _recorded_paths = _dml_scan_helpers(
-        table, spark, scan, data,
-                                         pos_t, eq_t, spark_schema)
-    # persist: the MoR working set feeds several jobs (match probe,
-    # pos-delete write, CoW fallback collects) — each would otherwise
-    # re-read every data file and re-apply deletes, and a
-    # non-deterministic condition could delete one row set while a
-    # sibling job sees another (the merge_delta precedent; review r11)
-    raw = _live(data, keep_helpers=True).persist()
-
-    def _cow_rewrite(tx: Transaction, affected: list[str]) -> None:
-        """Rewrite `affected` files without the matching rows."""
-        from .write import write_data_files
-
-        from .fileio import norm_path
-
-        tasks = [t for t in data
-                 if norm_path(t.data_file.file_path) in
-                 {norm_path(a) for a in affected}]
-        # SQL DELETE keeps rows where the condition is NULL, so the
-        # survivor filter must be NOT(coalesce(cond, false)) — a bare
-        # NOT(cond) silently drops NULL-condition rows (data loss)
-        survivors = (_live(tasks, keep_helpers=False)
-                     .where(f"NOT coalesce(({condition}), false)")
-                     .repartition(max(1, len(affected))))
-        tx.remove_data_files(affected)
-        tx.add_data_files(write_data_files(table, survivors))
-
-    mode = table.metadata.properties.get("write.delete.mode", "merge-on-read")
-    if table.metadata.format_version == 1 or mode == "copy-on-write":
-        try:
-            affected = [_recorded(r.f) for r in
-                        (raw.where(condition)
-                         .select(F.col("__file").alias("f"))
-                         .distinct().collect())]
-            if not affected:
-                return
-            tx = Transaction(table, branch=branch)
-            _cow_rewrite(tx, affected)
-            tx.commit("overwrite")
-            return
-        finally:
-            raw.unpersist()
-
-    # merge-on-read: position deletes for parquet files; non-parquet
-    # files (no row_index in Spark) fall back to copy-on-write in the
-    # SAME commit
-    sel = [F.col("__file").alias("file_path"), F.col("__pos").alias("pos")]
-    if table.metadata.properties.get(
-            "write.position-delete.include-row", "false") == "true":
-        # spec's optional row payload (CDC replay / audit readers)
-        sel.append(F.struct(
-            *[f.name for f in spark_schema.fields]).alias("row"))
-    try:
-        matched = _recorded_paths(raw.where(condition).select(*sel),
-                                  "file_path")
-        pq_matches = matched.where(F.col("pos").isNotNull())
-        tx = Transaction(table, branch=branch)
-        # the write itself is the emptiness probe (r13): zero-row
-        # outputs are dropped by _write_small_parquet, so an empty
-        # match yields [] — the old take(1) pre-probe was a full extra
-        # pass over the matched set just to learn what the write pass
-        # discovers anyway. The pos-delete write and the non-parquet
-        # fallback collect are independent jobs over the persisted
-        # matched set — overlap them (guide §2.6, VERDICT r13 #3)
-        pos_files, non_pq_files = _overlap(
-            spark,
-            lambda: write_position_delete_files(table, pq_matches),
-            lambda: [_recorded(r.file_path)
-                     for r in matched.where(F.col("pos").isNull())
-                     .select("file_path").distinct().collect()])
-        if pos_files:
-            tx.add_delete_files(pos_files)
-        if non_pq_files:
-            _cow_rewrite(tx, non_pq_files)
-        if not pos_files and not non_pq_files:
-            return
-        tx.commit("overwrite" if non_pq_files else "delete")
-    finally:
-        raw.unpersist()
+    _row_level_dml(table, spark, condition, None, branch)
 
 
 def update_rows(table, spark, condition: str,
@@ -477,132 +500,10 @@ def update_rows(table, spark, condition: str,
     in one commit; `copy-on-write` (and always v1, whose manifests
     cannot encode delete files) rewrites affected files in place.
     """
-    from .transaction import Transaction
-    from .write import write_data_files
-
     bad = set(assignments) - {f.name for f in table.schema().fields}
     if bad:
         raise ValueError(f"unknown columns in SET: {sorted(bad)}")
-
-    from .planning import canon_data_path
-
-    # a branch target reads the BRANCH's visible rows (the branch
-    # must exist — read-modify DML cannot implicitly fork) and commits
-    # only to that branch
-    scan = table.new_scan(apply_deletes=True,
-                          **({"ref": branch} if branch else {}))
-    data, pos_t, eq_t = scan.plan_files(spark)
-    if not data:
-        return
-    spark_schema = table.schema().to_spark()
-    types = {f.name: f.dataType for f in spark_schema.fields}
-    _recorded, _live, _recorded_paths = _dml_scan_helpers(
-        table, spark, scan, data,
-                                         pos_t, eq_t, spark_schema)
-
-    def _apply_set(df: DataFrame, only_matching: bool) -> DataFrame:
-        """Project the SET expressions over old values; when rewriting a
-        whole file, non-matching rows pass through via CASE WHEN."""
-        cols = []
-        for f in spark_schema.fields:
-            if f.name in assignments:
-                new = F.expr(assignments[f.name]).cast(types[f.name])
-                cols.append((new if only_matching else
-                             F.when(F.expr(condition), new)
-                             .otherwise(F.col(f.name))).alias(f.name))
-            else:
-                cols.append(F.col(f.name))
-        return df.select(*cols)
-
-    # persist: see delete_rows — and here a non-deterministic
-    # condition is actively dangerous, because the pos-delete write
-    # and the updated-copy write would evaluate it independently
-    # (delete one row set, append a different one; review r11)
-    raw = _live(data, keep_helpers=True).persist()
-
-    def _cow_rewrite(tx: Transaction, affected: list[str]) -> None:
-        from .fileio import norm_path
-
-        keys = {norm_path(a) for a in affected}
-        tasks = [t for t in data
-                 if norm_path(t.data_file.file_path) in keys]
-        rewritten = _apply_set(_live(tasks, keep_helpers=False),
-                               only_matching=False) \
-            .repartition(max(1, len(affected)))
-        tx.remove_data_files(affected)
-        tx.add_data_files(write_data_files(table, rewritten))
-
-    mode = table.metadata.properties.get("write.update.mode", "merge-on-read")
-    if table.metadata.format_version == 1 or mode == "copy-on-write":
-        try:
-            affected = [_recorded(r.f) for r in
-                        (raw.where(condition)
-                         .select(F.col("__file").alias("f"))
-                         .distinct().collect())]
-            if not affected:
-                return
-            tx = Transaction(table, branch=branch)
-            _cow_rewrite(tx, affected)
-            tx.commit("overwrite")
-            return
-        finally:
-            raw.unpersist()
-
-    try:
-        _update_mor(table, spark, condition, branch, raw, spark_schema,
-                    _recorded_paths,
-                    _recorded, _apply_set, _cow_rewrite)
-    finally:
-        raw.unpersist()
-
-
-def _update_mor(table, spark, condition, branch, raw, spark_schema,
-                _recorded_paths, _recorded, _apply_set, _cow_rewrite):
-    """update_rows' merge-on-read tail (split out so the persist/
-    unpersist wrapper stays flat)."""
-    from .transaction import Transaction
-    from .write import write_data_files
-
-    matched = raw.where(condition)
-    pq_matches = matched.where(F.col("__pos").isNotNull())
-    tx = Transaction(table, branch=branch)
-    # the delete write IS the emptiness probe (r13, the delete_rows
-    # pattern): zero-row outputs return [], replacing the old take(1)
-    # full extra pass over the matched set
-    # honor the same spec-optional deleted-row payload delete_rows
-    # writes (write.position-delete.include-row): UPDATE's position
-    # deletes carry the PRE-image so audit/CDC readers see old
-    # values for updates too, not only for deletes
-    del_sel = [F.col("__file").alias("file_path"),
-               F.col("__pos").alias("pos")]
-    if table.metadata.properties.get(
-            "write.position-delete.include-row", "false") == "true":
-        del_sel.append(F.struct(
-            *[f.name for f in spark_schema.fields]).alias("row"))
-    # three independent jobs over the persisted matched set: the
-    # pos-delete write, the updated-rows data write (empty match →
-    # zero-row outputs dropped → []), and the non-parquet fallback
-    # collect — overlap them (guide §2.6, VERDICT r13 #3)
-    updated = _apply_set(pq_matches.drop("__file", "__pos"),
-                         only_matching=True)
-    pos_files, upd_files, non_pq_files = _overlap(
-        spark,
-        lambda: write_position_delete_files(
-            table, _recorded_paths(pq_matches.select(*del_sel),
-                                   "file_path")),
-        lambda: write_data_files(table, updated),
-        lambda: [_recorded(r.file_path)
-                 for r in matched.where(F.col("__pos").isNull())
-                 .select(F.col("__file").alias("file_path"))
-                 .distinct().collect()])
-    if pos_files:
-        tx.add_delete_files(pos_files)
-        tx.add_data_files(upd_files)
-    if non_pq_files:
-        _cow_rewrite(tx, non_pq_files)
-    if not pos_files and not non_pq_files:
-        return
-    tx.commit("overwrite")
+    _row_level_dml(table, spark, condition, assignments, branch)
 
 
 def _merge_cardinality_check(source: DataFrame, tgt_keys: DataFrame,
@@ -634,6 +535,44 @@ def _merge_cardinality_check(source: DataFrame, tgt_keys: DataFrame,
             "MERGE: the target holds multiple rows for a matched key; "
             "the equality-delete lowering would collapse them to one "
             "row — deduplicate the target (or merge on a unique key)")
+
+
+# a MERGE clause's action as a merge_delta op: UPDATE replaces the
+# row (eq-delete old + insert new), DELETE removes it
+_CLAUSE_OP = {"update": OP_INSERT, "delete": OP_DELETE}
+
+
+def _dispatch(clauses: list[tuple], then, on_index: bool = False):
+    """First-match-wins clause dispatch, the one CASE WHEN builder of
+    every MERGE lowering: over `(action, condition, assignments)`
+    clauses, branch i is taken when clause i's condition holds (a None
+    condition always does) or, with `on_index`, when the row's
+    `__clause` index — itself a dispatch — is i; its value is
+    then(i, action, assignments). NULL when no branch is taken."""
+    out = None
+    for i, (action, cond, sets) in enumerate(clauses):
+        if on_index:
+            c = F.col("__clause") == i
+        else:
+            c = F.expr(cond) if cond is not None else F.lit(True)
+        v = then(i, action, sets)
+        out = F.when(c, v) if out is None else out.when(c, v)
+    return out
+
+
+def _clause_rows(df: DataFrame, clauses: list[tuple], spark_schema,
+                 on: list[str], key_side: str, value) -> DataFrame:
+    """merge_delta input rows from `df` and its `__clause` index: the
+    merge keys from alias `key_side`, every other column dispatched to
+    its clause's value(action, assignments, name) and cast to the
+    column's type, and the clause's `_op`."""
+    cols = [F.col(f"{key_side}.{f.name}").alias(f.name) if f.name in on
+            else _dispatch(clauses, lambda _i, a, s, n=f.name: value(a, s, n),
+                           on_index=True).cast(f.dataType).alias(f.name)
+            for f in spark_schema.fields]
+    op = _dispatch(clauses, lambda _i, a, _s: F.lit(_CLAUSE_OP[a]),
+                   on_index=True)
+    return df.select(*cols, op.alias("_op"))
 
 
 def merge(table, spark, source: DataFrame, on: list[str],
@@ -731,14 +670,9 @@ def merge(table, spark, source: DataFrame, on: list[str],
     if matched_clauses:
         _merge_cardinality_check(source, tgt_keys, on)
         matched = source.join(existing, on=on, how="left_semi")
-        # first-match-wins: one CASE WHEN picks the clause index per row
-        op_of = {"update": OP_INSERT, "delete": OP_DELETE}
-        dispatch = None
-        for action, cond, _sets in matched_clauses:
-            c = F.expr(cond) if cond is not None else F.lit(True)
-            op = F.lit(op_of[action])
-            dispatch = (F.when(c, op) if dispatch is None
-                        else dispatch.when(c, op))
+        # first-match-wins: one CASE WHEN picks the clause's op per row
+        dispatch = _dispatch(matched_clauses,
+                             lambda _i, a, _s: F.lit(_CLAUSE_OP[a]))
         matched = (matched.withColumn("_op", dispatch)
                    .where(F.col("_op").isNotNull()))
         parts.append(matched)
@@ -793,7 +727,6 @@ def _merge_column_level(table, spark, source: DataFrame, on: list[str],
     """
     spark_schema = table.schema().to_spark()
     names = {f.name for f in spark_schema.fields}
-    types = {f.name: f.dataType for f in spark_schema.fields}
     for _action, _cond, sets in matched_clauses:
         if not sets:
             continue
@@ -816,37 +749,19 @@ def _merge_column_level(table, spark, source: DataFrame, on: list[str],
             jcond = eq if jcond is None else jcond & eq
         joined = src.join(tgt, jcond, "inner")
         # first-match-wins: one CASE WHEN picks the clause INDEX per row
-        idx = None
-        for i, (_action, cond, _sets) in enumerate(matched_clauses):
-            c = F.expr(cond) if cond is not None else F.lit(True)
-            idx = (F.when(c, F.lit(i)) if idx is None
-                   else idx.when(c, F.lit(i)))
-        joined = (joined.withColumn("__clause", idx)
+        joined = (joined.withColumn("__clause", _dispatch(
+                      matched_clauses, lambda i, _a, _s: F.lit(i)))
                   .where(F.col("__clause").isNotNull()))
-        op = None
-        op_of = {"update": OP_INSERT, "delete": OP_DELETE}
-        for i, (action, _cond, _sets) in enumerate(matched_clauses):
-            op = (F.when(F.col("__clause") == i, F.lit(op_of[action]))
-                  if op is None
-                  else op.when(F.col("__clause") == i, F.lit(op_of[action])))
-        cols = []
-        for f in spark_schema.fields:
-            if f.name in on:
-                cols.append(F.col(f"s.{f.name}").alias(f.name))
-                continue
-            val = None
-            for i, (action, _cond, sets) in enumerate(matched_clauses):
-                if action == "update" and sets is not None:
-                    new = (F.expr(sets[f.name]) if f.name in sets
-                           else F.col(f"t.{f.name}"))
-                elif action == "update":  # whole-row UPDATE SET *
-                    new = F.col(f"s.{f.name}")
-                else:  # delete — value never written, keep old
-                    new = F.col(f"t.{f.name}")
-                val = (F.when(F.col("__clause") == i, new) if val is None
-                       else val.when(F.col("__clause") == i, new))
-            cols.append(val.cast(types[f.name]).alias(f.name))
-        parts.append(joined.select(*cols, op.alias("_op")))
+
+        def new(action, sets, name):
+            if action == "update" and sets is not None:
+                return (F.expr(sets[name]) if name in sets
+                        else F.col(f"t.{name}"))
+            if action == "update":  # whole-row UPDATE SET *
+                return F.col(f"s.{name}")
+            return F.col(f"t.{name}")  # delete — never written, keep old
+        parts.append(_clause_rows(joined, matched_clauses, spark_schema,
+                                  on, "s", new))
     if when_not_matched == "insert":
         existing = tgt.select(*on).distinct()
         not_matched = src.join(existing, on=on, how="left_anti")
@@ -866,7 +781,7 @@ def _merge_column_level(table, spark, source: DataFrame, on: list[str],
             by_name = dict(zip(ins_names, ins_exprs))
             proj = [
                 (F.expr(by_name[f.name]) if f.name in by_name
-                 else F.lit(None)).cast(types[f.name]).alias(f.name)
+                 else F.lit(None)).cast(f.dataType).alias(f.name)
                 for f in spark_schema.fields]
             not_matched = not_matched.select(*proj)
         # OP_APPEND: key proven absent; see merge() (code-review r9)
@@ -885,12 +800,8 @@ def _merge_column_level(table, spark, source: DataFrame, on: list[str],
         unmatched = tgt.join(src.select(*[F.col(f"s.{k}").alias(k)
                                           for k in on]).distinct(),
                              on=on, how="left_anti")
-        idx = None
-        for i, (_action, cond, _sets) in enumerate(by_source_clauses):
-            c = F.expr(cond) if cond is not None else F.lit(True)
-            idx = (F.when(c, F.lit(i)) if idx is None
-                   else idx.when(c, F.lit(i)))
-        unmatched = unmatched.withColumn("__clause", idx)
+        unmatched = unmatched.withColumn("__clause", _dispatch(
+            by_source_clauses, lambda i, _a, _s: F.lit(i)))
         # cardinality guard, the BY SOURCE twin of
         # _merge_cardinality_check (review r12): the eq-delete
         # lowering deletes BY KEY, so a clause hitting ANY row of a
@@ -910,27 +821,11 @@ def _merge_column_level(table, spark, source: DataFrame, on: list[str],
                 "key with multiple target rows; the equality-delete "
                 "lowering would collapse them — deduplicate the "
                 "target keys first")
-        unmatched = unmatched.where(F.col("__clause").isNotNull())
-        op = None
-        op_of = {"update": OP_INSERT, "delete": OP_DELETE}
-        for i, (action, _cond, _sets) in enumerate(by_source_clauses):
-            o = F.lit(op_of[action])
-            op = (F.when(F.col("__clause") == i, o) if op is None
-                  else op.when(F.col("__clause") == i, o))
-        cols = []
-        for f in spark_schema.fields:
-            if f.name in on:
-                cols.append(F.col(f"t.{f.name}").alias(f.name))
-                continue
-            val = None
-            for i, (action, _cond, sets) in enumerate(by_source_clauses):
-                new = (F.expr(sets[f.name])
-                       if action == "update" and f.name in sets
-                       else F.col(f"t.{f.name}"))
-                val = (F.when(F.col("__clause") == i, new) if val is None
-                       else val.when(F.col("__clause") == i, new))
-            cols.append(val.cast(types[f.name]).alias(f.name))
-        parts.append(unmatched.select(*cols, op.alias("_op")))
+        parts.append(_clause_rows(
+            unmatched.where(F.col("__clause").isNotNull()),
+            by_source_clauses, spark_schema, on, "t",
+            lambda a, s, n: (F.expr(s[n]) if a == "update" and n in s
+                             else F.col(f"t.{n}"))))
     if not parts:
         return
     batch = parts[0]

@@ -16,17 +16,21 @@ import time
 
 from pyspark.sql import SparkSession
 
-from .delta import delete_rows as delete_where  # noqa: F401  (re-export)
 from .transaction import Transaction
-from .write import write_data_files
+from .write import (DEFAULT_TARGET_FILE_SIZE, PROP_TARGET_FILE_SIZE,
+                    write_data_files)
 
-DEFAULT_TARGET_FILE_SIZE = 128 * 1024 * 1024  # Spark-scale default;
-# reference test uses 100 MiB (insert_compact_test.rs:203), its unit
-# default of 1 MiB (config.rs:33-40) is test-sized.
+
+def _target_file_size(table, target_file_size: int | None) -> int:
+    """The compaction target: the caller's, else the table's
+    `write.target-file-size-bytes` (Iceberg's rewrite_data_files
+    honours it too), else the writer's default."""
+    return target_file_size or int(table.metadata.properties.get(
+        PROP_TARGET_FILE_SIZE, DEFAULT_TARGET_FILE_SIZE))
 
 
 def rewrite_data_files(table, spark: SparkSession,
-                       target_file_size: int = DEFAULT_TARGET_FILE_SIZE,
+                       target_file_size: int | None = None,
                        target_records_per_file: int | None = None) -> int:
     """Compact: rewrite all live data (with deletes applied) into
     right-sized files; commit as a `replace` snapshot. Returns the new
@@ -35,6 +39,7 @@ def rewrite_data_files(table, spark: SparkSession,
     data, _, _ = scan.plan_files(spark)
     if not data:
         return 0
+    target_file_size = _target_file_size(table, target_file_size)
     df = scan.to_df(spark)
     total_bytes = sum(t.data_file.file_size_in_bytes for t in data)
     n_parts = max(1, (total_bytes + target_file_size - 1) // target_file_size)
@@ -502,7 +507,7 @@ def rewrite_manifests(table) -> int:
 
 
 def rewrite_zorder(table, spark: SparkSession, cols: list[str],
-                   target_file_size: int = DEFAULT_TARGET_FILE_SIZE,
+                   target_file_size: int | None = None,
                    bits: int = 16) -> int:
     """Z-order compaction: rewrite all live data clustered on the
     interleaved bit representation of `cols`, so per-file min/max bounds
@@ -573,6 +578,7 @@ def rewrite_zorder(table, spark: SparkSession, cols: list[str],
             z = z + F.shiftleft(F.shiftright(sv, i).bitwiseAND(F.lit(1)),
                                 i * k + j).cast("long")
 
+    target_file_size = _target_file_size(table, target_file_size)
     total_bytes = sum(t.data_file.file_size_in_bytes for t in data)
     n_parts = int(max(1, (total_bytes + target_file_size - 1)
                       // target_file_size))

@@ -168,12 +168,11 @@ def stateful_dedup(stream_df: DataFrame, key_cols: list[str],
 
 def incremental_files(table, snapshot_id: int | None = None,
                       to_snapshot_id: int | None = None,
-                      skip_overwrites: bool = False
-                      ) -> list[tuple[str, str]]:
-    """(resolved path, format) of data files ADDED by append snapshots
-    in the ancestry window (snapshot_id, to_snapshot_id] — the shared
-    walk behind table.incremental, stream_from_table, and the DSv2
-    batch reader's start/end-snapshot-id options.
+                      skip_overwrites: bool = False) -> list:
+    """FileScanTasks (paths resolved) of data files ADDED by append
+    snapshots in the ancestry window (snapshot_id, to_snapshot_id] —
+    the shared walk behind table.incremental, stream_from_table, and
+    the DSv2 batch reader's start/end-snapshot-id options.
 
     The window is ancestry-based, not a sequence range: every v1
     snapshot carries sequence 0 (a seq window would return empty
@@ -189,7 +188,7 @@ def incremental_files(table, snapshot_id: int | None = None,
     incremental append scan fails the same way, and its streaming
     source gates the skip behind streaming-skip-overwrite-snapshots).
     Row-level completeness across overwrites is changes()' job."""
-    from .types.manifest import STATUS_ADDED, read_manifest, read_manifest_list
+    from .changelog import _added_in
 
     if table.current_snapshot() is None:
         return []
@@ -211,7 +210,7 @@ def incremental_files(table, snapshot_id: int | None = None,
         if to_snapshot_id is not None else table.metadata.ancestry_ids()
     base_ids = (table.metadata.ancestry_ids(snapshot_id)
                 if snapshot_id is not None else set())
-    new_files: list[tuple[str, str]] = []
+    tasks = []
     for s in sorted(table.metadata.snapshots, key=lambda s: s.timestamp_ms):
         if s.snapshot_id in base_ids:
             continue
@@ -227,16 +226,8 @@ def incremental_files(table, snapshot_id: int | None = None,
                     f"— pass skip_overwrites=True to skip such commits, "
                     f"or use changes() for row-level CDC")
             continue
-        for mle in read_manifest_list(table._resolve(s.manifest_list)):
-            if mle.added_snapshot_id != s.snapshot_id:
-                continue
-            _, entries = read_manifest(table._resolve(mle.manifest_path))
-            for e in entries:
-                if e.status == STATUS_ADDED and e.data_file.content == 0:
-                    new_files.append(
-                        (table._resolve(e.data_file.file_path),
-                         (e.data_file.file_format or "PARQUET").upper()))
-    return new_files
+        tasks += _added_in(table, s)[0]
+    return tasks
 
 
 def stream_from_table(spark, table,
@@ -249,19 +240,14 @@ def stream_from_table(spark, table,
     start-snapshot-id / end-snapshot-id read options), and the building
     block for table-to-table batch pipelines. (For a continuous source
     use spark.readStream.format("icelake") — datasource.py.)"""
-    new_files = incremental_files(table, snapshot_id, to_snapshot_id,
-                                  skip_overwrites=skip_overwrites)
-    if not new_files:
-        return spark.createDataFrame([], table.schema().to_spark())
-    # format-aware: incremental_files returns (path, fmt) precisely so
-    # ORC/Avro tables stream too — reading everything as parquet
-    # crashed on write.format.default=orc tables (code-review r9).
-    # read_data_files only touches file_path/file_format, so shims
-    # stand in for full FileScanTasks.
-    from types import SimpleNamespace
-
-    from .table import read_data_files
-
-    tasks = [SimpleNamespace(data_file=SimpleNamespace(
-        file_path=p, file_format=fmt)) for p, fmt in new_files]
-    return read_data_files(spark, table.schema().to_spark(), tasks)
+    tasks = incremental_files(table, snapshot_id, to_snapshot_id,
+                              skip_overwrites=skip_overwrites)
+    spark_schema = table.schema().to_spark()
+    if not tasks:
+        return spark.createDataFrame([], spark_schema)
+    # the scan's own reader: format-aware (reading everything as parquet
+    # crashed on write.format.default=orc tables — code-review r9) and
+    # rename-safe (files written before a RENAME COLUMN resolve their
+    # former column names, as in to_df and the DataSource)
+    return table.new_scan().read_mapped(spark, table.schema(),
+                                        spark_schema, tasks)

@@ -636,9 +636,9 @@ class IcebergTable:
 
     def delete_where(self, spark: SparkSession, condition: str,
                      branch: str | None = None) -> None:
-        from .maintenance import delete_where as _dw
+        from .delta import delete_rows
 
-        _dw(self, spark, condition, branch=branch)
+        delete_rows(self, spark, condition, branch=branch)
 
     def fast_forward(self, ref: str, to_ref: str) -> None:
         """Publish: point `ref` at `to_ref`'s head (write-audit-publish

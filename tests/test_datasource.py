@@ -585,6 +585,16 @@ def test_dsv2_incremental_snapshot_window(spark, warehouse):
     # equals the API result
     api = t.incremental(spark, from_snapshot_id=first, to_snapshot_id=mid)
     assert sorted(r.id for r in api.collect()) == list(range(10, 20))
+    # after a RENAME COLUMN both reads still agree: files written before
+    # it resolve the column's former name on both paths
+    t.rename_column("s", "name")
+    t = t.refresh()
+    want = [(i, str(i)) for i in range(10, 30)]
+    df3 = (spark.read.format("icelake").option("path", t.path)
+           .option("start_snapshot_id", str(first)).load())
+    assert sorted((r.id, r.name) for r in df3.collect()) == want
+    api = t.incremental(spark, from_snapshot_id=first)
+    assert sorted((r.id, r.name) for r in api.collect()) == want
 
 
 def test_dsv2_in_filter_prunes_files(spark, warehouse):

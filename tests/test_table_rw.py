@@ -298,26 +298,50 @@ def test_register_views_spark_sql(spark, warehouse):
     assert [(r.g, r.n) for r in got] == [(0, 7), (1, 7), (2, 6)]
 
 
-def test_position_delete_row_payload(spark, warehouse):
+@pytest.mark.parametrize("op", ["delete", "update"])
+def test_position_delete_row_payload(spark, warehouse, tmp_path, op):
     """With write.position-delete.include-row, delete files carry the
     deleted rows' content (spec optional payload) and MoR reads are
-    unaffected (the scan never projects it)."""
-    from icelake_spark.types import Schema
+    unaffected (the scan never projects it). DELETE and UPDATE share
+    one pipeline: on a mixed parquet/ORC table the payload holds only
+    the parquet pre-images, and the ORC file (no row positions in
+    Spark) is rewritten copy-on-write in the same commit."""
+    import os
 
     src = spark.range(20).selectExpr("id", "cast(id * 2 as double) as v")
     t = warehouse.create_table(
         "db.posrow", Schema.from_spark(src.schema),
         properties={"write.position-delete.include-row": "true"})
-    t.append(src)
-    t.delete_where(spark, "id < 5")
+    t.append(src.where("id < 10"))
+    orc_dir = str(tmp_path / "orc")
+    src.where("id >= 10").coalesce(1).write.orc(orc_dir)
+    t.add_files([os.path.join(orc_dir, f) for f in os.listdir(orc_dir)
+                 if f.startswith("part-") and not f.endswith(".crc")],
+                file_format="ORC")
     t = t.refresh()
-    _, pos, _ = t.new_scan().plan_files()
+    before = t.current_snapshot().snapshot_id
+    orc_file = next(d.data_file.file_path for d in t.new_scan().plan_files()[0]
+                    if d.data_file.file_format == "ORC")
+    if op == "delete":
+        t.delete_where(spark, "id % 5 = 0")
+        want = [(i, i * 2.0) for i in range(20) if i % 5]
+    else:
+        t.update_where(spark, "id % 5 = 0", {"v": "v + 100"})
+        want = [(i, i * 2.0 + (100 if i % 5 == 0 else 0)) for i in range(20)]
+    t = t.refresh()
+    snap = t.current_snapshot()
+    # one commit: the position deletes and the ORC rewrite
+    assert snap.parent_snapshot_id == before
+    assert snap.summary["operation"] == "overwrite"
+    assert snap.summary["deleted-data-files"] == "1"
+    data, pos, _ = t.new_scan().plan_files()
+    assert orc_file not in {d.data_file.file_path for d in data}
     assert pos
     del_df = spark.read.parquet(*[p.delete_file.file_path for p in pos])
     assert set(del_df.columns) == {"file_path", "pos", "row"}
     payload = sorted((r.row.id, r.row.v) for r in del_df.collect())
-    assert payload == [(i, i * 2.0) for i in range(5)]
-    assert sorted(r.id for r in t.to_df(spark).collect()) == list(range(5, 20))
+    assert payload == [(0, 0.0), (5, 10.0)]
+    assert sorted((r.id, r.v) for r in t.to_df(spark).collect()) == want
 
 
 def test_expire_snapshots_ref_aware(spark, warehouse):

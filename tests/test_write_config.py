@@ -59,6 +59,23 @@ def test_target_file_size_property(spark, warehouse):
         assert f.file_size_in_bytes < 4 * 256 * 1024  # loose upper bound
 
 
+def test_compaction_honours_target_file_size_property(spark, warehouse):
+    """rewrite_data_files sizes its output by the table's
+    write.target-file-size-bytes, as Iceberg's does: at 64 KiB the
+    table compacts into more than one file, not into one file at the
+    128 MiB default."""
+    from icelake_spark.maintenance import rewrite_data_files
+
+    src = spark.range(20000).select(
+        F.col("id"), F.md5(F.col("id").cast("string")).alias("payload"))
+    t = warehouse.create_table(
+        "db.compact_sized", Schema.from_spark(src.schema),
+        properties={"write.target-file-size-bytes": str(64 * 1024)})
+    t.append(src.coalesce(1))
+    assert rewrite_data_files(t.refresh(), spark) > 1
+    assert t.refresh().to_df(spark).count() == 20000
+
+
 def test_compression_property(spark, warehouse):
     src = spark.range(100).select(F.col("id"))
     schema = Schema.from_spark(src.schema)
