@@ -43,18 +43,17 @@ def _added_in(table: IcebergTable, snap):
     for mle in read_manifest_list(table._resolve(snap.manifest_list)):
         if mle.added_snapshot_id != snap.snapshot_id:
             continue
-        _, entries = read_manifest(table._resolve(mle.manifest_path))
+        _, entries = read_manifest(table._resolve(mle.manifest_path), mle)
         for e in entries:
             if e.status != STATUS_ADDED:
                 continue
-            e.data_file.file_path = table._resolve(e.data_file.file_path)
-            seq = e.sequence_number if e.sequence_number is not None \
-                else mle.sequence_number
-            if mle.content == MANIFEST_CONTENT_DELETES or e.data_file.content != 0:
-                (pos if e.data_file.content == 1 else eq).append(
-                    DeleteFileTask(e.data_file, seq))
+            df, seq = e.data_file, e.sequence_number
+            df.file_path = table._resolve(df.file_path)
+            if mle.content == MANIFEST_CONTENT_DELETES or df.content != 0:
+                (pos if df.content == 1 else eq).append(
+                    DeleteFileTask(df, seq))
             else:
-                data.append(FileScanTask(e.data_file, seq, mle.partition_spec_id))
+                data.append(FileScanTask(df, seq, mle.partition_spec_id))
     return data, pos, eq
 
 

@@ -803,7 +803,7 @@ def _stream_files_between(table, start_seq: int,
     """(path, format) of data files ADDED by append snapshots in
     (start_seq, end_seq] on the main ancestry — the deterministic replay
     set both stream readers derive micro-batches from."""
-    from .types.manifest import STATUS_ADDED, read_manifest, read_manifest_list
+    from .changelog import _added_in
 
     out: list[tuple[str, str]] = []
     main_ids = table.metadata.ancestry_ids()
@@ -815,15 +815,9 @@ def _stream_files_between(table, start_seq: int,
             continue
         if s.summary.get("operation", "append") != "append":
             continue
-        for mle in read_manifest_list(table._resolve(s.manifest_list)):
-            if mle.added_snapshot_id != s.snapshot_id:
-                continue
-            _, entries = read_manifest(table._resolve(mle.manifest_path))
-            out.extend((table._resolve(e.data_file.file_path),
-                        (e.data_file.file_format or "PARQUET").upper())
-                       for e in entries
-                       if e.status == STATUS_ADDED
-                       and e.data_file.content == 0)
+        out.extend((t.data_file.file_path,
+                    (t.data_file.file_format or "PARQUET").upper())
+                   for t in _added_in(table, s)[0])
     return out
 
 
@@ -953,10 +947,10 @@ def _plan_changelog_tasks(table, start_off: int, end_off: int,
             # manifests whose added_snapshot_id is no longer in
             # metadata.snapshots — skipping them would drop their rows'
             # delete events
-            _, entries = read_manifest(table._resolve(mle.manifest_path))
+            _, entries = read_manifest(table._resolve(mle.manifest_path),
+                                       mle)
             for e in entries:
-                seq = (e.sequence_number if e.sequence_number is not None
-                       else mle.sequence_number)
+                seq = e.sequence_number
                 df = e.data_file
                 df.file_path = table._resolve(df.file_path)
                 if foreign:  # predates this snapshot: alive BEFORE it

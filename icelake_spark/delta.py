@@ -312,8 +312,10 @@ def _row_level_dml(table, spark, condition: str,
     update = assignments is not None
     # a branch target reads the BRANCH's visible rows (the branch
     # must exist — read-modify DML cannot implicitly fork) and commits
-    # only to that branch
-    scan = table.new_scan(apply_deletes=True,
+    # only to that branch. `filter=` only prunes the plan by zone maps
+    # (files that cannot match are never read); the working set below
+    # is read through read_mapped, which applies no row filter
+    scan = table.new_scan(apply_deletes=True, filter=condition,
                           **({"ref": branch} if branch else {}))
     data, pos_t, eq_t = scan.plan_files(spark)
     if not data:

@@ -56,6 +56,34 @@ def rewrite_data_files(table, spark: SparkSession,
     return len(files)
 
 
+def _reachable(table, snaps, strict: bool) -> tuple[set, set]:
+    """(manifest lists + manifests, data + delete files) that `snaps`
+    reference, as normalized paths. strict=True (every live set: the
+    snapshots expiry keeps, all snapshots for orphan cleanup): an
+    unreadable manifest list or manifest must ABORT — swallowing it
+    truncates the live-file inventory, and the caller would delete
+    files a retained snapshot still references (code-review r9).
+    strict=False (expired snapshots): their manifests may already be
+    gone, which only shrinks the DEAD set (safe)."""
+    from .types.manifest import read_manifest, read_manifest_list
+
+    manifests, files = set(), set()
+    for s in snaps:
+        try:
+            ml = table._resolve(s.manifest_list)
+            manifests.add(norm_path(ml))
+            for mle in read_manifest_list(ml):
+                mp = table._resolve(mle.manifest_path)
+                manifests.add(norm_path(mp))
+                _, entries = read_manifest(mp)
+                for e in entries:
+                    files.add(norm_path(table._resolve(e.data_file.file_path)))
+        except FileNotFoundError:
+            if strict:
+                raise
+    return manifests, files
+
+
 def expire_snapshots(table, older_than_ms: int | None = None,
                      retain_last: int = 1, delete_files: bool = True) -> int:
     """Drop snapshots older than the cutoff (keeping `retain_last` most
@@ -78,8 +106,6 @@ def expire_snapshots(table, older_than_ms: int | None = None,
     spot. Pass an explicit cutoff (e.g. now) for immediate expiry.
     """
     from dataclasses import replace as dc_replace
-
-    from .types.manifest import read_manifest, read_manifest_list
 
     metadata = table.metadata
     now_ms = int(time.time() * 1000)
@@ -143,33 +169,9 @@ def expire_snapshots(table, older_than_ms: int | None = None,
     # remove_orphan_files reclaims.
     to_delete: set[str] = set()
     if delete_files:
-        def reachable(snaps, strict: bool) -> tuple[set, set]:
-            """strict=True (the KEPT set): a missing manifest must
-            ABORT — swallowing it mid-iteration truncates the live-file
-            inventory and the difference below would delete data files
-            the current snapshot still references (code-review r9).
-            Expired snapshots stay lenient: their manifests may already
-            be gone, which only shrinks the DEAD set (safe)."""
-            manifests, datafiles = set(), set()
-            for s in snaps:
-                try:
-                    ml = table._resolve(s.manifest_list)
-                    manifests.add(norm_path(ml))
-                    for mle in read_manifest_list(ml):
-                        mp = table._resolve(mle.manifest_path)
-                        manifests.add(norm_path(mp))
-                        _, entries = read_manifest(mp)
-                        for e in entries:
-                            datafiles.add(norm_path(
-                                table._resolve(e.data_file.file_path)))
-                except FileNotFoundError:
-                    if strict:
-                        raise
-                    continue
-            return manifests, datafiles
-
-        live_m, live_d = reachable(kept, strict=True)
-        dead_m, dead_d = reachable(expired, strict=False)
+        # the KEPT set is strict, the expired set lenient (see _reachable)
+        live_m, live_d = _reachable(table, kept, strict=True)
+        dead_m, dead_d = _reachable(table, expired, strict=False)
         to_delete = (dead_m - live_m) | (dead_d - live_d)
 
     kept_ids = {s.snapshot_id for s in kept}
@@ -196,18 +198,9 @@ def remove_orphan_files(table, older_than_ms: int | None = None) -> int:
     than the cutoff (default: 3 days ago, Iceberg's default — a cutoff
     of "now" would delete files STAGED by in-flight writes whose commit
     hasn't published the referencing manifest yet, corrupting the
-    table)."""
-    from .types.manifest import read_manifest, read_manifest_list
-
-    referenced: set[str] = set()
-    for s in table.metadata.snapshots:
-        try:
-            for mle in read_manifest_list(table._resolve(s.manifest_list)):
-                _, entries = read_manifest(table._resolve(mle.manifest_path))
-                for e in entries:
-                    referenced.add(norm_path(table._resolve(e.data_file.file_path)))
-        except FileNotFoundError:
-            continue
+    table). A retained snapshot whose manifests cannot be read aborts
+    the cleanup before anything is deleted."""
+    _, referenced = _reachable(table, table.metadata.snapshots, strict=True)
     if older_than_ms is None:
         cutoff = time.time() - ORPHAN_DEFAULT_AGE_MS / 1000
     else:
@@ -299,7 +292,6 @@ def rewrite_position_deletes(table, spark) -> int:
 
     from .fileio import to_spark_paths
     from .planning import canon_data_path, canon_data_path_col
-    from .transaction import Transaction
 
     data, pos, _eq = table.new_scan().plan_files(spark)
     if len(pos) <= 1:
@@ -343,8 +335,7 @@ def cherrypick_snapshot(table, snapshot_id: int) -> None:
     through a fresh Transaction (new snapshot id/sequence on main;
     the parquet files themselves are shared, not copied), so history
     records both the staged commit and the publish."""
-    from .transaction import Transaction
-    from .types.manifest import STATUS_ADDED, read_manifest, read_manifest_list
+    from .changelog import _added_in
 
     md = table.metadata
     snap = md.snapshot_by_id(snapshot_id)  # KeyError if unknown
@@ -385,24 +376,17 @@ def cherrypick_snapshot(table, snapshot_id: int) -> None:
             f"cherrypick_snapshot only applies append snapshots; "
             f"snapshot {snapshot_id} is {op!r}")
     default_spec_id = md.default_spec().spec_id
-    adds = []
-    for mle in read_manifest_list(table._resolve(snap.manifest_list)):
-        if mle.added_snapshot_id != snapshot_id:
-            continue
-        if mle.partition_spec_id != default_spec_id:
+    adds, _, _ = _added_in(table, snap)
+    for t in adds:
+        if t.spec_id != default_spec_id:
             raise ValueError(
                 f"cherrypick_snapshot: snapshot {snapshot_id} wrote under "
-                f"spec {mle.partition_spec_id}, table default is now "
+                f"spec {t.spec_id}, table default is now "
                 f"{default_spec_id} — cannot re-commit across a spec change")
-        _, entries = read_manifest(table._resolve(mle.manifest_path))
-        for e in entries:
-            if e.status == STATUS_ADDED and e.snapshot_id == snapshot_id:
-                e.data_file.file_path = table._resolve(e.data_file.file_path)
-                adds.append(e.data_file)
     if not adds:
         return
     tx = Transaction(table)
-    tx.add_data_files(adds)
+    tx.add_data_files([t.data_file for t in adds])
     # publish provenance: the duplicate-pick guard above keys on these
     extras = {"source-snapshot-id": str(snapshot_id)}
     if wap_id is not None:
@@ -417,92 +401,14 @@ def rewrite_manifests(table) -> int:
     untouched) and commit a replace snapshot. Planning cost is
     O(#manifests) driver-side Avro; data files are untouched. Returns
     the number of manifests before compaction."""
-    import uuid as _uuid
+    from .types.manifest import read_manifest_list
 
-    from .types.manifest import (
-        MANIFEST_CONTENT_DATA,
-        MANIFEST_CONTENT_DELETES,
-        STATUS_EXISTING,
-        ManifestEntry,
-        read_manifest,
-        read_manifest_list,
-        write_manifest,
-        write_manifest_list,
-    )
-    from .types.metadata import Snapshot
-
-    md = table.metadata
-    parent = md.current_snapshot()
+    parent = table.metadata.current_snapshot()
     if parent is None:
         return 0
-    prev = read_manifest_list(table._resolve(parent.manifest_list))
-    n_before = len(prev)
-    if n_before <= 1:
-        return n_before
-
-    meta_dir = io_join(table.path, "metadata")
-    commit_uuid = str(_uuid.uuid4())
-    # max over ALL snapshots, not parent+1: after rollback_to an earlier
-    # snapshot, parent+1 collides with an existing id and snapshot_by_id
-    # would resolve the OLD snapshot (same fix as transaction.py commit)
-    snapshot_id = max((s.snapshot_id for s in md.snapshots), default=0) + 1
-    seq = md.last_sequence_number + 1
-    schema = md.current_schema()
-
-    by_spec: dict[int, list[ManifestEntry]] = {}
-    new_list_entries = []
-    total_files = total_rows = 0
-    for mle in prev:
-        if mle.content == MANIFEST_CONTENT_DELETES:
-            new_list_entries.append(mle)
-            continue
-        _, entries = read_manifest(table._resolve(mle.manifest_path))
-        for e in entries:
-            if not e.is_alive:
-                continue
-            e.data_file.file_path = table._resolve(e.data_file.file_path)
-            keep_seq = (e.sequence_number if e.sequence_number is not None
-                        else mle.sequence_number)
-            by_spec.setdefault(mle.partition_spec_id, []).append(ManifestEntry(
-                status=STATUS_EXISTING, data_file=e.data_file,
-                snapshot_id=e.snapshot_id, sequence_number=keep_seq,
-                file_sequence_number=e.file_sequence_number))
-            total_files += 1
-            total_rows += e.data_file.record_count
-    for spec_id, survivors in sorted(by_spec.items()):
-        try:
-            surv_spec = md.spec_by_id(spec_id)
-        except KeyError:  # trimmed spec history (same guard as Transaction)
-            surv_spec = md.default_spec()
-        m_path = io_join(
-            meta_dir, f"{commit_uuid}-m{len(new_list_entries)}.avro")
-        mle = write_manifest(m_path, survivors, surv_spec,
-                             schema, snapshot_id, md.format_version,
-                             MANIFEST_CONTENT_DATA, sequence_number=seq)
-        new_list_entries.append(mle)
-
-    ml_path = io_join(meta_dir, f"snap-{snapshot_id}-1-{commit_uuid}.avro")
-    write_manifest_list(ml_path, new_list_entries, snapshot_id,
-                        parent.snapshot_id, seq, md.format_version)
-    snapshot = Snapshot(
-        snapshot_id=snapshot_id, parent_snapshot_id=parent.snapshot_id,
-        sequence_number=seq, timestamp_ms=int(time.time() * 1000),
-        manifest_list=ml_path,
-        # carry the parent's running totals forward: manifests are
-        # reorganized, no file is added or removed, and the NEXT
-        # transaction derives its totals from these keys — missing
-        # keys would read as 0 and poison every later summary
-        summary={"operation": "replace",
-                 "manifests-replaced": str(n_before),
-                 "manifests-created": str(len(new_list_entries)),
-                 "total-data-files": str(total_files),
-                 "total-records": str(total_rows),
-                 **{k: (parent.summary or {}).get(k, "0") for k in (
-                     "total-files-size", "total-delete-files",
-                     "total-position-deletes", "total-equality-deletes")}},
-        schema_id=schema.schema_id,
-    )
-    table._commit_metadata(md.with_snapshot(snapshot))
+    n_before = len(read_manifest_list(table._resolve(parent.manifest_list)))
+    if n_before > 1:
+        Transaction(table).regroup_manifests().commit("replace")
     return n_before
 
 

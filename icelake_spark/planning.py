@@ -468,17 +468,14 @@ def assemble_manifest(table_path: str, metadata: TableMetadata,
     """(manifest entries) → pruned [(content, DataFile, seq, spec_id)].
 
     Shared by the serial and distributed planners so both produce
-    byte-identical plans. v2 sequence-number inheritance: a null seq on
-    an entry inherits the manifest-list entry's sequence number."""
+    byte-identical plans. `entries` come from `read_manifest(path,
+    mle)`, so their sequence numbers are already inherited."""
     schema = metadata.current_schema()
     want = wanted.get(mle.partition_spec_id, {}) if wanted else {}
     out = []
     for e in entries:
         if not e.is_alive:
             continue
-        seq = e.sequence_number
-        if seq is None:
-            seq = mle.sequence_number
         df = e.data_file
         df.file_path = resolve_path(table_path, df.file_path)
         if df.content == CONTENT_DATA:
@@ -486,7 +483,7 @@ def assemble_manifest(table_path: str, metadata: TableMetadata,
                 continue
             if preds and not stats_keep(df, schema, preds):
                 continue
-        out.append((df.content, df, seq, mle.partition_spec_id))
+        out.append((df.content, df, e.sequence_number, mle.partition_spec_id))
     return out
 
 
@@ -739,7 +736,7 @@ def _distributed_manifest_df(spark, mles: list[ManifestListEntry],
             for i, blob in zip(pdf["i"], pdf["task"]):
                 mle = pickle.loads(bytes(blob))
                 _, entries = read_manifest(
-                    resolve_path(tpath, mle.manifest_path))
+                    resolve_path(tpath, mle.manifest_path), mle)
                 build(c, int(i), mle, entries, cols)
             yield pd.DataFrame(cols)
 
@@ -771,7 +768,7 @@ def plan_files_df(spark, table_path: str, metadata: TableMetadata,
             cols["fi"].append(fi)
             cols["content"].append(int(content))
             cols["file_path"].append(dfile.file_path)
-            cols["seq"].append(int(seq) if seq is not None else 0)
+            cols["seq"].append(int(seq))
             cols["spec_id"].append(int(spec_id))
             cols["record_count"].append(int(dfile.record_count or 0))
             cols["file_size"].append(int(dfile.file_size_in_bytes or 0))
@@ -796,10 +793,11 @@ def plan_serial(table_path: str, metadata: TableMetadata,
 
         with ThreadPoolExecutor(max_workers=min(16, len(mles))) as pool:
             parsed = list(pool.map(
-                lambda m: read_manifest(resolve_path(table_path, m.manifest_path)),
+                lambda m: read_manifest(
+                    resolve_path(table_path, m.manifest_path), m),
                 mles))
     else:
-        parsed = [read_manifest(resolve_path(table_path, m.manifest_path))
+        parsed = [read_manifest(resolve_path(table_path, m.manifest_path), m)
                   for m in mles]
     tasks: list[tuple[int, Any, int, int]] = []
     for mle, (_, entries) in zip(mles, parsed):
@@ -839,31 +837,21 @@ def manifest_entries_df(spark, table_path: str,
                         mles: list[ManifestListEntry]):
     """`entries` metadata table as a distributed Spark job: one row per
     manifest entry INCLUDING status=deleted tombstones (which
-    plan_files_df deliberately drops), with inherited sequence numbers
-    materialized. Same executor-side shape as plan_files_df (shared
-    _distributed_manifest_df scaffolding) — at a million entries
-    nothing is collected to the driver (parity surface: Iceberg's
-    `SELECT * FROM t.entries`; the reference walks the same entries
-    driver-side in table.rs:281-304)."""
+    plan_files_df deliberately drops), with inherited snapshot ids and
+    sequence numbers materialized. Same executor-side shape as
+    plan_files_df (shared _distributed_manifest_df scaffolding) — at a
+    million entries nothing is collected to the driver (parity surface:
+    Iceberg's `SELECT * FROM t.entries`; the reference walks the same
+    entries driver-side in table.rs:281-304)."""
     def build(c, mi, mle, entries, cols):
         for fi, e in enumerate(entries):
             d = e.data_file
-            # spec: ADDED entries inherit the manifest-list seq when
-            # their own field is null; DELETED/EXISTING carry explicit
-            # values (written by our own manifest writer) or inherit
-            # likewise
-            seq = (e.sequence_number if e.sequence_number
-                   is not None else mle.sequence_number)
-            fseq = (e.file_sequence_number
-                    if e.file_sequence_number is not None else seq)
             cols["mi"].append(mi)
             cols["fi"].append(fi)
             cols["status"].append(int(e.status))
-            cols["snapshot_id"].append(
-                int(e.snapshot_id if e.snapshot_id is not None
-                    else mle.added_snapshot_id))
-            cols["sequence_number"].append(int(seq))
-            cols["file_sequence_number"].append(int(fseq))
+            cols["snapshot_id"].append(int(e.snapshot_id))
+            cols["sequence_number"].append(int(e.sequence_number))
+            cols["file_sequence_number"].append(int(e.file_sequence_number))
             cols["content"].append(int(mle.content))
             cols["file_path"].append(d.file_path)
             cols["file_format"].append(d.file_format or "PARQUET")

@@ -123,21 +123,6 @@ class IcebergTable:
 
     # ---------------------------------------------------------- planning
 
-    def _manifest_entries(self, snapshot: Snapshot) -> tuple[list[FileScanTask], list[DeleteFileTask], list[DeleteFileTask]]:
-        """snapshot → (data tasks, position-delete tasks, equality-delete
-        tasks), skipping status=Deleted entries.
-
-        Mirrors Table::data_files_of_snapshot (table.rs:281-304) extended
-        with delete manifests (content=deletes).
-        """
-        from . import planning
-
-        if snapshot is None:
-            return [], [], []
-        mles = read_manifest_list(self._resolve(snapshot.manifest_list))
-        tasks = planning.plan_serial(self.path, self.metadata, mles)
-        return planning.split_tasks(tasks, FileScanTask, DeleteFileTask)
-
     def new_scan(self, **kwargs) -> "TableScan":
         return TableScan(self, **kwargs)
 
@@ -238,7 +223,7 @@ class IcebergTable:
         from .planning import (canon_data_path, canon_data_path_col,
                                canonical_partition)
 
-        _, pos, _ = self._manifest_entries(self.snapshot(snapshot_id))
+        _, pos, _ = self.new_scan(snapshot_id=snapshot_id).plan_files()
         schema = ("file_path string, pos long, partition string, "
                   "delete_file_path string, delete_sequence_number long")
         pos = [t for t in pos
@@ -544,8 +529,7 @@ class IcebergTable:
     def stats(self) -> dict:
         """Quick table-level stats from the current snapshot's summary +
         manifest planning (file/row/byte counts, snapshot count)."""
-        snap = self.current_snapshot()
-        data, pos, eq = self._manifest_entries(snap) if snap else ([], [], [])
+        data, pos, eq = self.new_scan().plan_files()
         return {
             "snapshots": len(self.metadata.snapshots),
             "data_files": len(data),
@@ -889,15 +873,10 @@ class TableScan:
             return self._plan_cache
         from . import planning
 
-        snap = self.table.snapshot(self.snapshot_id, self.as_of_ms, self.ref)
+        snap, mles, wanted, preds = self._pruned_manifests()
         if snap is None:
             return [], [], []
         meta = self.table.metadata
-        schema = self.table.schema()
-        mles = read_manifest_list(self.table._resolve(snap.manifest_list))
-        wanted = planning.partition_wanted(meta, self.partition_filter)
-        preds = planning.parse_stats_preds(self.filter, schema, _parse_literal)
-        mles = planning.prune_manifests(mles, meta, wanted)
         use_dist = self.distributed_planning
         if use_dist is None:
             thr = int(meta.properties.get(
@@ -929,17 +908,28 @@ class TableScan:
         list)."""
         from . import planning
 
-        snap = self.table.snapshot(self.snapshot_id, self.as_of_ms, self.ref)
+        snap, mles, wanted, preds = self._pruned_manifests()
         if snap is None:
             return spark.createDataFrame([], planning.PLAN_DF_SCHEMA)
+        return planning.plan_files_df(spark, self.table.path,
+                                      self.table.metadata, mles, wanted, preds)
+
+    def _pruned_manifests(self):
+        """(snapshot, manifest-list entries left after FieldSummary
+        pruning, wanted partition values per spec, zone-map predicates):
+        the planning input both plan_files and plan_files_df start
+        from. The snapshot is None when the scan resolves to none."""
+        from . import planning
+
+        snap = self.table.snapshot(self.snapshot_id, self.as_of_ms, self.ref)
+        if snap is None:
+            return None, [], {}, []
         meta = self.table.metadata
-        schema = self.table.schema()
         mles = read_manifest_list(self.table._resolve(snap.manifest_list))
         wanted = planning.partition_wanted(meta, self.partition_filter)
-        preds = planning.parse_stats_preds(self.filter, schema, _parse_literal)
-        mles = planning.prune_manifests(mles, meta, wanted)
-        return planning.plan_files_df(spark, self.table.path, meta, mles,
-                                      wanted, preds)
+        preds = planning.parse_stats_preds(self.filter, self.table.schema(),
+                                           _parse_literal)
+        return snap, planning.prune_manifests(mles, meta, wanted), wanted, preds
 
     # ---------------------------------------------------------- execution
 

@@ -54,6 +54,7 @@ class Transaction:
         self._removed_paths: set[str] = set()
         self._removed_delete_paths: set[str] = set()
         self._remove_all = False
+        self._regroup = False
         self._set_props: dict[str, str] = {}
         self._summary_extras: dict[str, str] = {}
         self._staged_schema = None
@@ -89,6 +90,16 @@ class Transaction:
 
     def remove_all_existing(self) -> "Transaction":
         self._remove_all = True
+        return self
+
+    def regroup_manifests(self) -> "Transaction":
+        """Rewrite every live data-file entry into one manifest per
+        partition spec, keeping each entry's snapshot id and sequence
+        numbers; delete manifests carry forward unchanged and no file
+        is added or removed (Iceberg's RewriteManifests). The snapshot
+        summary records `manifests-replaced` (the parent's manifest
+        count) and `manifests-created` (the new one)."""
+        self._regroup = True
         return self
 
     def remove_delete_files(self, paths: list[str]) -> "Transaction":
@@ -254,7 +265,7 @@ class Transaction:
         removed_count = removed_rows = removed_size = 0
         rm_del_files = rm_pos_rows = rm_eq_rows = 0
         rewrite = bool(self._remove_all or self._removed_paths
-                       or self._removed_delete_paths)
+                       or self._removed_delete_paths or self._regroup)
 
         # carry forward previous manifests; rewrite them when removing files
         prev_entries = []
@@ -266,8 +277,7 @@ class Transaction:
             # survivors grouped BY SOURCE SPEC: a spec-evolved table's
             # old-spec files must be re-written with their own partition
             # avro type — flattening them into the default spec drops
-            # their partition values and breaks pruning (same grouping
-            # as maintenance.rewrite_manifests)
+            # their partition values and breaks pruning
             survivors_by_spec: dict[int, list[ManifestEntry]] = {}
             delete_manifests_kept = []
             for mle in prev_entries:
@@ -279,7 +289,7 @@ class Transaction:
                         # total-files-size when they committed; subtract
                         # them or the total carries ghost bytes forever
                         _, d_entries = read_manifest(
-                            table._resolve(mle.manifest_path))
+                            table._resolve(mle.manifest_path), mle)
                         removed_size += sum(
                             e.data_file.file_size_in_bytes
                             for e in d_entries if e.is_alive)
@@ -293,7 +303,7 @@ class Transaction:
                     # seq on STATUS_EXISTING) — applicability of an
                     # untouched delete file must not change
                     _, d_entries = read_manifest(
-                        table._resolve(mle.manifest_path))
+                        table._resolve(mle.manifest_path), mle)
                     keep = []
                     alive = 0
                     for e in d_entries:
@@ -311,15 +321,8 @@ class Transaction:
                             else:
                                 rm_eq_rows += e.data_file.record_count
                         else:
-                            dseq = (e.sequence_number
-                                    if e.sequence_number is not None
-                                    else mle.sequence_number)
-                            keep.append(ManifestEntry(
-                                status=STATUS_EXISTING,
-                                data_file=e.data_file,
-                                snapshot_id=e.snapshot_id,
-                                sequence_number=dseq,
-                                file_sequence_number=e.file_sequence_number))
+                            e.status = STATUS_EXISTING
+                            keep.append(e)
                     if len(keep) == alive:
                         delete_manifests_kept.append(mle)
                     elif keep:
@@ -333,13 +336,14 @@ class Transaction:
                             metadata.format_version,
                             MANIFEST_CONTENT_DELETES, sequence_number=seq))
                     continue
-                _, entries = read_manifest(table._resolve(mle.manifest_path))
+                _, entries = read_manifest(table._resolve(mle.manifest_path),
+                                           mle)
                 # untouched data manifests carry forward AS-IS (the
                 # same pattern the delete branch uses): rewriting every
                 # manifest made a 1-file delete O(table) in metadata
                 # I/O and collapsed FieldSummary pruning granularity to
                 # one giant manifest per spec (code-review r8)
-                if not self._remove_all and not any(
+                if not (self._remove_all or self._regroup) and not any(
                         e.is_alive
                         and norm_path(table._resolve(e.data_file.file_path))
                         in self._removed_paths for e in entries):
@@ -356,12 +360,9 @@ class Transaction:
                         removed_rows += e.data_file.record_count
                         removed_size += e.data_file.file_size_in_bytes
                     else:
-                        seq_keep = e.sequence_number if e.sequence_number is not None else mle.sequence_number
+                        e.status = STATUS_EXISTING
                         survivors_by_spec.setdefault(
-                            mle.partition_spec_id, []).append(ManifestEntry(
-                                status=STATUS_EXISTING, data_file=e.data_file,
-                                snapshot_id=e.snapshot_id, sequence_number=seq_keep,
-                                file_sequence_number=e.file_sequence_number))
+                            mle.partition_spec_id, []).append(e)
             new_list_entries.extend(delete_manifests_kept)
             for spec_id, survivors in sorted(survivors_by_spec.items()):
                 try:
@@ -403,6 +404,9 @@ class Transaction:
         summary = self._summary(operation, parent, removed_count,
                                 removed_rows, removed_size,
                                 rm_del_files, rm_pos_rows, rm_eq_rows)
+        if self._regroup:
+            summary["manifests-replaced"] = str(len(prev_entries))
+            summary["manifests-created"] = str(len(new_list_entries))
         snapshot = Snapshot(
             snapshot_id=snapshot_id,
             parent_snapshot_id=parent.snapshot_id if parent else None,

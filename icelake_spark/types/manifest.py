@@ -430,11 +430,17 @@ def read_manifest_list(path: str) -> list[ManifestListEntry]:
     return out
 
 
-def read_manifest(path: str) -> tuple[dict, list[ManifestEntry]]:
+def read_manifest(path: str, owner: ManifestListEntry | None = None
+                  ) -> tuple[dict, list[ManifestEntry]]:
     """Read a manifest Avro file → (file metadata, entries).
 
-    Inherits are NOT applied here (sequence-number inheritance is done by
-    the scan planner, which knows the owning manifest-list entry).
+    With `owner`, the manifest-list entry that references this manifest,
+    the spec's inheritance rules are applied to every entry whatever its
+    status: a null `sequence_number` or `file_sequence_number` takes the
+    owner's `sequence_number`, and a null `snapshot_id` takes the
+    owner's `added_snapshot_id` (Iceberg spec, "Sequence Number
+    Inheritance" and "Snapshot ID Inheritance"). Without it, the
+    entries carry the values exactly as written.
     """
     # single read: header metadata (iceberg keys) + records in one pass
     meta, _, records = avro_io.read_avro_full(path)
@@ -475,13 +481,21 @@ def read_manifest(path: str) -> tuple[dict, list[ManifestEntry]]:
             equality_ids=dfj.get("equality_ids"),
             sort_order_id=dfj.get("sort_order_id"),
         )
-        entries.append(ManifestEntry(
+        e = ManifestEntry(
             status=rec["status"],
             data_file=df,
             snapshot_id=rec.get("snapshot_id"),
             sequence_number=rec.get("sequence_number"),
             file_sequence_number=rec.get("file_sequence_number"),
-        ))
+        )
+        if owner is not None:
+            if e.snapshot_id is None:
+                e.snapshot_id = owner.added_snapshot_id
+            if e.sequence_number is None:
+                e.sequence_number = owner.sequence_number
+            if e.file_sequence_number is None:
+                e.file_sequence_number = owner.sequence_number
+        entries.append(e)
     return meta, entries
 
 

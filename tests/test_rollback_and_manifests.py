@@ -565,3 +565,87 @@ def test_analyze_clears_stale_stats_properties(spark, warehouse):
     props = t.metadata.properties
     assert "stats.v.ndv" in props
     assert not any(k.startswith("stats.id.") for k in props), props
+
+
+def test_orphan_cleanup_aborts_on_unreadable_manifest(spark, warehouse):
+    """An unreadable manifest of a retained snapshot must abort orphan
+    cleanup: skipping it would leave that manifest's live data files
+    out of the referenced set, and the cleanup would delete them."""
+    import os
+    import time
+
+    from icelake_spark.maintenance import remove_orphan_files
+
+    src = spark.createDataFrame([(1, "a")], "id long, v string")
+    t = warehouse.create_table("db.orph_strict",
+                               Schema.from_spark(src.schema))
+    t.append(src)
+    t.append(spark.createDataFrame([(2, "b")], "id long, v string"))
+    t = t.refresh()
+    files = [task.data_file.file_path
+             for task in t.new_scan().plan_files()[0]]
+    assert len(files) == 2
+    mles = read_manifest_list(t._resolve(t.current_snapshot().manifest_list))
+    newest = t._resolve(
+        max(mles, key=lambda m: m.sequence_number).manifest_path)
+    os.rename(newest, newest + ".hidden")
+    try:
+        with pytest.raises(FileNotFoundError):
+            remove_orphan_files(
+                t, older_than_ms=int(time.time() * 1000) + 10_000)
+        assert all(os.path.exists(f) for f in files), files
+    finally:
+        os.rename(newest + ".hidden", newest)
+
+
+def test_inherited_entry_ids_on_staged_branch(spark, warehouse):
+    """A v2 writer may leave an ADDED entry's snapshot_id,
+    sequence_number and file_sequence_number null, to be inherited
+    from the manifest-list entry. Every reader of a staged snapshot
+    written that way must see the inherited values: the branch read,
+    the `entries` metadata table, and the cherry-pick that publishes
+    it."""
+    from icelake_spark.maintenance import cherrypick_snapshot
+    from icelake_spark.transaction import Transaction
+    from icelake_spark.types.manifest import (MANIFEST_CONTENT_DATA,
+                                              read_manifest, write_manifest)
+    from icelake_spark.write import write_data_files
+
+    schema = "id long, v string"
+    t = warehouse.create_table(
+        "db.inherit", Schema.from_spark(
+            spark.createDataFrame([], schema).schema))
+    t.append(spark.createDataFrame([(1, "a")], schema))
+    t = t.refresh()
+    t.create_branch("wip")
+    tx = Transaction(t, branch="wip")
+    tx.add_data_files(write_data_files(
+        t, spark.createDataFrame([(5, "e")], schema)))
+    staged = tx.commit("append")
+    t = t.refresh()
+
+    (mle,) = [m for m in read_manifest_list(t._resolve(staged.manifest_list))
+              if m.added_snapshot_id == staged.snapshot_id]
+    path = t._resolve(mle.manifest_path)
+    _, entries = read_manifest(path)
+    for e in entries:
+        e.snapshot_id = e.sequence_number = e.file_sequence_number = None
+    md = t.metadata
+    write_manifest(path, entries, md.default_spec(), md.current_schema(),
+                   staged.snapshot_id, md.format_version,
+                   MANIFEST_CONTENT_DATA, sequence_number=mle.sequence_number)
+    assert all(e.sequence_number is None for e in read_manifest(path)[1])
+
+    assert sorted(r.id for r in t.to_df(spark, ref="wip").collect()) == [1, 5]
+    ent = t.entries_df(spark, snapshot_id=staged.snapshot_id).collect()
+    added = [r for r in ent if r.status == 1
+             and r.snapshot_id == staged.snapshot_id]
+    assert len(added) == 1, ent
+    assert added[0].sequence_number == mle.sequence_number
+    assert added[0].file_sequence_number == mle.sequence_number
+
+    cherrypick_snapshot(t, staged.snapshot_id)
+    t = t.refresh()
+    assert t.current_snapshot().summary["source-snapshot-id"] == \
+        str(staged.snapshot_id)
+    assert sorted(r.id for r in t.to_df(spark).collect()) == [1, 5]

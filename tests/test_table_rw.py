@@ -468,3 +468,42 @@ def test_nested_types_roundtrip_with_mor_deletes(spark, warehouse):
     assert len(rows) == 90
     assert rows[6].info.a == "upd" and rows[6].xs == [0]
     assert rows[9].info.a == "9" and rows[9].m == {"k": 9}
+
+
+@pytest.mark.parametrize("mode", ["merge-on-read", "copy-on-write"])
+def test_row_level_dml_prunes_files_by_condition(spark, warehouse,
+                                                 monkeypatch, mode):
+    """DELETE and UPDATE plan with the condition as a zone-map filter:
+    of two files with disjoint id ranges, only the one whose bounds can
+    match is read, and the rows come out as without pruning."""
+    import icelake_spark.table as table_mod
+    from icelake_spark.delta import delete_rows, update_rows
+
+    src = spark.range(200).selectExpr("id", "id * 10 as v")
+    t = warehouse.create_table("db.dmlprune", Schema.from_spark(src.schema))
+    t.set_properties({"write.delete.mode": mode, "write.update.mode": mode})
+    t.append(src.where("id < 100").coalesce(1))
+    (low,) = [d.data_file.file_path
+              for d in t.refresh().new_scan().plan_files()[0]]
+    t.append(src.where("id >= 100").coalesce(1))
+    t = t.refresh()
+
+    seen: set = set()
+    real = table_mod.read_data_files
+
+    def spy(spark_, schema, tasks, **kw):
+        seen.update(x.data_file.file_path for x in tasks)
+        return real(spark_, schema, tasks, **kw)
+
+    monkeypatch.setattr(table_mod, "read_data_files", spy)
+    delete_rows(t, spark, "id >= 110 AND id < 120")
+    assert len(seen) == 1 and low not in seen, seen
+    seen.clear()
+    update_rows(t.refresh(), spark, "id >= 130 AND id < 135", {"v": "v + 1"})
+    assert len(seen) == 1 and low not in seen, seen
+
+    monkeypatch.undo()
+    got = sorted((r.id, r.v) for r in t.refresh().to_df(spark).collect())
+    want = sorted((i, i * 10 + (1 if 130 <= i < 135 else 0))
+                  for i in range(200) if not 110 <= i < 120)
+    assert got == want
