@@ -15,14 +15,17 @@ from .table import IcebergTable, TableScan  # noqa: F401
 __version__ = "0.1.0"
 
 
-def default_session(app_name: str = "icelake_spark", cpus: str | int = "*",
+def default_session(app_name: str = "icelake_spark",
+                    cpus: str | int | None = None,
                     shuffle_partitions: int = 32):
-    """Build a SparkSession tuned for this engine (UTC, AQE, Arrow)."""
+    """Build a SparkSession tuned for this engine (UTC, AQE, Arrow) on
+    local[cpus]; SPARK_GRAFT_CPUS (else all cores) is the default."""
     import os
 
     from pyspark.sql import SparkSession
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", cpus)
+    if cpus is None:
+        cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

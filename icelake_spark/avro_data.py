@@ -223,21 +223,10 @@ def _converters(schema: Schema, tz: dt.tzinfo | None = None):
         t = f.field_type
         if isinstance(t, ListType):
             el = t.element_type
-            # Arrow→pandas surfaces NULL elements of integral arrays as
-            # NaN in a float ndarray; map NaN back to None for every
-            # NON-float element type (where NaN cannot be legal data —
-            # float/double keep their genuine NaNs) or int(NaN) crashes
-            # the write (code-review r9)
-            nan_is_null = el.name not in ("float", "double")
-
-            def _enc_list(v, el=el, nn=nan_is_null):
-                if v is None:
-                    return None
-                return [None if x is None
-                        or (nn and isinstance(x, float) and x != x)
-                        else _to_avro_value(x, el, tz) for x in v]
-
-            prims.append((f.name, _enc_list,
+            prims.append((f.name,
+                          lambda v, el=el: None if v is None else
+                          [None if x is None else _to_avro_value(x, el, tz)
+                           for x in v],
                           lambda v, el=el: None if v is None else
                           [_from_avro_value(x, el, tz) for x in v]))
         else:
@@ -248,32 +237,6 @@ def _converters(schema: Schema, tz: dt.tzinfo | None = None):
 
 
 # --------------------------------------------------------------- write
-
-
-_EMPTY_PART = "__EMPTY_STRING__"
-
-
-def _esc_empty(v: Any) -> Any:
-    """The ''-vs-NULL layout marker for STRING partition values —
-    the python twin of write.py's layout-column encoding (review r12).
-    Lanes that build hive dirs from RAW row values (the streaming sink)
-    must apply it before _hive_value, or a literal "__EMPTY_STRING__"
-    value decodes back as '' (review r13); lanes fed by
-    write_data_files' writer_df already arrive encoded."""
-    if isinstance(v, str) and (v == "" or v.startswith(_EMPTY_PART)):
-        return _EMPTY_PART + v
-    return v
-
-
-def _hive_value(v: Any) -> str:
-    if v is None:
-        return "__HIVE_DEFAULT_PARTITION__"
-    # percent-escape like Spark's hive layout: '/', '%', '=' etc. in a
-    # value would otherwise corrupt the dir structure, and the stats
-    # builder unconditionally unquotes
-    from urllib.parse import quote
-
-    return quote(str(v), safe="")
 
 
 def write_avro_data(df: DataFrame, stage: str, schema: Schema,
@@ -292,23 +255,25 @@ def write_avro_data(df: DataFrame, stage: str, schema: Schema,
     attempt per partition — losers' orphan files stay in the temp stage
     dir but are never registered as table data.
 
-    `partition_cols` choose the hive output DIRECTORY per row; their
-    values are ALSO written into the files (read_avro_data never
-    parses hive dirs, so the read path depends on them being present
-    — unlike DataFrameWriter.partitionBy, which drops them);
-    `max_records_per_file` rolls output files like Spark's
+    `partition_cols` are the layout columns that choose each row's hive
+    DIRECTORY (write._split_by_layout); the partition SOURCE columns
+    are written into the files as usual (read_avro_data never parses
+    hive dirs); `max_records_per_file` rolls output files like Spark's
     maxRecordsPerFile."""
-    import pandas as pd
+    import pyarrow as pa
+
+    from .fileio import io_join, resolve_io
+    from .write import _split_by_layout
 
     avro_schema = table_avro_schema(schema)
-    conv = _converters(schema, _session_tz(df.sparkSession))
+    # Arrow hands the task NULLs as None (no pandas NaN/NaT to undo)
+    # and timestamptz values as aware instants (no session zone needed)
+    conv = _converters(schema)
     pcols = partition_cols or []
     # default roll caps the Python-side record buffer even when the
     # caller sets no file size: rows buffer as dicts (several times
     # their Arrow footprint), so an unbounded bucket OOMs the worker
     roll = max_records_per_file or 1_000_000
-    from .fileio import io_join, resolve_io
-
     # resolved HERE (planning process) and closed over: executor python
     # workers never see register_io factories, so custom-scheme stores
     # write through this pickled instance — the write twin of the DSv2
@@ -316,7 +281,7 @@ def write_avro_data(df: DataFrame, stage: str, schema: Schema,
     fio = resolve_io(stage)
     fio.makedirs(stage)
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def run(batches):
         buckets: dict[str, list[dict]] = {}
         written: list[str] = []
 
@@ -330,34 +295,22 @@ def write_avro_data(df: DataFrame, stage: str, schema: Schema,
             avro_io.write_avro(path, avro_schema, records, io=fio)
             written.append(path)
 
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                vals = dict(zip(pdf.columns, row))
-                rec = {}
-                for name, enc, _dec in conv:
-                    v = vals[name]
-                    # NaN/NaT -> null; guard only scalars (pd.isna on a
-                    # list/ndarray cell is elementwise and ambiguous).
-                    # NaT is an instance of datetime, so the float-NaN
-                    # check alone let a null timestamp crash the encoder
-                    if v is not None and not isinstance(v, (list, tuple)) \
-                            and not hasattr(v, "__len__"):
-                        try:
-                            if pd.isna(v):
-                                v = None
-                        except (TypeError, ValueError):
-                            pass
-                    rec[name] = enc(v)
-                subdir = "/".join(f"{c}={_hive_value(vals[c])}" for c in pcols)
-                buckets.setdefault(subdir, []).append(rec)
-                if len(buckets[subdir]) >= roll:
-                    flush(subdir)
+        for batch in batches:
+            for subdir, sub in _split_by_layout(pa.Table.from_batches([batch]),
+                                                pcols):
+                for row in sub.to_pylist():
+                    records = buckets.setdefault(subdir, [])
+                    records.append({name: enc(row[name])
+                                    for name, enc, _dec in conv})
+                    if len(records) >= roll:
+                        flush(subdir)
         for subdir in list(buckets):
             flush(subdir)
-        yield pd.DataFrame({"path": written}, columns=["path"])
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(written, type=pa.string())], names=["path"])
 
     return [r.path for r in
-            df.mapInPandas(run, schema="path string").collect()]
+            df.mapInArrow(run, schema="path string").collect()]
 
 
 # ---------------------------------------------------------------- read
@@ -406,12 +359,3 @@ def read_avro_data(spark: SparkSession, spark_schema,
     pdf = spark.createDataFrame([(p,) for p in paths], "p string") \
         .repartition(max(1, len(paths)))
     return pdf.mapInPandas(run, schema=out_schema)
-
-
-def count_avro_records(path: str, io=None) -> int:
-    """Record count for add_files stats when spark-avro is unavailable.
-    Uses the per-block counts in the container header — no decompression
-    or record decoding (the old full read re-processed the entire file
-    right after writing it). Pass the shipped FileIO on executors
-    (code-review r9)."""
-    return avro_io.count_records(path, io=io)

@@ -23,8 +23,12 @@ IcelakePartitionStreamReader — appended files, or with
 option("changelog", "true") one CDC partition per snapshot, whose
 file tasks take their deletes from the same DeletePlan and are masked
 by the same Arrow code as batch reads (_TableFileReader._dead_mask).
-`df.writeStream.format("icelake")` is the transactional
-IcelakeStreamWriter.
+The stream reads take an append snapshot's added files, skip delete
+and replace snapshots, and fail on an overwrite unless
+option("skip_overwrite_snapshots", "true") — the batch incremental
+read's rule (streaming.append_snapshots). `df.writeStream.format(
+"icelake")` is the transactional IcelakeStreamWriter, an Arrow lane of
+the writer tree (write.py).
 
 NOTE ON THE FAST PATH: rows here flow through Python workers (the Python
 DataSource contract), which cannot match the JVM vectorized parquet
@@ -43,8 +47,8 @@ import numpy as np
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
+    DataSourceStreamArrowWriter,
     DataSourceStreamReader,
-    DataSourceStreamWriter,
     EqualTo,
     InputPartition,
     WriterCommitMessage,
@@ -579,8 +583,7 @@ class IcelakeReader(_TableFileReader, DataSourceReader):
             files = incremental_files(
                 t, int(self.options["start_snapshot_id"]),
                 int(end) if end is not None else None,
-                skip_overwrites=self.options.get(
-                    "skip_overwrite_snapshots", "false").lower() == "true")
+                skip_overwrites=_skip_overwrites(self.options))
             return [_FileTask(d.data_file.file_path,
                               (d.data_file.file_format or "PARQUET").upper())
                     for d in files]
@@ -609,6 +612,12 @@ class IcelakeReader(_TableFileReader, DataSourceReader):
         if dead.any():
             table = table.filter(pa.array(~dead))
         yield from self._project(table, foreign).to_batches()
+
+
+def _skip_overwrites(options: dict) -> bool:
+    """The `skip_overwrite_snapshots` read option of the append-only
+    reads (the incremental batch read and the partition stream)."""
+    return options.get("skip_overwrite_snapshots", "false").lower() == "true"
 
 
 def _pos_sets(plan, src, cache: dict | None = None) -> dict | None:
@@ -798,42 +807,46 @@ def _stream_end_offset(table) -> int:
                 if s.snapshot_id in main_ids), default=0)
 
 
-def _stream_files_between(table, start_seq: int,
-                          end_seq: int) -> list[tuple[str, str]]:
-    """(path, format) of data files ADDED by append snapshots in
-    (start_seq, end_seq] on the main ancestry — the deterministic replay
-    set both stream readers derive micro-batches from."""
+def _stream_snapshots(table, start: float, end: float,
+                      skip_overwrites: bool) -> list:
+    """Main-ancestry snapshots with stream offset in (start, end], in
+    sequence order, that contribute files by the append-only reads' one
+    per-snapshot rule (streaming.append_snapshots: an overwrite in the
+    range raises unless `skip_overwrites`)."""
+    from .streaming import append_snapshots
+
+    main_ids = table.metadata.ancestry_ids()
+    return append_snapshots(
+        [s for s in sorted(table.metadata.snapshots,
+                           key=lambda s: s.sequence_number)
+         # a WAP branch-staged snapshot is not published
+         if s.snapshot_id in main_ids
+         and start < _stream_offset_of(table, s) <= end], skip_overwrites)
+
+
+def _stream_files_between(table, start_seq: int, end_seq: int,
+                          skip_overwrites: bool) -> list[tuple[str, str]]:
+    """(path, format) of data files ADDED by the contributing snapshots
+    in (start_seq, end_seq] — the deterministic replay set both stream
+    readers derive micro-batches from."""
     from .changelog import _added_in
 
-    out: list[tuple[str, str]] = []
-    main_ids = table.metadata.ancestry_ids()
-    for s in sorted(table.metadata.snapshots,
-                    key=lambda s: s.sequence_number):
-        if s.snapshot_id not in main_ids:
-            continue  # WAP branch-staged snapshot: not published
-        if not (start_seq < _stream_offset_of(table, s) <= end_seq):
-            continue
-        if s.summary.get("operation", "append") != "append":
-            continue
-        out.extend((t.data_file.file_path,
-                    (t.data_file.file_format or "PARQUET").upper())
-                   for t in _added_in(table, s)[0])
-    return out
+    return [(t.data_file.file_path,
+             (t.data_file.file_format or "PARQUET").upper())
+            for s in _stream_snapshots(table, start_seq, end_seq,
+                                       skip_overwrites)
+            for t in _added_in(table, s)[0]]
 
 
 def _append_offsets(table) -> list[int]:
-    """Sorted DISTINCT stream offsets of main-ancestry APPEND
-    snapshots — the only snapshots that contribute files to the
-    partition stream. Deduped because v1 offsets are commit
+    """Sorted DISTINCT stream offsets of the snapshots that contribute
+    files to the partition stream. Deduped because v1 offsets are commit
     timestamps: two appends in the same millisecond share an offset,
     and _stream_snapshot_files(off) already returns their combined
     file list — a duplicate offset would emit (and budget) every one
     of those files twice."""
-    main_ids = table.metadata.ancestry_ids()
-    return sorted({
-        _stream_offset_of(table, s) for s in table.metadata.snapshots
-        if s.snapshot_id in main_ids
-        and s.summary.get("operation", "append") == "append"})
+    return sorted({_stream_offset_of(table, s) for s in
+                   _stream_snapshots(table, -1, float("inf"), True)})
 
 
 def _stream_snapshot_files(table, seq: int,
@@ -847,14 +860,16 @@ def _stream_snapshot_files(table, seq: int,
     so entries never invalidate."""
     if cache is not None and seq in cache:
         return cache[seq]
-    files = sorted(_stream_files_between(table, seq - 1, seq))
+    files = sorted(_stream_files_between(table, seq - 1, seq, True))
     if cache is not None:
         cache[seq] = files
     return files
 
 
 def _stream_files_range(table, s1: int, k1: int, s2: int, k2: int,
-                        cache: dict | None = None) -> list[tuple[str, str]]:
+                        cache: dict | None = None,
+                        skip_overwrites: bool = False,
+                        ) -> list[tuple[str, str]]:
     """Files between composite offsets (s1, k1) and (s2, k2]: offset
     (s, k) means every snapshot with offset <= s is fully emitted plus
     the first k path-sorted files of the NEXT append snapshot after s
@@ -862,9 +877,8 @@ def _stream_files_range(table, s1: int, k1: int, s2: int, k2: int,
     apps = _append_offsets(table)
     t1 = next((o for o in apps if o > s1), None)
     out: list[tuple[str, str]] = []
-    for t in apps:
-        if not (s1 < t <= s2):
-            continue
+    for t in sorted({_stream_offset_of(table, x) for x in
+                     _stream_snapshots(table, s1, s2, skip_overwrites)}):
         fl = _stream_snapshot_files(table, t, cache)
         out.extend(fl[k1 if (k1 and t == t1) else 0:])
     if k2:
@@ -1151,9 +1165,11 @@ class IcelakePartitionStreamReader(_TableFileReader, DataSourceStreamReader):
             return _plan_changelog_tasks(table, s[0], e[0], self._src)
         if s[1] or e[1]:
             files = _stream_files_range(table, s[0], s[1], e[0], e[1],
-                                        self._sf_cache)
+                                        self._sf_cache,
+                                        _skip_overwrites(self.options))
         else:  # snapshot-aligned: one linear manifest walk
-            files = _stream_files_between(table, s[0], e[0])
+            files = _stream_files_between(table, s[0], e[0],
+                                          _skip_overwrites(self.options))
         # evict fully-drained snapshots so the cache stays bounded by
         # the pending backlog, not the table's history
         self._sf_cache = {q: v for q, v in self._sf_cache.items()
@@ -1202,114 +1218,105 @@ class _WrittenFile(WriterCommitMessage):
 PROP_LAST_BATCH = "streaming.last-committed-batch-id"
 
 
-class IcelakeStreamWriter(DataSourceStreamWriter):
-    """`df.writeStream.format("icelake")`: transactional Iceberg sink.
+def _arrow_tables(items, spark_schema) -> Iterator:
+    """A sink task's input as Arrow tables: Spark hands the Arrow writer
+    record batches; a direct caller may pass rows (tuples or Rows in
+    `spark_schema` order), which become one table, built column-wise."""
+    import itertools
 
-    Each executor task writes its rows as one parquet file into a staged
-    path under the table's data dir and reports it as a commit message;
-    the driver's commit() turns the files into DataFile entries (footer
-    stats included) and appends them in ONE snapshot per epoch.
-    Exactly-once: the committed batch id is recorded in the table
-    properties in the same metadata swap, and a replayed epoch with
-    batchId <= the recorded one is dropped on the floor; abort() deletes
-    the staged files."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    items = iter(items)
+    first = next(items, None)
+    if first is None:
+        return
+    if isinstance(first, pa.RecordBatch):
+        yield from (pa.Table.from_batches([b])
+                    for b in itertools.chain([first], items))
+        return
+    schema = to_arrow_schema(spark_schema)
+    cols = zip(*itertools.chain([first], items))
+    yield pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+        schema=schema)
+
+
+class IcelakeStreamWriter(DataSourceStreamArrowWriter):
+    """`df.writeStream.format("icelake")`: transactional Iceberg sink,
+    a lane of the writer tree (write.py).
+
+    Each executor task adds its batches' partition layout columns and
+    hands them to the Arrow lane's task writer (write._write_arrow_files):
+    one parquet file per hive bucket, PARQUET:field_id at every nesting
+    level, staged under the query's data/stream-<uuid> dir and reported
+    as a commit message. The driver's commit() registers the epoch's
+    files through the writer tree's one tail (footer stats included)
+    and appends them in ONE snapshot per epoch. Exactly-once: the
+    committed batch id is recorded in the table properties in the same
+    metadata swap, and a replayed epoch with batchId <= the recorded one
+    is dropped on the floor; abort() deletes the staged files."""
 
     def __init__(self, options: dict, schema):
+        import uuid
+
+        from .fileio import io_join, resolve_io
+        from .table import IcebergTable
+        from .types.datatypes import schema_to_arrow_with_ids
+        from .write import _PART_PREFIX, _layout_types
+
         self.options = options
         self.spark_schema = schema
         self.path = options["path"]
-        import uuid as _uuid
-
-        from .fileio import is_uri, resolve_io
-        from .table import IcebergTable
-        from .write import _PART_PREFIX, _result_type
-
-        self.stage = f"stream-{_uuid.uuid4()}"
         # FileIO resolved at plan time and SHIPPED to executors (the
         # same discipline as the readers): a table on a registered
-        # custom scheme or object store must stage its files through
-        # the table's FileIO, not the local filesystem
-        self.io = resolve_io(self.path) if is_uri(self.path) else None
-        # capture the partition spec ON THE DRIVER (this object ships
-        # pickled to executors): each task computes its rows' transform
-        # values and writes one hive-dir file per partition — a single
-        # partitionless file would be silently pruned out of every
-        # partition-filtered scan of a partitioned table
+        # custom scheme or object store stages its files through it
+        self.io = resolve_io(self.path)
+        # holds every epoch's files of this query, committed or not
+        self.stage = io_join(self.path, "data", f"stream-{uuid.uuid4()}")
+        # the table's schema and spec are captured ON THE DRIVER (this
+        # object ships pickled to executors): each task writes one
+        # hive-dir file per partition — a single partitionless file
+        # would be silently pruned out of every partition-filtered scan
         t = IcebergTable.load(self.path)
         tschema = t.schema()
         spec = t.metadata.default_spec()
         self.part_info = []
         for pf in spec.fields:
             src = tschema.field_by_id(pf.source_column_id)
-            self.part_info.append(
-                (pf.name, pf.transform, src.name, src.field_type))
-        self.result_types = {
-            _PART_PREFIX + pf.name: (pf.name, _result_type(pf, tschema))
-            for pf in spec.fields}
+            self.part_info.append((_PART_PREFIX + pf.name, pf.transform,
+                                   src.name, src.field_type))
+        self.layout = _layout_types(spec, tschema)
+        self.file_schema = schema_to_arrow_with_ids(tschema)
 
     def write(self, iterator) -> _WrittenFile:
-        import os as _os
-        import uuid as _uuid
+        from .write import _write_arrow_files
 
+        tables = map(self._with_layout,
+                     _arrow_tables(iterator, self.spark_schema))
+        return _WrittenFile(files=_write_arrow_files(
+            tables, self.stage, self.file_schema,
+            [c for c, *_ in self.part_info], 0, "snappy", self.io))
+
+    def _with_layout(self, tbl):
+        """`tbl` plus one layout column per partition field: the
+        transform of each DISTINCT source value, escaped like the batch
+        writer's layout columns (write._esc_empty), taken back onto the
+        rows."""
         import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
+        import pyarrow.compute as pc
 
-        from .avro_data import _hive_value
         from .types.transforms import apply_transform_py
-        from .write import _PART_PREFIX
+        from .write import _esc_empty
 
-        from .fileio import io_join
-
-        arrow_schema = to_arrow_schema(self.spark_schema)
-        names = [f.name for f in self.spark_schema.fields]
-        rows = [tuple(r) for r in iterator]
-        if not rows:
-            return _WrittenFile(files=[])
-        stage_dir = io_join(self.path, "data", self.stage)
-        buckets: dict[tuple, list[tuple]] = {}
-        for r in rows:
-            vals = dict(zip(names, r))
-            key = tuple(apply_transform_py(tr, vals[src], st)
-                        for (_n, tr, src, st) in self.part_info)
-            buckets.setdefault(key, []).append(r)
-        written: list[tuple[str, int]] = []
-        from .avro_data import _esc_empty
-
-        for key, rws in buckets.items():
-            # _esc_empty: this lane builds dirs from RAW transform
-            # values (no writer_df layout encoding), so ''-vs-NULL and
-            # the literal marker need the escape here (review r13)
-            subdir = "/".join(
-                f"{_PART_PREFIX}{n}={_hive_value(_esc_empty(v))}"
-                for (n, _tr, _src, _st), v in zip(self.part_info, key))
-            d = io_join(stage_dir, subdir) if subdir else stage_dir
-            out = io_join(d, f"{_uuid.uuid4()}.parquet")
-            table = pa.Table.from_pylist(
-                [dict(zip(names, r)) for r in rws], schema=arrow_schema)
-            if self.io is not None:
-                import io as _iomod
-
-                buf = _iomod.BytesIO()
-                pq.write_table(table, buf)
-                self.io.makedirs(d)
-                self.io.write_bytes(out, buf.getvalue())
-            else:
-                _os.makedirs(d, exist_ok=True)
-                pq.write_table(table, out)
-            written.append((out, len(rws)))
-        return _WrittenFile(files=written)
-
-    def _discard(self, path: str) -> None:
-        if self.io is not None:
-            self.io.delete_quiet(path)
-            return
-        import os as _os
-
-        try:
-            _os.remove(path)
-        except OSError:
-            pass
+        for name, tr, src, st in self.part_info:
+            col = tbl.column(src).combine_chunks()
+            uniq = pc.unique(col)
+            vals = pa.array([_esc_empty(apply_transform_py(tr, v, st))
+                             for v in uniq.to_pylist()])
+            tbl = tbl.append_column(name, vals.take(
+                pc.index_in(col, value_set=uniq, skip_nulls=False)))
+        return tbl
 
     @property
     def _batch_prop(self) -> str:
@@ -1329,7 +1336,7 @@ class IcelakeStreamWriter(DataSourceStreamWriter):
     def commit(self, messages, batchId) -> None:  # noqa: N802
         from .table import IcebergTable
         from .transaction import Transaction
-        from .write import _build_data_file
+        from .write import _register_files
 
         t = IcebergTable.load(self.path)
         last = int(t.metadata.properties.get(self._batch_prop, -1))
@@ -1337,16 +1344,14 @@ class IcelakeStreamWriter(DataSourceStreamWriter):
                  for (p, n) in m.files if n > 0]
         if batchId <= last or not paths:
             for p in paths:  # replayed epoch: staged output is discarded
-                self._discard(p)
+                self.io.delete_quiet(p)
             return
-        schema = t.schema()
-        from .fileio import io_join
-
-        stage_dir = io_join(self.path, "data", self.stage)
-        entries = [_build_data_file(p, stage_dir, schema,
-                                    self.result_types, None) for p in paths]
         tx = Transaction(t)
-        tx.add_data_files(entries)
+        # the stage also holds earlier epochs' committed files: never
+        # removed here (own_stage=False)
+        tx.add_data_files(_register_files(self.io, self.stage, t.schema(),
+                                          self.layout, paths=paths,
+                                          own_stage=False))
         # record the epoch IN the same commit so replay-after-crash
         # cannot double-append; via Transaction.set_properties so a
         # conflict-retry (which refreshes the table, discarding any
@@ -1359,7 +1364,7 @@ class IcelakeStreamWriter(DataSourceStreamWriter):
             if m is None:
                 continue
             for (p, _n) in m.files:
-                self._discard(p)
+                self.io.delete_quiet(p)
 
 
 def register(spark) -> None:

@@ -1,5 +1,7 @@
 """CDC merge / upsert: batch formulation of the reference's equality-
-delta writer, plus position/equality delete-file writers.
+delta writer, plus the position/equality delete-file writers, which
+shape a delete frame and its schema and hand both to the writer tree
+(write.write_delete_files: field ids, one registration tail).
 
 Parity targets:
 - EqualityDeltaWriter (W7): /root/reference/icelake/src/io_v2/
@@ -23,16 +25,17 @@ by key, no driver state.
 
 from __future__ import annotations
 
-import uuid
-from typing import Any
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .types.datatypes import Schema
+from .types.datatypes import LONG, STRING, NestedField, Schema, StructType
 from .types.manifest import (
     CONTENT_EQUALITY_DELETES,
     CONTENT_POSITION_DELETES,
+    POS_DELETE_FILE_PATH_ID,
+    POS_DELETE_POS_ID,
+    POS_DELETE_ROW_ID,
     DataFile,
 )
 
@@ -49,68 +52,30 @@ OP_DELETE = 2
 OP_APPEND = 3
 
 
-def _write_small_parquet(table, df: DataFrame, content: int,
-                         equality_ids: list[int] | None = None) -> list[DataFile]:
-    """Write a delete-file DataFrame under data/ and build its DataFile.
-    Callers own any spec-mandated ordering (write_position_delete_files
-    sorts by (file_path, pos) before calling)."""
-    import pyarrow.parquet as pq
-
-    from .fileio import (delete_crc_sidecar as _delete_crc_sidecar,
-                         io_join, norm_path, resolve_io)
-
-    io = resolve_io(table.path)
-    stage = io_join(table.path, "data", f"del-{uuid.uuid4().hex[:16]}")
-    df.write.parquet(io.to_spark_path(stage))
-    files = []
-    for p, sz in io.list_files(stage):
-        if not p.endswith(".parquet"):
-            continue
-        md = pq.read_metadata(io.open_input(p))
-        if md.num_rows == 0:
-            # the committer leaves zero-row part files for output tasks
-            # that received no rows; no manifest ever tracks them, so —
-            # now that the write itself is the empty-match probe (r13) —
-            # each no-match DML would otherwise accumulate an orphan
-            # under data/ forever. Reclaim them, the same policy as
-            # write_data_files' zero-row drop — including the Hadoop
-            # checksum sidecar (.part-*.crc on local FS; ADVICE r13)
-            io.delete_quiet(p)
-            _delete_crc_sidecar(io, p)
-            continue
-        files.append(DataFile(
-            file_path=norm_path(p),
-            partition={},
-            record_count=md.num_rows,
-            file_size_in_bytes=sz,
-            content=content,
-            equality_ids=equality_ids,
-        ))
-    if not files:
-        # fully-empty stage (the no-match case): reclaim the committer
-        # markers (_SUCCESS) AND the stage directory itself — list_files
-        # returns files only, so file-wise deletion left one empty
-        # data/del-* dir behind per no-match DML on local FS
-        # (ADVICE r13; object-store backends treat dirs as virtual)
-        io.remove_tree(stage)
-    return files
-
-
 def write_position_delete_files(table, deletes: DataFrame,
                                 target_partitions: int | None = None,
                                 ) -> list[DataFile]:
-    """deletes: DataFrame(file_path string, pos long[, row struct]).
-    Sorted per spec.
+    """deletes: DataFrame(file_path string, pos long[, row struct]),
+    written sorted by (file_path, pos) per spec with the spec's reserved
+    field ids (file_path 2147483546, pos 2147483545, row 2147483544;
+    position_delete_writer.rs:90-178) and registered by the writer
+    tree's one tail (write._register_files), so its manifest entry
+    carries counts and bounds like a data file's.
 
     The optional `row` column carries the deleted row's content — the
-    spec's optional payload (reserved field-ids 2147483546=file_path,
-    2147483545=pos, 2147483544=row; position_delete_writer.rs:90-178) —
-    written when the caller provides it (see delete_rows /
-    `write.position-delete.include-row`). Readers that don't need it
-    (our MoR scan) simply never project it.
+    spec's optional payload — written when the caller provides it (see
+    delete_rows / `write.position-delete.include-row`); its members
+    carry no ids (Spark stamps top-level ids only). Readers that don't
+    need it (our MoR scan) simply never project it.
     """
+    from .write import write_delete_files
+
+    fields = [NestedField(POS_DELETE_FILE_PATH_ID, "file_path", STRING, True),
+              NestedField(POS_DELETE_POS_ID, "pos", LONG, True)]
     cols = [F.col("file_path").cast("string"), F.col("pos").cast("long")]
     if "row" in deletes.columns:
+        fields.append(NestedField(POS_DELETE_ROW_ID, "row",
+                                  table.schema().struct))
         cols.append(F.col("row"))
     df = deletes.select(*cols)
     # global sort by (file, pos) mirrors SortedPositionDeleteWriter (O1).
@@ -123,24 +88,28 @@ def write_position_delete_files(table, deletes: DataFrame,
     else:
         df = df.repartition("file_path")
     df = df.sortWithinPartitions("file_path", "pos")
-    return _write_small_parquet(table, df, CONTENT_POSITION_DELETES)
+    return write_delete_files(table, df, Schema(StructType(tuple(fields))),
+                              CONTENT_POSITION_DELETES)
 
 
 def write_equality_delete_files(table, keys: DataFrame,
                                 key_cols: list[str]) -> list[DataFile]:
-    from .write import PROP_TARGET_FILE_SIZE, _coalesce_to_target
+    """The distinct `key_cols` of `keys` as equality-delete files: each
+    key column carries its table field id, and the entry its
+    equality_ids, counts and bounds."""
+    from .write import (PROP_TARGET_FILE_SIZE, _coalesce_to_target,
+                        write_delete_files)
 
-    schema = table.schema()
-    eq_ids = [schema.field_by_name(c).field_id for c in key_cols]
-    props = table.metadata.properties
-    tfs = props.get(PROP_TARGET_FILE_SIZE)
+    key_schema = Schema(StructType(tuple(table.schema().field_by_name(c)
+                                         for c in key_cols)))
+    tfs = table.metadata.properties.get(PROP_TARGET_FILE_SIZE)
     # sized like an unpartitioned data write: the key set keeps its
     # source's partition count (the shuffle partitions of a keyed
     # window), which would otherwise write one small file per partition
     df = _coalesce_to_target(keys.select(*key_cols).dropDuplicates(key_cols),
-                             props, int(tfs) if tfs else None)
-    return _write_small_parquet(table, df, CONTENT_EQUALITY_DELETES,
-                                equality_ids=eq_ids)
+                             int(tfs) if tfs else None)
+    return write_delete_files(table, df, key_schema, CONTENT_EQUALITY_DELETES,
+                              equality_ids=[f.field_id for f in key_schema.fields])
 
 
 # the local properties that place a job in its caller's job group and
@@ -444,7 +413,7 @@ def _row_level_dml(table, spark, condition: str,
             sel.append(F.struct(
                 *[f.name for f in spark_schema.fields]).alias("row"))
         # the writes are their own emptiness probe (r13): zero-row
-        # outputs are dropped by _write_small_parquet / write_data_files,
+        # outputs are dropped by the writer tree's registration tail,
         # so an empty match yields [] — the old take(1) pre-probe was a
         # full extra pass over the matched set just to learn what the
         # write pass discovers anyway. The pos-delete write, UPDATE's

@@ -166,28 +166,48 @@ def stateful_dedup(stream_df: DataFrame, key_cols: list[str],
                                     "append", GroupStateTimeout.ProcessingTimeTimeout))
 
 
+def append_snapshots(snapshots, skip_overwrites: bool = False) -> list:
+    """The one per-snapshot rule of the append-only reads (the
+    incremental batch read and `readStream.format("icelake")`): an
+    'append' contributes the files it added; 'delete' (a MoR delete adds
+    no data files) and 'replace' (compaction) skip LOSSLESSLY. An
+    'overwrite' (upsert/MERGE/CoW rewrite) carries NEW rows interleaved
+    with rewrites of already-read ones — silently skipping it loses the
+    new rows, so it RAISES unless skip_overwrites=True (the caller then
+    owns the gap; Iceberg's incremental append scan fails the same way,
+    and its streaming source gates the skip behind
+    streaming-skip-overwrite-snapshots). Row-level completeness across
+    overwrites is changes()' job. Returns the contributing snapshots,
+    in the given order."""
+    out = []
+    for s in snapshots:
+        op = (s.summary or {}).get("operation", "append")
+        if op == "overwrite" and not skip_overwrites:
+            raise ValueError(
+                f"incremental append scan: snapshot {s.snapshot_id} "
+                f"is an overwrite (upsert/MERGE/CoW) whose new rows "
+                f"an append-only scan cannot separate from rewrites "
+                f"— pass skip_overwrites=True (read option "
+                f"skip_overwrite_snapshots=true) to skip such commits, "
+                f"or use changes() for row-level CDC")
+        if op == "append":
+            out.append(s)
+    return out
+
+
 def incremental_files(table, snapshot_id: int | None = None,
                       to_snapshot_id: int | None = None,
                       skip_overwrites: bool = False) -> list:
-    """FileScanTasks (paths resolved) of data files ADDED by append
-    snapshots in the ancestry window (snapshot_id, to_snapshot_id] —
-    the shared walk behind table.incremental, stream_from_table, and
-    the DSv2 batch reader's start/end-snapshot-id options.
+    """FileScanTasks (paths resolved) of data files added in the
+    ancestry window (snapshot_id, to_snapshot_id] by the snapshots
+    `append_snapshots` keeps — the shared walk behind
+    table.incremental, stream_from_table, and the DSv2 batch reader's
+    start/end-snapshot-id options.
 
     The window is ancestry-based, not a sequence range: every v1
     snapshot carries sequence 0 (a seq window would return empty
     forever — the same trap changelog.py documents), and ancestry also
-    excludes WAP-staged snapshots.
-
-    Non-append handling (code-review r9, Iceberg parity): 'replace'
-    (compaction) and 'delete' (MoR delete — adds no data files) skip
-    LOSSLESSLY. An 'overwrite' (upsert/MERGE/CoW rewrite) carries NEW
-    rows interleaved with rewrites of already-streamed ones — silently
-    skipping it loses the new rows, so it RAISES unless
-    skip_overwrites=True (the caller then owns the gap; Iceberg's
-    incremental append scan fails the same way, and its streaming
-    source gates the skip behind streaming-skip-overwrite-snapshots).
-    Row-level completeness across overwrites is changes()' job."""
+    excludes WAP-staged snapshots."""
     from .changelog import _added_in
 
     if table.current_snapshot() is None:
@@ -210,24 +230,12 @@ def incremental_files(table, snapshot_id: int | None = None,
         if to_snapshot_id is not None else table.metadata.ancestry_ids()
     base_ids = (table.metadata.ancestry_ids(snapshot_id)
                 if snapshot_id is not None else set())
-    tasks = []
-    for s in sorted(table.metadata.snapshots, key=lambda s: s.timestamp_ms):
-        if s.snapshot_id in base_ids:
-            continue
-        if s.snapshot_id not in main_ids:
-            continue  # WAP branch-staged snapshot: not published to main
-        op = (s.summary or {}).get("operation", "append")
-        if op != "append":
-            if op == "overwrite" and not skip_overwrites:
-                raise ValueError(
-                    f"incremental append scan: snapshot {s.snapshot_id} "
-                    f"is an overwrite (upsert/MERGE/CoW) whose new rows "
-                    f"an append-only scan cannot separate from rewrites "
-                    f"— pass skip_overwrites=True to skip such commits, "
-                    f"or use changes() for row-level CDC")
-            continue
-        tasks += _added_in(table, s)[0]
-    return tasks
+    # a snapshot outside main_ids is WAP branch-staged: not published
+    window = [s for s in sorted(table.metadata.snapshots,
+                                key=lambda s: s.timestamp_ms)
+              if s.snapshot_id in main_ids and s.snapshot_id not in base_ids]
+    return [t for s in append_snapshots(window, skip_overwrites)
+            for t in _added_in(table, s)[0]]
 
 
 def stream_from_table(spark, table,

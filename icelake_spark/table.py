@@ -565,50 +565,21 @@ class IcebergTable:
     def add_files(self, paths: list[str], file_format: str = "PARQUET",
                   partition: dict | None = None) -> None:
         """Register existing data files into the table without rewriting
-        them (Iceberg's `add_files` procedure). Stats come from the
-        footers (parquet) or file size only (orc/avro)."""
-        from .transaction import Transaction
-        from .types.manifest import DataFile
-
+        them (Iceberg's `add_files` procedure). Each entry comes from the
+        writer tree's one DataFile builder: counts and bounds from
+        parquet footers, row counts for ORC and Avro."""
         from .fileio import dirname, norm_path, resolve_io
+        from .transaction import Transaction
+        from .write import _build_data_file
 
+        schema = self.schema()
         entries = []
-        for p in paths:
-            p = norm_path(p)
-            fio = resolve_io(p)
-            if file_format.upper() == "PARQUET":
-                from .write import _build_data_file
-
-                df_entry = _build_data_file(p, dirname(p),
-                                            self.schema(), {}, io=fio)
-            else:
-                df_entry = DataFile(file_path=p, file_format=file_format.upper(),
-                                    partition=partition or {},
-                                    record_count=-1,
-                                    file_size_in_bytes=fio.size(p))
-                # record_count unknown without a format-specific footer
-                # reader; use Spark to count once (driver-side, small)
-                from pyspark.sql import SparkSession
-
-                spark = SparkSession.getActiveSession()
-                fmt = file_format.lower()
-                if fmt == "avro":
-                    # avro_io count works with or without spark-avro
-                    from .avro_data import count_avro_records
-
-                    df_entry.record_count = count_avro_records(p)
-                elif spark is not None:
-                    df_entry.record_count = spark.read.orc(
-                        fio.to_spark_path(p)).count()
-                else:
-                    # never persist the -1 sentinel: it poisons summary
-                    # totals and stats() forever
-                    from pyarrow import orc as _orc
-
-                    df_entry.record_count = _orc.ORCFile(fio.open_input(p)).nrows
-            if partition:
-                df_entry.partition = dict(partition)
-            entries.append(df_entry)
+        for p in map(norm_path, paths):
+            entry = _build_data_file(p, dirname(p), schema, {},
+                                     io=resolve_io(p),
+                                     file_format=file_format)
+            entry.partition = dict(partition or {})
+            entries.append(entry)
         tx = Transaction(self)
         tx.add_data_files(entries)
         tx.commit("append")

@@ -37,6 +37,7 @@ MANIFEST_CONTENT_DELETES = 1
 # reserved field ids for position-delete files (Iceberg spec)
 POS_DELETE_FILE_PATH_ID = 2147483546
 POS_DELETE_POS_ID = 2147483545
+POS_DELETE_ROW_ID = 2147483544
 
 
 @dataclass

@@ -1,22 +1,26 @@
-"""Append write path: transform columns → shuffle by partition →
-parquet fan-out → per-file stats → DataFile entries.
+"""The writer tree: every table file (data, position delete, equality
+delete, stream sink) is written, inventoried and described here.
 
-Parity targets:
-- writer tree semantics: /root/reference/icelake/src/io_v2/ (SURVEY §2.5)
-  — Spark's shuffle + partitionBy replaces FanoutPartitionedWriter's
-  in-process hashmap (partition_writer.rs:26-122);
-- rolling file split: rolling_writer.rs:59-244 → maxRecordsPerFile;
-- per-file column stats from parquet footers: in_memory.rs:1631-1716
-  (DataFileBuilder) — we read footers with pyarrow in a thread pool;
-- file naming/layout: location_generator.rs — paths are recorded in
-  manifests so the exact names are free; we keep Spark task output names
-  under data/<uuid>/ (hive-style partition dirs when partitioned).
+Lanes: Spark's parquet and ORC writers (`write_data_files`,
+`write_delete_files`; committed by Spark's output committer, top-level
+field ids via `parquet.field.id` alias metadata); the Arrow task writer
+`_write_arrow_files` (the opt-in `write.parquet.field-id-mode=arrow`
+lane and the stream sink, datasource.IcelakeStreamWriter; ids at every
+nesting level, reference to_arrow.rs:15-45); the Avro lane
+(avro_data.write_avro_data). Spark's shuffle + partitionBy replaces the
+reference's FanoutPartitionedWriter (io_v2/, SURVEY §2.5), and
+maxRecordsPerFile its rolling writer (rolling_writer.rs:59-244).
 
-Scale notes: the write itself is fully distributed (one Spark job, no
-driver data movement); only footer reads (~KB each) happen driver-side,
-parallelized over threads. At very large file counts these can move into
-a Spark job over the file list (planner returns a DataFrame) — see
-SURVEY §7 risk 8.
+One registration tail, `_register_files`, and one DataFile builder,
+`_build_data_file`: counts and bounds by field id from parquet footers
+for data and delete files alike, row counts for ORC and Avro
+(DataFileBuilder, in_memory.rs:1631-1716).
+
+One partition-directory layout: `__p_<field>=<value>` hive dirs, named
+by `_partition_dir` and read by `_parse_hive_value` — NULL is
+__HIVE_DEFAULT_PARTITION__, a string '' the _EMPTY_PART marker (a
+literal marker is prefix-escaped), values percent-quoted. Manifests
+record every path, so file names themselves are free.
 """
 
 from __future__ import annotations
@@ -26,6 +30,7 @@ import urllib.parse
 import uuid
 from concurrent.futures import ThreadPoolExecutor
 from decimal import Decimal
+from functools import partial
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -40,22 +45,100 @@ from .fileio import (
     rel_under,
     resolve_io,
 )
-from .types.datatypes import PrimitiveType, Schema, encode_bound
+from .types.datatypes import PrimitiveType, Schema, encode_bound, to_spark_type
 from .types.manifest import CONTENT_DATA, DataFile
 from .types.metadata import PartitionSpec
 from .types.transforms import transform_column, transform_result_type
 
+# ----------------------------------------------------- partition layout
+
 _PART_PREFIX = "__p_"
+_EMPTY_PART = "__EMPTY_STRING__"
+_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _esc_empty(v: Any) -> Any:
+    """The ''-vs-NULL marker for a STRING partition value (Spark's
+    partitionBy writes both as __HIVE_DEFAULT_PARTITION__, so a
+    partition_filter on '' would prune those rows). A literal marker
+    value is prefix-escaped, or it would decode back as ''."""
+    if isinstance(v, str) and (v == "" or v.startswith(_EMPTY_PART)):
+        return _EMPTY_PART + v
+    return v
+
+
+def _hive_value(v: Any) -> str:
+    if v is None:
+        return _HIVE_NULL
+    # percent-escape like Spark's hive layout: '/', '%', '=' etc. in a
+    # value would otherwise corrupt the dir structure, and
+    # _parse_hive_value unconditionally unquotes
+    return urllib.parse.quote(str(v), safe="")
+
+
+def _partition_dir(names: list[str], values: list) -> str:
+    """The hive subdir of one layout tuple (values already escaped)."""
+    return "/".join(f"{n}={_hive_value(v)}" for n, v in zip(names, values))
+
+
+def _parse_hive_value(raw: str, t: PrimitiveType) -> Any:
+    """Parse a hive-style partition-dir value into a python value."""
+    if raw == _HIVE_NULL:
+        return None
+    s = urllib.parse.unquote(raw)
+    if t.name == "string":
+        # decode the ''-vs-NULL layout encoding
+        if s == _EMPTY_PART:
+            return ""
+        if s.startswith(_EMPTY_PART):
+            return s[len(_EMPTY_PART):]
+    n = t.name
+    if n in ("int", "long"):
+        return int(s)
+    if n in ("float", "double"):
+        return float(s)
+    if n == "decimal":
+        return Decimal(s)
+    if n == "boolean":
+        return s.lower() == "true"
+    if n == "date":
+        return dt.date.fromisoformat(s)
+    if n == "timestamp":
+        return dt.datetime.fromisoformat(s)
+    if n == "timestamptz":
+        v = dt.datetime.fromisoformat(s)
+        return v if v.tzinfo else v.replace(tzinfo=dt.timezone.utc)
+    return s  # string / uuid
+
+
+def _result_type(pf, schema: Schema) -> PrimitiveType:
+    src = schema.field_by_id(pf.source_column_id)
+    return transform_result_type(pf.transform, src.field_type if src else None)
+
+
+def _layout_types(spec: PartitionSpec, schema: Schema) -> dict:
+    """{layout column: (partition field name, result type)}: how the
+    registration tail reads a file's partition tuple off its dirs."""
+    return {_PART_PREFIX + pf.name: (pf.name, _result_type(pf, schema))
+            for pf in spec.fields}
 
 
 def partition_columns(spec: PartitionSpec, schema: Schema) -> list:
-    """Build the transform Column expressions for a partition spec."""
+    """The layout Column expressions of a partition spec: each field's
+    transform, aliased `__p_<field>`. A string result carries
+    _esc_empty's ''-vs-NULL encoding (Spark's partitionBy writes '' and
+    NULL alike); data-file contents are untouched."""
     cols = []
     for pf in spec.fields:
         src = schema.field_by_id(pf.source_column_id)
         if src is None:
             raise KeyError(f"partition source field id {pf.source_column_id} not in schema")
         col = transform_column(pf.transform, F.col(src.name), src.field_type)
+        if _result_type(pf, schema).name == "string":
+            col = (F.when(col == "", F.lit(_EMPTY_PART))
+                   .when(col.startswith(_EMPTY_PART),
+                         F.concat(F.lit(_EMPTY_PART), col))
+                   .otherwise(col))
         cols.append(col.alias(_PART_PREFIX + pf.name))
     return cols
 
@@ -132,7 +215,7 @@ def write_data_files(
     target_file_size: int | None = None,
     preserve_distribution: bool = False,
 ) -> list[DataFile]:
-    """Distributed write of df as new parquet data files; returns DataFile
+    """Distributed write of df as new data files; returns DataFile
     entries with stats. Does NOT commit — pair with Transaction.
 
     `preserve_distribution=True` keeps the caller's partitioning and
@@ -152,25 +235,13 @@ def write_data_files(
     # select would let e.g. an int column land in a long field as
     # physical INT32 parquet, which the reader's LongType request then
     # rejects on every subsequent scan (vectorized reader refuses the
-    # conversion) — cast here so written files always match the schema
-    from .types.datatypes import to_spark_type
-
-    # the alias metadata (parquet.field.id) makes Spark's parquet
-    # writer stamp Iceberg field ids into the file schema
-    # (fieldId.write.enabled default true), so data files interop with
-    # field-id-based readers (Java Iceberg, pyiceberg, our DSv2
-    # reader) exactly like the reference's to_arrow.rs:15-45 id
-    # propagation. WRITE side only: read schemas stay id-free — an
-    # id-carrying read schema makes Spark reject id-less legacy files.
+    # conversion) — cast here so written files always match the schema.
     # Nested (struct-member / list / map element) ids are not
     # expressible via alias metadata — TOP-LEVEL ids only; nested
     # binding stays name-based (rename mapping) UNLESS the table opts
-    # into the arrow lane (write.parquet.field-id-mode=arrow →
-    # write_parquet_arrow below), which stamps every nesting level.
-    df = df.select(*[
-        F.col(f.name).cast(to_spark_type(f.field_type))
-        .alias(f.name, metadata={"parquet.field.id": f.field_id})
-        for f in schema.fields])
+    # into the arrow lane (write.parquet.field-id-mode=arrow), which
+    # stamps every nesting level.
+    df = _with_field_ids(df, schema, cast=True)
 
     # table-declared sort order (O3) + distribution mode:
     #   hash (default) — shuffle on the partition-transform values so
@@ -193,26 +264,10 @@ def write_data_files(
     pnames: list[str] = []
     if spec.is_unpartitioned and not preserve_distribution \
             and dist_mode == "hash":
-        writer_df = _coalesce_to_target(writer_df, props, target_file_size)
+        writer_df = _coalesce_to_target(writer_df, target_file_size)
     if not spec.is_unpartitioned:
-        pcols = partition_columns(spec, schema)
         pnames = [_PART_PREFIX + pf.name for pf in spec.fields]
-        # empty-string partition values must stay distinguishable from
-        # NULL: Spark's partitionBy writes BOTH as
-        # __HIVE_DEFAULT_PARTITION__, so the manifest recorded NULL
-        # for '' rows and a partition_filter={'c': ''} scan silently
-        # pruned them (review r12). Encode '' (and prefix-escape a
-        # literal marker) in the LAYOUT column only; _parse_hive_value
-        # decodes it back — data-file contents are untouched.
-        enc = []
-        for pf, c in zip(spec.fields, pcols):
-            if _result_type(pf, schema).name == "string":
-                c = (F.when(c == "", F.lit(_EMPTY_PART))
-                     .when(c.startswith(_EMPTY_PART),
-                           F.concat(F.lit(_EMPTY_PART), c))
-                     .otherwise(c)).alias(_PART_PREFIX + pf.name)
-            enc.append(c)
-        writer_df = df.withColumns(dict(zip(pnames, enc)))
+        writer_df = df.select("*", *partition_columns(spec, schema))
     if not preserve_distribution and dist_mode != "none":
         if dist_mode == "range" and sort_cols:
             range_keys = [F.col(p) for p in pnames] + list(sort_cols)
@@ -256,18 +311,15 @@ def write_data_files(
     # this environment's classpath.
     file_format = props.get(PROP_FORMAT, "parquet").lower()
     # paths returned by committer-less python-worker lanes (avro, arrow
-    # parquet): committed by task path list, never by stage dir walk
+    # parquet): a retried or speculative attempt may leave orphan part
+    # files in the stage, so they register by task path list, never by
+    # the stage listing. Their FileIO is resolved here and shipped with
+    # the task closure; memory:// cannot be (each worker would write to
+    # its own in-process store)
     task_paths: list[str] | None = None
     if file_format == "avro":
         from .avro_data import write_avro_data
 
-        # avro tasks have no output committer: inventory ONLY the paths
-        # the winning task attempts returned, never the stage dir walk
-        # (a retried/speculative attempt may leave orphan part files).
-        # register_io customs work — the lane closes over the FileIO
-        # resolved in THIS process and ships it; memory:// cannot (each
-        # worker would write to its own in-process store and the bytes
-        # evaporate with the worker)
         _refuse_process_local_store(table.path, "avro")
         task_paths = write_avro_data(writer_df, stage, schema,
                                      partition_cols=pnames,
@@ -280,9 +332,6 @@ def write_data_files(
         w.orc(io.to_spark_path(stage))
     elif file_format == "parquet" \
             and props.get(PROP_FIELD_ID_MODE, "name").lower() == "arrow":
-        # opt-in pyarrow writer lane: stamps PARQUET:field_id at EVERY
-        # nesting level (reference to_arrow.rs:15-45); Spark's alias
-        # metadata above covers top-level ids only
         _refuse_process_local_store(table.path, "arrow parquet")
         task_paths = write_parquet_arrow(
             writer_df, stage, schema, partition_cols=pnames,
@@ -293,79 +342,193 @@ def write_data_files(
             if k.startswith(PROP_BLOOM_PREFIX) and v.lower() == "true":
                 col = k[len(PROP_BLOOM_PREFIX):]
                 w = w.option(f"parquet.bloom.filter.enabled#{col}", "true")
-        # int64 micros per the Iceberg spec; Spark's INT96 default also
-        # writes NO parquet column statistics, silently stripping every
-        # timestamp column's zone-map bounds (review r13). Set/restore
-        # is safe here: .parquet() executes eagerly. default_session
-        # sets it globally; this covers foreign sessions.
-        _sess = writer_df.sparkSession
-        _TT = "spark.sql.parquet.outputTimestampType"
-        _prev_tt = _sess.conf.get(_TT, None)
-        if _prev_tt == "TIMESTAMP_MICROS":
-            # already the session default (default_session sets it):
-            # skip the set/restore — also keeps this safe when DML
-            # overlaps two writes on driver threads (guide §2.6), since
-            # the conf is session-global, not thread-local
-            w.parquet(io.to_spark_path(stage))
-        else:
-            _sess.conf.set(_TT, "TIMESTAMP_MICROS")
-            try:
-                w.parquet(io.to_spark_path(stage))
-            finally:
-                if _prev_tt is None:
-                    _sess.conf.unset(_TT)
-                else:
-                    _sess.conf.set(_TT, _prev_tt)
+        _write_parquet(w, writer_df.sparkSession, io.to_spark_path(stage))
     else:
         raise ValueError(f"unsupported {PROP_FORMAT}={file_format} "
                          "(parquet|orc|avro)")
+    return _register_files(io, stage, schema, _layout_types(spec, schema),
+                           paths=task_paths, file_format=file_format.upper(),
+                           sort_order_id=sort_order_id)
 
-    # inventory written files (parquet/orc commit via Spark's committer,
-    # so the stage walk only ever sees complete files; the python-worker
-    # lanes use the task-returned path list instead)
-    known_sizes: dict[str, int] = {}
-    if task_paths is not None:
-        paths = list(task_paths)
-    else:
-        listed = [(f, sz) for f, sz in io.list_files(stage)
-                  if f.endswith((".parquet", ".orc"))]
-        paths = [f for f, _sz in listed]
-        # reuse the sizes the listing already returned: re-statting
-        # every file in _build_data_file is one extra HEAD request per
-        # written file per commit on an object store (review r11)
-        known_sizes = dict(listed)
-    result_types = {
-        _PART_PREFIX + pf.name: (pf.name, _result_type(pf, schema)) for pf in spec.fields
-    }
-    if len(paths) > DISTRIBUTED_STATS_THRESHOLD:
-        out = _build_data_files_distributed(
-            table, paths, stage, schema, result_types, sort_order_id, io,
-            known_sizes=known_sizes)
-    else:
-        with ThreadPoolExecutor(max_workers=16) as pool:
-            out = list(pool.map(
-                lambda p: _build_data_file(p, stage, schema, result_types,
-                                           sort_order_id, io,
-                                           size=known_sizes.get(p)), paths))
-    # Spark's committer leaves ZERO-ROW part files for output tasks that
-    # received no rows; committing them bloats manifests forever, and —
-    # carrying no column stats — they survive every zone-map prune, so
-    # a fully-pruned time-range scan still opened them (review r13).
-    # Drop them from the commit and reclaim the bytes.
-    live = [d for d in out if (d.record_count or 0) > 0]
-    if len(live) != len(out):
-        for d in out:
-            if (d.record_count or 0) == 0:
-                io.delete_quiet(d.file_path)
-                # and the local-FS checksum sidecar (ADVICE r13)
-                delete_crc_sidecar(io, d.file_path)
-    if not live:
-        # fully-empty write (the no-match DML probe case, r13): reclaim
-        # the committer markers (_SUCCESS) AND the stage directory —
-        # file-wise deletion left an empty uuid stage dir (plus any
-        # partition subdirs) behind per no-match DML (ADVICE r13)
+
+def _with_field_ids(df: DataFrame, schema: Schema, cast: bool) -> DataFrame:
+    """df's columns in schema order, each aliased with its field id: the
+    alias metadata (parquet.field.id) makes Spark's parquet writer
+    stamp Iceberg field ids into the file schema (fieldId.write.enabled
+    default true), so files interop with field-id-based readers (Java
+    Iceberg, pyiceberg, our DSv2 reader) like the reference's
+    to_arrow.rs:15-45 id propagation. WRITE side only: read schemas
+    stay id-free — an id-carrying read schema makes Spark reject
+    id-less legacy files. `cast` aligns each column with the schema's
+    type (data files); a delete file's columns already have their
+    types, and a struct cast would demand the schema's nullability of
+    every member."""
+    cols = []
+    for f in schema.fields:
+        c = F.col(f.name)
+        if cast:
+            c = c.cast(to_spark_type(f.field_type))
+        cols.append(c.alias(f.name, metadata={"parquet.field.id": f.field_id}))
+    return df.select(*cols)
+
+
+def _write_parquet(w, spark, path: str) -> None:
+    """Spark's parquet write with int64-micros timestamps, the Iceberg
+    spec's encoding: Spark's INT96 default also writes NO parquet column
+    statistics, silently stripping every timestamp column's zone-map
+    bounds. default_session sets the conf, and scoped_conf leaves a
+    session that holds it untouched — which keeps two writes that DML
+    overlaps on driver threads (delta._overlap) safe, the conf being
+    session-global, not thread-local."""
+    from .ops.util import scoped_conf
+
+    with scoped_conf(spark, "spark.sql.parquet.outputTimestampType",
+                     "TIMESTAMP_MICROS"):
+        w.parquet(path)
+
+
+def write_delete_files(table, df: DataFrame, schema: Schema, content: int,
+                       equality_ids: list[int] | None = None) -> list[DataFile]:
+    """Write a delete-file frame (its columns named as `schema`'s, its
+    spec-mandated order already applied by the caller) as parquet with
+    field ids under data/del-<uuid>, and register it. Returns [] when
+    the frame is empty: the write is its own emptiness probe (r13)."""
+    io = resolve_io(table.path)
+    stage = io_join(table.path, "data", f"del-{uuid.uuid4().hex[:16]}")
+    _write_parquet(_with_field_ids(df, schema, cast=False).write,
+                   df.sparkSession, io.to_spark_path(stage))
+    return _register_files(io, stage, schema, content=content,
+                           equality_ids=equality_ids)
+
+
+def _register_files(io: FileIO, stage: str, schema: Schema,
+                    layout: dict | None = None, paths: list[str] | None = None,
+                    file_format: str = "PARQUET", content: int = CONTENT_DATA,
+                    equality_ids: list[int] | None = None,
+                    sort_order_id: int | None = None,
+                    own_stage: bool = True) -> list[DataFile]:
+    """The one registration tail of every writer: the `paths` the
+    winning tasks returned, else the stage listing (Spark's committer
+    only publishes complete files; its sizes are reused — a re-stat is
+    one HEAD request per file on an object store), each built into a
+    DataFile on threads or as a Spark job. Zero-row files (Spark's
+    committer leaves them for tasks that got no rows; they would bloat
+    manifests and survive every zone-map prune) are deleted with their
+    .crc sidecar, and a stage this call created that holds no file is
+    removed. The stream sink's stage also holds earlier epochs'
+    committed files: own_stage=False keeps it."""
+    sizes: dict[str, int] = {}
+    if paths is None:
+        ext = "." + file_format.lower()
+        sizes = {f: sz for f, sz in io.list_files(stage) if f.endswith(ext)}
+        paths = list(sizes)
+    build = partial(_build_data_file, stage=stage, schema=schema,
+                    layout=layout or {}, io=io, file_format=file_format,
+                    content=content, equality_ids=equality_ids,
+                    sort_order_id=sort_order_id)
+    out = _build_all(build, paths, sizes)
+    live = [d for d in out if d.record_count]
+    for d in out:
+        if not d.record_count:
+            io.delete_quiet(d.file_path)
+            delete_crc_sidecar(io, d.file_path)
+    if own_stage and not live:
         io.remove_tree(stage)
     return live
+
+
+def _align(tbl: "pa.Table", file_schema: "pa.Schema") -> "pa.Table":
+    """Reorder/cast an Arrow batch to the id-stamped file schema. Spark
+    has no uuid type, so uuid columns arrive as canonical-hex strings
+    and convert to the spec's fixed[16] here; everything else (int64 µs
+    → time64, session-tz → UTC timestamps, decimals) is a plain cast."""
+    import pyarrow as pa
+
+    cols = []
+    for f in file_schema:
+        col = tbl.column(f.name)
+        if pa.types.is_fixed_size_binary(f.type) \
+                and pa.types.is_string(col.type):
+            col = pa.chunked_array([pa.array(
+                [None if s is None else uuid.UUID(s).bytes
+                 for s in c.to_pylist()], type=f.type)
+                for c in col.chunks] or [pa.array([], type=f.type)])
+        cols.append(col)
+    return pa.Table.from_arrays(
+        cols, names=[f.name for f in file_schema]).cast(file_schema)
+
+
+def _split_by_layout(tbl: "pa.Table", pcols: list[str]) -> list:
+    """[(hive subdir, rows)] per distinct layout tuple of a batch, the
+    layout columns dropped — one Arrow group-by, no per-row Python."""
+    import numpy as np
+    import pyarrow as pa
+
+    if not pcols:
+        return [("", tbl)]
+    groups = (tbl.select(pcols)
+              .append_column("__i", pa.array(np.arange(tbl.num_rows)))
+              .group_by(pcols, use_threads=False)
+              .aggregate([("__i", "list")]))
+    rows = tbl.drop_columns(pcols)
+    return [(_partition_dir(pcols, [g[c] for c in pcols]),
+             rows.take(g["__i_list"])) for g in groups.to_pylist()]
+
+
+def _write_arrow_files(tables, stage: str, file_schema: "pa.Schema",
+                       pcols: list[str], roll: int, codec: str,
+                       fio: FileIO) -> list[tuple[str, int]]:
+    """The Arrow task writer of the python-worker parquet lanes (the
+    arrow parquet lane and the stream sink): splits each Arrow table by
+    its layout columns `pcols`, writes each hive bucket against the
+    id-stamped `file_schema` and returns the (path, rows) it finished.
+
+    Scale shape: one streaming ParquetWriter per open hive bucket (the
+    caller's repartition on the transform columns bounds open buckets
+    per task), batches append as they arrive, and the roll cap closes
+    files at `roll` rows — worker memory holds one compressed file
+    buffer per open bucket, not the task's rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    writers: dict[str, list] = {}  # subdir -> [writer, buf, rows]
+    written: list[tuple[str, int]] = []
+
+    def flush(subdir: str) -> None:
+        w, buf, rows = writers.pop(subdir)
+        w.close()
+        if rows == 0:
+            return
+        d = io_join(stage, subdir) if subdir else stage
+        fio.makedirs(d)
+        path = d + f"/part-{uuid.uuid4().hex}.parquet"
+        fio.write_bytes(path, buf.getvalue().to_pybytes())
+        written.append((path, rows))
+
+    for tbl in tables:
+        for subdir, sub in _split_by_layout(tbl, pcols):
+            sub = _align(sub, file_schema)
+            offset = 0
+            while offset < sub.num_rows:
+                st = writers.get(subdir)
+                if st is None:
+                    buf = pa.BufferOutputStream()
+                    st = writers[subdir] = [
+                        pq.ParquetWriter(buf, file_schema,
+                                         compression=codec), buf, 0]
+                take = sub.num_rows - offset
+                if roll:
+                    # strict cap (maxRecordsPerFile semantics):
+                    # slice the batch, don't just flush after it
+                    take = min(take, roll - st[2])
+                st[0].write_table(sub.slice(offset, take))
+                st[2] += take
+                offset += take
+                if roll and st[2] >= roll:
+                    flush(subdir)
+    for subdir in list(writers):
+        flush(subdir)
+    return written
 
 
 def write_parquet_arrow(df: DataFrame, stage: str, schema: Schema,
@@ -373,29 +536,13 @@ def write_parquet_arrow(df: DataFrame, stage: str, schema: Schema,
                         max_records_per_file: int | None = None,
                         compression: str | None = None) -> list[str]:
     """Arrow parquet writer lane (opt-in: write.parquet.field-id-mode =
-    arrow): pyarrow writes each file against schema_to_arrow_with_ids,
-    which carries PARQUET:field_id at EVERY nesting level — struct
-    members, list elements, map keys/values — the id propagation the
-    reference does in to_arrow.rs:15-45. Spark's own parquet writer
-    (the default lane) can only stamp TOP-LEVEL ids via alias metadata,
-    so files it writes bind renamed nested members by name; files from
-    this lane bind them by id (datasource._rebind_struct).
-
-    Same task-commit protocol as write_avro_data: executor tasks write
-    straight into `stage` and yield the paths they finished; collect()
-    keeps one winning attempt per partition, so retried/speculative
-    losers' orphans are never registered as table data.
-
-    Scale shape: one streaming ParquetWriter per open hive bucket per
-    task (the caller's repartition on the transform columns bounds open
-    buckets per task), batches append as they arrive, and the roll cap
-    closes files at max_records_per_file — worker memory holds one
-    compressed file buffer per open bucket, not the task's rows.
-    """
+    arrow): `_write_arrow_files` in each task against
+    schema_to_arrow_with_ids, so files bind renamed nested members by
+    id (datasource._rebind_struct). Task-commit protocol of
+    write_avro_data: collect() keeps one winning attempt's paths per
+    partition; retried/speculative losers' orphans never register."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    from .avro_data import _hive_value
     from .types.datatypes import schema_to_arrow_with_ids
 
     file_schema = schema_to_arrow_with_ids(schema)
@@ -408,80 +555,13 @@ def write_parquet_arrow(df: DataFrame, stage: str, schema: Schema,
     fio = resolve_io(stage)
     fio.makedirs(stage)
 
-    def _align(tbl: "pa.Table") -> "pa.Table":
-        """Reorder/cast a Spark arrow batch to the id-stamped schema.
-        Spark has no uuid type, so uuid columns arrive as canonical-hex
-        strings and convert to the spec's fixed[16] here; everything
-        else (int64 µs → time64, session-tz → UTC timestamps, decimals)
-        is a plain cast."""
-        import uuid as _uuidlib
-
-        cols = []
-        for f in file_schema:
-            col = tbl.column(f.name)
-            if pa.types.is_fixed_size_binary(f.type) \
-                    and pa.types.is_string(col.type):
-                col = pa.chunked_array([pa.array(
-                    [None if s is None else _uuidlib.UUID(s).bytes
-                     for s in c.to_pylist()], type=f.type)
-                    for c in col.chunks] or [pa.array([], type=f.type)])
-            cols.append(col)
-        return pa.Table.from_arrays(
-            cols, names=[f.name for f in file_schema]).cast(file_schema)
-
     def run(batches):
-        writers: dict[str, list] = {}  # subdir -> [writer, buf, rows]
-        written: list[str] = []
-
-        def flush(subdir: str) -> None:
-            w, buf, rows = writers.pop(subdir)
-            w.close()
-            if rows == 0:
-                return
-            d = io_join(stage, subdir) if subdir else stage
-            fio.makedirs(d)
-            path = d + f"/part-{uuid.uuid4().hex}.parquet"
-            fio.write_bytes(path, buf.getvalue().to_pybytes())
-            written.append(path)
-
-        for batch in batches:
-            tbl = pa.Table.from_batches([batch])
-            if pcols:
-                keys = list(zip(*[tbl.column(c).to_pylist() for c in pcols]))
-                tbl = tbl.drop_columns(pcols)
-                groups: dict[str, list[int]] = {}
-                for i, k in enumerate(keys):
-                    subdir = "/".join(f"{c}={_hive_value(v)}"
-                                      for c, v in zip(pcols, k))
-                    groups.setdefault(subdir, []).append(i)
-                parts = [(s, tbl.take(pa.array(ix, type=pa.int64())))
-                         for s, ix in groups.items()]
-            else:
-                parts = [("", tbl)]
-            for subdir, sub in parts:
-                sub = _align(sub)
-                offset = 0
-                while offset < sub.num_rows:
-                    st = writers.get(subdir)
-                    if st is None:
-                        buf = pa.BufferOutputStream()
-                        st = writers[subdir] = [
-                            pq.ParquetWriter(buf, file_schema,
-                                             compression=codec), buf, 0]
-                    take = sub.num_rows - offset
-                    if roll:
-                        # strict cap (maxRecordsPerFile semantics):
-                        # slice the batch, don't just flush after it
-                        take = min(take, roll - st[2])
-                    st[0].write_table(sub.slice(offset, take))
-                    st[2] += take
-                    offset += take
-                    if roll and st[2] >= roll:
-                        flush(subdir)
-        for subdir in list(writers):
-            flush(subdir)
+        written = _write_arrow_files(
+            (pa.Table.from_batches([b]) for b in batches), stage,
+            file_schema, pcols, roll, codec, fio)
         yield pa.RecordBatch.from_arrays(
-            [pa.array(written, type=pa.string())], names=["path"])
+            [pa.array([p for p, _n in written], type=pa.string())],
+            names=["path"])
 
     return [r.path for r in
             df.mapInArrow(run, schema="path string").collect()]
@@ -497,7 +577,7 @@ DEFAULT_TARGET_FILE_SIZE = 128 * 1024 * 1024
 _PARQUET_RATIO = 3
 
 
-def _coalesce_to_target(df: DataFrame, props, target_file_size):
+def _coalesce_to_target(df: DataFrame, target_file_size: int | None):
     """Right-size an unpartitioned write: a source with many small
     partitions would emit one tiny file per partition (the small-files
     problem the reference's rolling writer bounds from the other side).
@@ -510,15 +590,17 @@ def _coalesce_to_target(df: DataFrame, props, target_file_size):
     caller (write_data_files, write_equality_delete_files), so only the
     default fallback lives here.
 
-    The partition count is read first: under AQE that runs the plan's
-    query stages, which materializes a persisted input, and a
-    materialized cache reports its real size to the estimate below
-    (before that it reports its source's, unknown for an RDD)."""
+    A persisted input must be loaded before it is estimated: until then
+    it reports its source's size, unknown for an RDD, and nothing is
+    coalesced. Reading the partition count under AQE loads it (a cached
+    relation is a query stage); without AQE `_load_caches` does, so the
+    file count does not depend on the conf."""
     tfs = target_file_size if target_file_size else DEFAULT_TARGET_FILE_SIZE
     try:
         cur = df.rdd.getNumPartitions()
-        est = int(df._jdf.queryExecution().optimizedPlan()
-                  .stats().sizeInBytes())
+        plan = df._jdf.queryExecution().optimizedPlan()
+        _load_caches(plan)
+        est = int(plan.stats().sizeInBytes())
     except Exception:
         return df
     want = max(1, (est + tfs * _PARQUET_RATIO - 1) // (tfs * _PARQUET_RATIO))
@@ -527,134 +609,99 @@ def _coalesce_to_target(df: DataFrame, props, target_file_size):
     return df
 
 
-def _build_data_files_distributed(table, paths, stage, schema, result_types,
-                                  sort_order_id, io: FileIO,
-                                  known_sizes: dict[str, int] | None = None,
-                                  ) -> list[DataFile]:
-    """Footer-stat collection as a Spark job: executors read parquet
-    footers with pyarrow and return pickled DataFile entries. Keeps the
-    driver's work at O(#files) metadata assembly only."""
+def _load_caches(plan) -> None:
+    """Fill each persisted relation of an optimized plan that is not
+    loaded yet; a loaded one (always the case after AQE ran the plan's
+    stages) costs no job."""
+    leaves = plan.collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "InMemoryRelation":
+            cache = leaf.cacheBuilder()
+            if not cache.isCachedColumnBuffersLoaded():
+                cache.cachedColumnBuffers().count()
+
+
+def _build_all(build, paths: list[str], sizes: dict[str, int]) -> list[DataFile]:
+    """`build` (a `_build_data_file` partial) over `paths`: driver
+    threads, or past DISTRIBUTED_STATS_THRESHOLD files a Spark job whose
+    executors read the footers and return pickled DataFile entries, so
+    the driver's work stays O(#files) metadata assembly."""
     import pickle
 
     from pyspark.sql import SparkSession
 
-    known_sizes = known_sizes or {}
-    spark = SparkSession.getActiveSession()
+    spark = (SparkSession.getActiveSession()
+             if len(paths) > DISTRIBUTED_STATS_THRESHOLD else None)
     if spark is None:
-        # no session to distribute over; fall back to driver threads
         with ThreadPoolExecutor(max_workers=16) as pool:
-            return list(pool.map(
-                lambda p: _build_data_file(p, stage, schema, result_types,
-                                           sort_order_id, io,
-                                           size=known_sizes.get(p)),
-                paths))
+            return list(pool.map(lambda p: build(p, size=sizes.get(p)),
+                                 paths))
 
     import pandas as pd
 
     def run(batches):
         for pdf in batches:
-            out = []
-            for p, sz in zip(pdf["path"], pdf["size"]):
-                df_entry = _build_data_file(
-                    p, stage, schema, result_types, sort_order_id, io,
-                    size=None if sz < 0 else int(sz))
-                out.append(pickle.dumps(df_entry))
-            yield pd.DataFrame({"blob": out})
+            yield pd.DataFrame({"blob": [
+                pickle.dumps(build(p, size=None if sz < 0 else int(sz)))
+                for p, sz in zip(pdf["path"], pdf["size"])]})
 
     n_parts = max(1, min(len(paths) // 64, 256))
     files_df = spark.createDataFrame(
-        [(p, known_sizes.get(p, -1)) for p in paths],
+        [(p, sizes.get(p, -1)) for p in paths],
         "path string, size long").repartition(n_parts)
     blobs = files_df.mapInPandas(run, schema="blob binary").collect()
     return [pickle.loads(bytes(r.blob)) for r in blobs]
 
 
-def _result_type(pf, schema: Schema) -> PrimitiveType:
-    src = schema.field_by_id(pf.source_column_id)
-    return transform_result_type(pf.transform, src.field_type if src else None)
-
-
-from .avro_data import _EMPTY_PART  # one marker shared by every lane
-
-
-def _parse_hive_value(raw: str, t: PrimitiveType) -> Any:
-    """Parse a hive-style partition-dir value into a python value."""
-    if raw == "__HIVE_DEFAULT_PARTITION__":
-        return None
-    s = urllib.parse.unquote(raw)
-    if t.name == "string":
-        # decode the write side's ''-vs-NULL layout encoding
-        if s == _EMPTY_PART:
-            return ""
-        if s.startswith(_EMPTY_PART):
-            return s[len(_EMPTY_PART):]
-    n = t.name
-    if n in ("int", "long"):
-        return int(s)
-    if n in ("float", "double"):
-        return float(s)
-    if n == "decimal":
-        return Decimal(s)
-    if n == "boolean":
-        return s.lower() == "true"
-    if n == "date":
-        return dt.date.fromisoformat(s)
-    if n == "timestamp":
-        return dt.datetime.fromisoformat(s)
-    if n == "timestamptz":
-        v = dt.datetime.fromisoformat(s)
-        return v if v.tzinfo else v.replace(tzinfo=dt.timezone.utc)
-    return s  # string / uuid
-
-
 def _build_data_file(path: str, stage: str, schema: Schema,
-                     result_types: dict[str, tuple[str, PrimitiveType]],
-                     sort_order_id: int | None = None,
-                     io: FileIO | None = None,
-                     size: int | None = None) -> DataFile:
+                     layout: dict[str, tuple[str, PrimitiveType]],
+                     io: FileIO | None = None, size: int | None = None,
+                     file_format: str | None = None,
+                     content: int = CONTENT_DATA,
+                     equality_ids: list[int] | None = None,
+                     sort_order_id: int | None = None) -> DataFile:
+    """The one DataFile builder. `schema` is the FILE's Iceberg schema
+    (the table's for data files, the delete schema for delete files):
+    per-column metrics are keyed by its field ids. `layout` reads the
+    partition tuple off the hive dirs between `stage` and the file.
+    `file_format` (PARQUET, ORC, AVRO) falls back to the extension."""
     import pyarrow.parquet as pq
 
     if io is None:
         io = resolve_io(path)
-    # partition tuple from hive dirs between stage and the file
     partition: dict[str, Any] = {}
     rel = rel_under(stage, dirname(path))
     if rel != ".":
         for comp in rel.replace("\\", "/").split("/"):
-            if "=" not in comp:
-                continue
-            k, _, v = comp.partition("=")
-            if k in result_types:
-                name, t = result_types[k]
+            k, eq, v = comp.partition("=")
+            if eq and k in layout:
+                name, t = layout[k]
                 partition[name] = _parse_hive_value(v, t)
+    fmt = (file_format or {"orc": "ORC", "avro": "AVRO"}.get(
+        path.rsplit(".", 1)[-1].lower(), "PARQUET")).upper()
+    entry = DataFile(
+        file_path=norm_path(path), file_format=fmt, partition=partition,
+        file_size_in_bytes=size if size is not None else io.size(path),
+        content=content, equality_ids=equality_ids,
+        sort_order_id=sort_order_id)
+    if fmt == "ORC":
+        # ORC/Avro: row count but no per-column min/max, so the entry
+        # records counts/size only (zone-map pruning can't skip these
+        # files; correctness unaffected)
+        from pyarrow import orc as _orc
 
-    if path.endswith((".orc", ".avro")):
-        # ORC/Avro: row count but no per-column min/max, so the DataFile
-        # records counts/size only (scan-level zone-map pruning simply
-        # can't skip these files; correctness unaffected)
-        if path.endswith(".orc"):
-            from pyarrow import orc as _orc
+        entry.record_count = _orc.ORCFile(io.open_input(path)).nrows
+        return entry
+    if fmt == "AVRO":
+        from .avro_io import count_records
 
-            nrows = _orc.ORCFile(io.open_input(path)).nrows
-            fmt = "ORC"
-        else:
-            from .avro_data import count_avro_records
-
-            nrows = count_avro_records(path, io=io)
-            fmt = "AVRO"
-        return DataFile(
-            file_path=norm_path(path),
-            file_format=fmt,
-            partition=partition,
-            record_count=nrows,
-            file_size_in_bytes=size if size is not None else io.size(path),
-            content=CONTENT_DATA,
-            sort_order_id=sort_order_id,
-        )
+        entry.record_count = count_records(path, io=io)
+        return entry
 
     md = pq.read_metadata(io.open_input(path))
+    entry.record_count = md.num_rows
     ids_by_name = {f.name: f.field_id for f in schema.fields}
-    types_by_name = {f.name: f.field_type for f in schema.fields}
     col_sizes: dict[int, int] = {}
     value_counts: dict[int, int] = {}
     null_counts: dict[int, int] = {}
@@ -683,7 +730,6 @@ def _build_data_file(path: str, stage: str, schema: Schema,
                 continue
             if st.null_count is not None:
                 null_counts[fid] = null_counts.get(fid, 0) + st.null_count
-            # (dotted nested-leaf paths were already skipped above)
             if st.has_min_max:
                 try:
                     # pyarrow cannot decode stats for every logical type
@@ -715,21 +761,12 @@ def _build_data_file(path: str, stage: str, schema: Schema,
             upper[fid] = encode_bound(f.field_type, hi_v)
         except (ValueError, TypeError):
             continue
-
-    return DataFile(
-        file_path=norm_path(path),
-        file_format="PARQUET",
-        partition=partition,
-        record_count=md.num_rows,
-        file_size_in_bytes=size if size is not None else io.size(path),
-        content=CONTENT_DATA,
-        column_sizes=col_sizes or None,
-        value_counts=value_counts or None,
-        null_value_counts=null_counts or None,
-        lower_bounds=lower or None,
-        upper_bounds=upper or None,
-        sort_order_id=sort_order_id,
-    )
+    entry.column_sizes = col_sizes or None
+    entry.value_counts = value_counts or None
+    entry.null_value_counts = null_counts or None
+    entry.lower_bounds = lower or None
+    entry.upper_bounds = upper or None
+    return entry
 
 
 def _lt(a: Any, b: Any) -> bool:
@@ -761,8 +798,6 @@ def _truncate_bounds(t: PrimitiveType, lo: Any, hi: Any) -> tuple[Any, Any]:
             if cp < 0x10FFFF:
                 hi = prefix[:i] + chr(nxt)
                 break
-        else:
-            hi = hi  # pathological; keep full value
     return lo_t, hi
 
 

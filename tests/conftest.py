@@ -25,26 +25,18 @@ def spark():
     # default_session keeps codegen+AQE on; modules that ASSERT
     # codegen/AQE plan shapes re-enable them via the _prod_plan_conf
     # fixture below. ICELAKE_TEST_CPUS / ICELAKE_TEST_CONF override.
-    prev = os.environ.get("SPARK_GRAFT_CPUS")
-    os.environ["SPARK_GRAFT_CPUS"] = os.environ.get("ICELAKE_TEST_CPUS", "8")
-    try:
-        s = icelake_spark.default_session("icelake_spark_tests")
-    finally:
-        if prev is None:
-            os.environ.pop("SPARK_GRAFT_CPUS", None)
-        else:
-            os.environ["SPARK_GRAFT_CPUS"] = prev
+    # With AQE off, every exchange runs at the session's shuffle
+    # partitions — 32 would be 4x more tasks than cores, pure dispatch
+    # latency at sf0.001, so they match the test core count (measured
+    # r14: ctas+kernels subset 82.9 -> 54.1 s solo; codegen ON was
+    # re-measured and LOSES on the same subset, 108 s — janino per
+    # unique plan dominates at test scale, so it stays off).
+    cpus = int(os.environ.get("ICELAKE_TEST_CPUS", "8"))
+    s = icelake_spark.default_session("icelake_spark_tests", cpus=cpus,
+                                      shuffle_partitions=cpus)
     s.sparkContext.setLogLevel("ERROR")
     s.conf.set("spark.sql.codegen.wholeStage", "false")
     s.conf.set("spark.sql.adaptive.enabled", "false")
-    # With AQE off, every exchange runs at the session's 32 shuffle
-    # partitions — 4x more tasks than cores, pure dispatch latency at
-    # sf0.001. Match the test core count (measured r14: ctas+kernels
-    # subset 82.9 -> 54.1 s solo; codegen ON was re-measured and LOSES
-    # on the same subset, 108 s — janino per unique plan dominates at
-    # test scale, so it stays off).
-    s.conf.set("spark.sql.shuffle.partitions",
-               os.environ.get("ICELAKE_TEST_CPUS", "8"))
     for kv in os.environ.get("ICELAKE_TEST_CONF", "").split(";"):
         if kv:
             k, v = kv.split("=", 1)

@@ -92,15 +92,13 @@ def test_timestamptz_session_tz_roundtrip_and_utc_storage():
     assert _to_avro_value(aware, tstz, None) == micros
 
 
-def test_write_avro_data_returns_committed_paths(spark_session_for_avro=None):
+def test_write_avro_data_returns_committed_paths(spark):
     """write_avro_data inventories by task-returned path list; stray
     files in the stage dir (e.g. from a failed attempt) are not
     registered (advice r2)."""
-    import icelake_spark
     from icelake_spark.avro_data import read_avro_data, write_avro_data
     from icelake_spark.types.datatypes import Schema
 
-    spark = icelake_spark.default_session("icelake_spark_tests")
     df = spark.range(10).selectExpr("id", "CAST(id AS STRING) AS s")
     with tempfile.TemporaryDirectory() as d:
         stage = os.path.join(d, "stage")

@@ -65,7 +65,7 @@ def test_delete_retry_aborts_after_concurrent_compaction(spark, warehouse):
     must RAISE, not silently commit deletes referencing rewritten files
     (the rows would resurrect)."""
     from icelake_spark.catalog.storage import CommitConflict
-    from icelake_spark.delta import _write_small_parquet, OP_DELETE
+    from icelake_spark.delta import write_position_delete_files
     from icelake_spark.maintenance import rewrite_data_files
     from icelake_spark.table import IcebergTable
     from icelake_spark.transaction import Transaction
@@ -79,8 +79,7 @@ def test_delete_retry_aborts_after_concurrent_compaction(spark, warehouse):
     target = data[0].data_file.file_path
     pos_df = spark.createDataFrame([(os.path.abspath(target), 0)],
                                    "file_path string, pos long")
-    del_files = _write_small_parquet(
-        t1, pos_df.sortWithinPartitions("file_path", "pos"), content=1)
+    del_files = write_position_delete_files(t1, pos_df)
     tx = Transaction(t1)
     tx.add_delete_files(del_files)
 

@@ -10,9 +10,9 @@ def test_hive_value_marker_collision_roundtrip():
     LITERAL "__EMPTY_STRING__" value must round-trip as itself, not
     decode to '' (the direct-write lanes — avro, arrow parquet,
     streaming sink — previously skipped the prefix escape)."""
-    from icelake_spark.avro_data import _EMPTY_PART, _esc_empty, _hive_value
     from icelake_spark.types.datatypes import STRING
-    from icelake_spark.write import _parse_hive_value
+    from icelake_spark.write import (_EMPTY_PART, _esc_empty, _hive_value,
+                                     _parse_hive_value)
 
     cases = ["", _EMPTY_PART, _EMPTY_PART + "x", "plain", "a/b=c%d"]
     for v in cases:

@@ -24,31 +24,19 @@ EVDIR = "/tmp/icelake_spark_eventlogs"
 
 
 def _session():
-    from pyspark.sql import SparkSession
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    """default_session plus event logging. Static confs reach the JVM
+    through PYSPARK_SUBMIT_ARGS (as perfbench/run.py passes its own),
+    so the profiled plans are default_session's."""
+    import icelake_spark
+
     os.makedirs(EVDIR, exist_ok=True)
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("icelake_spark_profile")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # keep the profiler's plans identical to default_session's
-        # (drift here mis-attributes stage time)
-        .config("spark.sql.optimizer.excludedRules",
-                "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.compression.codec", "snappy")
-        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", EVDIR)
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
-        .getOrCreate()
-    )
+    os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join([
+        "--conf spark.eventLog.enabled=true",
+        f"--conf spark.eventLog.dir={EVDIR}",
+        "--conf spark.eventLog.compress=false",
+        "--conf spark.eventLog.rolling.enabled=false",
+        "pyspark-shell"])
+    return icelake_spark.default_session("icelake_spark_profile")
 
 
 def main() -> None:
