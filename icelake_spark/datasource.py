@@ -13,29 +13,35 @@ runs on the driver exactly like TableScan; `pushFilters` feeds simple
 comparisons into the zone-map file pruner before Spark sees the
 partitions. The merge-on-read deletes come from the same
 planning.DeletePlan the Spark join builder uses (sequence gates,
-equality groups, partition scopes, canonical paths): each
-InputPartition is one data file plus the deletes that apply to it,
-read via pyarrow and masked with Arrow kernels — a row-index mask for
-position deletes and a null-safe Arrow join for equality keys.
+equality groups, partition scopes, canonical paths): each data file
+becomes a file task carrying the deletes that apply to it, read via
+pyarrow and masked with Arrow kernels — a row-index mask for position
+deletes and a null-safe Arrow join for equality keys. File tasks are
+packed in planned order into combined scan tasks (_pack: Iceberg's
+read.split.target-size and read.split.open-file-cost defaults), so one
+InputPartition reads up to 128 MiB of files one file at a time and
+reads each delete file it needs once.
 
 Streams: `spark.readStream.format("icelake")` is the partition-based
-IcelakePartitionStreamReader — appended files, or with
-option("changelog", "true") one CDC partition per snapshot, whose
-file tasks take their deletes from the same DeletePlan and are masked
-by the same Arrow code as batch reads (_TableFileReader._dead_mask).
-The stream reads take an append snapshot's added files, skip delete
-and replace snapshots, and fail on an overwrite unless
-option("skip_overwrite_snapshots", "true") — the batch incremental
-read's rule (streaming.append_snapshots). `df.writeStream.format(
-"icelake")` is the transactional IcelakeStreamWriter, an Arrow lane of
-the writer tree (write.py).
+IcelakePartitionStreamReader — appended files, packed like the batch
+read, or with option("changelog", "true") one CDC partition per
+snapshot, whose file tasks take their deletes from the same DeletePlan
+and are masked by the same Arrow code as batch reads
+(_TableFileReader._dead_mask). The stream reads take an append
+snapshot's added files, skip delete and replace snapshots, and fail on
+an overwrite unless option("skip_overwrite_snapshots", "true") — the
+batch incremental read's rule (streaming.append_snapshots).
+`df.writeStream.format("icelake")` is the transactional
+IcelakeStreamWriter, an Arrow lane of the writer tree (write.py).
 
 NOTE ON THE FAST PATH: rows here flow through Python workers (the Python
 DataSource contract), which cannot match the JVM vectorized parquet
-reader. `IcebergTable.to_df()` remains the performance path — this
-source exists for API completeness (SQL `USING icelake`, format-based
-readers, catalog-less tools). Parity target: the DSv2 upgrade path noted
-in SURVEY §4 and the reference's engine integrations.
+reader, and every Spark task pays a fixed Python-worker round trip,
+which is why small files share a task. `IcebergTable.to_df()` remains
+the performance path — this source exists for API completeness (SQL
+`USING icelake`, format-based readers, catalog-less tools). Parity
+target: the DSv2 upgrade path noted in SURVEY §4 and the reference's
+engine integrations.
 """
 
 from __future__ import annotations
@@ -76,11 +82,45 @@ class _FileTask(InputPartition):
     pos_files: tuple[str, ...] = ()  # read by the task when unresolved
     # (key columns, equality-delete files), one entry per key group
     eq_deletes: tuple[tuple[tuple[str, ...], tuple[str, ...]], ...] = ()
+    # bytes of the data file plus the delete files that apply to it
+    size: int = 0
 
     @property
     def has_deletes(self) -> bool:
         return (self.positions is not None or bool(self.pos_files)
                 or bool(self.eq_deletes))
+
+
+# Iceberg's read.split.target-size and read.split.open-file-cost defaults
+SPLIT_TARGET_SIZE = 128 * 1024 * 1024
+SPLIT_OPEN_FILE_COST = 4 * 1024 * 1024
+
+
+@dataclass
+class _ScanTask(InputPartition):
+    """One Spark task of a batch or plain stream read: consecutive file
+    tasks of the plan, read one file at a time."""
+    files: tuple[_FileTask, ...]
+
+
+def _pack(files: list[_FileTask]) -> list[_ScanTask]:
+    """Next-fit packing of file tasks, in planned order, into scan
+    tasks: a file weighs its `size`, at least SPLIT_OPEN_FILE_COST, and
+    a task closes before it would pass SPLIT_TARGET_SIZE, so a heavier
+    file is a task of its own. Files are never split."""
+    out: list[_ScanTask] = []
+    cur: list[_FileTask] = []
+    weight = 0
+    for f in files:
+        w = max(f.size, SPLIT_OPEN_FILE_COST)
+        if cur and weight + w > SPLIT_TARGET_SIZE:
+            out.append(_ScanTask(tuple(cur)))
+            cur, weight = [], 0
+        cur.append(f)
+        weight += w
+    if cur:
+        out.append(_ScanTask(tuple(cur)))
+    return out
 
 
 class IcelakeDataSource(DataSource):
@@ -145,9 +185,9 @@ class IcelakeDataSource(DataSource):
 
     def streamReader(self, schema) -> "IcelakePartitionStreamReader":  # noqa: N802
         """Partition-based micro-batch source (the scale path): planned
-        per offset range on the driver, READ ON EXECUTORS — one
-        InputPartition per data file (plain mode) or per snapshot
-        (changelog mode), nothing materialized driver-side."""
+        per offset range on the driver, READ ON EXECUTORS — packed scan
+        tasks of data files (plain mode) or one InputPartition per
+        snapshot (changelog mode), nothing materialized driver-side."""
         self._install_io_registry()
         return IcelakePartitionStreamReader(self.options, schema)
 
@@ -520,6 +560,34 @@ class _TableFileReader:
             table, self.spark_schema, self.rename_map, self.field_ids,
             self.ice_fields, foreign)
 
+    def _read_scan(self, task: _ScanTask) -> Iterator:
+        """Each file of `task` in turn, masked and projected, as Arrow
+        record batches: a file's batches are yielded before the next
+        file is opened, and the task reads each delete file once."""
+        cache: dict = {}
+        schema = None
+        for f in task.files:
+            out = self._live_rows(f, cache)
+            # a task's batches form one Arrow stream of one schema; an
+            # imported file may hold other physical types (large_string)
+            if schema is None:
+                schema = out.schema
+            elif not out.schema.equals(schema):
+                out = out.cast(schema)
+            yield from out.to_batches()
+            del out  # release this file before the next one is read
+
+    def _live_rows(self, task: _FileTask, cache: dict):
+        """The rows of one data file that its deletes leave alive,
+        projected to the declared schema."""
+        import pyarrow as pa
+
+        table, foreign = self._read_file(task)
+        dead = self._dead_mask(table, task, foreign, cache)
+        if dead.any():
+            table = table.filter(pa.array(~dead))
+        return self._project(table, foreign)
+
 
 class IcelakeReader(_TableFileReader, DataSourceReader):
     def __init__(self, options: dict, schema):
@@ -568,7 +636,7 @@ class IcelakeReader(_TableFileReader, DataSourceReader):
                 self.filter_parts.append(f"{f.attribute[0]} IN ({vals})")
             yield f  # unsupported → Spark re-applies (safe)
 
-    def partitions(self) -> list[_FileTask]:
+    def partitions(self) -> list[_ScanTask]:
         from .table import IcebergTable
 
         t = IcebergTable.load(self.options["path"])
@@ -584,9 +652,10 @@ class IcelakeReader(_TableFileReader, DataSourceReader):
                 t, int(self.options["start_snapshot_id"]),
                 int(end) if end is not None else None,
                 skip_overwrites=_skip_overwrites(self.options))
-            return [_FileTask(d.data_file.file_path,
-                              (d.data_file.file_format or "PARQUET").upper())
-                    for d in files]
+            return _pack([_FileTask(
+                d.data_file.file_path,
+                (d.data_file.file_format or "PARQUET").upper(),
+                size=d.data_file.file_size_in_bytes) for d in files])
         kwargs: dict[str, Any] = {}
         if "snapshot_id" in self.options:
             kwargs["snapshot_id"] = int(self.options["snapshot_id"])
@@ -599,19 +668,13 @@ class IcelakeReader(_TableFileReader, DataSourceReader):
         data, pos, eq = t.new_scan(**kwargs).plan_files()
         plan = plan_deletes(data, pos, eq, t.schema(), t.metadata)
         by_file = _pos_sets(plan, self._src)
-        return [_file_task(d, plan, by_file) for d in data]
+        return _pack([_file_task(d, plan, by_file) for d in data])
 
-    def read(self, partition: _FileTask) -> Iterator:
-        """Read one data file with pyarrow, mask out its MoR deletes
-        with Arrow kernels, yield Arrow record batches (Spark converts
-        via Arrow)."""
-        import pyarrow as pa
-
-        table, foreign = self._read_file(partition)
-        dead = self._dead_mask(table, partition, foreign, {})
-        if dead.any():
-            table = table.filter(pa.array(~dead))
-        yield from self._project(table, foreign).to_batches()
+    def read(self, partition: _ScanTask) -> Iterator:
+        """Read the task's data files with pyarrow, mask out their MoR
+        deletes with Arrow kernels, yield Arrow record batches (Spark
+        converts via Arrow)."""
+        yield from self._read_scan(partition)
 
 
 def _skip_overwrites(options: dict) -> bool:
@@ -648,6 +711,7 @@ def _file_task(d, plan, by_file: dict | None) -> _FileTask:
                 for p in pos_d]
         hits = [h for h in hits if h is not None]
         positions = np.concatenate(hits) if hits else None
+    deletes = [*pos_d, *(t for _, ts in eq_d for t in ts)]
     return _FileTask(
         path, (d.data_file.file_format or "PARQUET").upper(),
         positions=positions,
@@ -655,7 +719,9 @@ def _file_task(d, plan, by_file: dict | None) -> _FileTask:
                    tuple(p.delete_file.file_path for p in pos_d)),
         eq_deletes=tuple(
             (g.key_cols, tuple(t.delete_file.file_path for t in ts))
-            for g, ts in eq_d))
+            for g, ts in eq_d),
+        size=d.data_file.file_size_in_bytes + sum(
+            t.delete_file.file_size_in_bytes for t in deletes))
 
 
 def _positions_by_file(src) -> dict[str, "np.ndarray"]:
@@ -740,22 +806,22 @@ def _project_table_to_schema(table, spark_schema, rename_map, field_ids,
     arrays = []
     for f in spark_schema.fields:
         n = f.name
+        exp = to_arrow_type(f.dataType)
         arr = _resolve_column(table, n, rename_map, field_ids.get(n),
                               id_map)
         if arr is not None and isinstance(ice_fields.get(n), _IceStruct):
-            arr = _rebind_struct(arr, ice_fields[n],
-                                 to_arrow_type(f.dataType))
+            arr = _rebind_struct(arr, ice_fields[n], exp)
         arr = _spec_physical_to_spark(arr, ice_fields.get(n))
-        if arr is not None:
-            exp = to_arrow_type(f.dataType)
-            if arr.type != exp and (
-                    pa.types.is_integer(exp) or pa.types.is_floating(exp)
-                    or pa.types.is_decimal(exp)):
-                try:
-                    arr = arr.cast(exp)
-                except (pa.ArrowInvalid, pa.ArrowNotImplementedError):
-                    pass
-        arrays.append(arr if arr is not None else pa.nulls(table.num_rows))
+        if arr is not None and arr.type != exp and (
+                pa.types.is_integer(exp) or pa.types.is_floating(exp)
+                or pa.types.is_decimal(exp)):
+            try:
+                arr = arr.cast(exp)
+            except (pa.ArrowInvalid, pa.ArrowNotImplementedError):
+                pass
+        # typed, so every file of a scan task projects to one schema
+        arrays.append(arr if arr is not None
+                      else pa.nulls(table.num_rows, type=exp))
     return pa.Table.from_arrays(arrays, names=names)
 
 
@@ -825,14 +891,15 @@ def _stream_snapshots(table, start: float, end: float,
 
 
 def _stream_files_between(table, start_seq: int, end_seq: int,
-                          skip_overwrites: bool) -> list[tuple[str, str]]:
-    """(path, format) of data files ADDED by the contributing snapshots
-    in (start_seq, end_seq] — the deterministic replay set both stream
-    readers derive micro-batches from."""
+                          skip_overwrites: bool) -> list[tuple[str, str, int]]:
+    """(path, format, bytes) of data files ADDED by the contributing
+    snapshots in (start_seq, end_seq] — the deterministic replay set
+    the plain stream derives micro-batches from."""
     from .changelog import _added_in
 
     return [(t.data_file.file_path,
-             (t.data_file.file_format or "PARQUET").upper())
+             (t.data_file.file_format or "PARQUET").upper(),
+             t.data_file.file_size_in_bytes)
             for s in _stream_snapshots(table, start_seq, end_seq,
                                        skip_overwrites)
             for t in _added_in(table, s)[0]]
@@ -849,12 +916,12 @@ def _append_offsets(table) -> list[int]:
                    _stream_snapshots(table, -1, float("inf"), True)})
 
 
-def _stream_snapshot_files(table, seq: int,
-                           cache: dict | None = None) -> list[tuple[str, str]]:
-    """Path-SORTED (path, format) files added by the snapshot at stream
-    offset `seq`. The sort makes the file-granular offset coordinate
-    ({"seq": s, "files": k} = first k files of the next append
-    snapshot) deterministic across triggers and restarts. `cache`
+def _stream_snapshot_files(table, seq: int, cache: dict | None = None,
+                           ) -> list[tuple[str, str, int]]:
+    """Path-SORTED (path, format, bytes) files added by the snapshot at
+    stream offset `seq`. The sort makes the file-granular offset
+    coordinate ({"seq": s, "files": k} = first k files of the next
+    append snapshot) deterministic across triggers and restarts. `cache`
     (reader-held, keyed by offset) avoids re-reading a pending
     snapshot's manifests on every trigger — snapshots are immutable,
     so entries never invalidate."""
@@ -869,14 +936,14 @@ def _stream_snapshot_files(table, seq: int,
 def _stream_files_range(table, s1: int, k1: int, s2: int, k2: int,
                         cache: dict | None = None,
                         skip_overwrites: bool = False,
-                        ) -> list[tuple[str, str]]:
+                        ) -> list[tuple[str, str, int]]:
     """Files between composite offsets (s1, k1) and (s2, k2]: offset
     (s, k) means every snapshot with offset <= s is fully emitted plus
     the first k path-sorted files of the NEXT append snapshot after s
     (k = 0 degenerates to the original snapshot-granular offset)."""
     apps = _append_offsets(table)
     t1 = next((o for o in apps if o > s1), None)
-    out: list[tuple[str, str]] = []
+    out: list[tuple[str, str, int]] = []
     for t in sorted({_stream_offset_of(table, x) for x in
                      _stream_snapshots(table, s1, s2, skip_overwrites)}):
         fl = _stream_snapshot_files(table, t, cache)
@@ -1006,12 +1073,6 @@ def _plan_changelog_tasks(table, start_off: int, end_off: int,
 
 
 @dataclass
-class _StreamFileTask(InputPartition):
-    file_path: str
-    file_format: str = "PARQUET"
-
-
-@dataclass
 class _ChangeSnapshotTask(InputPartition):
     """One changelog micro-batch slice: ONE snapshot's CDC events,
     decoded on an executor from the _FileTasks _plan_changelog_tasks
@@ -1028,16 +1089,16 @@ class IcelakePartitionStreamReader(_TableFileReader, DataSourceStreamReader):
     """`spark.readStream.format("icelake")` — the partition-based
     micro-batch source. Offsets are table sequence numbers (commit
     timestamps on v1); each micro-batch is the set of data files ADDED
-    by append snapshots in (start_seq, end_seq], one InputPartition per
-    file, read on EXECUTORS as Arrow batches. Exactly-once comes from
-    deterministic replay: partitions(start, end) re-derives the same
-    file list from the same immutable snapshot range. With
-    option("changelog", "true") each micro-batch is one partition per
-    snapshot: _plan_changelog_tasks gives each of its files the deletes
-    of planning.plan_deletes, and the executor masks them with the
-    batch reader's Arrow mask (_dead_mask) — an insert is an added row
-    its own commit does not delete, a delete an older row this
-    snapshot's deletes kill and no earlier delete did.
+    by append snapshots in (start_seq, end_seq], packed into scan tasks
+    like the batch read (_pack), read on EXECUTORS as Arrow batches.
+    Exactly-once comes from deterministic replay: partitions(start, end)
+    re-derives the same file list from the same immutable snapshot
+    range. With option("changelog", "true") each micro-batch is one
+    partition per snapshot: _plan_changelog_tasks gives each of its
+    files the deletes of planning.plan_deletes, and the executor masks
+    them with the batch reader's Arrow mask (_dead_mask) — an insert is
+    an added row its own commit does not delete, a delete an older row
+    this snapshot's deletes kill and no earlier delete did.
 
     It is the only stream reader: nothing is materialized on the
     driver, so a large append snapshot cannot OOM it. Parity: Iceberg's
@@ -1174,14 +1235,14 @@ class IcelakePartitionStreamReader(_TableFileReader, DataSourceStreamReader):
         # the pending backlog, not the table's history
         self._sf_cache = {q: v for q, v in self._sf_cache.items()
                           if q > s[0]}
-        return [_StreamFileTask(path, fmt) for path, fmt in files]
+        return _pack([_FileTask(path, fmt, size=size)
+                      for path, fmt, size in files])
 
     def read(self, partition):  # executor-side
         if isinstance(partition, _ChangeSnapshotTask):
             yield from self._changes(partition)
             return
-        table, foreign = self._read_file(partition)
-        yield from self._project(table, foreign).to_batches()
+        yield from self._read_scan(partition)
 
     def _changes(self, task: _ChangeSnapshotTask) -> Iterator:
         """One snapshot's CDC events as Arrow batches: one dead-row mask

@@ -130,6 +130,7 @@ def test_concurrent_upserts_two_processes(spark, warehouse, tmp_path):
     the optimistic race rebases via commit retry."""
     import subprocess
     import sys
+    from pathlib import Path
 
     src = spark.createDataFrame([(i, i, 0) for i in range(10)],
                                 "id long, k long, v long")
@@ -137,7 +138,7 @@ def test_concurrent_upserts_two_processes(spark, warehouse, tmp_path):
     t.append(src)
 
     code = f'''
-import sys; sys.path.insert(0, "/root/repo")
+import sys; sys.path.insert(0, {str(Path(__file__).resolve().parents[1])!r})
 import icelake_spark
 from icelake_spark import StorageCatalog
 from icelake_spark.delta import upsert

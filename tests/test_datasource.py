@@ -25,6 +25,126 @@ def test_format_read_with_mor(spark, warehouse):
     assert df.where("g = 0").count() == 0
 
 
+def test_pack_next_fit_in_planned_order():
+    """The packer keeps planned order, places every file exactly once,
+    weighs each file at least the open cost plus its delete bytes,
+    closes a task before it would pass the target size, and gives an
+    oversize file a task of its own."""
+    from icelake_spark.datasource import (SPLIT_OPEN_FILE_COST,
+                                          SPLIT_TARGET_SIZE, _FileTask,
+                                          _file_task, _pack)
+    from icelake_spark.planning import EqDeleteGroup
+    from icelake_spark.table import DeleteFileTask, FileScanTask
+    from icelake_spark.types.manifest import DataFile
+
+    mib = 1024 * 1024
+    assert (SPLIT_TARGET_SIZE, SPLIT_OPEN_FILE_COST) == (128 * mib, 4 * mib)
+
+    def packed(sizes):
+        files = [_FileTask(f"f{i}", size=n) for i, n in enumerate(sizes)]
+        tasks = _pack(files)
+        flat = [f for task in tasks for f in task.files]
+        assert flat == files  # planned order, each file exactly once
+        return [[int(f.file_path[1:]) for f in task.files] for task in tasks]
+
+    assert packed([]) == []
+    # tiny files weigh the open cost: 32 x 4 MiB fill a task exactly
+    assert packed([1] * 33) == [list(range(32)), [32]]
+    # next fit: a task closes before it would pass the target
+    assert packed([60 * mib, 60 * mib, 10 * mib, 20 * mib]) == \
+        [[0, 1], [2, 3]]
+    # a file heavier than the target is a task of its own, wherever it is
+    assert packed([mib, 200 * mib, mib]) == [[0], [1], [2]]
+
+    # a file's weight counts the bytes of the delete files that apply
+    def fake(path, size):
+        return DataFile(file_path=path, file_format="PARQUET",
+                        record_count=1, file_size_in_bytes=size)
+
+    pos = [DeleteFileTask(fake("p0", 30 * mib), 2)]
+    eq = [DeleteFileTask(fake("e0", 20 * mib), 3),
+          DeleteFileTask(fake("e1", 10 * mib), 4)]
+    group = EqDeleteGroup(("id",), ((),), eq, None, True)
+
+    class Plan:
+        def deletes_for(self, task):
+            return pos, [(group, eq)]
+
+    data = [FileScanTask(fake(f"d{i}", mib), 1, 0) for i in range(3)]
+    tasks = [_file_task(d, Plan(), None) for d in data]
+    assert [t.size for t in tasks] == [61 * mib] * 3
+    assert tasks[0].pos_files == ("p0",)
+    assert tasks[0].eq_deletes == ((("id",), ("e0", "e1")),)
+    # by data bytes alone the three would share one task
+    assert [len(t.files) for t in _pack(tasks)] == [2, 1]
+
+
+def test_scan_tasks_read_each_delete_file_once(spark, warehouse,
+                                               monkeypatch):
+    """A merge-on-read table of many data files with position and
+    equality deletes from several commits: format("icelake") equals
+    to_df with fewer scan tasks than files, and a scan task reads each
+    delete file once however many of its files the delete applies to."""
+    import pyarrow.parquet as pq
+
+    from icelake_spark.datasource import IcelakeReader
+    from icelake_spark.planning import DELETE_BROADCAST_PROP
+
+    ddl = "id long, k long, v long"
+    src = spark.range(400).selectExpr("id", "id % 7 as k", "id * 10 as v")
+    t = warehouse.create_table("db.packmor", Schema.from_spark(src.schema))
+    t.append(src, max_records_per_file=50)
+    t = t.refresh()
+    t.upsert(spark.createDataFrame([(3, 3, -3), (160, 6, -160)], ddl),
+             key_cols=["id"])
+    t = t.refresh()
+    t.delete_where(spark, "id % 50 = 7")
+    t = t.refresh()
+    t.upsert(spark.createDataFrame([(210, 0, -210), (399, 0, -399)], ddl),
+             key_cols=["id"])
+    t = t.refresh()
+    t.delete_where(spark, "id % 50 = 11")
+    # position deletes read by the tasks, not resolved on the driver
+    t.set_properties({DELETE_BROADCAST_PROP: "0"})
+    t = t.refresh()
+    data, pos, eq = t.new_scan().plan_files()
+    assert len(data) >= 8 and len(pos) >= 2 and len(eq) >= 2
+
+    want = sorted(tuple(r) for r in t.to_df(spark).collect())
+    assert len(want) == 400 - 16
+    got = spark.read.format("icelake").option("path", t.path).load()
+    assert sorted(tuple(r) for r in got.collect()) == want
+
+    reader = IcelakeReader({"path": t.path}, t.schema().to_spark())
+    parts = reader.partitions()
+    assert 0 < len(parts) < len(data)
+    assert sum(len(p.files) for p in parts) == len(data)
+
+    real = pq.read_table
+    reads: list = []
+
+    def counting(src, *args, **kwargs):
+        reads.append(src)
+        return real(src, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "read_table", counting)
+    rows = []
+    for part in parts:
+        reads.clear()
+        for b in reader.read(part):
+            rows.extend(zip(*(c.to_pylist() for c in b.columns)))
+        uses: dict = {}
+        for f in part.files:
+            for d in {*f.pos_files,
+                      *(p for _, fs in f.eq_deletes for p in fs)}:
+                uses[d] = uses.get(d, 0) + 1
+        assert any(f.eq_deletes for f in part.files)
+        assert any(f.pos_files for f in part.files)
+        assert max(uses.values()) > 1  # a delete file shared by files
+        assert {d: reads.count(d) for d in uses} == dict.fromkeys(uses, 1)
+    assert sorted(rows) == want
+
+
 def test_format_time_travel(spark, warehouse):
     src = spark.range(100).select("id")
     t = warehouse.create_table("db.ds2", Schema.from_spark(src.schema))
@@ -66,9 +186,17 @@ def test_format_filter_pushdown_prunes(spark, warehouse):
     df = (spark.read.format("icelake").option("path", t.path).load()
           .where("id >= 30000"))
     assert df.count() == 10000
-    # pruning effect: fewer input partitions than total files
+    # pruning effect: the filter Spark pushes is recorded, and the scan
+    # tasks planned under it hold fewer files than the table has
+    from pyspark.sql.datasource import GreaterThanOrEqual
+
+    from icelake_spark.datasource import IcelakeReader
+
     full, _, _ = t.new_scan().plan_files()
-    assert df.rdd.getNumPartitions() < len(full)
+    r = IcelakeReader({"path": t.path}, t.schema().to_spark())
+    pushed = [GreaterThanOrEqual(("id",), 30000)]
+    assert list(r.pushFilters(pushed)) == pushed  # Spark re-applies
+    assert sum(len(p.files) for p in r.partitions()) < len(full)
 
 
 def test_stream_read_picks_up_new_snapshots(spark, warehouse, tmp_path):
@@ -293,14 +421,13 @@ def test_dsv2_reads_orc_data_files(spark, warehouse, tmp_path):
 def test_partition_stream_reader_is_default_and_matches_batch(
         spark, warehouse, tmp_path):
     """The partition-based DataSourceStreamReader (executor-side reads,
-    one InputPartition per file) is the active stream source for the
+    data files packed into scan tasks) is the active stream source for the
     data path, and a multi-batch append table streams the same rows
     stream_from_table derives — with nothing materialized on the
     driver."""
     from icelake_spark.datasource import (IcelakeDataSource,
                                           IcelakePartitionStreamReader,
-                                          _ChangeSnapshotTask,
-                                          _StreamFileTask)
+                                          _ChangeSnapshotTask, _ScanTask)
     from icelake_spark.streaming import stream_from_table
 
     src = spark.range(3000).selectExpr("id", "id % 5 as g")
@@ -319,12 +446,15 @@ def test_partition_stream_reader_is_default_and_matches_batch(
     assert len(ch_parts) == 3
     assert all(isinstance(p, _ChangeSnapshotTask) for p in ch_parts)
 
-    # offsets + planning: one InputPartition PER FILE, empty range -> []
+    # offsets + planning: every file once, packed into fewer scan tasks
+    # than files; empty range -> []
     start, end = reader.initialOffset(), reader.latestOffset()
     parts = reader.partitions(start, end)
     data, _, _ = t.new_scan().plan_files()
-    assert len(parts) == len(data) > 3
-    assert all(isinstance(p, _StreamFileTask) for p in parts)
+    files = [f.file_path for p in parts for f in p.files]
+    assert len(files) == len(set(files)) == len(data) > 3
+    assert len(parts) < len(files)
+    assert all(isinstance(p, _ScanTask) for p in parts)
     assert reader.partitions(end, end) == []
 
     # end-to-end through the streaming engine
@@ -507,6 +637,31 @@ def test_add_files_foreign_field_ids_read_by_name(spark, warehouse,
     assert rows == {7: "x", 8: "y"}
 
 
+def test_scan_task_files_share_one_arrow_schema(spark, warehouse, tmp_path):
+    """One scan task streams every file's batches under one Arrow
+    schema: an imported file whose string column is large_string is
+    cast to the schema of the task's first file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from icelake_spark.datasource import IcelakeReader
+
+    src = spark.createDataFrame([(1, "a")], "id long, s string")
+    t = warehouse.create_table("db.mixedarrow", Schema.from_spark(src.schema))
+    t.append(src)
+    f = str(tmp_path / "large.parquet")
+    pq.write_table(pa.table({"id": pa.array([7], pa.int64()),
+                             "s": pa.array(["x"], pa.large_string())}), f)
+    t.add_files([f])
+    t = t.refresh()
+    parts = IcelakeReader({"path": t.path},
+                          t.schema().to_spark()).partitions()
+    assert [len(p.files) for p in parts] == [2]
+    rows = {r.id: r.s for r in spark.read.format("icelake")
+            .option("path", t.path).load().collect()}
+    assert rows == {1: "a", 7: "x"}
+
+
 def test_dsv2_read_mor_pos_plus_eq_deletes(spark, warehouse):
     """Batch DSv2 read with BOTH pos- and eq-deletes in play, including
     a file whose rows are entirely removed: the boolean filter masks
@@ -616,13 +771,13 @@ def test_dsv2_in_filter_prunes_files(spark, warehouse):
     df = (spark.read.format("icelake").option("path", t.path).load()
           .where("id in (3, 7)"))
     assert sorted(r.id for r in df.collect()) == [3, 7]
-    # direct reader probe: the IN filter must shrink the partition list
+    # direct reader probe: the IN filter must shrink the planned files
     r = IcelakeReader({"path": t.path}, t.schema().to_spark())
-    all_parts = r.partitions()
+    all_files = sum(len(p.files) for p in r.partitions())
     r2 = IcelakeReader({"path": t.path}, t.schema().to_spark())
     r2.filter_parts.append("id IN (3, 7)")
-    pruned = r2.partitions()
-    assert len(pruned) < len(all_parts)
+    pruned = sum(len(p.files) for p in r2.partitions())
+    assert pruned < all_files
 
 
 def test_stream_rate_limit_snapshots_per_trigger(spark, warehouse, tmp_path):
@@ -795,9 +950,10 @@ def test_stream_max_files_per_trigger(spark, warehouse, tmp_path):
         nxt = r.latestOffset()
         if nxt == cur:
             break
-        parts = r.partitions(cur, nxt)
-        assert len(parts) <= 2, f"batch exceeded file cap: {len(parts)}"
-        seen_files.extend(p.file_path for p in parts)
+        files = [f.file_path for p in r.partitions(cur, nxt)
+                 for f in p.files]
+        assert len(files) <= 2, f"batch exceeded file cap: {len(files)}"
+        seen_files.extend(files)
         cur, rounds = nxt, rounds + 1
     assert rounds == 3 and len(seen_files) == 6
     assert len(set(seen_files)) == 6  # no file planned twice
@@ -848,7 +1004,8 @@ def test_stream_caps_compose_and_walk_invariant(spark, warehouse):
             nxt = r.latestOffset()
             if nxt == cur:
                 break
-            out.append([p.file_path for p in r.partitions(cur, nxt)])
+            out.append([f.file_path for p in r.partitions(cur, nxt)
+                        for f in p.files])
             cur = nxt
         return out
 
@@ -918,7 +1075,7 @@ def test_stream_rate_limit_v1_timestamp_offsets(spark, warehouse, tmp_path):
         nxt = r.latestOffset()
         if nxt == cur:
             break
-        batches.append(len(r.partitions(cur, nxt)))
+        batches.append(sum(len(p.files) for p in r.partitions(cur, nxt)))
         cur = nxt
     # the backlog drains in exactly 2 one-snapshot batches even though
     # the offsets are ~1.7e12 apart

@@ -181,7 +181,7 @@ def test_planner_scale_10k_files_end_to_end(spark, warehouse, tmp_path):
     import time
     from dataclasses import replace as dc_replace
 
-    from icelake_spark.datasource import IcelakeReader, _FileTask
+    from icelake_spark.datasource import IcelakeReader, _FileTask, _ScanTask
     from icelake_spark.table import DeleteFileTask, FileScanTask
     from icelake_spark.types.manifest import (MANIFEST_CONTENT_DATA, DataFile,
                                               ManifestEntry, write_manifest,
@@ -220,10 +220,12 @@ def test_planner_scale_10k_files_end_to_end(spark, warehouse, tmp_path):
     data, pos, eq = planning.split_tasks(
         t.new_scan().plan_files_df(spark), FileScanTask, DeleteFileTask)
     assert len(data) == 10_000 and not pos and not eq
-    # DSv2 planning: one InputPartition per file
+    # DSv2 planning: every file in exactly one scan task
     r = IcelakeReader({"path": t.path}, t.schema().to_spark())
     parts = r.partitions()
-    assert len(parts) == 10_000
-    assert all(isinstance(p, _FileTask) for p in parts)
+    assert all(isinstance(p, _ScanTask) for p in parts)
+    files = [f for p in parts for f in p.files]
+    assert all(isinstance(f, _FileTask) for f in files)
+    assert len(files) == len({f.file_path for f in files}) == 10_000
     elapsed = time.monotonic() - start
     assert elapsed < 60, f"10k-file planning took {elapsed:.1f}s"
