@@ -103,6 +103,21 @@ class _ScanTask(InputPartition):
     files: tuple[_FileTask, ...]
 
 
+def _one_schema(tables: Iterator) -> Iterator:
+    """Arrow tables as the record batches of one Spark task, which form
+    one Arrow stream of one schema: an imported file may project to
+    other physical types (large_string), so a table whose schema
+    differs from the first one's is cast to it."""
+    schema = None
+    for t in tables:
+        if schema is None:
+            schema = t.schema
+        elif not t.schema.equals(schema):
+            t = t.cast(schema)
+        yield from t.to_batches()
+        del t  # release this table before the next one is read
+
+
 def _pack(files: list[_FileTask]) -> list[_ScanTask]:
     """Next-fit packing of file tasks, in planned order, into scan
     tasks: a file weighs its `size`, at least SPLIT_OPEN_FILE_COST, and
@@ -565,17 +580,7 @@ class _TableFileReader:
         record batches: a file's batches are yielded before the next
         file is opened, and the task reads each delete file once."""
         cache: dict = {}
-        schema = None
-        for f in task.files:
-            out = self._live_rows(f, cache)
-            # a task's batches form one Arrow stream of one schema; an
-            # imported file may hold other physical types (large_string)
-            if schema is None:
-                schema = out.schema
-            elif not out.schema.equals(schema):
-                out = out.cast(schema)
-            yield from out.to_batches()
-            del out  # release this file before the next one is read
+        yield from _one_schema(self._live_rows(f, cache) for f in task.files)
 
     def _live_rows(self, task: _FileTask, cache: dict):
         """The rows of one data file that its deletes leave alive,
@@ -1240,14 +1245,15 @@ class IcelakePartitionStreamReader(_TableFileReader, DataSourceStreamReader):
 
     def read(self, partition):  # executor-side
         if isinstance(partition, _ChangeSnapshotTask):
-            yield from self._changes(partition)
+            yield from _one_schema(self._changes(partition))
             return
         yield from self._read_scan(partition)
 
     def _changes(self, task: _ChangeSnapshotTask) -> Iterator:
-        """One snapshot's CDC events as Arrow batches: one dead-row mask
-        per file and delete side, so a row that a position AND an
-        equality delete of the same commit both hit is emitted once."""
+        """One snapshot's CDC events as Arrow tables, one per file: one
+        dead-row mask per file and delete side, so a row that a position
+        AND an equality delete of the same commit both hit is emitted
+        once."""
         import pyarrow as pa
 
         cache: dict = {}
@@ -1262,9 +1268,8 @@ class IcelakePartitionStreamReader(_TableFileReader, DataSourceStreamReader):
                 continue
             out = self._project(table.filter(pa.array(rows)), foreign)
             i = out.schema.get_field_index("_change_type")
-            yield from out.set_column(
-                i, "_change_type",
-                pa.repeat(pa.scalar(kind), out.num_rows)).to_batches()
+            yield out.set_column(i, "_change_type",
+                                 pa.repeat(pa.scalar(kind), out.num_rows))
 
     def commit(self, end: dict) -> None:
         pass

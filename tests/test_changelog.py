@@ -624,3 +624,42 @@ def test_changelog_stream_fails_loud_on_dropped_eq_key_column(
     with pytest.raises(ValueError, match="region"):
         for p in reader.partitions({"seq": 0}, {"seq": end}):
             list(reader.read(p))
+
+
+def test_changelog_stream_task_batches_share_one_arrow_schema(
+        spark, warehouse, tmp_path, arrow_rows):
+    """One changelog task's batches form one Arrow stream: a snapshot
+    whose deletes touch a native file and an imported file whose string
+    column is large_string yields every batch under one schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from icelake_spark.datasource import IcelakePartitionStreamReader
+
+    ddl = "id long, v string"
+    t = warehouse.create_table(
+        "db.chmixedarrow",
+        Schema.from_spark(spark.createDataFrame([], ddl).schema))
+    t.append(spark.createDataFrame([(1, "a"), (2, "b")], ddl))
+    f = str(tmp_path / "large.parquet")
+    pq.write_table(pa.table({"id": pa.array([7, 8], pa.int64()),
+                             "v": pa.array(["x", "y"], pa.large_string())}), f)
+    t = t.refresh()
+    t.add_files([f])
+    t = t.refresh()
+    base = t.current_snapshot()
+    t.delete_where(spark, "id in (1, 7)")  # one position delete per file
+    t = t.refresh()
+
+    schema = T.StructType(list(t.schema().to_spark().fields)
+                          + [T.StructField("_change_type", T.StringType())])
+    reader = IcelakePartitionStreamReader(
+        {"path": t.path, "changelog": "true",
+         "starting_sequence_number": str(base.sequence_number)}, schema)
+    parts = reader.partitions(reader.initialOffset(), reader.latestOffset())
+    assert len(parts) == 1 and len(parts[0].deletes) == 2
+    batches = list(reader.read(parts[0]))
+    assert len({b.schema for b in batches}) == 1
+    assert sorted(arrow_rows(batches)) == [(1, "a", "delete"),
+                                           (7, "x", "delete")]

@@ -182,7 +182,8 @@ def test_format_filter_pushdown_prunes(spark, warehouse):
     src = spark.range(40000).select("id")
     t = warehouse.create_table("db.ds4", Schema.from_spark(src.schema))
     for lo in range(0, 40000, 10000):
-        t.append(src.where(f"id >= {lo} and id < {lo + 10000}"))
+        t.append(src.where(f"id >= {lo} and id < {lo + 10000}"),
+                 max_records_per_file=1000)
     df = (spark.read.format("icelake").option("path", t.path).load()
           .where("id >= 30000"))
     assert df.count() == 10000
@@ -197,6 +198,12 @@ def test_format_filter_pushdown_prunes(spark, warehouse):
     pushed = [GreaterThanOrEqual(("id",), 30000)]
     assert list(r.pushFilters(pushed)) == pushed  # Spark re-applies
     assert sum(len(p.files) for p in r.partitions()) < len(full)
+    # end to end: the table's >= 33 small files pack into two scan tasks
+    # unfiltered, so Spark plans fewer only if it pushed the filter
+    all_tasks = IcelakeReader({"path": t.path},
+                              t.schema().to_spark()).partitions()
+    assert len(full) >= 33 and len(all_tasks) >= 2
+    assert df.rdd.getNumPartitions() < len(all_tasks)
 
 
 def test_stream_read_picks_up_new_snapshots(spark, warehouse, tmp_path):
