@@ -9,8 +9,9 @@ Registers the Iceberg table layer as a first-class Spark data source:
           .load())
 
 Batch reads (IcelakeReader): planning (snapshot → pruned file list)
-runs on the driver exactly like TableScan; `pushFilters` feeds simple
-comparisons into the zone-map file pruner before Spark sees the
+runs on the driver exactly like TableScan; `pushFilters` turns the
+filters Spark pushes into the scan's pruning expression (pruning.py),
+which prunes manifests, partitions and files before Spark sees the
 partitions. The merge-on-read deletes come from the same
 planning.DeletePlan the Spark join builder uses (sequence gates,
 equality groups, partition scopes, canonical paths): each data file
@@ -55,15 +56,9 @@ from pyspark.sql.datasource import (
     DataSourceReader,
     DataSourceStreamArrowWriter,
     DataSourceStreamReader,
-    EqualTo,
     InputPartition,
     WriterCommitMessage,
 )
-
-try:  # pushdown filter classes vary by minor version
-    from pyspark.sql.datasource import GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual
-except ImportError:  # pragma: no cover
-    GreaterThan = GreaterThanOrEqual = LessThan = LessThanOrEqual = ()
 
 from .planning import canon_data_path, plan_deletes
 
@@ -482,7 +477,7 @@ class _TableFileReader:
         self.spark_schema = spark_schema
         t = IcebergTable.load(path)
         self.rename_map = _rename_map(t)
-        schema = t.schema()
+        self.table_schema = schema = t.schema()
         self.field_ids = {f.name: f.field_id for f in schema.fields}
         # iceberg member types for nested rebinding (picklable dataclasses)
         self.ice_fields = {f.name: f.field_type for f in schema.fields}
@@ -597,49 +592,20 @@ class _TableFileReader:
 class IcelakeReader(_TableFileReader, DataSourceReader):
     def __init__(self, options: dict, schema):
         self.options = options
-        self.filter_parts: list[str] = []
+        self.prune = None  # pruning expression of the pushed filters
         self._bind(options["path"], schema)
 
     def pushFilters(self, filters):  # noqa: N802 (API name)
-        """Accept simple comparisons and IN lists for zone-map file
-        pruning; everything is reported back as unsupported so Spark
-        still applies it row-level (our pruning is an optimization, not
-        an evaluation). IN feeds the planner's DNF pruning (each value
-        an OR branch — any-branch-might-match keeps the file)."""
-        try:
-            from pyspark.sql.datasource import In as _In
-        except ImportError:  # pragma: no cover - older minor versions
-            _In = ()
-        ops = {EqualTo: "=", GreaterThan: ">", GreaterThanOrEqual: ">=",
-               LessThan: "<", LessThanOrEqual: "<="}
+        """Turn the filters Spark pushes into the scan's pruning
+        expression (pruning.from_filters: comparisons, IN, null tests
+        and NOT), typed values and all. Every filter is reported back
+        as unsupported, so Spark still applies it row by row: pruning
+        is an optimization, not an evaluation."""
+        from .pruning import from_filters
 
-        def _lit(v) -> str:
-            # repr() of date/datetime/Decimal values contains parens
-            # ("datetime.date(2024, 1, 5)"), which make the DNF parser
-            # bail and silently disable ALL file pruning for the query.
-            # Quoted ISO forms parse back via _parse_literal.
-            import datetime as _dt
-            import decimal as _dec
-
-            if isinstance(v, _dt.datetime):
-                return f"'{v.isoformat(sep=' ')}'"
-            if isinstance(v, _dt.date):
-                return f"'{v.isoformat()}'"
-            if isinstance(v, _dec.Decimal):
-                return str(v)
-            return repr(v)
-
-        for f in filters:
-            op = next((s for cls, s in ops.items()
-                       if isinstance(cls, type) and isinstance(f, cls)), None)
-            if op is not None and len(f.attribute) == 1:
-                self.filter_parts.append(
-                    f"{f.attribute[0]} {op} {_lit(f.value)}")
-            elif _In and isinstance(f, _In) and len(f.attribute) == 1 \
-                    and f.value:
-                vals = ", ".join(_lit(v) for v in f.value)
-                self.filter_parts.append(f"{f.attribute[0]} IN ({vals})")
-            yield f  # unsupported → Spark re-applies (safe)
+        filters = list(filters)
+        self.prune = from_filters(filters, self.table_schema)
+        yield from filters  # unsupported → Spark re-applies (safe)
 
     def partitions(self) -> list[_ScanTask]:
         from .table import IcebergTable
@@ -668,18 +634,18 @@ class IcelakeReader(_TableFileReader, DataSourceReader):
             kwargs["as_of_ms"] = int(self.options["as_of_ms"])
         if "ref" in self.options:
             kwargs["ref"] = self.options["ref"]
-        if self.filter_parts:
-            kwargs["filter"] = " AND ".join(self.filter_parts)
-        data, pos, eq = t.new_scan(**kwargs).plan_files()
+        data, pos, eq = t.new_scan(filter=self.prune, **kwargs).plan_files()
         plan = plan_deletes(data, pos, eq, t.schema(), t.metadata)
         by_file = _pos_sets(plan, self._src)
         return _pack([_file_task(d, plan, by_file) for d in data])
 
-    def read(self, partition: _ScanTask) -> Iterator:
+    def read(self, partition: _ScanTask | None) -> Iterator:
         """Read the task's data files with pyarrow, mask out their MoR
         deletes with Arrow kernels, yield Arrow record batches (Spark
-        converts via Arrow)."""
-        yield from self._read_scan(partition)
+        converts via Arrow). Spark reads one None partition when the
+        plan has none: pruning left no file."""
+        if partition is not None:
+            yield from self._read_scan(partition)
 
 
 def _skip_overwrites(options: dict) -> bool:

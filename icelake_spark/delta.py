@@ -281,9 +281,9 @@ def _row_level_dml(table, spark, condition: str,
     update = assignments is not None
     # a branch target reads the BRANCH's visible rows (the branch
     # must exist — read-modify DML cannot implicitly fork) and commits
-    # only to that branch. `filter=` only prunes the plan by zone maps
-    # (files that cannot match are never read); the working set below
-    # is read through read_mapped, which applies no row filter
+    # only to that branch. `filter=` only prunes the plan (files that
+    # cannot match are never read); the working set below is read
+    # through read_mapped, which applies no row filter
     scan = table.new_scan(apply_deletes=True, filter=condition,
                           **({"ref": branch} if branch else {}))
     data, pos_t, eq_t = scan.plan_files(spark)
@@ -388,9 +388,13 @@ def _row_level_dml(table, spark, condition: str,
     # dangerous, because the pos-delete write and the updated-copy
     # write would evaluate it independently (delete one row set, append
     # a different one). The merge_delta precedent; review r11
-    raw = _live(data, keep_helpers=True).persist()
+    # the match is evaluated BEFORE the cache: Spark's cached-batch
+    # pruning compares NaN column bounds as numbers and drops NaN rows
+    # from `x > 5`, which a filter over the cache would silently keep
+    raw = _live(data, keep_helpers=True).withColumn(
+        "__match", F.expr(f"coalesce(({condition}), false)")).persist()
     try:
-        matched = raw.where(condition)
+        matched = raw.where("__match")
         tx = Transaction(table, branch=branch)
         # copy-on-write: v1 always — its manifests cannot encode delete
         # files — or by the table's mode property

@@ -6,10 +6,10 @@ of manifest Avro files. Decoding them all on the driver serializes
 planning and bounds table size by driver memory. This module provides:
 
 - manifest-level pruning from manifest-list FieldSummaries (skip whole
-  manifests without opening them — mirrors the bounds idea of
-  FieldSummary in /root/reference/icelake/src/types/in_memory.rs:1348-1372);
-- file-level partition + zone-map pruning as pure functions usable on
-  either the driver or an executor;
+  manifests without opening them);
+- file-level partition + zone-map pruning, usable on either the driver
+  or an executor. Both evaluate the scan's one pruning expression
+  (pruning.py);
 - `plan_distributed`: planning as a Spark job — manifest paths are
   parallelized, executors decode their manifests with the pure-Python
   Avro reader and prune locally, and only SURVIVING tasks are pickled
@@ -25,17 +25,15 @@ from __future__ import annotations
 import json
 import os
 import pickle
-import re
 from dataclasses import dataclass
 from typing import Any
 
+from . import pruning
 from .types import (
     CONTENT_DATA,
     CONTENT_EQUALITY_DELETES,
     CONTENT_POSITION_DELETES,
-    PrimitiveType,
     Schema,
-    decode_bound,
 )
 from .types.manifest import (
     MANIFEST_CONTENT_DATA,
@@ -43,7 +41,6 @@ from .types.manifest import (
     read_manifest,
 )
 from .types.metadata import TableMetadata
-from .types.transforms import apply_transform_py, transform_result_type
 
 # Above this manifest count, planning becomes a Spark job when a session
 # is available (overridable via table property
@@ -118,386 +115,60 @@ def resolve_path(table_path: str, path: str) -> str:
     return p
 
 
-# ------------------------------------------------------------- predicates
-
-
-#  '==' must precede '=' and '<>' must precede '<' in the alternation:
-# with '=' first, a no-space "a=='x'" parses as op '=' with literal
-# "='x'"; with '<' first, "a<>'x'" parses as op '<' with literal
-# ">'x'" — either corrupted literal PRUNES files that match (silent
-# data loss; review r12 added the '<>' spelling)
-_OP_RE = re.compile(r"^(\w+)\s*(<=|>=|!=|<>|==|=|<|>)\s*(.+)$")
-
-
-def _split_top_level(text: str, word: str) -> list[str]:
-    """Split on a keyword at paren depth 0 OUTSIDE string literals —
-    `name = 'x or y'` must not split inside the literal."""
-    parts: list[str] = []
-    depth, quote, start, i, n = 0, None, 0, 0, len(text)
-    wl = len(word)
-    while i < n:
-        ch = text[i]
-        if quote:
-            if ch == quote:
-                quote = None
-        elif ch in "'\"":
-            quote = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and text[i:i + wl].upper() == word \
-                and (i == 0 or text[i - 1].isspace()) \
-                and (i + wl == n or text[i + wl].isspace()):
-            parts.append(text[start:i])
-            start = i + wl
-            i += wl
-            continue
-        i += 1
-    parts.append(text[start:])
-    return [s.strip() for s in parts if s.strip()]
-
-
-_IN_RE = re.compile(r"^(\w+)\s+IN\s*\((.+)\)$",
-                    re.IGNORECASE | re.DOTALL)
-
-
-def _split_commas_quoted(text: str) -> list[str]:
-    parts, quote, start = [], None, 0
-    for i, ch in enumerate(text):
-        if quote:
-            if ch == quote:
-                quote = None
-        elif ch in "'\"":
-            quote = ch
-        elif ch == ",":
-            parts.append(text[start:i])
-            start = i + 1
-    parts.append(text[start:])
-    return [s.strip() for s in parts if s.strip()]
-
-
-def parse_stats_preds(filter_str: str | None, schema: Schema,
-                      parse_literal) -> list[list[tuple[int, str, Any, PrimitiveType]]]:
-    """Parse a filter into DNF branches of simple `col OP literal`
-    conjuncts for zone-map pruning: a file survives if ANY branch might
-    match it. Supported shapes: conjunctions, top-level OR over
-    conjunctions, and a whole-filter `col IN (v, ...)`. Parens (other
-    than IN's list) bail out to no pruning — Catalyst still applies the
-    full filter in-file, so pruning stays a pure optimization; a branch
-    with NO parseable conjunct keeps every file, so it disables pruning
-    entirely (pruning on the other branches alone would drop its
-    matches — silent data loss)."""
-    if not filter_str:
-        return []
-    s = filter_str.strip()
-    m = _IN_RE.match(s)
-    if m and "(" not in m.group(2):
-        f = schema.field_by_name(m.group(1))
-        if f is None or not isinstance(f.field_type, PrimitiveType):
-            return []
-        branches = []
-        for lit in _split_commas_quoted(m.group(2)):
-            val = parse_literal(lit, f.field_type)
-            if val is None:
-                return []
-            branches.append([(f.field_id, "=", val, f.field_type)])
-        return branches
-    if "(" in s:
-        return []
-    branches = []
-    for br in _split_top_level(s, "OR"):
-        preds = []
-        for c in _split_top_level(br, "AND"):
-            m = _OP_RE.match(c.strip())
-            if not m:
-                continue
-            col, op, lit = (m.group(1),
-                            m.group(2).replace("==", "=")
-                            .replace("<>", "!="),
-                            m.group(3).strip())
-            if lit.startswith(("'", '"')):
-                # a quoted literal must be EXACTLY one clean quoted
-                # string ('' doubling allowed, no backslash escapes —
-                # the quote trackers don't unescape those): anything
-                # trailing (absorbed AND clauses, || concats) or
-                # backslash-bearing is unparseable and must NOT become
-                # a pruning predicate (review r12 — corrupt string
-                # preds silently dropped matching files)
-                q = lit[0]
-                if not re.match(rf"^{q}(?:[^{q}\\]|{q}{q})*{q}$", lit):
-                    continue
-            elif re.search(r"\s", lit):
-                continue  # trailing junk — not a simple conjunct
-            f = schema.field_by_name(col)
-            if f is None or not isinstance(f.field_type, PrimitiveType):
-                continue
-            val = parse_literal(lit, f.field_type)
-            if val is None:
-                continue
-            preds.append((f.field_id, op, val, f.field_type))
-        if not preds:
-            return []  # unprunable branch: every file might match it
-        branches.append(preds)
-    return branches
-
-
-def _branch_keep(data_file, schema: Schema, preds, lo=None, hi=None) -> bool:
-    if lo is None or hi is None:
-        pred_fids = {fid for fid, _op, _v, _t in preds}
-        lo = data_file.decoded_bounds(schema, "lower", fids=pred_fids)
-        hi = data_file.decoded_bounds(schema, "upper", fids=pred_fids)
-    for fid, op, val, _ft in preds:
-        lo_v, hi_v = lo.get(fid), hi.get(fid)
-        if lo_v is None or hi_v is None:
-            continue
-        if op == "=" and (val < lo_v or val > hi_v):
-            return False
-        if op == "<" and lo_v >= val:
-            return False
-        if op == "<=" and lo_v > val:
-            return False
-        if op == ">" and hi_v <= val:
-            return False
-        if op == ">=" and hi_v < val:
-            return False
-    return True
-
-
-def stats_keep(data_file, schema: Schema, dnf) -> bool:
-    """Zone-map check over DNF branches: can this file contain rows
-    matching ANY branch's every conjunct? Bounds decode ONCE per file
-    over the union of all branches' field ids (review r11): a 100-value
-    IN-list parses to 100 branches, and per-branch decoding multiplied
-    the planning hot path's dominant cost by the list size."""
-    if not dnf:
-        return True
-    all_fids = {fid for preds in dnf for fid, _op, _v, _t in preds}
-    lo = data_file.decoded_bounds(schema, "lower", fids=all_fids)
-    hi = data_file.decoded_bounds(schema, "upper", fids=all_fids)
-    return any(_branch_keep(data_file, schema, preds, lo=lo, hi=hi)
-               for preds in dnf)
-
-
-def _coerce_filter_value(v: Any, t: PrimitiveType) -> Any:
-    """Best-effort coercion of a partition-filter value to the source
-    column's python type (ISO strings → date/datetime, numeric strings
-    → int/float) so a convenience-typed filter still prunes correctly."""
-    import datetime as dt
-
-    if not isinstance(v, str):
-        return v
-    n = t.name
-    if n == "date":
-        return dt.date.fromisoformat(v)
-    if n in ("timestamp", "timestamptz"):
-        out = dt.datetime.fromisoformat(v)
-        if n == "timestamptz" and out.tzinfo is None:
-            # match _parse_literal: decoded tz bounds are UTC-AWARE,
-            # and a naive!=aware compare either crashes pruning or
-            # silently prunes every file (review r12)
-            out = out.replace(tzinfo=dt.timezone.utc)
-        return out
-    if n in ("int", "long"):
-        return int(v)
-    if n in ("float", "double"):
-        return float(v)
-    if n == "decimal":
-        from decimal import Decimal
-        return Decimal(v)
-    if n == "boolean":
-        return v.lower() == "true"
-    return v
-
-
-def residual_partition_field(metadata: TableMetadata, key: str):
-    """The partition field a partition_filter key refers to, under
-    DEFAULT-SPEC-FIRST resolution (shared by pruning and the row-level
-    residual so the two can never disagree): the current default
-    spec's field of that name wins; otherwise older specs' fields win
-    only when they all agree on (source, transform). Returns None when
-    the name is absent or historically ambiguous (ADVICE r8 /
-    code-review r9)."""
-    try:
-        default = metadata.default_spec()
-    except KeyError:
-        default = None
-    if default is not None:
-        f = next((f for f in default.fields if f.name == key), None)
-        if f is not None:
-            return f
-    matches = [f for spec in metadata.partition_specs
-               for f in spec.fields if f.name == key]
-    sigs = {(f.source_column_id, f.transform) for f in matches}
-    if len(sigs) == 1:
-        return matches[0]
-    return None
-
-
-def partition_wanted(metadata: TableMetadata, partition_filter: dict[str, Any] | None,
-                     ) -> dict[int, dict[str, Any]]:
-    """Per-spec expected partition tuple values from a filter keyed by
-    partition-field name OR source-column name (transformed here once,
-    instead of per file). Pruning is a pure OPTIMIZATION: a filter value
-    that cannot be coerced/transformed for a field is SKIPPED for that
-    field (no pruning on it) instead of crashing the scan or silently
-    pruning every file via a type-mismatched comparison.
-
-    Spec-evolution guard: when a spec's same-named field DISAGREES with
-    the filter key's resolved meaning (residual_partition_field —
-    default-spec-first), that spec does NOT prune on the field. Its
-    files scan and the row-level residual (which applies the resolved
-    transform, file-spec-independent) filters exactly — pruning by the
-    stale spec's raw value would drop files containing matching rows."""
-    if not partition_filter:
-        return {}
-    schema = metadata.current_schema()
-    out: dict[int, dict[str, Any]] = {}
-    for spec in metadata.partition_specs:
-        want: dict[str, Any] = {}
-        for pf in spec.fields:
-            if pf.name in partition_filter:
-                ref = residual_partition_field(metadata, pf.name)
-                if ref is not None and (
-                        (pf.source_column_id, pf.transform)
-                        != (ref.source_column_id, ref.transform)):
-                    continue  # residual filters these files' rows
-                # coerce to the partition field's RESULT type (review
-                # r11): identity partitions share the field name with
-                # the source column, and an uncoerced '2024-01-01'
-                # string never equals the date partition value — the
-                # docstring's skip-don't-mangle promise applied only
-                # to the source-name branch, so a convenience-typed
-                # filter silently pruned every file (or str-vs-date
-                # crashed the FieldSummary compare in prune_manifests)
-                src = schema.field_by_id(pf.source_column_id)
-                rt = transform_result_type(
-                    pf.transform, src.field_type if src else None)
-                val = partition_filter[pf.name]
-                if val is not None and isinstance(rt, PrimitiveType):
-                    try:
-                        val = _coerce_filter_value(val, rt)
-                    except (ValueError, TypeError):
-                        continue  # unusable filter value: skip field
-                want[pf.name] = val
-            else:
-                src = schema.field_by_id(pf.source_column_id)
-                if src and src.name in partition_filter:
-                    try:
-                        val = _coerce_filter_value(
-                            partition_filter[src.name], src.field_type)
-                        want[pf.name] = apply_transform_py(
-                            pf.transform, val, src.field_type)
-                    except (ValueError, TypeError):
-                        continue  # unusable filter value: skip this field
-        out[spec.spec_id] = want
-    return out
-
-
-def partition_keep(data_file, wanted_for_spec: dict[str, Any]) -> bool:
-    for name, want in wanted_for_spec.items():
-        if data_file.partition.get(name) != want:
-            return False
-    return True
+# ----------------------------------------------------------------- pruning
 
 
 def prune_manifests(mles: list[ManifestListEntry], metadata: TableMetadata,
-                    wanted: dict[int, dict[str, Any]]) -> list[ManifestListEntry]:
-    """Drop data manifests whose FieldSummary bounds prove no file can
-    match the partition filter — without opening the manifest. Delete
-    manifests and manifests lacking summaries are always kept."""
-    if not wanted:
-        return mles
-    schema = metadata.current_schema()
-    out = []
-    for mle in mles:
-        if mle.content != MANIFEST_CONTENT_DATA or not mle.partitions:
-            out.append(mle)
-            continue
-        try:
-            spec = metadata.spec_by_id(mle.partition_spec_id)
-        except KeyError:
-            spec = None
-        want = wanted.get(mle.partition_spec_id, {})
-        if spec is None or not want:
-            out.append(mle)
-            continue
-        keep = True
-        for i, pf in enumerate(spec.fields):
-            if pf.name not in want or i >= len(mle.partitions):
-                continue
-            s = mle.partitions[i] or {}
-            v = want[pf.name]
-            if v is None:
-                if s.get("contains_null") is False:
-                    keep = False
-                    break
-                continue
-            lo_b, hi_b = s.get("lower_bound"), s.get("upper_bound")
-            if lo_b is None or hi_b is None:
-                continue
-            src = schema.field_by_id(pf.source_column_id)
-            t = transform_result_type(pf.transform,
-                                      src.field_type if src else None)
-            if not isinstance(t, PrimitiveType):
-                continue
-            try:
-                lo, hi = decode_bound(t, bytes(lo_b)), decode_bound(t, bytes(hi_b))
-                drop = v < lo or v > hi
-            except Exception:
-                # decode failure OR a type-mismatched comparison (the
-                # compare sat OUTSIDE this try and crashed planning on
-                # e.g. naive-vs-aware datetimes; review r12): bounds
-                # unusable -> manifest kept
-                continue
-            if drop:
-                keep = False
-                break
-        if keep:
-            out.append(mle)
-    return out
+                    expr) -> list[ManifestListEntry]:
+    """Drop data manifests whose FieldSummaries prove that no file can
+    match the scan's pruning expression (pruning.py), without opening
+    them. Delete manifests and manifests lacking summaries are kept."""
+    by_spec = pruning.for_specs(expr, metadata)
+    return [m for m in mles
+            if m.content != MANIFEST_CONTENT_DATA or not m.partitions
+            or pruning.summary_might_match(by_spec.get(m.partition_spec_id),
+                                           m.partitions)]
 
 
 # ---------------------------------------------------------------- assembly
 
 
 def assemble_manifest(table_path: str, metadata: TableMetadata,
-                      mle: ManifestListEntry, entries,
-                      wanted: dict[int, dict[str, Any]], preds,
+                      mle: ManifestListEntry, entries, expr,
                       ) -> list[tuple[int, Any, int, int]]:
-    """(manifest entries) → pruned [(content, DataFile, seq, spec_id)].
+    """(manifest entries) → pruned [(content, DataFile, seq, spec_id)]:
+    data files are kept when the scan's pruning expression might match
+    their partition tuple and their column metrics.
 
     Shared by the serial and distributed planners so both produce
     byte-identical plans. `entries` come from `read_manifest(path,
     mle)`, so their sequence numbers are already inherited."""
     schema = metadata.current_schema()
-    want = wanted.get(mle.partition_spec_id, {}) if wanted else {}
+    part_expr = pruning.for_specs(expr, metadata).get(mle.partition_spec_id)
     out = []
     for e in entries:
         if not e.is_alive:
             continue
         df = e.data_file
         df.file_path = resolve_path(table_path, df.file_path)
-        if df.content == CONTENT_DATA:
-            if want and not partition_keep(df, want):
-                continue
-            if preds and not stats_keep(df, schema, preds):
-                continue
+        if df.content == CONTENT_DATA and not (
+                pruning.partition_might_match(part_expr, df.partition or {})
+                and pruning.metrics_might_match(expr, df, schema)):
+            continue
         out.append((df.content, df, e.sequence_number, mle.partition_spec_id))
     return out
 
 
 def plan_distributed(spark, table_path: str, metadata: TableMetadata,
                      mles: list[ManifestListEntry],
-                     wanted: dict[int, dict[str, Any]] | None = None,
-                     preds=None) -> list[tuple[int, Any, int, int]]:
+                     expr=None) -> list[tuple[int, Any, int, int]]:
     """Planning as a Spark job: the list-returning face of
     `plan_files_df`. The plan DataFrame is STREAMED to the driver
     (toLocalIterator, one Arrow partition in memory at a time) instead
     of collect()ed, so peak driver memory is the final task list alone,
     not list + pickled blob buffers. Result order is deterministic
     (manifest-list position, then entry order)."""
-    pdf = plan_files_df(spark, table_path, metadata, mles, wanted, preds)
+    pdf = plan_files_df(spark, table_path, metadata, mles, expr)
     return [(r.content, pickle.loads(bytes(r.task)), r.seq, r.spec_id)
             for r in pdf.orderBy("mi", "fi").toLocalIterator()]
 
@@ -747,9 +418,7 @@ def _distributed_manifest_df(spark, mles: list[ManifestListEntry],
 
 
 def plan_files_df(spark, table_path: str, metadata: TableMetadata,
-                  mles: list[ManifestListEntry],
-                  wanted: dict[int, dict[str, Any]] | None = None,
-                  preds=None):
+                  mles: list[ManifestListEntry], expr=None):
     """Planning that RETURNS A DATAFRAME — the lifted form of SURVEY §7
     risk 8 (the reference plans purely driver-side, table.rs:281-304):
     one row per surviving file with light columns (content, file_path,
@@ -761,9 +430,9 @@ def plan_files_df(spark, table_path: str, metadata: TableMetadata,
     once. `mi` is the manifest-list position for deterministic ordering.
     """
     def build(c, mi, mle, entries, cols):
-        tpath, meta, want, prs = c
+        tpath, meta, ex = c
         for fi, (content, dfile, seq, spec_id) in enumerate(
-                assemble_manifest(tpath, meta, mle, entries, want, prs)):
+                assemble_manifest(tpath, meta, mle, entries, ex)):
             cols["mi"].append(mi)
             cols["fi"].append(fi)
             cols["content"].append(int(content))
@@ -777,17 +446,14 @@ def plan_files_df(spark, table_path: str, metadata: TableMetadata,
             cols["task"].append(pickle.dumps(dfile))
 
     return _distributed_manifest_df(
-        spark, mles, (table_path, metadata, wanted or {}, preds or []),
+        spark, mles, (table_path, metadata, expr),
         PLAN_DF_SCHEMA, build)
 
 
 def plan_serial(table_path: str, metadata: TableMetadata,
                 mles: list[ManifestListEntry],
-                wanted: dict[int, dict[str, Any]] | None = None,
-                preds=None) -> list[tuple[int, Any, int, int]]:
+                expr=None) -> list[tuple[int, Any, int, int]]:
     """Driver-side twin of plan_distributed (thread-pooled I/O)."""
-    wanted = wanted or {}
-    preds = preds or []
     if len(mles) > 4:
         from concurrent.futures import ThreadPoolExecutor
 
@@ -802,7 +468,7 @@ def plan_serial(table_path: str, metadata: TableMetadata,
     tasks: list[tuple[int, Any, int, int]] = []
     for mle, (_, entries) in zip(mles, parsed):
         tasks.extend(assemble_manifest(table_path, metadata, mle, entries,
-                                       wanted, preds))
+                                       expr))
     return tasks
 
 

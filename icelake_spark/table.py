@@ -16,6 +16,7 @@ with an anti-join on the equality-id columns gated by sequence number.
 
 from __future__ import annotations
 
+import functools
 import os
 from dataclasses import dataclass
 from typing import TYPE_CHECKING, Any
@@ -23,7 +24,7 @@ from typing import TYPE_CHECKING, Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .types.datatypes import PrimitiveType, Schema
+from .types.datatypes import Schema
 from .types.manifest import DataFile, read_manifest_list
 from .types.metadata import MAIN_BRANCH, Snapshot, TableMetadata
 
@@ -803,15 +804,20 @@ class IcebergTable:
 
 
 class TableScan:
-    """Snapshot-pinned scan with projection, partition pruning, and
-    min/max stats pruning (TableScanBuilder parity, io/scan.rs:29-141).
-    """
+    """Snapshot-pinned scan with projection and pruning
+    (TableScanBuilder parity, io/scan.rs:29-141). `filter` (SQL text,
+    or an expression `pruning` bound already) and `partition_filter`
+    become one pruning expression over manifests, partitions and
+    files. Pruning is inclusive, so `to_df` re-applies the whole text
+    `filter` row by row and `partition_filter` as an exact residual; a
+    pre-bound expression (the DataSource's pushed filters, which Spark
+    re-applies) only prunes."""
 
     def __init__(self, table: IcebergTable, columns: list[str] | None = None,
                  snapshot_id: int | None = None, as_of_ms: int | None = None,
                  ref: str | None = None,
                  partition_filter: dict[str, Any] | None = None,
-                 filter: str | None = None,
+                 filter: Any = None,
                  apply_deletes: bool = True,
                  distributed_planning: bool | None = None):
         self.table = table
@@ -844,7 +850,7 @@ class TableScan:
             return self._plan_cache
         from . import planning
 
-        snap, mles, wanted, preds = self._pruned_manifests()
+        snap, mles, expr = self._pruned_manifests(spark)
         if snap is None:
             return [], [], []
         meta = self.table.metadata
@@ -856,10 +862,9 @@ class TableScan:
             use_dist = spark is not None and len(mles) >= thr
         if use_dist and spark is not None:
             tasks = planning.plan_distributed(spark, self.table.path, meta,
-                                              mles, wanted, preds)
+                                              mles, expr)
         else:
-            tasks = planning.plan_serial(self.table.path, meta, mles,
-                                         wanted, preds)
+            tasks = planning.plan_serial(self.table.path, meta, mles, expr)
         self._plan_cache = planning.split_tasks(
             tasks, FileScanTask, DeleteFileTask)
         return self._plan_cache
@@ -879,46 +884,52 @@ class TableScan:
         list)."""
         from . import planning
 
-        snap, mles, wanted, preds = self._pruned_manifests()
+        snap, mles, expr = self._pruned_manifests(spark)
         if snap is None:
             return spark.createDataFrame([], planning.PLAN_DF_SCHEMA)
         return planning.plan_files_df(spark, self.table.path,
-                                      self.table.metadata, mles, wanted, preds)
+                                      self.table.metadata, mles, expr)
 
-    def _pruned_manifests(self):
+    def _pruned_manifests(self, spark: SparkSession | None):
         """(snapshot, manifest-list entries left after FieldSummary
-        pruning, wanted partition values per spec, zone-map predicates):
-        the planning input both plan_files and plan_files_df start
-        from. The snapshot is None when the scan resolves to none."""
-        from . import planning
+        pruning, the scan's pruning expression): the planning input both
+        plan_files and plan_files_df start from. The snapshot is None
+        when the scan resolves to none."""
+        from . import planning, pruning
 
         snap = self.table.snapshot(self.snapshot_id, self.as_of_ms, self.ref)
         if snap is None:
-            return None, [], {}, []
+            return None, [], None
         meta = self.table.metadata
         mles = read_manifest_list(self.table._resolve(snap.manifest_list))
-        wanted = planning.partition_wanted(meta, self.partition_filter)
-        preds = planning.parse_stats_preds(self.filter, self.table.schema(),
-                                           _parse_literal)
-        return snap, planning.prune_manifests(mles, meta, wanted), wanted, preds
+        expr = self.filter
+        if isinstance(expr, str):
+            expr = pruning.from_sql(spark, expr, self._read_schema())
+        expr = pruning.conj([expr, pruning.from_partition_filter(
+            meta, self.partition_filter)])
+        return snap, planning.prune_manifests(mles, meta, expr), expr
 
     # ---------------------------------------------------------- execution
 
-    def to_df(self, spark: SparkSession) -> DataFrame:
-        data, pos, eq = self.plan_files(spark)
-        # schema evolution: explicit time-travel reads use the schema the
-        # snapshot was written under (io/scan.rs:60-80); current reads use
-        # the current schema (old files project new columns as null)
-        schema = self.table.schema()
+    def _read_schema(self) -> Schema:
+        """The schema rows are read with. Schema evolution: explicit
+        time-travel reads use the schema the snapshot was written under
+        (io/scan.rs:60-80); current reads use the current schema (old
+        files project new columns as null)."""
         time_travel = (self.snapshot_id is not None or self.as_of_ms is not None
                        or (self.ref is not None and self.ref != MAIN_BRANCH))
         if time_travel:
             snap = self.table.snapshot(self.snapshot_id, self.as_of_ms, self.ref)
             if snap is not None and snap.schema_id is not None:
                 try:
-                    schema = self.table.metadata.schema_by_id(snap.schema_id)
+                    return self.table.metadata.schema_by_id(snap.schema_id)
                 except KeyError:
                     pass
+        return self.table.schema()
+
+    def to_df(self, spark: SparkSession) -> DataFrame:
+        data, pos, eq = self.plan_files(spark)
+        schema = self._read_schema()
         spark_schema = schema.to_spark()
         # zero-row files (empty output tasks committed by pre-r13
         # writers, or external writers) contribute nothing, and having
@@ -940,7 +951,7 @@ class TableScan:
             df = self._apply_deletes(spark, df, data, pos, eq,
                                      read_schema=schema)
 
-        if self.filter:
+        if isinstance(self.filter, str) and self.filter:
             df = df.where(self.filter)
         residual = self._partition_residual(schema)
         if residual is not None:
@@ -984,61 +995,26 @@ class TableScan:
         return df
 
     def _partition_residual(self, schema: Schema):
-        """Row-level equivalent of partition_filter: for a key naming a
-        partition FIELD, transform(source) == value; for a key naming a
-        SOURCE column, source == value. Unknown keys match the pruning
-        contract (ignored)."""
-        if not self.partition_filter:
-            return None
-        from .planning import _coerce_filter_value, residual_partition_field
+        """Row-level equivalent of partition_filter, rendered from the
+        same leaves that prune (pruning.from_partition_filter): a key
+        naming a partition field filters transform(source) <=> value, a
+        key naming a column filters column <=> value. Files kept by
+        pruning (older specs lacking the field, uncoercible values)
+        would otherwise leak non-matching rows after spec evolution."""
+        from .pruning import from_partition_filter, leaves
         from .types.transforms import transform_column
 
-        meta = self.table.metadata
         conds = []
-        for key, val in self.partition_filter.items():
-            # default-spec-first resolution SHARED with pruning
-            # (planning.residual_partition_field): if spec evolution
-            # re-created a same-named field with a different transform,
-            # the residual applies the DEFAULT spec's transform
-            # row-level (file-spec-independent — exact WHERE semantics)
-            # while pruning skips the disagreeing specs' files, which
-            # this residual then filters (ADVICE r8 / code-review r9).
-            # A name only in disagreeing OLDER specs resolves to None:
-            # genuinely ambiguous, no residual (pruning degrades to
-            # per-spec raw-value matching for it).
-            pf = residual_partition_field(meta, key)
-            if pf is not None:
-                src = schema.field_by_id(pf.source_column_id)
-                if src is None:
-                    continue
-                try:
-                    from .types.transforms import transform_result_type
-
-                    val = _coerce_filter_value(
-                        val, transform_result_type(pf.transform,
-                                                   src.field_type))
-                except (ValueError, TypeError):
-                    continue  # unusable value: skip, never crash
-                expr = transform_column(pf.transform, F.col(src.name),
-                                        src.field_type)
-                conds.append(expr.eqNullSafe(F.lit(val)))
+        for lf in leaves(from_partition_filter(self.table.metadata,
+                                               self.partition_filter)):
+            f = schema.field_by_id(lf.fid)
+            if f is None:
                 continue
-            f = schema.field_by_name(key)
-            if f is not None:
-                # same degrade contract as partition_wanted: a value
-                # that cannot coerce to the column type is SKIPPED (no
-                # filtering on that key), never a scan-time cast crash
-                try:
-                    val = _coerce_filter_value(val, f.field_type)
-                except (ValueError, TypeError):
-                    continue
-                conds.append(F.col(key).eqNullSafe(F.lit(val)))
-        if not conds:
-            return None
-        out = conds[0]
-        for c in conds[1:]:
-            out = out & c
-        return out
+            col = F.col(f.name)
+            if lf.transform is not None:
+                col = transform_column(lf.transform, col, f.field_type)
+            conds.append(col.eqNullSafe(F.lit(lf.value)))
+        return functools.reduce(lambda a, b: a & b, conds) if conds else None
 
     def _with_name_mapping(self, schema: Schema, spark_schema):
         """(read_schema, {current_name: [old names]}) honoring the
@@ -1340,41 +1316,3 @@ def read_data_files(spark: SparkSession, spark_schema, tasks: list[FileScanTask]
     for p in parts[1:]:
         df = df.unionByName(p)
     return df
-
-
-def _parse_literal(lit: str, t: PrimitiveType) -> Any:
-    import datetime as dt
-    from decimal import Decimal as _D
-
-    lit = lit.strip()
-    if len(lit) >= 2 and lit[0] == lit[-1] and lit[0] in "'\"":
-        # strip ONE pair of outer quotes and unescape SQL doubled
-        # quotes of that style: the old strip("'\"") kept the doubled
-        # inner quotes, so filter="name = 'it''s'" pruned against
-        # "it''s" and zone-maps dropped the file that really holds
-        # "it's" — silent missing rows, since pruning must be a pure
-        # optimization (review r11)
-        q = lit[0]
-        lit = lit[1:-1].replace(q * 2, q)
-    try:
-        n = t.name
-        if n in ("int", "long"):
-            return int(lit)
-        if n in ("float", "double"):
-            return float(lit)
-        if n == "decimal":
-            return _D(lit)
-        if n == "string":
-            return lit
-        if n == "date":
-            return dt.date.fromisoformat(lit)
-        if n in ("timestamp", "timestamptz"):
-            v = dt.datetime.fromisoformat(lit)
-            if n == "timestamptz" and v.tzinfo is None:
-                v = v.replace(tzinfo=dt.timezone.utc)
-            return v
-        if n == "boolean":
-            return lit.lower() == "true"
-    except (ValueError, ArithmeticError):
-        return None
-    return None

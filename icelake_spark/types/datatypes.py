@@ -392,6 +392,29 @@ def decode_bound(t: PrimitiveType, b: bytes) -> Any:
     raise ValueError(f"cannot decode bound for {t}")
 
 
+def parse_value(t: PrimitiveType, s: str) -> Any:
+    """Text as the python value of type `t` that decode_bound returns
+    (ISO dates and timestamps; a naive timestamptz reads as UTC). Other
+    types return the text."""
+    n = t.name
+    if n in ("int", "long"):
+        return int(s)
+    if n in ("float", "double"):
+        return struct.unpack("<f", struct.pack("<f", float(s)))[0] \
+            if n == "float" else float(s)
+    if n == "decimal":
+        return Decimal(s)
+    if n == "boolean":
+        return s.lower() == "true"
+    if n == "date":
+        return date.fromisoformat(s)
+    if n in ("timestamp", "timestamptz"):
+        v = datetime.fromisoformat(s)
+        return v.replace(tzinfo=timezone.utc) \
+            if n == "timestamptz" and v.tzinfo is None else v
+    return s
+
+
 # ------------------------------------------------------------------ schema
 
 

@@ -25,11 +25,9 @@ record every path, so file names themselves are free.
 
 from __future__ import annotations
 
-import datetime as dt
 import urllib.parse
 import uuid
 from concurrent.futures import ThreadPoolExecutor
-from decimal import Decimal
 from functools import partial
 from typing import Any
 
@@ -45,7 +43,8 @@ from .fileio import (
     rel_under,
     resolve_io,
 )
-from .types.datatypes import PrimitiveType, Schema, encode_bound, to_spark_type
+from .types.datatypes import (PrimitiveType, Schema, encode_bound, parse_value,
+                              to_spark_type)
 from .types.manifest import CONTENT_DATA, DataFile
 from .types.metadata import PartitionSpec
 from .types.transforms import transform_column, transform_result_type
@@ -92,23 +91,7 @@ def _parse_hive_value(raw: str, t: PrimitiveType) -> Any:
             return ""
         if s.startswith(_EMPTY_PART):
             return s[len(_EMPTY_PART):]
-    n = t.name
-    if n in ("int", "long"):
-        return int(s)
-    if n in ("float", "double"):
-        return float(s)
-    if n == "decimal":
-        return Decimal(s)
-    if n == "boolean":
-        return s.lower() == "true"
-    if n == "date":
-        return dt.date.fromisoformat(s)
-    if n == "timestamp":
-        return dt.datetime.fromisoformat(s)
-    if n == "timestamptz":
-        v = dt.datetime.fromisoformat(s)
-        return v if v.tzinfo else v.replace(tzinfo=dt.timezone.utc)
-    return s  # string / uuid
+    return parse_value(t, s)
 
 
 def _result_type(pf, schema: Schema) -> PrimitiveType:

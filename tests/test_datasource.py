@@ -760,9 +760,11 @@ def test_dsv2_incremental_snapshot_window(spark, warehouse):
 
 
 def test_dsv2_in_filter_prunes_files(spark, warehouse):
-    """An IN predicate pushed through the DSv2 reader feeds the DNF
-    zone-map pruner: only files whose bounds can match any IN value
-    are planned."""
+    """An IN predicate pushed through the DSv2 reader becomes an `in`
+    leaf of the scan's pruning expression: only files whose bounds can
+    match an IN value are planned."""
+    from pyspark.sql.datasource import In
+
     from icelake_spark import datasource
     from icelake_spark.datasource import IcelakeReader
 
@@ -782,7 +784,7 @@ def test_dsv2_in_filter_prunes_files(spark, warehouse):
     r = IcelakeReader({"path": t.path}, t.schema().to_spark())
     all_files = sum(len(p.files) for p in r.partitions())
     r2 = IcelakeReader({"path": t.path}, t.schema().to_spark())
-    r2.filter_parts.append("id IN (3, 7)")
+    assert len(list(r2.pushFilters([In(("id",), (3, 7))]))) == 1
     pruned = sum(len(p.files) for p in r2.partitions())
     assert pruned < all_files
 

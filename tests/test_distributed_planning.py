@@ -9,7 +9,7 @@ skip whole manifests without opening them.
 
 import pytest
 
-from icelake_spark import planning
+from icelake_spark import planning, pruning
 from icelake_spark.types import PartitionField, PartitionSpec, Schema
 from icelake_spark.types.manifest import read_manifest_list
 
@@ -68,8 +68,8 @@ def test_field_summaries_written_and_prune(spark, multi_manifest_table):
     data_mles = [m for m in mles if m.partitions]
     assert data_mles, "commit should write FieldSummaries for data manifests"
     # each commit wrote a single-partition manifest: bounds are tight
-    wanted = planning.partition_wanted(t.metadata, {"bucket": 2})
-    pruned = planning.prune_manifests(mles, t.metadata, wanted)
+    expr = pruning.from_partition_filter(t.metadata, {"bucket": 2})
+    pruned = planning.prune_manifests(mles, t.metadata, expr)
     assert len(pruned) < len(mles)
     # pruning must never drop a manifest that can match
     assert any(m.partitions and m.partitions[0]["lower_bound"] for m in pruned)
@@ -83,10 +83,10 @@ def test_summary_pruned_plan_equals_unpruned(spark, multi_manifest_table):
     t = multi_manifest_table
     snap = t.current_snapshot()
     mles = read_manifest_list(t._resolve(snap.manifest_list))
-    wanted = planning.partition_wanted(t.metadata, {"bucket": 3})
-    pruned = planning.prune_manifests(mles, t.metadata, wanted)
-    full_plan = planning.plan_serial(t.path, t.metadata, mles, wanted)
-    pruned_plan = planning.plan_serial(t.path, t.metadata, pruned, wanted)
+    expr = pruning.from_partition_filter(t.metadata, {"bucket": 3})
+    pruned = planning.prune_manifests(mles, t.metadata, expr)
+    full_plan = planning.plan_serial(t.path, t.metadata, mles, expr)
+    pruned_plan = planning.plan_serial(t.path, t.metadata, pruned, expr)
     assert ([x[1].file_path for x in full_plan]
             == [x[1].file_path for x in pruned_plan])
 

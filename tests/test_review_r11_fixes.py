@@ -1,9 +1,8 @@
 """Regression tests for the round-11 module-sweep review findings
 (planning.py / types/manifest.py / table.py): partition-filter value
 coercion on identity fields, dropped-partition-source manifest
-rewrites, SQL doubled-quote literals in zone-map pruning, tag
-immutability through create_ref, and equality-delete key resolution
-under time travel across a rename."""
+rewrites, tag immutability through create_ref, and equality-delete key
+resolution under time travel across a rename."""
 
 import datetime as dt
 
@@ -17,7 +16,7 @@ def test_partition_filter_string_coerces_on_identity_field(
         spark, warehouse):
     """A convenience STRING value for an identity partition field (the
     field name equals the source column name, so the partition-name
-    branch of partition_wanted resolves it) must coerce to the
+    partition field resolves it) must coerce to the
     partition value type instead of silently pruning every file
     (str != date for each file) — review r11; the docstring's
     skip-don't-mangle promise previously applied only to the
@@ -82,30 +81,6 @@ def test_rewrite_manifest_after_dropping_partition_source(
     t = t.refresh()
     got2 = sorted((r.id, r.v) for r in t.to_df(spark).collect())
     assert got2 == [(1, 10), (3, 30)], got2
-
-
-def test_zone_map_pruning_handles_doubled_quote_literals(
-        spark, warehouse):
-    """filter=\"name = 'it''s'\" must return the row holding "it's":
-    the old edge-quote strip kept the doubled inner quote, so the
-    zone-map compared against "it''s" and pruned the file — silent
-    missing rows from a pure optimization (review r11)."""
-    from icelake_spark.table import _parse_literal
-    from icelake_spark.types.datatypes import STRING
-
-    assert _parse_literal("'it''s'", STRING) == "it's"
-    assert _parse_literal('"he said ""hi"""', STRING) == 'he said "hi"'
-    assert _parse_literal("'plain'", STRING) == "plain"
-
-    src = spark.createDataFrame(
-        [(1, "it's"), (2, "zzz")], "id long, name string")
-    t = warehouse.create_table("db.quoted", Schema.from_spark(src.schema))
-    t = t.refresh()
-    t.append(src)
-    t = t.refresh()
-    got = [r.id for r in
-           t.new_scan(filter="name = 'it''s'").to_df(spark).collect()]
-    assert got == [1], got
 
 
 def test_create_ref_refuses_tag_overwrite_and_retype(spark, warehouse):

@@ -585,62 +585,6 @@ def test_zone_map_survives_type_widening(spark, warehouse):
                for d in data)  # no crash is the contract here
 
 
-def test_filter_parser_hostile_literals_never_prune(spark):
-    """The pruning parser's r12 contract: '<>' parses as != (never as
-    '<' with a corrupt literal), and quoted literals that are not
-    exactly one clean quoted string (backslash escapes, || concats,
-    absorbed AND clauses) are UNPARSEABLE — no pruning, never a wrong
-    predicate (silent-data-loss class)."""
-    from icelake_spark.planning import parse_stats_preds
-    from icelake_spark.table import _parse_literal
-    from icelake_spark.types import Schema
-
-    sch = Schema.from_spark(
-        spark.createDataFrame([], "name string, id long").schema)
-    neq = parse_stats_preds("name<>'x'", sch, _parse_literal)
-    assert neq == [[(1, "!=", "x", neq[0][0][3])]]
-    assert parse_stats_preds(r"name = 'don\'t panic' AND id = 1",
-                             sch, _parse_literal) == []
-    assert parse_stats_preds("name = 'x' || id", sch,
-                             _parse_literal) == []
-    ok = parse_stats_preds("name = 'it''s'", sch, _parse_literal)
-    assert ok and ok[0][0][2] == "it's"
-
-
-def test_partition_filter_coercion_tz_decimal_boolean(spark, warehouse):
-    """Convenience-typed partition_filter values coerce to comparable
-    python types (review r12): a timestamptz string becomes UTC-AWARE
-    (naive-vs-aware either crashed planning or silently pruned every
-    file), decimal strings become Decimal, boolean strings become
-    bool."""
-    import datetime as dt
-    from decimal import Decimal
-
-    from icelake_spark.planning import _coerce_filter_value
-    from icelake_spark.types.datatypes import PrimitiveType
-
-    ts = _coerce_filter_value("2024-01-01T00:00:00",
-                              PrimitiveType("timestamptz"))
-    assert ts.tzinfo is not None
-    assert _coerce_filter_value("1.50", PrimitiveType(
-        "decimal", 10, 2)) == Decimal("1.50")
-    assert _coerce_filter_value("true", PrimitiveType("boolean")) is True
-    # end-to-end: identity timestamptz partition + string filter value
-    src = spark.sql(
-        "SELECT id, timestamp'2024-01-0" "1 00:00:00+00:00' AS ts "
-        "FROM range(3)")
-    from icelake_spark.types import PartitionField, PartitionSpec, Schema
-    schema = Schema.from_spark(src.schema)
-    spec = PartitionSpec(0, (PartitionField(
-        schema.field_by_name("ts").field_id, 1001, "identity", "ts"),))
-    t = warehouse.create_table("db.tzpart", schema, spec=spec)
-    t.append(src)
-    t = t.refresh()
-    got = t.new_scan(
-        partition_filter={"ts": "2024-01-01T00:00:00"}).to_df(spark)
-    assert got.count() == 3  # neither a crash nor a full prune
-
-
 def test_eq_delete_partition_scoping(spark, warehouse, tmp_path):
     """A partition-scoped equality-delete file tombstones ONLY its own
     partition's data files (the spec rule; review r12): the same key
