@@ -54,6 +54,8 @@ def default_session(app_name: str = "icelake_spark",
         # every timestamp column lost its zone-map bounds and time-range
         # predicates never pruned a file (review r13)
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        # the table's own parquet files bind by field id (binding.py)
+        .config("spark.sql.parquet.fieldId.read.enabled", "true")
         # InferFiltersFromGenerate synthesizes `size(g) > 0 AND
         # isnotnull(g)` below every explode(g) — and when g is a COMPUTED
         # array (shingles/tokens: split + zip_with + array_distinct over

@@ -26,9 +26,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .fileio import to_spark_paths
 from .planning import canon_data_path, canon_data_path_col
-from .table import DeleteFileTask, FileScanTask, IcebergTable, TableScan
+from .table import (DeleteFileTask, FileScanTask, IcebergTable, TableScan,
+                    read_position_deletes)
 from .types.manifest import (MANIFEST_CONTENT_DELETES, STATUS_ADDED,
                              read_manifest, read_manifest_list)
 
@@ -165,8 +165,8 @@ def changes(table: IcebergTable, spark: SparkSession,
         # by an earlier snapshot can never re-surface as a new delete.
         if added_pos and parent_scan is not None:
             # only the parent files the pos deletes name are read
-            srcs = {r[0] for r in spark.read.parquet(*to_spark_paths(
-                [t.delete_file.file_path for t in added_pos]))
+            srcs = {r[0] for r in read_position_deletes(
+                spark, [t.delete_file.file_path for t in added_pos])
                 .select(canon_data_path_col(F.col("file_path")))
                 .distinct().collect()}
             hit = [t for t in pdata

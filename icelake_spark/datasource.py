@@ -60,6 +60,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from .binding import (name_binding, parquet_ids, recorded_ids,
+                      source_column)
 from .planning import canon_data_path, plan_deletes
 
 
@@ -175,7 +177,7 @@ class IcelakeDataSource(DataSource):
         # batches it prefetches round-trip to EXACTLY this schema — field
         # metadata (our Iceberg column ids) would not survive Arrow
         fields = [StructField(f.name, f.dataType, True)
-                  for f in t.schema().to_spark().fields]
+                  for f in _read_schema(t, self.options).to_spark().fields]
         if self.options.get("changelog", "").lower() in ("true", "1"):
             from pyspark.sql.types import StringType
 
@@ -206,36 +208,9 @@ class IcelakeDataSource(DataSource):
         return IcelakeStreamWriter(self.options, schema)
 
 
-def _rename_map(table) -> dict[str, list[str]]:
-    """{current name: [former names not reused elsewhere]} from the
-    table's rename name-mapping — the DSv2 arrow readers resolve a
-    column missing under its current name through its former name, the
-    same coalesce TableScan._with_name_mapping applies (a bare
-    null-pad would silently blank every pre-rename row)."""
-    import json as _json
-
-    from .table import PROP_NAME_MAPPING
-
-    raw = table.metadata.properties.get(PROP_NAME_MAPPING)
-    if not raw:
-        return {}
-    mapping = _json.loads(raw)
-    schema = table.schema()
-    current = {f.name for f in schema.fields}
-    out: dict[str, list[str]] = {}
-    for f in schema.fields:
-        old = [n for n in mapping.get(str(f.field_id), [])
-               if n != f.name and n not in current]
-        if old:
-            out[f.name] = old
-    return out
-
-
-def _read_avro_arrow(spark_schema, file_path: str,
-                     table_store: str = "", io=None,
-                     field_ids: dict[str, int] | None = None,
-                     rename_map: dict[str, list[str]] | None = None,
-                     foreign: bool = False):
+def _read_avro_arrow(spark_schema, file_path: str, table_path: str,
+                     binding, field_ids: dict[str, int],
+                     table_store: str = "", io=None):
     """Decode one avro data file into an Arrow table matching
     `spark_schema` (pure-python codec; shared by the batch and stream
     DSv2 readers). Bytes resolve like _arrow_src: through the SHIPPED
@@ -243,14 +218,9 @@ def _read_avro_arrow(spark_schema, file_path: str,
     never see register_io factories, so a custom-scheme table's avro
     files are unreadable there without the pickled instance.
 
-    Columns resolve with the SAME identity stack as the parquet path
-    (review r13 — pure name binding resurrected dropped-and-readded
-    columns' stale values): field-id first via the avro schema's
-    `field-id` annotations (a recorded-but-unmatched id pads NULL —
-    the physical column belongs to a dropped field's id), then current
-    name, then former names from the rename mapping; `foreign`
-    (add_files import) disables id resolution — the file's ids belong
-    to another table's id space."""
+    Columns bind by the table's one rule (binding.source_column): by
+    the avro schema's `field-id` annotations when the file is the
+    table's own and records them, else by current then former name."""
     import pyarrow as pa
     from pyspark.sql import types as T
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -274,29 +244,16 @@ def _read_avro_arrow(spark_schema, file_path: str,
     wschema, records = avro_io.read_avro(file_path, data=data)
     afields = (wschema.get("fields", [])
                if isinstance(wschema, dict) else [])
-    id_to_name = {f["field-id"]: f["name"] for f in afields
-                  if isinstance(f, dict) and "field-id" in f}
+    ids = recorded_ids(table_path, file_path,
+                       {f["field-id"]: f["name"] for f in afields
+                        if isinstance(f, dict) and "field-id" in f})
     in_file = ({f["name"] for f in afields if isinstance(f, dict)}
                or ({n for n in records[0]} if records else set()))
 
-    def _src_name(n: str) -> str | None:
-        fid = (field_ids or {}).get(n)
-        if not foreign and id_to_name and fid is not None:
-            # file RECORDS ids: the id is the identity — an unmatched
-            # id means the column did not exist at write time (or was
-            # dropped and re-added under a new id); NULL, never a
-            # same-named physical column's stale values
-            return id_to_name.get(fid)
-        if n in in_file:
-            return n
-        for old in (rename_map or {}).get(n, ()):
-            if old in in_file:
-                return old
-        return None
-
     cols = {}
     for f in arrow_schema:
-        src = _src_name(f.name)
+        src = source_column(f.name, field_ids.get(f.name), ids, in_file,
+                            binding)
         if src is None:
             cols[f.name] = pa.nulls(len(records), type=f.type)
         else:
@@ -336,43 +293,6 @@ def _arrow_src(path: str, table_store: str = "", io=None):
     if io is not None and _store_of(path) == table_store:
         return io.open_input(path)
     return resolve_io(path).open_input(path)
-
-
-def _is_foreign_file(table_path: str, file_path: str) -> bool:
-    """True when `file_path` lives OUTSIDE the table's directory — the
-    add_files import signature. Such files' PARQUET:field_id values
-    belong to ANOTHER table's id space (and numerically collide with
-    ours more often than not), so id resolution must not apply to
-    them. Provenance-by-location replaces the former zero-id-overlap
-    heuristic, which misfired for this table's OWN old files once every
-    column they recorded had been dropped and re-added (the name
-    fallback then resurrected the dropped columns' stale values —
-    exactly what the id path exists to prevent)."""
-    from .fileio import norm_path
-
-    base = norm_path(table_path).rstrip("/")
-    p = norm_path(file_path)
-    return not (p == base or p.startswith(base + "/"))
-
-
-def _parquet_id_map(pa_schema, foreign: bool = False) -> dict[int, str]:
-    """{field_id: physical column name} from the file's PARQUET:field_id
-    metadata — present in files written by Java Iceberg / pyiceberg /
-    our own writer (write.py stamps parquet.field.id). Top level only;
-    nested member binding is handled separately (_rebind_struct).
-    `foreign=True` (see _is_foreign_file) disables id resolution so the
-    caller falls back to names."""
-    if foreign:
-        return {}
-    out: dict[int, str] = {}
-    for f in pa_schema:
-        v = (f.metadata or {}).get(b"PARQUET:field_id")
-        if v is not None:
-            try:
-                out[int(v)] = f.name
-            except ValueError:
-                pass
-    return out
 
 
 def _rebind_struct(arr, ice_struct, expected_type):
@@ -436,48 +356,22 @@ def _rebind_struct(arr, ice_struct, expected_type):
         mask=arr.is_null() if arr.null_count else None)
 
 
-def _resolve_column(table, name: str, rename_map: dict[str, list[str]],
-                    field_id: int | None = None,
-                    id_map: dict[int, str] | None = None):
-    """The arrow column for `name` — by FIELD ID first when the file
-    records ids (the spec's identity rule: a renamed column must bind
-    to its id, and a REUSED former name must not shadow the original —
-    FieldProjector parity, partition_splitter.rs:16-86), else by
-    current name, else via a former name from the rename mapping;
-    None when absent entirely (schema evolution: new column)."""
-    if field_id is not None and id_map:
-        phys = id_map.get(field_id)
-        if phys is not None and phys in table.column_names:
-            return table[phys]
-        # the file RECORDS ids but not this one: the column did not
-        # exist when the file was written (e.g. DROP COLUMN c then
-        # ADD COLUMN c — the physical 'c' belongs to the OLD id and a
-        # name fallback would resurrect its stale values). Project NULL.
-        return None
-    if name in table.column_names:
-        return table[name]
-    for old in rename_map.get(name, ()):
-        if old in table.column_names:
-            return table[old]
-    return None
-
-
 class _TableFileReader:
     """The executor-side file work both readers share: the table's
-    column identity (field ids, former names, nested member types), the
-    shipped FileIO, the format-dispatched data-file read, the
-    merge-on-read dead-row mask and the projection to the declared
+    column binding (field ids, binding.NameBinding, nested member
+    types), the shipped FileIO, the format-dispatched data-file read,
+    the merge-on-read dead-row mask and the projection to the declared
     schema."""
 
-    def _bind(self, path: str, spark_schema) -> None:
+    def _bind(self, options: dict, spark_schema) -> None:
         from .fileio import is_uri, resolve_io
         from .table import IcebergTable
 
-        self.path = path
+        self.path = path = options["path"]
         self.spark_schema = spark_schema
         t = IcebergTable.load(path)
-        self.rename_map = _rename_map(t)
-        self.table_schema = schema = t.schema()
+        self.table_schema = schema = _read_schema(t, options)
+        self.binding = name_binding(t.metadata, schema)
         self.field_ids = {f.name: f.field_id for f in schema.fields}
         # iceberg member types for nested rebinding (picklable dataclasses)
         self.ice_fields = {f.name: f.field_type for f in schema.fields}
@@ -490,27 +384,35 @@ class _TableFileReader:
         return _arrow_src(path, self.table_store, self.io)
 
     def _read_file(self, task):
-        """(Arrow table, foreign) of one data file, format-dispatched:
-        the table layer legitimately holds ORC/AVRO files via add_files
-        and write.format.default."""
+        """(Arrow table, the ids it binds by) of one data file of any
+        format (add_files, write.format.default); an Avro file comes
+        back already bound, under the declared names."""
         import pyarrow.parquet as pq
 
         fmt = (task.file_format or "PARQUET").upper()
-        foreign = _is_foreign_file(self.path, task.file_path)
         if fmt == "ORC":
             from pyarrow import orc as pa_orc
 
-            table = pa_orc.ORCFile(self._src(task.file_path)).read()
-        elif fmt == "AVRO":
+            return pa_orc.ORCFile(self._src(task.file_path)).read(), {}
+        if fmt == "AVRO":
             table = _read_avro_arrow(self.spark_schema, task.file_path,
-                                     self.table_store, self.io,
-                                     self.field_ids, self.rename_map,
-                                     foreign)
-        else:
-            table = pq.read_table(self._src(task.file_path))
-        return table, foreign
+                                     self.path, self.binding,
+                                     self.field_ids, self.table_store,
+                                     self.io)
+            return table, {self.field_ids[n]: n for n in table.column_names
+                           if n in self.field_ids}
+        table = pq.read_table(self._src(task.file_path))
+        return table, recorded_ids(self.path, task.file_path,
+                                   parquet_ids(table.schema))
 
-    def _dead_mask(self, table, task: _FileTask, foreign: bool,
+    def _column(self, table, name: str, ids: dict):
+        """Column `name` of a file's Arrow table under the binding
+        rule, or None when the file has no such column."""
+        src = source_column(name, self.field_ids.get(name), ids,
+                            table.column_names, self.binding)
+        return None if src is None else table[src]
+
+    def _dead_mask(self, table, task: _FileTask, ids: dict,
                    cache: dict) -> "np.ndarray":
         """Boolean mask of the rows of data file `table` that `task`'s
         deletes kill: its position deletes plus its equality-key hits.
@@ -535,40 +437,56 @@ class _TableFileReader:
         for ps in positions:
             dead[ps[(ps >= 0) & (ps < n)]] = True
 
-        # equality deletes: key columns (data AND delete side) resolve
-        # with the SAME field-id/rename stack as data columns — after
-        # RENAME COLUMN old delete files lack the current name, and an
-        # all-None pad would resurrect every deleted row (code-review
-        # r8). A key column missing from an old file reads as NULL and
-        # must MATCH AS NULL, not narrow the key (which over-deletes).
-        id_map = _parquet_id_map(table.schema, foreign)
-
-        def key(t, c, ids):
-            arr = _resolve_column(t, c, self.rename_map,
-                                  self.field_ids.get(c), ids)
+        # equality deletes: key columns of the data AND the delete file
+        # bind by the same rule as data columns. A key column missing
+        # from a file reads as NULL and must MATCH AS NULL, not narrow
+        # the key (which over-deletes).
+        def key(t, c, t_ids):
+            arr = self._column(t, c, t_ids)
             return arr if arr is not None else pa.nulls(t.num_rows)
 
         def read_eq(path: str):
             dt = pq.read_table(self._src(path))
-            return dt, _parquet_id_map(
-                dt.schema, _is_foreign_file(self.path, path))
+            return dt, recorded_ids(self.path, path, parquet_ids(dt.schema))
 
         for cols, files in task.eq_deletes:
             dels = []
             for f in files:
-                dt, ids = cached(f, read_eq)
-                dels.append([key(dt, c, ids) for c in cols])
-            dead[_eq_delete_hits([key(table, c, id_map) for c in cols],
+                dt, d_ids = cached(f, read_eq)
+                dels.append([key(dt, c, d_ids) for c in cols])
+            dead[_eq_delete_hits([key(table, c, ids) for c in cols],
                                  [list(k) for k in zip(*dels)])] = True
         return dead
 
-    def _project(self, table, foreign: bool):
-        """Project/pad to the requested schema — the shared resolution
-        stack (field-id / rename / struct rebind / spec-physical
-        normalization / promotion cast; new columns pad as null)."""
-        return _project_table_to_schema(
-            table, self.spark_schema, self.rename_map, self.field_ids,
-            self.ice_fields, foreign)
+    def _project(self, table, ids: dict):
+        """Project an Arrow table to exactly the declared schema (the
+        streaming runner asserts it): columns bound by the binding rule,
+        struct members rebound, uuid/time spec-physical normalization,
+        the type-promotion cast; absent columns pad as typed NULLs."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        from .types.datatypes import StructType as _IceStruct
+
+        arrays = []
+        for f in self.spark_schema.fields:
+            n, ice = f.name, self.ice_fields.get(f.name)
+            exp = to_arrow_type(f.dataType)
+            arr = self._column(table, n, ids)
+            if arr is not None and isinstance(ice, _IceStruct):
+                arr = _rebind_struct(arr, ice, exp)
+            arr = _spec_physical_to_spark(arr, ice)
+            if arr is not None and arr.type != exp and (
+                    pa.types.is_integer(exp) or pa.types.is_floating(exp)
+                    or pa.types.is_decimal(exp)):
+                try:
+                    arr = arr.cast(exp)
+                except (pa.ArrowInvalid, pa.ArrowNotImplementedError):
+                    pass
+            arrays.append(arr if arr is not None
+                          else pa.nulls(table.num_rows, type=exp))
+        return pa.Table.from_arrays(
+            arrays, names=[f.name for f in self.spark_schema.fields])
 
     def _read_scan(self, task: _ScanTask) -> Iterator:
         """Each file of `task` in turn, masked and projected, as Arrow
@@ -582,18 +500,18 @@ class _TableFileReader:
         projected to the declared schema."""
         import pyarrow as pa
 
-        table, foreign = self._read_file(task)
-        dead = self._dead_mask(table, task, foreign, cache)
+        table, ids = self._read_file(task)
+        dead = self._dead_mask(table, task, ids, cache)
         if dead.any():
             table = table.filter(pa.array(~dead))
-        return self._project(table, foreign)
+        return self._project(table, ids)
 
 
 class IcelakeReader(_TableFileReader, DataSourceReader):
     def __init__(self, options: dict, schema):
         self.options = options
         self.prune = None  # pruning expression of the pushed filters
-        self._bind(options["path"], schema)
+        self._bind(options, schema)
 
     def pushFilters(self, filters):  # noqa: N802 (API name)
         """Turn the filters Spark pushes into the scan's pruning
@@ -627,15 +545,9 @@ class IcelakeReader(_TableFileReader, DataSourceReader):
                 d.data_file.file_path,
                 (d.data_file.file_format or "PARQUET").upper(),
                 size=d.data_file.file_size_in_bytes) for d in files])
-        kwargs: dict[str, Any] = {}
-        if "snapshot_id" in self.options:
-            kwargs["snapshot_id"] = int(self.options["snapshot_id"])
-        if "as_of_ms" in self.options:
-            kwargs["as_of_ms"] = int(self.options["as_of_ms"])
-        if "ref" in self.options:
-            kwargs["ref"] = self.options["ref"]
-        data, pos, eq = t.new_scan(filter=self.prune, **kwargs).plan_files()
-        plan = plan_deletes(data, pos, eq, t.schema(), t.metadata)
+        scan = t.new_scan(filter=self.prune, **_time_travel(self.options))
+        data, pos, eq = scan.plan_files()
+        plan = plan_deletes(data, pos, eq, scan._read_schema(), t.metadata)
         by_file = _pos_sets(plan, self._src)
         return _pack([_file_task(d, plan, by_file) for d in data])
 
@@ -646,6 +558,17 @@ class IcelakeReader(_TableFileReader, DataSourceReader):
         plan has none: pruning left no file."""
         if partition is not None:
             yield from self._read_scan(partition)
+
+
+def _time_travel(options: dict) -> dict[str, Any]:
+    """The TableScan arguments of the time-travel read options."""
+    return {k: options[k] if k == "ref" else int(options[k])
+            for k in ("snapshot_id", "as_of_ms", "ref") if k in options}
+
+
+def _read_schema(table, options: dict):
+    """The scan's read schema: a time-travel read's is its snapshot's."""
+    return table.new_scan(**_time_travel(options))._read_schema()
 
 
 def _skip_overwrites(options: dict) -> bool:
@@ -755,45 +678,6 @@ def _eq_delete_hits(data_keys: list, delete_keys: list[list]) -> "np.ndarray":
     hits = pa.table(left).join(pa.table(right), keys=list(right),
                                join_type="left semi")
     return hits["__i"].to_numpy()
-
-
-def _project_table_to_schema(table, spark_schema, rename_map, field_ids,
-                             ice_fields, foreign):
-    """Project/pad an Arrow table to the declared Spark schema with the
-    FULL resolution stack every reader must apply identically: field-id
-    first, then current name, then former name; nested struct member
-    rebinding; uuid/time spec-physical normalization; and the type-
-    promotion cast (int→long etc. for files written before
-    ALTER COLUMN TYPE). The streaming runner asserts batches round-trip
-    to exactly the declared schema, so a reader skipping any of these
-    crashes (or mis-types) on evolved tables."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    from .types.datatypes import StructType as _IceStruct
-
-    id_map = _parquet_id_map(table.schema, foreign)
-    names = [f.name for f in spark_schema.fields]
-    arrays = []
-    for f in spark_schema.fields:
-        n = f.name
-        exp = to_arrow_type(f.dataType)
-        arr = _resolve_column(table, n, rename_map, field_ids.get(n),
-                              id_map)
-        if arr is not None and isinstance(ice_fields.get(n), _IceStruct):
-            arr = _rebind_struct(arr, ice_fields[n], exp)
-        arr = _spec_physical_to_spark(arr, ice_fields.get(n))
-        if arr is not None and arr.type != exp and (
-                pa.types.is_integer(exp) or pa.types.is_floating(exp)
-                or pa.types.is_decimal(exp)):
-            try:
-                arr = arr.cast(exp)
-            except (pa.ArrowInvalid, pa.ArrowNotImplementedError):
-                pass
-        # typed, so every file of a scan task projects to one schema
-        arrays.append(arr if arr is not None
-                      else pa.nulls(table.num_rows, type=exp))
-    return pa.Table.from_arrays(arrays, names=names)
 
 
 def _spec_physical_to_spark(arr, ice_type):
@@ -1081,7 +965,7 @@ class IcelakePartitionStreamReader(_TableFileReader, DataSourceStreamReader):
         # the same column identity and shipped FileIO as the batch
         # reader (a struct member renamed in an externally-written file
         # must bind by its nested field id in the STREAM too)
-        self._bind(options["path"], schema)
+        self._bind(options, schema)
         # rate limit (Iceberg's max-files-per-micro-batch analogue at
         # snapshot granularity): each trigger advances the offset by at
         # most N sequence numbers, so a backlogged stream catches up in
@@ -1226,13 +1110,13 @@ class IcelakePartitionStreamReader(_TableFileReader, DataSourceStreamReader):
         for kind, prior, this in (
                 [("insert", None, t) for t in task.inserts]
                 + [("delete", p, t) for p, t in task.deletes]):
-            table, foreign = self._read_file(this)
-            dead = self._dead_mask(table, this, foreign, cache)
+            table, ids = self._read_file(this)
+            dead = self._dead_mask(table, this, ids, cache)
             rows = ~dead if prior is None else \
-                dead & ~self._dead_mask(table, prior, foreign, cache)
+                dead & ~self._dead_mask(table, prior, ids, cache)
             if not rows.any():
                 continue
-            out = self._project(table.filter(pa.array(rows)), foreign)
+            out = self._project(table.filter(pa.array(rows)), ids)
             i = out.schema.get_field_index("_change_type")
             yield out.set_column(i, "_change_type",
                                  pa.repeat(pa.scalar(kind), out.num_rows))
@@ -1402,6 +1286,11 @@ class IcelakeStreamWriter(DataSourceStreamArrowWriter):
 def register(spark) -> None:
     # pushFilters requires this conf (defaults false in Spark 4.1)
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    # the table's own files bind by field id in Spark's reader too
+    # (binding.py; TableScan.read_mapped)
+    from .binding import FIELD_ID_READ
+
+    spark.conf.set(FIELD_ID_READ, "true")
     from . import fileio
 
     if fileio._REGISTRY:

@@ -332,10 +332,10 @@ def _row_level_dml(table, spark, condition: str,
 
     def _live(tasks_, keep_helpers: bool) -> DataFrame:
         """Read tasks with existing pos/eq deletes APPLIED through the
-        rename-safe read_mapped (matching raw files would resurrect rows
+        table's read_mapped (matching raw files would resurrect rows
         already deleted or superseded by an upsert in a prior snapshot,
-        and pre-rename files must resolve their former column names —
-        code-review r9)."""
+        and every file must bind its columns by the table's rule —
+        field id, or current then former name)."""
         df_ = scan.read_mapped(spark, table.schema(), spark_schema,
                                tasks_, with_position=True)
         if pos_t or eq_t:

@@ -290,8 +290,8 @@ def rewrite_position_deletes(table, spark) -> int:
     seq gates which data they apply to)."""
     from pyspark.sql import functions as F
 
-    from .fileio import to_spark_paths
     from .planning import canon_data_path, canon_data_path_col
+    from .table import read_position_deletes
 
     data, pos, _eq = table.new_scan().plan_files(spark)
     if len(pos) <= 1:
@@ -302,7 +302,7 @@ def rewrite_position_deletes(table, spark) -> int:
     live = spark.createDataFrame(
         [(canon_data_path(t.data_file.file_path),) for t in data],
         "__live string")
-    merged = (spark.read.parquet(*to_spark_paths(old_paths))
+    merged = (read_position_deletes(spark, old_paths)
               .select("file_path", "pos")
               .join(F.broadcast(live),
                     canon_data_path_col(F.col("file_path"))

@@ -2,10 +2,14 @@
 
 from __future__ import annotations
 
+import threading
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+
+_CONF_LOCK = threading.RLock()
 
 
 @contextmanager
@@ -17,19 +21,26 @@ def scoped_conf(spark, key: str, value: str):
     so AQE's per-exchange re-plan round is pure latency there — while
     AQE must stay ON for everything data-dependent. No-op when the conf
     already holds the value. NOT for lazy frames returned to callers:
-    the conf must be active when the job RUNS, not when it is built."""
-    prev = spark.conf.get(key, None)
-    if prev == value:
+    the conf must be active when the job RUNS, not when it is built.
+
+    A scope that changes the conf holds a module lock from its check to
+    its restore: of two overlapping scopes (delta._overlap's threads)
+    the second would otherwise skip, seeing the first one's value,
+    and lose it to the first one's restore."""
+    with _CONF_LOCK:
+        prev = spark.conf.get(key, None)
+        changes = prev != value
+        if changes:
+            spark.conf.set(key, value)
+            try:
+                yield
+            finally:
+                if prev is None:
+                    spark.conf.unset(key)
+                else:
+                    spark.conf.set(key, prev)
+    if not changes:
         yield
-        return
-    spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 def fanout(df: DataFrame, *cols, factor: int = 2) -> DataFrame:

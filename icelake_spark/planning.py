@@ -22,7 +22,6 @@ spark.submit.pyFiles; in local mode workers import it from the repo.
 
 from __future__ import annotations
 
-import json
 import os
 import pickle
 from dataclasses import dataclass
@@ -264,9 +263,8 @@ class EqDeleteGroup:
     """Equality-delete files sharing one key set and one partition
     scope: every read path applies ONE join per group, not one per file
     (a table with N upsert commits would otherwise chain N joins)."""
-    key_cols: tuple[str, ...]                  # names in the read schema
-    former_names: tuple[tuple[str, ...], ...]  # per key: pre-rename names
-    tasks: list                                # DeleteFileTask
+    key_cols: tuple[str, ...]  # names in the read schema
+    tasks: list                # DeleteFileTask
     # canon paths of the data files a partition-scoped group applies
     # to; None for a global group
     data_files: frozenset[str] | None
@@ -314,8 +312,7 @@ def plan_deletes(data, pos, eq, schema: Schema,
     - Equality deletes group by (equality_ids, partition scope). Key
       names resolve against the schema the rows are READ with: a
       time-travel scan across a rename still names the key by its old
-      name (review r11). Former names from the rename name-mapping are
-      kept so delete files written before the rename still resolve.
+      name (review r11).
     - A partitioned equality-delete file applies only to data files of
       its own partition (review r12); a scoped group with no such data
       file drops out.
@@ -323,8 +320,6 @@ def plan_deletes(data, pos, eq, schema: Schema,
       be applied; silently skipping it would resurrect every row it
       tombstoned (code-review r8), so planning fails loudly, naming
       each dropped column by its last name in the schema history."""
-    from .table import PROP_NAME_MAPPING
-
     properties = metadata.properties
     limit = int(properties.get(DELETE_BROADCAST_PROP,
                                DELETE_BROADCAST_DEFAULT))
@@ -333,8 +328,6 @@ def plan_deletes(data, pos, eq, schema: Schema,
         return sum(t.delete_file.file_size_in_bytes or 0
                    for t in tasks) <= limit
 
-    mapping = json.loads(properties.get(PROP_NAME_MAPPING) or "{}")
-    current = {f.name for f in schema.fields}
     by_key: dict[tuple, list] = {}
     for t in eq:
         gk = (tuple(t.delete_file.equality_ids or ()),
@@ -362,15 +355,7 @@ def plan_deletes(data, pos, eq, schema: Schema,
                 == part_key)
             if not scoped:
                 continue
-        # a former name REUSED by a different current column must never
-        # stand in for the key: wherever the real key is legitimately
-        # NULL, the unrelated column's value would substitute
-        # (code-review r9)
-        former = tuple(
-            tuple(n for n in mapping.get(str(fid), [])
-                  if n != c and n not in current)
-            for c, fid in zip(names, eq_ids))
-        groups.append(EqDeleteGroup(tuple(names), former, tasks, scoped,
+        groups.append(EqDeleteGroup(tuple(names), tasks, scoped,
                                     small(tasks)))
     return DeletePlan(
         [(canon_data_path(d.data_file.file_path), d.sequence_number)

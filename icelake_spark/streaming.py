@@ -255,7 +255,7 @@ def stream_from_table(spark, table,
         return spark.createDataFrame([], spark_schema)
     # the scan's own reader: format-aware (reading everything as parquet
     # crashed on write.format.default=orc tables — code-review r9) and
-    # rename-safe (files written before a RENAME COLUMN resolve their
-    # former column names, as in to_df and the DataSource)
+    # binds columns by the table's one rule (binding.py), as in to_df
+    # and the DataSource
     return table.new_scan().read_mapped(spark, table.schema(),
                                         spark_schema, tasks)

@@ -28,10 +28,6 @@ from .types.datatypes import Schema
 from .types.manifest import DataFile, read_manifest_list
 from .types.metadata import MAIN_BRANCH, Snapshot, TableMetadata
 
-# field_id -> [former names]; lets the name-based reader resolve columns
-# in files written before a rename_column (see IcebergTable.rename_column)
-PROP_NAME_MAPPING = "schema.name-mapping"
-
 if TYPE_CHECKING:
     from .catalog.storage import StorageCatalog
 
@@ -220,7 +216,6 @@ class IcebergTable:
         driver (a bulk delete can hold billions of pairs). Iceberg's
         table of the same name; the reference walks delete entries
         driver-side in table.rs:281-304."""
-        from .fileio import to_spark_paths
         from .planning import (canon_data_path, canon_data_path_col,
                                canonical_partition)
 
@@ -239,8 +234,8 @@ class IcebergTable:
               t.sequence_number) for t in pos],
             "__src string, delete_file_path string, partition string, "
             "delete_sequence_number long")
-        raw = (spark.read.parquet(*to_spark_paths(
-                   [t.delete_file.file_path for t in pos]))
+        raw = (read_position_deletes(
+                   spark, [t.delete_file.file_path for t in pos])
                .select("file_path", "pos",
                        canon_data_path_col(F.col("_metadata.file_path"))
                        .alias("__src")))
@@ -446,13 +441,9 @@ class IcebergTable:
 
     def rename_column(self, old: str, new: str) -> None:
         """Schema evolution: rename a top-level column, keeping its field
-        id (id-based evolution — data files are untouched). Because this
-        reader projects parquet by NAME, the old name is recorded in the
-        `schema.name-mapping` table property and the scan reads BOTH
-        names and coalesces — files written before the rename resolve
-        through the old name, files after through the new (the
-        name-based analogue of Iceberg's name-mapping spec)."""
-        import json as _json
+        id (id-based evolution — data files are untouched). Files that
+        bind by name find the old name in the schema history
+        (binding.py)."""
         from dataclasses import replace as dc_replace
 
         from .types.datatypes import NestedField, Schema, StructType
@@ -472,18 +463,10 @@ class IcebergTable:
             schema_id=max(s.schema_id for s in self.metadata.schemas) + 1,
             identifier_field_ids=cur.identifier_field_ids,
         )
-        mapping = _json.loads(
-            self.metadata.properties.get(PROP_NAME_MAPPING, "{}"))
-        prior = mapping.get(str(f.field_id), [])
-        # the new name may itself be renamed later; keep every past name
-        mapping[str(f.field_id)] = sorted(set(prior) | {old})
-        props = dict(self.metadata.properties)
-        props[PROP_NAME_MAPPING] = _json.dumps(mapping, sort_keys=True)
         self._commit_metadata(dc_replace(
             self.metadata,
             schemas=self.metadata.schemas + (new_schema,),
             current_schema_id=new_schema.schema_id,
-            properties=props,
         ))
 
     def drop_column(self, name: str) -> None:
@@ -972,27 +955,65 @@ class TableScan:
     def read_mapped(self, spark: SparkSession, schema: Schema,
                     spark_schema, tasks, with_position: bool = False
                     ) -> DataFrame:
-        """Read data-file tasks with the rename name-mapping applied —
-        pre-rename files resolve their former column names and coalesce
-        new-name-first (the read _scan/to_df performs). SHARED with the
-        DML working-set readers (delta.delete_rows/update_rows), which
-        previously read by current name only: a pre-rename file's
-        renamed column arrived NULL and a CoW rewrite / MoR update
-        re-wrote survivors with those NULLs — permanent data loss
-        (code-review r9)."""
-        read_schema, coalesce_map = self._with_name_mapping(
-            schema, spark_schema)
-        df = read_data_files(spark, read_schema, tasks,
-                             with_position=with_position)
-        if coalesce_map:
-            keep = [c for c in df.columns
-                    if c in {f.name for f in spark_schema.fields}
-                    or c.startswith("__")]
-            df = df.select(*[
-                F.coalesce(c, *coalesce_map[c]).alias(c)
-                if c in coalesce_map else F.col(c)
-                for c in keep])
-        return df
+        """Read data-file tasks under the table's column-binding rule
+        (binding.py; the DataSource's too): own parquet files that record
+        field ids through Spark's field-id reader, every other file by
+        current, then former name. In the id read a reused name is read
+        under a synthetic one and aliased back: Spark pushes row-group
+        filters by NAME, onto the other field's physical column."""
+        from pyspark.sql import types as T
+
+        from .binding import FIELD_ID_KEY, FIELD_ID_READ, name_binding
+
+        names = [f.name for f in spark_schema.fields]
+        helpers = ["__file", "__pos"] if with_position else []
+        binding = name_binding(self.table.metadata, schema)
+        by_id = self._id_bound(tasks)
+        parts = []
+        if by_id:
+            spark.conf.set(FIELD_ID_READ, "true")
+            read_as = [f"__fid{f.field_id}" if f.name in binding.reused
+                       else f.name for f in schema.fields]
+            df = read_data_files(spark, T.StructType([
+                T.StructField(r, sf.dataType, True, {FIELD_ID_KEY: f.field_id})
+                for r, f, sf in zip(read_as, schema.fields, spark_schema.fields)
+            ]), [t for t in tasks if t.data_file.file_path in by_id],
+                with_position=with_position)
+            # explicit empty metadata: the frame carries no field ids
+            parts.append(df.select(*[F.col(r).alias(n, metadata={})
+                                     for r, n in zip(read_as, names)],
+                                   *helpers))
+        rest = [t for t in tasks if t.data_file.file_path not in by_id]
+        if rest:
+            olds = {n: binding.names(n)[1:] for n in names}
+            extra = [T.StructField(o, sf.dataType, True)
+                     for sf in spark_schema.fields for o in olds[sf.name]]
+            df = read_data_files(
+                spark, T.StructType(list(spark_schema.fields) + extra),
+                rest, with_position=with_position)
+            if extra:
+                df = df.select(*[F.coalesce(n, *olds[n]).alias(n)
+                                 if olds[n] else F.col(n) for n in names],
+                               *helpers)
+            parts.append(df)
+        return functools.reduce(DataFrame.unionByName, parts)
+
+    def _id_bound(self, tasks) -> set[str]:
+        """Paths of the tasks' files that bind by field id (a footer
+        check: Spark's field-id reader rejects a file that has none)."""
+        import pyarrow.parquet as pq
+
+        from .binding import is_foreign_file, parquet_ids
+        from .datasource import _arrow_src, _store_of
+        from .fileio import is_uri, resolve_io
+
+        path = self.table.path
+        io = resolve_io(path) if is_uri(path) else None
+        return {f for t in tasks
+                if (t.data_file.file_format or "PARQUET").upper() == "PARQUET"
+                and not is_foreign_file(path, f := t.data_file.file_path)
+                and parquet_ids(pq.read_schema(
+                    _arrow_src(f, _store_of(path), io)))}
 
     def _partition_residual(self, schema: Schema):
         """Row-level equivalent of partition_filter, rendered from the
@@ -1016,50 +1037,6 @@ class TableScan:
             conds.append(col.eqNullSafe(F.lit(lf.value)))
         return functools.reduce(lambda a, b: a & b, conds) if conds else None
 
-    def _with_name_mapping(self, schema: Schema, spark_schema):
-        """(read_schema, {current_name: [old names]}) honoring the
-        rename name-mapping: the read schema also requests every former
-        name of a renamed column (typed identically, nullable) so files
-        written before the rename still resolve; the scan coalesces
-        new-name-first afterwards."""
-        import json as _json
-
-        from pyspark.sql import types as T
-
-        raw = self.table.metadata.properties.get(PROP_NAME_MAPPING)
-        if not raw:
-            return spark_schema, {}
-        mapping = _json.loads(raw)
-        current = {f.name for f in spark_schema.fields}
-        extra_fields, coalesce_map = [], {}
-        for f in schema.fields:
-            # a former name that was later REUSED by a different column
-            # cannot be resolved by this name-based projection: old
-            # files' physical column would bind to the new field while
-            # the renamed field reads null — silent wrong results. Fail
-            # loudly instead (per-file field-id projection would be the
-            # full fix; the DSv2 reader is the upgrade path).
-            clashes = [n for n in mapping.get(str(f.field_id), [])
-                       if n in current and n != f.name]
-            if clashes:
-                raise ValueError(
-                    f"column {f.name!r} was renamed from {clashes} but a "
-                    f"current column reuses that name; reads via the "
-                    f"name-mapping cannot disambiguate old files — avoid "
-                    f"re-adding a previously used column name")
-            olds = [n for n in mapping.get(str(f.field_id), [])
-                    if n not in current]
-            if not olds:
-                continue
-            sf = next(x for x in spark_schema.fields if x.name == f.name)
-            for n in olds:
-                extra_fields.append(T.StructField(n, sf.dataType, True))
-            coalesce_map[f.name] = olds
-        if not coalesce_map:
-            return spark_schema, {}
-        return T.StructType(list(spark_schema.fields) + extra_fields), \
-            coalesce_map
-
     def _apply_deletes(self, spark: SparkSession, df: DataFrame,
                        data: list[FileScanTask], pos: list[DeleteFileTask],
                        eq: list[DeleteFileTask], how: str = "left_anti",
@@ -1077,10 +1054,10 @@ class TableScan:
         drop_helpers=False keeps __file/__pos/__file_c/__data_seq for a
         follow-up join (changelog, CoW/MoR DML).
         """
-        from .fileio import to_spark_paths
         from .planning import (canon_data_path, canon_data_path_col,
                                eq_delete_applies, plan_deletes,
                                pos_delete_applies)
+        from .types.datatypes import StructType
 
         schema = read_schema if read_schema is not None \
             else self.table.schema()
@@ -1096,13 +1073,22 @@ class TableScan:
             # broadcast = driver OOM at scale)
             return side_df.hint("shuffle_hash")
 
-        def read_deletes(tasks: list[DeleteFileTask], reader) -> DataFrame:
+        def read_deletes(tasks: list[DeleteFileTask],
+                         key_schema: Schema | None = None) -> DataFrame:
             """Delete-file rows plus __src, the canon path of the delete
-            file holding each row (joined to its sequence number)."""
-            return (reader.parquet(*to_spark_paths(
-                        [t.delete_file.file_path for t in tasks]))
-                    .withColumn("__src", canon_data_path_col(
-                        F.col("_metadata.file_path"))))
+            file holding each row (joined to its sequence number):
+            position deletes by their reserved names, equality-delete
+            keys through read_mapped with an explicit key schema."""
+            if key_schema is None:
+                return read_position_deletes(
+                    spark, [t.delete_file.file_path for t in tasks]
+                ).withColumn("__src", canon_data_path_col(
+                    F.col("_metadata.file_path")))
+            return self.read_mapped(
+                spark, key_schema, key_schema.to_spark(),
+                [FileScanTask(t.delete_file, t.sequence_number, 0)
+                 for t in tasks], with_position=True,
+            ).withColumn("__src", canon_data_path_col(F.col("__file")))
 
         def with_del_seq(side_df: DataFrame, tasks) -> DataFrame:
             return _attach_seq_map(
@@ -1129,7 +1115,7 @@ class TableScan:
         joins: list[tuple[DataFrame, Any]] = []
         if plan.pos:
             pos_df = with_del_seq(
-                read_deletes(plan.pos, spark.read)
+                read_deletes(plan.pos)
                 .select(canon_data_path_col(F.col("file_path"))
                         .alias("__del_file"),
                         F.col("pos").alias("__del_pos"), "__src"),
@@ -1142,18 +1128,12 @@ class TableScan:
                                              "__del_seq"),
                                plan.pos_broadcast), cond))
         for g in plan.eq_groups:
-            # mergeSchema: delete files from BEFORE a RENAME COLUMN
-            # carry the old key name, files after it the new one — merge
-            # both and coalesce new-name-first (the name-mapping rule the
-            # data side applies). Without it the groupBy on the current
-            # name fails, or keys on an all-null pad and resurrects rows.
-            del_df = read_deletes(g.tasks,
-                                  spark.read.option("mergeSchema", "true"))
-            for c, former in zip(g.key_cols, g.former_names):
-                olds = [F.col(o) for o in former if o in del_df.columns]
-                if olds:
-                    cur = [F.col(c)] if c in del_df.columns else []
-                    del_df = del_df.withColumn(c, F.coalesce(*cur, *olds))
+            # the key columns bind like data columns: by field id, or by
+            # current then former name (a delete file written before a
+            # RENAME COLUMN); a key a file lacks reads NULL
+            del_df = read_deletes(g.tasks, Schema(StructType(tuple(
+                schema.field_by_name(c) for c in g.key_cols)),
+                schema_id=schema.schema_id))
             # a key deleted at seq S covers all data with seq < S; keep
             # the max seq per key so one row per key suffices
             keys = (with_del_seq(del_df, g.tasks)
@@ -1248,6 +1228,15 @@ def _attach_seq_map(spark: SparkSession, df: DataFrame,
     side = spark.createDataFrame(sorted(uniq.items()),
                                  f"{key_col} string, {out_col} long")
     return df.join(F.broadcast(side), on=key_col, how="left")
+
+
+def read_position_deletes(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """`file_path`, `pos` of position-delete files under an explicit
+    schema: an inferred one carries one file's ids (binding.py)."""
+    from .fileio import to_spark_paths
+
+    return (spark.read.schema("file_path string, pos long")
+            .parquet(*to_spark_paths(paths)))
 
 
 def read_data_files(spark: SparkSession, spark_schema, tasks: list[FileScanTask],

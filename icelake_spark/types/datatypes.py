@@ -183,15 +183,8 @@ def to_spark_type(t: Any) -> T.DataType:
             return T.BinaryType()
         return _PRIM_TO_SPARK[t.name]
     if isinstance(t, StructType):
-        # NOTE: the metadata key is deliberately iceberg.field_id, NOT
-        # Spark's parquet.field.id — a parquet.field.id-carrying READ
-        # schema makes Spark's parquet reader demand ids from every
-        # file and fail on id-less ones (legacy files, add_files
-        # imports). Ids are stamped only at the WRITE boundary
-        # (write.py) and consumed per-file by the DSv2 reader.
         return T.StructType([
-            T.StructField(f.name, to_spark_type(f.field_type), not f.required,
-                          metadata={"iceberg.field_id": f.field_id})
+            T.StructField(f.name, to_spark_type(f.field_type), not f.required)
             for f in t.fields
         ])
     if isinstance(t, ListType):

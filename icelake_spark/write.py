@@ -221,9 +221,9 @@ def write_data_files(
     # conversion) — cast here so written files always match the schema.
     # Nested (struct-member / list / map element) ids are not
     # expressible via alias metadata — TOP-LEVEL ids only; nested
-    # binding stays name-based (rename mapping) UNLESS the table opts
-    # into the arrow lane (write.parquet.field-id-mode=arrow), which
-    # stamps every nesting level.
+    # members bind by name UNLESS the table opts into the arrow lane
+    # (write.parquet.field-id-mode=arrow), which stamps every nesting
+    # level.
     df = _with_field_ids(df, schema, cast=True)
 
     # table-declared sort order (O3) + distribution mode:
@@ -340,9 +340,9 @@ def _with_field_ids(df: DataFrame, schema: Schema, cast: bool) -> DataFrame:
     stamp Iceberg field ids into the file schema (fieldId.write.enabled
     default true), so files interop with field-id-based readers (Java
     Iceberg, pyiceberg, our DSv2 reader) like the reference's
-    to_arrow.rs:15-45 id propagation. WRITE side only: read schemas
-    stay id-free — an id-carrying read schema makes Spark reject
-    id-less legacy files. `cast` aligns each column with the schema's
+    to_arrow.rs:15-45 id propagation; TableScan.read_mapped reads them
+    back by id (binding.py). Top level only: nested members bind by
+    name. `cast` aligns each column with the schema's
     type (data files); a delete file's columns already have their
     types, and a struct cast would demand the schema's nullability of
     every member."""
@@ -360,9 +360,10 @@ def _write_parquet(w, spark, path: str) -> None:
     spec's encoding: Spark's INT96 default also writes NO parquet column
     statistics, silently stripping every timestamp column's zone-map
     bounds. default_session sets the conf, and scoped_conf leaves a
-    session that holds it untouched — which keeps two writes that DML
-    overlaps on driver threads (delta._overlap) safe, the conf being
-    session-global, not thread-local."""
+    session that holds it untouched. On a session without it, two
+    writes that DML overlaps on driver threads (delta._overlap) take
+    turns through scoped_conf's lock: the conf is session-global, not
+    thread-local."""
     from .ops.util import scoped_conf
 
     with scoped_conf(spark, "spark.sql.parquet.outputTimestampType",
@@ -497,8 +498,10 @@ def _write_arrow_files(tables, stage: str, file_schema: "pa.Schema",
                 if st is None:
                     buf = pa.BufferOutputStream()
                     st = writers[subdir] = [
-                        pq.ParquetWriter(buf, file_schema,
-                                         compression=codec), buf, 0]
+                        pq.ParquetWriter(
+                            buf, file_schema, compression=codec,
+                            write_statistics=_stat_paths(file_schema)),
+                        buf, 0]
                 take = sub.num_rows - offset
                 if roll:
                     # strict cap (maxRecordsPerFile semantics):
@@ -512,6 +515,22 @@ def _write_arrow_files(tables, stage: str, file_schema: "pa.Schema",
     for subdir in list(writers):
         flush(subdir)
     return written
+
+
+def _stat_paths(fields, prefix: str = "") -> list[str]:
+    """Column paths the Arrow writer records statistics for: primitives
+    (struct members too) but float/double, whose pyarrow min/max skip
+    NaN: Spark's row-group filter and the file's bounds would drop the
+    NaN rows `x > c` returns (NaN sorts above every number)."""
+    import pyarrow as pa
+
+    out = []
+    for f in fields:
+        if pa.types.is_struct(f.type):
+            out += _stat_paths(list(f.type), f"{prefix}{f.name}.")
+        elif not (pa.types.is_floating(f.type) or pa.types.is_nested(f.type)):
+            out.append(prefix + f.name)
+    return out
 
 
 def write_parquet_arrow(df: DataFrame, stage: str, schema: Schema,
@@ -684,6 +703,9 @@ def _build_data_file(path: str, stage: str, schema: Schema,
 
     md = pq.read_metadata(io.open_input(path))
     entry.record_count = md.num_rows
+    # float/double bounds only from parquet-mr (Spark's writer), whose
+    # max is NaN when a NaN was written: other writers' skip NaN
+    float_bounds = "parquet-mr" in (md.created_by or "")
     ids_by_name = {f.name: f.field_id for f in schema.fields}
     col_sizes: dict[int, int] = {}
     value_counts: dict[int, int] = {}
@@ -736,7 +758,9 @@ def _build_data_file(path: str, stage: str, schema: Schema,
         if not ok or fid not in mins:
             continue
         f = schema.field_by_id(fid)
-        if f is None or not isinstance(f.field_type, PrimitiveType):
+        if f is None or not isinstance(f.field_type, PrimitiveType) or (
+                f.field_type.name in ("float", "double")
+                and not float_bounds):
             continue
         try:
             lo_v, hi_v = _truncate_bounds(f.field_type, mins[fid], maxs[fid])

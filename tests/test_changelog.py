@@ -127,7 +127,7 @@ def test_changelog_after_rename_resolves_old_files(spark, warehouse):
     t.delete_where(spark, "id = 1")
     got = sorted((r.id, r.val, r._change_type)
                  for r in t.changes(spark).collect())
-    # pre-rename file contents resolve through the name mapping
+    # pre-rename file contents bind to the renamed column
     assert got == [(1, "a", "delete"), (1, "a", "insert"),
                    (2, "b", "insert")]
 

@@ -14,6 +14,24 @@ def _register(spark):
     register(spark)
 
 
+def _to_df(spark, path, **opts):
+    from icelake_spark.table import IcebergTable
+
+    return IcebergTable.load(path).to_df(spark, **opts)
+
+
+def _icelake(spark, path, **opts):
+    r = spark.read.format("icelake").option("path", path)
+    for k, v in opts.items():
+        r = r.option(k, str(v))
+    return r.load()
+
+
+# the two batch readers, which must bind columns alike (binding.py)
+READERS = pytest.mark.parametrize("read", [_to_df, _icelake],
+                                  ids=["to_df", "icelake"])
+
+
 def test_format_read_with_mor(spark, warehouse):
     src = spark.range(1000).selectExpr("id", "id % 7 as g")
     t = warehouse.create_table("db.ds1", Schema.from_spark(src.schema))
@@ -64,7 +82,7 @@ def test_pack_next_fit_in_planned_order():
     pos = [DeleteFileTask(fake("p0", 30 * mib), 2)]
     eq = [DeleteFileTask(fake("e0", 20 * mib), 3),
           DeleteFileTask(fake("e1", 10 * mib), 4)]
-    group = EqDeleteGroup(("id",), ((),), eq, None, True)
+    group = EqDeleteGroup(("id",), eq, None, True)
 
     class Plan:
         def deletes_for(self, task):
@@ -490,29 +508,31 @@ def test_partition_stream_reader_is_default_and_matches_batch(
     assert spark.read.parquet(out).count() == 3100
 
 
-def test_dsv2_field_id_binding_survives_name_reuse(spark, warehouse):
+@READERS
+def test_dsv2_field_id_binding_survives_name_reuse(spark, warehouse, read):
     """Field-id projection (FieldProjector parity): after renaming
     a->c and REUSING 'a' for the old b, name-based resolution on old
-    files would bind the new 'a' to the WRONG physical column; the
-    DSv2 reader binds by the file's PARQUET:field_id instead (our
-    writer stamps ids into every data file)."""
+    files would bind the new 'a' to the WRONG physical column; both
+    readers bind by the file's PARQUET:field_id instead (our writer
+    stamps ids into every data file)."""
     src = spark.createDataFrame([(1, 10, 100), (2, 20, 200)],
                                 "id long, a long, b long")
     t = warehouse.create_table("db.fid", Schema.from_spark(src.schema))
     t.append(src)
     t.rename_column("a", "c")
     t.rename_column("b", "a")
-    df = spark.read.format("icelake").option("path", t.path).load()
-    rows = {r.id: r for r in df.collect()}
+    rows = {r.id: r for r in read(spark, t.path).collect()}
     assert rows[1].c == 10 and rows[1].a == 100
     assert rows[2].c == 20 and rows[2].a == 200
 
     # new data written under the new names reads consistently too
     t.refresh()
     t.append(spark.createDataFrame([(3, 30, 300)], "id long, c long, a long"))
-    rows = {r.id: r for r in spark.read.format("icelake")
-            .option("path", t.path).load().collect()}
+    rows = {r.id: r for r in read(spark, t.path).collect()}
     assert rows[3].c == 30 and rows[3].a == 300 and rows[1].c == 10
+    # a pushed filter on the reused name binds to its own field
+    assert sorted(r.id for r in read(spark, t.path)
+                  .where("a >= 200").collect()) == [2, 3]
 
 
 def test_changelog_stream_one_window_mixed_deletes(spark, warehouse,
@@ -586,24 +606,26 @@ def test_dsv2_nested_member_binding_by_field_id(spark, warehouse,
     assert rows[2].info.x == 20 and rows[2].info.y == "b"
 
 
-def test_dsv2_dropped_then_readded_column_reads_null(spark, warehouse):
+@READERS
+def test_dsv2_dropped_then_readded_column_reads_null(spark, warehouse, read):
     """DROP COLUMN c then ADD COLUMN c: old id-stamped files still hold
     a physical 'c' under the OLD field id — the reader must project
-    NULL for the new c, not resurrect stale values (review fix)."""
+    NULL for the new c, not resurrect stale values."""
     src = spark.createDataFrame([(1, 10), (2, 20)], "id long, c long")
     t = warehouse.create_table("db.readd", Schema.from_spark(src.schema))
     t.append(src)
     t.drop_column("c")
     t.add_column("c", "long")
-    rows = {r.id: r.c for r in spark.read.format("icelake")
-            .option("path", t.path).load().collect()}
+    rows = {r.id: r.c for r in read(spark, t.path).collect()}
     assert rows == {1: None, 2: None}
     # new writes under the new id read back fine alongside
     t.refresh()
     t.append(spark.createDataFrame([(3, 99)], "id long, c long"))
-    rows = {r.id: r.c for r in spark.read.format("icelake")
-            .option("path", t.path).load().collect()}
+    rows = {r.id: r.c for r in read(spark, t.path).collect()}
     assert rows == {1: None, 2: None, 3: 99}
+    # `c IS NULL` is pushed to the scan: it must not test the old 'c'
+    assert sorted(r.id for r in read(spark, t.path)
+                  .where("c IS NULL").collect()) == [1, 2]
 
 
 def test_partition_stream_reader_avro_table(spark, warehouse, tmp_path):
@@ -693,14 +715,13 @@ def test_dsv2_read_mor_pos_plus_eq_deletes(spark, warehouse):
     assert rows[2] == "BACK" and rows[40] == "NEW" and rows[5] == "v5"
 
 
-def test_dsv2_dropped_and_readded_all_columns_stays_null(spark, warehouse):
+@READERS
+def test_dsv2_dropped_and_readded_all_columns_stays_null(spark, warehouse,
+                                                         read):
     """Own old files whose EVERY recorded column was since dropped and
     re-added: the former zero-id-overlap heuristic classified them as
     foreign and resurrected the dropped columns' stale values by name;
     provenance-by-location keeps strict id semantics (NULLs)."""
-    from icelake_spark import datasource
-
-    datasource.register(spark)
     src = spark.createDataFrame([(1, "old1"), (2, "old2")],
                                 "a long, b string")
     t = warehouse.create_table("db.dropall", Schema.from_spark(src.schema))
@@ -712,8 +733,7 @@ def test_dsv2_dropped_and_readded_all_columns_stays_null(spark, warehouse):
     t.add_column("b", "string")
     # current ids {3, 4, 5}: zero overlap with the file's — the old
     # heuristic fell back to names here and resurrected old1/old2
-    rows = [tuple(r) for r in spark.read.format("icelake")
-            .option("path", t.path).load().collect()]
+    rows = [tuple(r) for r in read(spark, t.path).collect()]
     assert rows == [(None, None, None), (None, None, None)], rows
 
 
@@ -1195,3 +1215,128 @@ def test_dsv2_avro_file_with_no_schema_overlap_pads_rows(spark, warehouse):
     rows = [tuple(r) for r in spark.read.format("icelake")
             .option("path", t.path).load().collect()]
     assert rows == [(None, None, None)] * 3, rows
+
+
+def _readded(spark, warehouse, name, **props):
+    """A table whose one data file holds (1, 10), (2, 20) under c's
+    first field id, after DROP COLUMN c and ADD COLUMN c."""
+    src = spark.createDataFrame([(1, 10), (2, 20)], "id long, c long")
+    t = warehouse.create_table(name, Schema.from_spark(src.schema),
+                               properties=props)
+    t.append(src.coalesce(1))  # both rows share one file
+    t.drop_column("c")
+    t.add_column("c", "long")
+    return t
+
+
+@READERS
+def test_rename_then_readd_reads_by_field_id(spark, warehouse, read):
+    """RENAME c -> d, then ADD COLUMN c: d keeps the old values and the
+    new c reads NULL (to_df used to raise, the DataSource to read
+    d's values into c as well)."""
+    src = spark.createDataFrame([(1, 10), (2, 20)], "id long, c long")
+    t = warehouse.create_table("db.renreadd", Schema.from_spark(src.schema))
+    t.append(src)
+    t.rename_column("c", "d")
+    t.add_column("c", "long")
+    assert sorted(tuple(r) for r in read(spark, t.path).collect()) == \
+        [(1, 10, None), (2, 20, None)]
+
+
+@READERS
+@pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
+@pytest.mark.parametrize("op", ["delete", "update"])
+def test_row_level_dml_after_readd(spark, warehouse, read, mode, op):
+    """DELETE / UPDATE after DROP + ADD COLUMN c: the rewritten or
+    surviving row keeps c NULL. A copy-on-write rewrite used to copy
+    the old physical c (20) into the new field id, where every reader
+    then returned it."""
+    t = _readded(spark, warehouse, f"db.dml_{op}_{mode[:1]}",
+                 **{"write.delete.mode": mode, "write.update.mode": mode})
+    if op == "delete":
+        t.delete_where(spark, "id = 1")
+        want = {2: None}
+    else:
+        t.update_where(spark, "id = 1", {"c": "5"})
+        want = {1: 5, 2: None}
+    assert {r.id: r.c for r in read(spark, t.path).collect()} == want
+
+
+@READERS
+def test_time_travel_before_drop_reads_old_column(spark, warehouse, read):
+    """A read of the snapshot written before the drop uses that
+    snapshot's schema, whose c is the old field: its values are back."""
+    src = spark.createDataFrame([(1, 10), (2, 20)], "id long, c long")
+    t = warehouse.create_table("db.ttdrop", Schema.from_spark(src.schema))
+    t.append(src)
+    first = t.current_snapshot().snapshot_id
+    t.drop_column("c")
+    t.add_column("c", "long")
+    t.refresh().append(spark.createDataFrame([(3, 30)], "id long, c long"))
+    old = read(spark, t.path, snapshot_id=first)
+    assert sorted(tuple(r) for r in old.collect()) == [(1, 10), (2, 20)]
+    assert {r.id: r.c for r in read(spark, t.path).collect()} == \
+        {1: None, 2: None, 3: 30}
+
+
+def test_changelog_after_readd_reads_null(spark, warehouse, tmp_path):
+    """changes() and the changelog stream replay the inserts made
+    before DROP + ADD COLUMN c with c NULL, like the batch readers."""
+    t = _readded(spark, warehouse, "db.cdcreadd")
+    t.refresh().append(spark.createDataFrame([(3, 30)], "id long, c long"))
+    want = [(1, None, "insert"), (2, None, "insert"), (3, 30, "insert")]
+    got = sorted((r.id, r.c, r._change_type)
+                 for r in t.refresh().changes(spark).collect())
+    assert got == want
+    q = (spark.readStream.format("icelake").option("path", t.path)
+         .option("changelog", "true").load()
+         .writeStream.format("memory").queryName("cdcreadd")
+         .option("checkpointLocation", str(tmp_path / "ck"))
+         .trigger(availableNow=True).start())
+    assert q.awaitTermination(120)
+    assert sorted((r.id, r.c, r._change_type)
+                  for r in spark.table("cdcreadd").collect()) == want
+
+
+@READERS
+def test_idless_import_with_reused_name_raises(spark, warehouse, tmp_path,
+                                               read):
+    """An imported file binds by name; after RENAME c -> d and ADD
+    COLUMN c its 'c' could be either column, so both readers raise
+    instead of reading the old c's values into the new c."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = spark.createDataFrame([(1, 10)], "id long, c long")
+    t = warehouse.create_table("db.reusedimp", Schema.from_spark(src.schema))
+    f = str(tmp_path / "imp.parquet")
+    pq.write_table(pa.table({"id": [7], "c": [70]}), f)
+    t.add_files([f])
+    assert [tuple(r) for r in read(spark, t.path).collect()] == [(7, 70)]
+    t.rename_column("c", "d")
+    assert [tuple(r) for r in read(spark, t.path).collect()] == [(7, 70)]
+    t.add_column("c", "long")
+    with pytest.raises(Exception, match="cannot tell them apart"):
+        read(spark, t.path).collect()
+
+
+def test_bare_session_reads_by_field_id(spark, warehouse):
+    """A session that never set the field-id read conf (not built by
+    default_session, no DataSource registered): to_df still binds by
+    id — the re-added c reads NULL, `c IS NULL` pushed to the scan
+    keeps both rows — and a never-reused column keeps the vectorized
+    scan and its pushed filter."""
+    from icelake_spark.binding import FIELD_ID_READ
+    from icelake_spark.table import IcebergTable
+
+    t = _readded(spark, warehouse, "db.bare")
+    bare = spark.newSession()
+    bare.conf.unset(FIELD_ID_READ)
+    assert bare.conf.get(FIELD_ID_READ) == "false"
+    bare.conf.set("spark.sql.codegen.wholeStage", "true")
+    df = IcebergTable.load(t.path).to_df(bare)
+    assert sorted(tuple(r) for r in df.collect()) == [(1, None), (2, None)]
+    assert df.where("c IS NULL").count() == 2
+    plan = df.where("id > 1")._jdf.queryExecution().executedPlan().toString()
+    assert "Batched: true" in plan, plan
+    assert "PushedFilters: [IsNotNull(id), GreaterThan(id,1)]" in plan, plan

@@ -262,7 +262,7 @@ def test_partition_residual_default_spec_on_conflicting_transform(
 
 def test_dml_preserves_renamed_columns_in_old_files(spark, warehouse):
     """delete_rows/update_rows read their working set through the
-    rename name-mapping: files written BEFORE a rename carry the old
+    table's column binding: files written BEFORE a rename carry the old
     column name, and a current-name-only read NULL-pads the renamed
     column — a CoW rewrite (or MoR update re-append) would then
     permanently wipe its values (code-review r9)."""

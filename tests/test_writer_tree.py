@@ -136,3 +136,75 @@ def test_stream_read_overwrite_rule(spark, warehouse, tmp_path):
         (spark.read.format("icelake").option("path", t.path)
          .option("start_snapshot_id", str(first)).load().collect())
     assert "skip_overwrite_snapshots" in str(batch_err.value)
+
+
+def test_nan_rows_survive_pruning(spark, warehouse):
+    """An Arrow-lane file holding [1.0, NaN] records no float bounds or
+    statistics (pyarrow's min/max skip NaN), so `x > 5` keeps the NaN
+    row, which Spark's semantics return (NaN sorts above every number),
+    through the scan filter, a Spark filter and the DataSource. A
+    Spark-written file without NaN keeps its bounds and is pruned."""
+    from icelake_spark.datasource import register
+
+    register(spark)
+    src = spark.createDataFrame([(1, 1.0), (2, float("nan"))],
+                                "id long, x double")
+    t = warehouse.create_table(
+        "db.nanarrow", Schema.from_spark(src.schema),
+        properties={"write.parquet.field-id-mode": "arrow"})
+    t.append(src.coalesce(1))  # one file holds both values
+    t = t.refresh()
+    assert [r.id for r in t.to_df(spark, filter="x > 5").collect()] == [2]
+    assert [r.id for r in t.to_df(spark).where("x > 5").collect()] == [2]
+    assert [r.id for r in spark.read.format("icelake").option("path", t.path)
+            .load().where("x > 5").collect()] == [2]
+
+    s = warehouse.create_table("db.nanspark", Schema.from_spark(src.schema))
+    s.append(spark.createDataFrame([(1, 1.0), (2, 2.0)], "id long, x double"))
+    s = s.refresh()
+    assert len(s.new_scan(filter="x > 5").plan_files(spark)[0]) == 0
+    assert len(s.new_scan(filter="x > 1").plan_files(spark)[0]) == 1
+
+
+def test_scoped_conf_overlapping_scopes_keep_the_value():
+    """Two overlapping scoped_conf scopes on a session without the conf:
+    the second one must still see the value while its action runs,
+    after the first scope has restored the session."""
+    import threading
+
+    from icelake_spark.ops.util import scoped_conf
+
+    class Conf(dict):
+        def set(self, k, v):
+            self[k] = v
+
+        def unset(self, k):
+            self.pop(k, None)
+
+    class Session:
+        conf = Conf()
+
+    key, value = "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
+    a_in, a_done, b_try = (threading.Event() for _ in range(3))
+    seen = []
+
+    def first():
+        with scoped_conf(Session, key, value):
+            a_in.set()
+            b_try.wait(5)
+        a_done.set()
+
+    def second():
+        a_in.wait(5)
+        b_try.set()
+        with scoped_conf(Session, key, value):
+            a_done.wait(5)
+            seen.append(Session.conf.get(key))
+
+    threads = [threading.Thread(target=f) for f in (first, second)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(10)
+    assert seen == [value]
+    assert key not in Session.conf
