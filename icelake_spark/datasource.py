@@ -23,15 +23,22 @@ read.split.target-size and read.split.open-file-cost defaults), so one
 InputPartition reads up to 128 MiB of files one file at a time and
 reads each delete file it needs once.
 
+Changelog mode, option("changelog", "true"), batch or stream: the
+table's row-level changes (changelog.py), one task per snapshot.
+_plan_changelog_tasks walks the window's ancestry chain once and gives
+each file task its deletes from the same DeletePlan; _changes masks
+them with the batch reader's Arrow code (_TableFileReader._dead_mask).
+Rows carry _change_type, _commit_snapshot_id and _commit_order. A
+batch read's window is (start_snapshot_id, end_snapshot_id]; that is
+what IcebergTable.changes reads.
+
 Streams: `spark.readStream.format("icelake")` is the partition-based
 IcelakePartitionStreamReader — appended files, packed like the batch
-read, or with option("changelog", "true") one CDC partition per
-snapshot, whose file tasks take their deletes from the same DeletePlan
-and are masked by the same Arrow code as batch reads
-(_TableFileReader._dead_mask). The stream reads take an append
-snapshot's added files, skip delete and replace snapshots, and fail on
-an overwrite unless option("skip_overwrite_snapshots", "true") — the
-batch incremental read's rule (streaming.append_snapshots).
+read, or the changelog mode over each micro-batch's offset range. The
+plain stream takes an append snapshot's added files, skips delete and
+replace snapshots, and fails on an overwrite unless
+option("skip_overwrite_snapshots", "true") — the batch incremental
+read's rule (streaming.append_snapshots).
 `df.writeStream.format("icelake")` is the transactional
 IcelakeStreamWriter, an Arrow lane of the writer tree (write.py).
 
@@ -86,6 +93,19 @@ class _FileTask(InputPartition):
     def has_deletes(self) -> bool:
         return (self.positions is not None or bool(self.pos_files)
                 or bool(self.eq_deletes))
+
+
+# the changelog mode's columns after the table's: change kind, commit
+# snapshot id (long on every table: an int would flip the schema with
+# the id's size) and the commit's rank in the planned window
+CHANGE_TYPE = "_change_type"
+COMMIT_SNAPSHOT = "_commit_snapshot_id"
+COMMIT_ORDER = "_commit_order"
+_CHANGE_COLUMNS = (CHANGE_TYPE, COMMIT_SNAPSHOT, COMMIT_ORDER)
+
+
+def _is_changelog(options: dict) -> bool:
+    return options.get("changelog", "").lower() in ("true", "1")
 
 
 # Iceberg's read.split.target-size and read.split.open-file-cost defaults
@@ -166,7 +186,8 @@ class IcelakeDataSource(DataSource):
         return "icelake"
 
     def schema(self):
-        from pyspark.sql.types import StructField, StructType
+        from pyspark.sql.types import (IntegerType, LongType, StringType,
+                                       StructField, StructType)
 
         from .table import IcebergTable
 
@@ -178,20 +199,12 @@ class IcelakeDataSource(DataSource):
         # metadata (our Iceberg column ids) would not survive Arrow
         fields = [StructField(f.name, f.dataType, True)
                   for f in _read_schema(t, self.options).to_spark().fields]
-        if self.options.get("changelog", "").lower() in ("true", "1"):
-            from pyspark.sql.types import StringType
-
-            fields.append(StructField("_change_type", StringType(), True))
+        if _is_changelog(self.options):
+            fields += [StructField(n, t(), True) for n, t in zip(
+                _CHANGE_COLUMNS, (StringType, LongType, IntegerType))]
         return StructType(fields)
 
     def reader(self, schema) -> "IcelakeReader":
-        if self.options.get("changelog", "").lower() in ("true", "1"):
-            # the option is a STREAMING-read feature; a batch scan would
-            # otherwise return the plain current snapshot with an
-            # all-NULL _change_type column masquerading as CDC rows
-            raise ValueError(
-                "changelog=true is only supported with readStream; for a "
-                "batch changelog use IcebergTable.changes(spark)")
         self._install_io_registry()
         return IcelakeReader(self.options, schema)
 
@@ -231,7 +244,7 @@ def _read_avro_arrow(spark_schema, file_path: str, table_path: str,
     from .types.datatypes import Schema as _IceSchema
 
     plain = T.StructType([f for f in spark_schema.fields
-                          if f.name != "_change_type"])
+                          if f.name not in _CHANGE_COLUMNS])
     arrow_schema = to_arrow_schema(plain)
     decoders = {name: dec for name, _enc, dec
                 in _converters(_IceSchema.from_spark(plain))}
@@ -488,6 +501,51 @@ class _TableFileReader:
         return pa.Table.from_arrays(
             arrays, names=[f.name for f in self.spark_schema.fields])
 
+    def read(self, partition) -> Iterator:
+        """Read a task as Arrow record batches (Spark converts via
+        Arrow): a scan task's data files with pyarrow, their MoR deletes
+        masked out with Arrow kernels; a changelog task's change events.
+        Spark reads one None partition when the plan has none."""
+        if isinstance(partition, _ChangeSnapshotTask):
+            yield from _one_schema(self._changes(partition))
+        elif partition is not None:
+            yield from self._read_scan(partition)
+
+    def _changes(self, task: "_ChangeSnapshotTask") -> Iterator:
+        """One snapshot's change events as Arrow tables, one per file:
+        an insert is a row its own commit's deletes leave alive; a
+        delete a row earlier deletes left alive that this snapshot's
+        deletes kill, or that is in a file the snapshot dropped. One
+        dead-row mask per file and delete side, so a row that a position
+        AND an equality delete of the same commit both hit is emitted
+        once."""
+        import pyarrow as pa
+
+        cache: dict = {}
+        meta = {CHANGE_TYPE: None, COMMIT_SNAPSHOT: task.snapshot_id,
+                COMMIT_ORDER: task.order}
+        for kind, prior, this in (
+                [("insert", None, t) for t in task.inserts]
+                + [("delete", p, t) for p, t in task.deletes]):
+            table, ids = self._read_file(prior if this is None else this)
+            if prior is None:
+                rows = ~self._dead_mask(table, this, ids, cache)
+            else:
+                rows = ~self._dead_mask(table, prior, ids, cache)
+                if this is not None:
+                    rows &= self._dead_mask(table, this, ids, cache)
+            if not rows.any():
+                continue
+            out = self._project(table.filter(pa.array(rows)), ids)
+            meta[CHANGE_TYPE] = kind
+            for name, value in meta.items():
+                i = out.schema.get_field_index(name)
+                if i >= 0:
+                    f = out.schema.field(i)
+                    out = out.set_column(i, f, pa.repeat(
+                        pa.scalar(value, f.type), out.num_rows))
+            yield out
+
     def _read_scan(self, task: _ScanTask) -> Iterator:
         """Each file of `task` in turn, masked and projected, as Arrow
         record batches: a file's batches are yielded before the next
@@ -529,6 +587,16 @@ class IcelakeReader(_TableFileReader, DataSourceReader):
         from .table import IcebergTable
 
         t = IcebergTable.load(self.options["path"])
+        if _is_changelog(self.options):
+            # (start_snapshot_id, end_snapshot_id]; no pushed filter
+            # prunes it, so a plan Spark caches across queries of one
+            # loaded frame stays whole
+            from .changelog import snapshot_window
+
+            bounds = [int(self.options[k]) if k in self.options else None
+                      for k in ("start_snapshot_id", "end_snapshot_id")]
+            return _plan_changelog_tasks(t, *snapshot_window(t, *bounds),
+                                         self._src)
         if "start_snapshot_id" in self.options:
             # incremental append scan (Iceberg's start/end-snapshot-id
             # batch read options): files ADDED in the ancestry window,
@@ -550,14 +618,6 @@ class IcelakeReader(_TableFileReader, DataSourceReader):
         plan = plan_deletes(data, pos, eq, scan._read_schema(), t.metadata)
         by_file = _pos_sets(plan, self._src)
         return _pack([_file_task(d, plan, by_file) for d in data])
-
-    def read(self, partition: _ScanTask | None) -> Iterator:
-        """Read the task's data files with pyarrow, mask out their MoR
-        deletes with Arrow kernels, yield Arrow record batches (Spark
-        converts via Arrow). Spark reads one None partition when the
-        plan has none: pruning left no file."""
-        if partition is not None:
-            yield from self._read_scan(partition)
 
 
 def _time_travel(options: dict) -> dict[str, Any]:
@@ -811,132 +871,130 @@ def _stream_files_range(table, s1: int, k1: int, s2: int, k2: int,
     return out
 
 
-def _plan_changelog_tasks(table, start_off: int, end_off: int,
-                          src) -> list:
+def _stream_window(table, start_off: int, end_off: int) -> tuple[list, set]:
+    """(chain, window) of a changelog micro-batch: the main ancestry,
+    oldest first, up to stream offset `end_off`, and the ids of its
+    snapshots past `start_off` (changelog.snapshot_window's shape)."""
+    chain = [s for s in table.metadata.ancestors()[::-1]
+             if _stream_offset_of(table, s) <= end_off]
+    return chain, {s.snapshot_id for s in chain
+                   if _stream_offset_of(table, s) > start_off}
+
+
+def _plan_changelog_tasks(table, chain: list, window: set, src) -> list:
     """Driver-side changelog planning with STRICTLY LINEAR manifest
-    I/O: one walk over the main ancestry reads each manifest list and
-    each added-by manifest EXACTLY ONCE, maintaining the alive-data-
-    file map incrementally (alive(s) = alive(parent) + ADDED − DELETED;
-    EXISTING entries from manifest rewrites are no-ops) and the delete
-    files of every walked snapshot. Every decodable in-range snapshot
-    becomes one _ChangeSnapshotTask of _FileTasks whose deletes come
-    from planning.plan_deletes, so executor tasks perform ZERO manifest
-    reads and mask rows exactly as the batch DataSource does."""
+    I/O: one walk over `chain` (an ancestry chain, oldest first) reads
+    each manifest list once, and each manifest the first time a
+    snapshot lists it; a manifest the previous snapshot listed is
+    carried forward unchanged. The walk keeps the alive data files
+    (alive(s) = alive(parent) + added − dropped, where a dropped file
+    is one listed only by manifests s no longer lists — spec writers
+    also mark it DELETED there) and the delete files of every walked
+    snapshot. The first snapshot seeds both from its FULL manifest
+    list: files and deletes committed by since-expired snapshots live
+    on only in its carried-forward manifests.
+
+    Every non-replace snapshot of `window` becomes one
+    _ChangeSnapshotTask, ranked in walk order, of _FileTasks whose
+    deletes come from planning.plan_deletes, so executor tasks perform
+    ZERO manifest reads and mask rows exactly as the batch DataSource
+    does."""
     from .table import DeleteFileTask, FileScanTask
-    from .types.manifest import (STATUS_ADDED, STATUS_DELETED,
-                                 read_manifest, read_manifest_list)
+    from .types.manifest import (STATUS_ADDED, read_manifest,
+                                 read_manifest_list)
 
     out = []
-    main_ids = table.metadata.ancestry_ids()
     schema, md = table.schema(), table.metadata
     prior_pos: list = []   # DeleteFileTasks of every earlier walked
     prior_eq: list = []    # snapshot, in or before the window
     alive: dict[str, FileScanTask] = {}  # canon path → alive data file
+    listed: dict[str, set] = {}  # manifest path → canon paths it lists
     positions: dict = {}   # position-delete file → its resolved rows
 
-    def snapshot_task(snapshot_id: int, added: list, pos: list,
-                      eq: list) -> _ChangeSnapshotTask:
-        """Each added file masked by its own commit's deletes (equality
-        deletes gate out at the same sequence number), and each older
-        file this snapshot's deletes touch, paired with the deletes of
-        every earlier walked snapshot."""
-        older = list(alive.values()) if pos or eq else []
-        plan = plan_deletes(added + older, pos, eq, schema, md)
+    def file_tasks(files: list, pos: list, eq: list) -> list[_FileTask]:
+        plan = plan_deletes(files, pos, eq, schema, md)
         by_file = _pos_sets(plan, src, positions)
-        touched = [(d, ft) for d in older
-                   if (ft := _file_task(d, plan, by_file)).has_deletes]
-        deletes = ()
-        if touched:
-            prior = plan_deletes([d for d, _ in touched], prior_pos,
-                                 prior_eq, schema, md)
-            prior_by_file = _pos_sets(prior, src, positions)
-            deletes = tuple((_file_task(d, prior, prior_by_file), ft)
-                            for d, ft in touched)
-        return _ChangeSnapshotTask(
-            snapshot_id,
-            tuple(_file_task(d, plan, by_file) for d in added), deletes)
+        return [_file_task(d, plan, by_file) for d in files]
 
-    first_walked = True
-    # sort by the STREAM offset (seq on v2, commit timestamp on v1
-    # where every seq is 0): the early break below is only safe when
-    # the walk order is the offset order
-    for snap in sorted(table.metadata.snapshots,
-                       key=lambda x: (_stream_offset_of(table, x),
-                                      x.sequence_number)):
-        if snap.snapshot_id not in main_ids:
-            continue
-        off = _stream_offset_of(table, snap)
-        if off > end_off:
-            break  # later snapshots cannot affect this window
-        summary = snap.summary or {}
-        decodable = not (
-            summary.get("operation", "append") == "replace"
-            or int(summary.get("deleted-data-files", 0) or 0) > 0)
-        added, added_pos, added_eq, updates = [], [], [], []
+    def snapshot_task(snap, added: list, pos: list, eq: list,
+                      dropped: list) -> _ChangeSnapshotTask:
+        """Each added file masked by its own commit's deletes (equality
+        deletes gate out at the same sequence number); each older file
+        this snapshot's deletes touch, and each dropped file, paired
+        with the deletes of every earlier walked snapshot."""
+        older = list(alive.values()) if pos or eq else []
+        tasks = file_tasks(added + older, pos, eq)
+        touched = [(d, ft) for d, ft in zip(older, tasks[len(added):])
+                   if ft.has_deletes]
+        gone = [d for d, _ in touched] + dropped
+        prior = file_tasks(gone, prior_pos, prior_eq) if gone else []
+        return _ChangeSnapshotTask(
+            snap.snapshot_id, len(out), tuple(tasks[:len(added)]),
+            tuple(zip(prior, [ft for _, ft in touched]
+                      + [None] * len(dropped))))
+
+    for snap in chain:
+        added, added_pos, added_eq = [], [], []
+        before, listed, relisted = listed, {}, set()
         for mle in read_manifest_list(table._resolve(snap.manifest_list)):
-            foreign = mle.added_snapshot_id != snap.snapshot_id
-            if foreign and not first_walked:
-                continue  # carried forward unchanged: no alive change
-            # the FIRST retained snapshot seeds `alive` and the prior
-            # deletes from its FULL manifest list: files added by since-
-            # EXPIRED snapshots survive only via carried-forward
-            # manifests whose added_snapshot_id is no longer in
-            # metadata.snapshots — skipping them would drop their rows'
-            # delete events
-            _, entries = read_manifest(table._resolve(mle.manifest_path),
-                                       mle)
+            path = mle.manifest_path
+            if path in before:  # carried forward unchanged
+                listed[path] = before.pop(path)
+                continue
+            # a manifest the snapshot did not write (only the first
+            # snapshot's carried-forward ones) lists what was alive
+            # before it
+            own = mle.added_snapshot_id == snap.snapshot_id
+            files = listed[path] = set()
+            _, entries = read_manifest(table._resolve(path), mle)
             for e in entries:
-                seq = e.sequence_number
-                df = e.data_file
+                if not e.is_alive:
+                    continue
+                df, seq = e.data_file, e.sequence_number
                 df.file_path = table._resolve(df.file_path)
-                if foreign:  # predates this snapshot: alive BEFORE it
-                    if not e.is_alive:
-                        continue
-                    if df.content == 0:
-                        alive[canon_data_path(df.file_path)] = \
-                            FileScanTask(df, seq, mle.partition_spec_id)
-                    else:
-                        (prior_pos if df.content == 1 else prior_eq) \
-                            .append(DeleteFileTask(df, seq))
-                elif df.content == 0:
+                if df.content == 0:
                     task = FileScanTask(df, seq, mle.partition_spec_id)
-                    updates.append((e.status, task))
-                    if e.status == STATUS_ADDED:
+                    c = canon_data_path(df.file_path)
+                    files.add(c)
+                    if own and e.status == STATUS_ADDED:
                         added.append(task)
-                elif e.status == STATUS_ADDED:
+                    else:
+                        alive[c] = task
+                elif own and e.status == STATUS_ADDED:
                     (added_pos if df.content == 1 else added_eq).append(
                         DeleteFileTask(df, seq))
-        first_walked = False
-        if decodable and start_off < off <= end_off:
-            out.append(snapshot_task(snap.snapshot_id, added, added_pos,
-                                     added_eq))
+                elif not own:
+                    (prior_pos if df.content == 1 else prior_eq).append(
+                        DeleteFileTask(df, seq))
+            relisted |= files
+        # files of the manifests no longer listed that no new one lists
+        dropped = [alive.pop(c) for files in before.values()
+                   for c in files if c not in relisted and c in alive]
+        op = (snap.summary or {}).get("operation", "append")
+        if snap.snapshot_id in window and op != "replace":
+            out.append(snapshot_task(snap, added, added_pos, added_eq,
+                                     dropped))
         # deletes accumulate over EVERY walked snapshot, not just in-
-        # range ones: a row an earlier micro-batch's delete killed must
+        # window ones: a row an earlier micro-batch's delete killed must
         # not re-emit a delete event when a later snapshot's delete hits
-        # it again, or batch boundaries change the changelog (phantom
-        # duplicate delete events vs the batch changes() API, which
-        # always folds the parent's full delete set — code-review r8)
+        # it again, or batch boundaries change the changelog
         prior_pos.extend(added_pos)
         prior_eq.extend(added_eq)
-        for status, task in updates:
-            c = canon_data_path(task.data_file.file_path)
-            if status == STATUS_DELETED:
-                alive.pop(c, None)
-            else:  # ADDED or EXISTING (rewrite): (re)record identically
-                alive[c] = task
+        alive.update((canon_data_path(t.data_file.file_path), t)
+                     for t in added)
     return out
 
 
 @dataclass
 class _ChangeSnapshotTask(InputPartition):
-    """One changelog micro-batch slice: ONE snapshot's CDC events,
-    decoded on an executor from the _FileTasks _plan_changelog_tasks
-    ships — zero manifest I/O, and only the data/delete FILES it
-    masks are read."""
+    """One snapshot's change events, decoded on an executor from the
+    _FileTasks _plan_changelog_tasks ships — zero manifest I/O, and
+    only the data/delete FILES it masks are read."""
     snapshot_id: int
+    order: int  # the snapshot's rank in the planned window
     inserts: tuple = ()  # _FileTask per added data file
     # (earlier deletes, this snapshot's deletes) _FileTasks of one
-    # older data file
+    # older data file; (earlier deletes, None) for a dropped file
     deletes: tuple = ()
 
 
@@ -1047,7 +1105,7 @@ class IcelakePartitionStreamReader(_TableFileReader, DataSourceStreamReader):
 
     @property
     def _changelog(self) -> bool:
-        return self.options.get("changelog", "").lower() in ("true", "1")
+        return _is_changelog(self.options)
 
     def partitions(self, start: dict, end: dict):  # driver-side planning
         # composite offsets (seq, files) compare lexicographically;
@@ -1075,10 +1133,11 @@ class IcelakePartitionStreamReader(_TableFileReader, DataSourceStreamReader):
             return []
         table = self._table()
         if self._changelog:
-            # one task per DECODABLE snapshot in range; ONE linear walk
-            # on the driver reads each manifest exactly once and ships
-            # complete task payloads (see _plan_changelog_tasks)
-            return _plan_changelog_tasks(table, s[0], e[0], self._src)
+            # one task per non-replace snapshot in range; ONE linear
+            # walk on the driver reads each manifest exactly once and
+            # ships complete task payloads (see _plan_changelog_tasks)
+            return _plan_changelog_tasks(
+                table, *_stream_window(table, s[0], e[0]), self._src)
         if s[1] or e[1]:
             files = _stream_files_range(table, s[0], s[1], e[0], e[1],
                                         self._sf_cache,
@@ -1092,34 +1151,6 @@ class IcelakePartitionStreamReader(_TableFileReader, DataSourceStreamReader):
                           if q > s[0]}
         return _pack([_FileTask(path, fmt, size=size)
                       for path, fmt, size in files])
-
-    def read(self, partition):  # executor-side
-        if isinstance(partition, _ChangeSnapshotTask):
-            yield from _one_schema(self._changes(partition))
-            return
-        yield from self._read_scan(partition)
-
-    def _changes(self, task: _ChangeSnapshotTask) -> Iterator:
-        """One snapshot's CDC events as Arrow tables, one per file: one
-        dead-row mask per file and delete side, so a row that a position
-        AND an equality delete of the same commit both hit is emitted
-        once."""
-        import pyarrow as pa
-
-        cache: dict = {}
-        for kind, prior, this in (
-                [("insert", None, t) for t in task.inserts]
-                + [("delete", p, t) for p, t in task.deletes]):
-            table, ids = self._read_file(this)
-            dead = self._dead_mask(table, this, ids, cache)
-            rows = ~dead if prior is None else \
-                dead & ~self._dead_mask(table, prior, ids, cache)
-            if not rows.any():
-                continue
-            out = self._project(table.filter(pa.array(rows)), ids)
-            i = out.schema.get_field_index("_change_type")
-            yield out.set_column(i, "_change_type",
-                                 pa.repeat(pa.scalar(kind), out.num_rows))
 
     def commit(self, end: dict) -> None:
         pass

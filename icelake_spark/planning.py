@@ -275,8 +275,9 @@ class EqDeleteGroup:
 class DeletePlan:
     """The merge-on-read delete plan of one scan, computed once from its
     planned (data, pos, eq) tasks and read schema. Consumers: the Spark
-    join builder (TableScan._apply_deletes — reads, DML, changelog) and
-    the Python DataSource, which ships each task its own deletes."""
+    join builder (TableScan._apply_deletes — reads, DML) and the Python
+    DataSource (batch reads, the changelog), which ships each task its
+    own deletes."""
     data_seq: list[tuple[str, int]]  # (canon data path, data seq)
     pos: list                        # DeleteFileTask
     pos_broadcast: bool

@@ -757,7 +757,11 @@ class IcebergTable:
                 from_snapshot_id: int | None = None,
                 to_snapshot_id: int | None = None) -> DataFrame:
         """Row-level changelog (CDC read) in (from, to]: table columns +
-        _change_type/_commit_snapshot_id/_commit_order. See changelog.py."""
+        _change_type/_commit_snapshot_id/_commit_order, from the one
+        changelog decoder (the DataSource's changelog mode, batch-read;
+        copy-on-write commits included). Raises ValueError when
+        from_snapshot_id is not an ancestor of the head. See
+        changelog.py."""
         from .changelog import changes as _changes
 
         return _changes(self, spark, from_snapshot_id, to_snapshot_id)
@@ -1039,20 +1043,17 @@ class TableScan:
 
     def _apply_deletes(self, spark: SparkSession, df: DataFrame,
                        data: list[FileScanTask], pos: list[DeleteFileTask],
-                       eq: list[DeleteFileTask], how: str = "left_anti",
+                       eq: list[DeleteFileTask],
                        drop_helpers: bool = True,
                        read_schema=None) -> DataFrame:
-        """MoR: join a scan's deletes onto rows read with __file/__pos
-        (read_data_files' with_position; __pos is _metadata.row_index —
-        stable, no per-file sort).
-
-        how="left_anti" keeps the rows NO delete covers (reads, DML
-        working sets, changelog parents); how="left_semi" keeps the rows
-        SOME delete covers (changelog delete events). Sequence gates,
+        """MoR: anti-join a scan's deletes onto rows read with
+        __file/__pos (read_data_files' with_position; __pos is
+        _metadata.row_index — stable, no per-file sort), keeping the
+        rows NO delete covers (reads, DML working sets). Sequence gates,
         equality groups, partition scopes and broadcast decisions all
         come from planning.plan_deletes, shared with the DataSource.
-        drop_helpers=False keeps __file/__pos/__file_c/__data_seq for a
-        follow-up join (changelog, CoW/MoR DML).
+        drop_helpers=False keeps __file/__pos/__file_c/__data_seq for
+        CoW/MoR DML.
         """
         from .planning import (canon_data_path, canon_data_path_col,
                                eq_delete_applies, plan_deletes,
@@ -1103,16 +1104,14 @@ class TableScan:
         # restored backup) would otherwise never match them — deletes
         # silently unapplied (review r3). __file keeps the REAL path:
         # CoW rewrites and new position-delete content need it.
-        if "__data_seq" not in df.columns:
-            _check_canon_collisions(data)
-            df = _attach_seq_map(
-                spark, df.withColumn("__file_c",
-                                     canon_data_path_col(F.col("__file"))),
-                plan.data_seq, "__file_c", "__data_seq")
+        _check_canon_collisions(data)
+        df = _attach_seq_map(
+            spark, df.withColumn("__file_c",
+                                 canon_data_path_col(F.col("__file"))),
+            plan.data_seq, "__file_c", "__data_seq")
 
-        # (delete side, join condition); right-side columns carry
-        # unique __del_/__eq_ names, so conditions bind by name
-        joins: list[tuple[DataFrame, Any]] = []
+        # right-side columns carry unique __del_/__eq_ names, so join
+        # conditions bind by name
         if plan.pos:
             pos_df = with_del_seq(
                 read_deletes(plan.pos)
@@ -1124,9 +1123,9 @@ class TableScan:
                     & (F.col("__pos") == F.col("__del_pos"))
                     & pos_delete_applies(F.col("__data_seq"),
                                          F.col("__del_seq")))
-            joins.append((side(pos_df.select("__del_file", "__del_pos",
-                                             "__del_seq"),
-                               plan.pos_broadcast), cond))
+            df = df.join(side(pos_df.select("__del_file", "__del_pos",
+                                            "__del_seq"),
+                              plan.pos_broadcast), on=cond, how="left_anti")
         for g in plan.eq_groups:
             # the key columns bind like data columns: by field id, or by
             # current then former name (a delete file written before a
@@ -1150,24 +1149,7 @@ class TableScan:
                                             F.col("__del_seq"))
             if g.data_files is not None:
                 cond = cond & F.col("__file_c").isin(sorted(g.data_files))
-            joins.append((side(keys, g.broadcast), cond))
-
-        if how == "left_anti":
-            for side_df, cond in joins:
-                df = df.join(side_df, on=cond, how="left_anti")
-        elif not joins:
-            df = df.limit(0)
-        else:
-            matched = [df.join(side_df, on=cond, how=how)
-                       for side_df, cond in joins]
-            df = matched[0]
-            for m in matched[1:]:
-                df = df.unionByName(m)
-            if len(matched) > 1:
-                # one physical row may match several delete sides
-                # (external writers mix key sets, or pos and eq deletes,
-                # in one commit): it is still ONE delete event
-                df = df.dropDuplicates(["__file_c", "__pos"])
+            df = df.join(side(keys, g.broadcast), on=cond, how="left_anti")
         if drop_helpers:
             return df.drop("__file", "__pos", "__data_seq", "__file_c")
         return df

@@ -235,20 +235,27 @@ class TableMetadata:
         ref = self.refs.get(ref_name)
         return self.snapshot_by_id(ref.snapshot_id) if ref else None
 
+    def ancestors(self, head_id: int | None = None) -> list[Snapshot]:
+        """The parent chain of `head_id` (default: the current main
+        head), newest first, down to the oldest snapshot still in
+        `snapshots` (older ones may have expired)."""
+        if head_id is None:
+            head_id = self.current_snapshot_id
+        by_id = {s.snapshot_id: s for s in self.snapshots}
+        chain = []
+        # pop: each snapshot at most once, even in a malformed cycle
+        while (s := by_id.pop(head_id, None)) is not None:
+            chain.append(s)
+            head_id = s.parent_snapshot_id
+        return chain
+
     def ancestry_ids(self, head_id: int | None = None) -> set:
         """Snapshot ids on the parent chain of `head_id` (default: the
         current main head). Snapshots staged on other branches
         (write-audit-publish) live in `snapshots` but are NOT ancestors —
         incremental/streaming readers must filter to this set or leak
         unpublished commits."""
-        if head_id is None:
-            head_id = self.current_snapshot_id
-        by_id = {s.snapshot_id: s for s in self.snapshots}
-        ids: set = set()
-        while head_id is not None and head_id in by_id and head_id not in ids:
-            ids.add(head_id)
-            head_id = by_id[head_id].parent_snapshot_id
-        return ids
+        return {s.snapshot_id for s in self.ancestors(head_id)}
 
     def snapshot_as_of(self, timestamp_ms: int) -> Snapshot | None:
         """Latest MAIN-ANCESTRY snapshot with commit time <= timestamp_ms

@@ -1,11 +1,19 @@
 """Changelog (CDC read) semantics: insert/delete reconstruction across
-append, MoR delete, upsert, CoW delete, and compaction snapshots."""
+append, MoR delete, upsert, CoW delete, and compaction snapshots, and
+the agreement of its three readers — changes(), the batch
+format("icelake") changelog read and the changelog stream."""
+
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
 from icelake_spark.catalog import StorageCatalog
 from icelake_spark.types import Schema
+
+
+def _schema(spark, ddl):
+    return Schema.from_spark(spark.createDataFrame([], ddl).schema)
 
 
 def _now_plus() -> int:
@@ -185,7 +193,8 @@ def test_changelog_skips_rolled_back_snapshots(spark, warehouse):
 def test_changelog_survives_expired_parent(spark, warehouse):
     """After expire_snapshots removes the oldest history, changes() must
     still work from the retained boundary instead of raising KeyError on
-    the expired parent (review r3)."""
+    the expired parent (review r3), and decode the retained snapshot's
+    delete."""
     from icelake_spark.changelog import changes
     from icelake_spark.maintenance import expire_snapshots
     from icelake_spark.table import IcebergTable
@@ -201,8 +210,11 @@ def test_changelog_survives_expired_parent(spark, warehouse):
     t = IcebergTable.load(t.path)
     assert len(t.metadata.snapshots) == 1
     ch = changes(t, spark)  # must not raise
-    # the delete against expired history is unreconstructable; no crash
-    assert ch.count() >= 0
+    # the retained snapshot's delete is decoded against the files its
+    # carried-forward manifests list, as the stream seeds expired
+    # history (test_changelog_stream_deletes_after_snapshot_expiry)
+    assert sorted((r.id, r.v, r._change_type) for r in ch.collect()) == \
+        [(3, "x", "delete"), (4, "x", "delete")]
 
 
 def test_apply_changes_full_resync_after_expired_sync_point(spark, warehouse):
@@ -663,3 +675,263 @@ def test_changelog_stream_task_batches_share_one_arrow_schema(
     assert len({b.schema for b in batches}) == 1
     assert sorted(arrow_rows(batches)) == [(1, "a", "delete"),
                                            (7, "x", "delete")]
+
+
+def test_changes_incremental_on_v1(spark, warehouse):
+    """Every v1 snapshot has sequence_number 0 — the changelog window
+    must key on ancestry, not sequence, or incremental reads return
+    empty forever."""
+    t = warehouse.create_table("db.v1chg", _schema(spark, "id long, v long"),
+                               format_version=1)
+    t.append(spark.createDataFrame([(1, 10)], "id long, v long"))
+    first = t.current_snapshot().snapshot_id
+    t.append(spark.createDataFrame([(2, 20)], "id long, v long"))
+
+    ch = t.changes(spark, from_snapshot_id=first)
+    rows = [(r.id, r._change_type) for r in ch.collect()]
+    assert rows == [(2, "insert")]
+
+
+def test_changes_emits_delete_for_null_key(spark, warehouse):
+    """An equality delete of a NULL-keyed row must emit its delete
+    event (null-safe key join, matching the read path's eqNullSafe)."""
+    from icelake_spark.delta import merge_delta, OP_DELETE
+
+    t = warehouse.create_table("db.nullkey", _schema(spark, "k string, v long"))
+    t.append(spark.createDataFrame([("a", 1), (None, 2)], "k string, v long"))
+    base = t.current_snapshot().snapshot_id
+    merge_delta(t, spark.createDataFrame([(None, 0, OP_DELETE)],
+                                         "k string, v long, _op int"),
+                key_cols=["k"])
+    t.refresh()
+    # read path removes the row…
+    assert [(r.k, r.v) for r in t.to_df(spark).collect()] == [("a", 1)]
+    # …and the changelog reports its deletion
+    ch = t.changes(spark, from_snapshot_id=base)
+    dels = [(r.k, r.v) for r in ch.where("_change_type = 'delete'").collect()]
+    assert dels == [(None, 2)]
+
+
+def test_changes_eq_delete_against_empty_parent(spark, warehouse):
+    """Upsert after a full CoW delete: the parent snapshot has zero
+    data files, and the eq-delete changelog branch must not crash."""
+    from icelake_spark.delta import delete_rows, upsert
+
+    t = warehouse.create_table("db.emptyparent",
+                               _schema(spark, "id long, v long"))
+    t.append(spark.createDataFrame([(1, 10)], "id long, v long"))
+    t.metadata.properties["write.delete.mode"] = "copy-on-write"
+    delete_rows(t, spark, "id >= 0")  # CoW: snapshot with 0 data files
+    t.refresh()
+    upsert(t, spark.createDataFrame([(2, 20)], "id long, v long"),
+           key_cols=["id"])
+    t.refresh()
+    ch = t.changes(spark)  # used to raise IndexError
+    assert ch.where("_change_type = 'insert'").count() >= 2
+
+
+def test_first_sync_truncated_history_full_resyncs(spark, warehouse):
+    """apply_changes with NO recorded sync point against a source whose
+    oldest retained snapshot has an EXPIRED parent must full-resync:
+    the changelog can only replay the retained chain's adds, so live
+    rows written by expired snapshots would otherwise be missing from
+    the replica forever (review r12)."""
+    from icelake_spark.changelog import apply_changes
+    from icelake_spark.maintenance import expire_snapshots
+
+    src = warehouse.create_table("db.trunc_src",
+                                 _schema(spark, "id long, v string"))
+    src.append(spark.createDataFrame([(1, "a"), (2, "b")],
+                                     "id long, v string"))
+    src = src.refresh()
+    first = src.current_snapshot().snapshot_id
+    src.append(spark.createDataFrame([(3, "c")], "id long, v string"))
+    src = src.refresh()
+    # expire the first snapshot; its FILES stay live via the head
+    expire_snapshots(src, older_than_ms=int(time.time() * 1000) + 1000,
+                     retain_last=1)
+    src = src.refresh()
+    assert first not in {s.snapshot_id for s in src.metadata.snapshots}
+    assert sorted(r.id for r in src.to_df(spark).collect()) == [1, 2, 3]
+
+    tgt = warehouse.create_table("db.trunc_tgt",
+                                 _schema(spark, "id long, v string"))
+    n = apply_changes(src, tgt, spark, key_cols=["id"])
+    tgt = tgt.refresh()
+    got = sorted((r.id, r.v) for r in tgt.to_df(spark).collect())
+    assert got == [(1, "a"), (2, "b"), (3, "c")], got
+    assert n == 3
+
+
+def test_changes_rejects_non_ancestor_from_snapshot(spark, warehouse):
+    """changes() with a from_snapshot_id that is expired or on another
+    branch raises instead of silently replaying the full retained
+    history as if new (review r12)."""
+    from icelake_spark.maintenance import expire_snapshots
+
+    t = warehouse.create_table("db.badfrom",
+                               _schema(spark, "id long"))
+    t.append(spark.createDataFrame([(1,)], "id long"))
+    t = t.refresh()
+    gone = t.current_snapshot().snapshot_id
+    t.append(spark.createDataFrame([(2,)], "id long"))
+    t = t.refresh()
+    expire_snapshots(t, older_than_ms=int(time.time() * 1000) + 1000,
+                     retain_last=1)
+    t = t.refresh()
+    with pytest.raises(ValueError, match="not an ancestor"):
+        t.changes(spark, from_snapshot_id=gone)
+    # a WAP branch snapshot is known but not a main ancestor either
+    t.append(spark.createDataFrame([(9,)], "id long"), branch="wap")
+    t = t.refresh()
+    staged = t.metadata.refs["wap"].snapshot_id
+    with pytest.raises(ValueError, match="not an ancestor"):
+        t.changes(spark, from_snapshot_id=staged)
+
+
+def _read_changelog(spark, t, **options):
+    """A batch changelog read of table `t` through format("icelake")."""
+    from icelake_spark import datasource
+
+    datasource.register(spark)
+    read = (spark.read.format("icelake").option("path", t.path)
+            .option("changelog", "true"))
+    for k, v in options.items():
+        read = read.option(k, str(v))
+    return read.load()
+
+
+def test_batch_changelog_read_equals_changes(spark, warehouse):
+    """A batch format("icelake") read with changelog=true is the
+    changelog: the rows of changes() with its three columns, over the
+    whole history and over a (start, end] snapshot window — not the
+    plain rows under a NULL _change_type."""
+    t = warehouse.create_table("db.chbatch",
+                               _schema(spark, "id long, v string"))
+    t.append(spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string"))
+    first = t.current_snapshot().snapshot_id
+    t.delete_where(spark, "id = 1")
+    second = t.current_snapshot().snapshot_id
+    t.append(spark.createDataFrame([(3, "c")], "id long, v string"))
+    t = t.refresh()
+
+    ds = _read_changelog(spark, t)
+    assert ds.dtypes == t.changes(spark).dtypes == [
+        ("id", "bigint"), ("v", "string"), ("_change_type", "string"),
+        ("_commit_snapshot_id", "bigint"), ("_commit_order", "int")]
+    assert sorted(map(tuple, ds.collect())) == \
+        sorted(map(tuple, t.changes(spark).collect())) == [
+            (1, "a", "delete", second, 1), (1, "a", "insert", first, 0),
+            (2, "b", "insert", first, 0),
+            (3, "c", "insert", t.current_snapshot().snapshot_id, 2)]
+    window = _read_changelog(spark, t, start_snapshot_id=first,
+                             end_snapshot_id=second)
+    assert sorted(map(tuple, window.collect())) == sorted(map(
+        tuple, t.changes(spark, from_snapshot_id=first,
+                         to_snapshot_id=second).collect())) == [
+        (1, "a", "delete", second, 0)]
+
+
+def test_reused_changelog_frame_ignores_pushed_filters(spark, warehouse):
+    """Spark caches a Python DataSource's plan when it pushes filters
+    and reuses it for a later query of the same loaded frame. The
+    changelog plan never depends on pushed filters, so one loaded frame
+    answers a filtered and then an unfiltered query correctly."""
+    t = warehouse.create_table("db.chreuse",
+                               _schema(spark, "id long, v string"))
+    t.append(spark.createDataFrame([(i, f"v{i}") for i in range(4)],
+                                   "id long, v string"))
+    t.delete_where(spark, "id >= 2")
+    t = t.refresh()
+    for frame in (_read_changelog(spark, t), t.changes(spark)):
+        dels = sorted((r.id, r.v) for r in
+                      frame.where("_change_type = 'delete'").collect())
+        assert dels == [(2, "v2"), (3, "v3")]
+        assert sorted((r.id, r._change_type) for r in frame.collect()) == \
+            sorted([(i, "insert") for i in range(4)]
+                   + [(2, "delete"), (3, "delete")])
+        assert sorted(r.id for r in frame.where("id < 1").collect()) == [0]
+        assert frame.count() == 6
+
+
+def test_changelog_readers_agree_across_history(spark, warehouse,
+                                                arrow_rows):
+    """changes() (the whole history and a from_snapshot_id window), the
+    batch format("icelake") changelog read and the changelog stream
+    reader decode one history to the same events: append, CoW delete,
+    CoW update, MoR delete, upsert, compaction, rename, an upsert over
+    the compacted files, DROP + ADD COLUMN c, append. The stream once
+    dropped every copy-on-write commit and, after a compaction, emitted
+    a second delete event from the compacted-away file."""
+    from icelake_spark.datasource import (IcelakeDataSource,
+                                          IcelakePartitionStreamReader,
+                                          _stream_end_offset,
+                                          _stream_offset_of)
+    from icelake_spark.maintenance import rewrite_data_files
+
+    ddl = "id long, v string, c long"
+    t = warehouse.create_table(
+        "db.chparity", _schema(spark, ddl),
+        properties={"write.delete.mode": "copy-on-write",
+                    "write.update.mode": "copy-on-write"})
+    t.append(spark.createDataFrame([(i, f"v{i}", i) for i in range(10)],
+                                   ddl).coalesce(1))           # S0
+    t.delete_where(spark, "id < 3")                            # S1 CoW
+    t.update_where(spark, "id >= 3", {"v": "upper(v)"})        # S2 CoW
+    t.set_properties({"write.delete.mode": "merge-on-read"})
+    t.delete_where(spark, "id = 7")                            # S3 MoR
+    t.upsert(spark.createDataFrame([(8, "N8", 8), (20, "v20", 20)], ddl),
+             key_cols=["id"])                                  # S4
+    rewrite_data_files(t.refresh(), spark)                     # S5 replace
+    t = t.refresh()
+    t.rename_column("v", "name")
+    t.upsert(spark.createDataFrame([(9, "N9", 9)], "id long, name string, "
+                                   "c long"), key_cols=["id"])  # S6
+    t = t.refresh()
+    t.drop_column("c")
+    t.add_column("c", "long")
+    t.append(spark.createDataFrame([(30, "v30", 300)],
+                                   "id long, name string, c long"))  # S7
+    t = t.refresh()
+    snaps = sorted(t.metadata.snapshots, key=lambda s: s.sequence_number)
+    assert [(s.summary or {}).get("operation") for s in snaps] == [
+        "append", "overwrite", "overwrite", "delete", "overwrite",
+        "replace", "overwrite", "append"]
+    sid = [s.snapshot_id for s in snaps]
+
+    # rows under the final schema: c was re-added, so only S7 reads one
+    def ev(rows, kind, s):
+        return [(i, v, None, kind, sid[s]) for i, v in rows]
+    want = (ev([(i, f"v{i}") for i in range(10)], "insert", 0)
+            + ev([(i, f"v{i}") for i in range(10)], "delete", 1)
+            + ev([(i, f"v{i}") for i in range(3, 10)], "insert", 1)
+            + ev([(i, f"v{i}") for i in range(3, 10)], "delete", 2)
+            + ev([(i, f"V{i}") for i in range(3, 10)], "insert", 2)
+            + ev([(7, "V7")], "delete", 3)
+            + ev([(8, "V8")], "delete", 4)
+            + ev([(8, "N8"), (20, "v20")], "insert", 4)
+            + ev([(9, "V9")], "delete", 6)
+            + ev([(9, "N9")], "insert", 6)
+            + [(30, "v30", 300, "insert", sid[7])])
+
+    def events(rows):
+        return sorted(tuple(r)[:5] for r in rows)
+
+    schema = IcelakeDataSource({"path": t.path, "changelog": "true"}).schema()
+    for start, expected in ((None, want),
+                            (sid[3], [w for w in want
+                                      if w[4] in sid[4:]])):
+        kwargs = {} if start is None else {"from_snapshot_id": start}
+        options = {} if start is None else {"start_snapshot_id": start}
+        stream = IcelakePartitionStreamReader(
+            {"path": t.path, "changelog": "true"}, schema)
+        offset = 0 if start is None else _stream_offset_of(
+            t, t.metadata.snapshot_by_id(start))
+        streamed = [r for p in stream.partitions(
+                        {"seq": offset}, {"seq": _stream_end_offset(t)})
+                    for r in arrow_rows(stream.read(p))]
+        expected = sorted(expected)
+        assert events(t.changes(spark, **kwargs).collect()) == expected
+        assert events(streamed) == expected
+        assert events(_read_changelog(spark, t, **options).collect()) \
+            == expected

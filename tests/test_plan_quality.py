@@ -177,18 +177,6 @@ def test_session3_operators_plan_properties(spark):
     assert "Join" not in pr and "Generate" not in pr
 
 
-def test_changelog_plan_broadcasts_delete_sides(spark, warehouse):
-    src = spark.range(2000).selectExpr("id", "cast(id as string) v")
-    t = warehouse.create_table("db.clp", Schema.from_spark(src.schema))
-    t.append(src)
-    t.delete_where(spark, "id < 100")
-    ch = t.changes(spark)
-    plan = _plan(ch)
-    # delete reconstruction joins build on the small delete side
-    assert "BroadcastHashJoin" in plan
-    assert "EvalPython" not in plan
-
-
 def test_or_and_in_filters_prune_correctly(spark, warehouse):
     """OR filters prune per-branch (review r2 found a parser that fed
     \'x\' OR id = 2 as one literal and DROPPED matching files; the DNF

@@ -1,10 +1,7 @@
 """Regression tests for the round-3 read-path review findings:
-partition-aware streaming sink, v1 incremental changelog, null-safe
-equality-delete change events, empty-parent eq changelog, and the
-batch changelog=true guard."""
-
-import pytest
-from pyspark.sql import functions as F
+partition-aware streaming sink, equality-delete keys across a rename,
+promoted types in streams, and NaN/NULL keys on every read path (the
+changelog's own findings live in test_changelog.py)."""
 
 from icelake_spark.types import Schema
 
@@ -40,73 +37,6 @@ def test_stream_sink_writes_partition_tuples(spark, warehouse):
                  t.new_scan(partition_filter={"region": "eu"})
                  .to_df(spark).collect())
     assert got == [1, 3]
-
-
-def test_changes_incremental_on_v1(spark, warehouse):
-    """Every v1 snapshot has sequence_number 0 — the changelog window
-    must key on ancestry, not sequence, or incremental reads return
-    empty forever."""
-    t = warehouse.create_table("db.v1chg", _schema(spark, "id long, v long"),
-                               format_version=1)
-    t.append(spark.createDataFrame([(1, 10)], "id long, v long"))
-    first = t.current_snapshot().snapshot_id
-    t.append(spark.createDataFrame([(2, 20)], "id long, v long"))
-
-    ch = t.changes(spark, from_snapshot_id=first)
-    rows = [(r.id, r._change_type) for r in ch.collect()]
-    assert rows == [(2, "insert")]
-
-
-def test_changes_emits_delete_for_null_key(spark, warehouse):
-    """An equality delete of a NULL-keyed row must emit its delete
-    event (null-safe key join, matching the read path's eqNullSafe)."""
-    from icelake_spark.delta import merge_delta, OP_DELETE
-
-    t = warehouse.create_table("db.nullkey", _schema(spark, "k string, v long"))
-    t.append(spark.createDataFrame([("a", 1), (None, 2)], "k string, v long"))
-    base = t.current_snapshot().snapshot_id
-    merge_delta(t, spark.createDataFrame([(None, 0, OP_DELETE)],
-                                         "k string, v long, _op int"),
-                key_cols=["k"])
-    t.refresh()
-    # read path removes the row…
-    assert [(r.k, r.v) for r in t.to_df(spark).collect()] == [("a", 1)]
-    # …and the changelog reports its deletion
-    ch = t.changes(spark, from_snapshot_id=base)
-    dels = [(r.k, r.v) for r in ch.where("_change_type = 'delete'").collect()]
-    assert dels == [(None, 2)]
-
-
-def test_changes_eq_delete_against_empty_parent(spark, warehouse):
-    """Upsert after a full CoW delete: the parent snapshot has zero
-    data files, and the eq-delete changelog branch must not crash."""
-    from icelake_spark.delta import delete_rows, upsert
-
-    t = warehouse.create_table("db.emptyparent",
-                               _schema(spark, "id long, v long"))
-    t.append(spark.createDataFrame([(1, 10)], "id long, v long"))
-    t.metadata.properties["write.delete.mode"] = "copy-on-write"
-    delete_rows(t, spark, "id >= 0")  # CoW: snapshot with 0 data files
-    t.refresh()
-    upsert(t, spark.createDataFrame([(2, 20)], "id long, v long"),
-           key_cols=["id"])
-    t.refresh()
-    ch = t.changes(spark)  # used to raise IndexError
-    assert ch.where("_change_type = 'insert'").count() >= 2
-
-
-def test_batch_read_rejects_changelog_option(spark, warehouse):
-    from py4j.protocol import Py4JJavaError
-    from pyspark.errors.exceptions.captured import AnalysisException
-
-    from icelake_spark import datasource
-
-    t = warehouse.create_table("db.chopt", _schema(spark, "id long"))
-    t.append(spark.createDataFrame([(1,)], "id long"))
-    datasource.register(spark)
-    with pytest.raises(Exception, match="changelog"):
-        (spark.read.format("icelake").option("path", t.path)
-         .option("changelog", "true").load().collect())
 
 
 def test_eq_delete_keys_survive_rename(spark, warehouse):
@@ -174,7 +104,7 @@ def test_read_paths_agree_on_nan_and_null_keys(spark, warehouse, arrow_rows):
     DataSource, changes() and the changelog stream all agree. The
     DataSource and the stream decoder once matched keys by Python
     tuple-in-set, where NaN != NaN, and kept an upserted NaN row's
-    stale version alive."""
+    stale version alive. The batch changelog read is one more reader."""
     from pyspark.sql import types as T
 
     from icelake_spark import datasource
@@ -214,6 +144,10 @@ def test_read_paths_agree_on_nan_and_null_keys(spark, warehouse, arrow_rows):
         batch_changes = [tuple(r)[:ncols + 1]
                          for r in t.changes(spark).collect()]
         assert norm(batch_changes) == norm(events), ddl
+        ds_changes = [tuple(r)[:ncols + 1] for r in (
+            spark.read.format("icelake").option("path", t.path)
+            .option("changelog", "true").load().collect())]
+        assert norm(ds_changes) == norm(events), ddl
         schema = T.StructType(
             list(t.schema().to_spark().fields)
             + [T.StructField("_change_type", T.StringType())])

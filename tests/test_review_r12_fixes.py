@@ -1,14 +1,9 @@
 """Regression tests for the round-12 module sweep (changelog.py,
 ops/skew.py, ops/multimodal.py, ops/graph.py, murmur3.py — the two
-hash/graph modules survived clean): first-sync replication against a
-truncated source history, changes() with a non-ancestor start,
-duplicate delete events across equality-id groups, the changelog's
+hash/graph modules survived clean): duplicate delete events across equality-id groups, the changelog's
 int-vs-long commit-snapshot-id schema, phantom frames for
 zero-duration videos, and the retry-nondeterministic join salt."""
 
-import time
-
-import pytest
 from pyspark.sql import functions as F
 
 from icelake_spark.types import Schema
@@ -16,65 +11,6 @@ from icelake_spark.types import Schema
 
 def _schema(spark, ddl):
     return Schema.from_spark(spark.createDataFrame([], ddl).schema)
-
-
-def test_first_sync_truncated_history_full_resyncs(spark, warehouse):
-    """apply_changes with NO recorded sync point against a source whose
-    oldest retained snapshot has an EXPIRED parent must full-resync:
-    the changelog can only replay the retained chain's adds, so live
-    rows written by expired snapshots would otherwise be missing from
-    the replica forever (review r12)."""
-    from icelake_spark.changelog import apply_changes
-    from icelake_spark.maintenance import expire_snapshots
-
-    src = warehouse.create_table("db.trunc_src",
-                                 _schema(spark, "id long, v string"))
-    src.append(spark.createDataFrame([(1, "a"), (2, "b")],
-                                     "id long, v string"))
-    src = src.refresh()
-    first = src.current_snapshot().snapshot_id
-    src.append(spark.createDataFrame([(3, "c")], "id long, v string"))
-    src = src.refresh()
-    # expire the first snapshot; its FILES stay live via the head
-    expire_snapshots(src, older_than_ms=int(time.time() * 1000) + 1000,
-                     retain_last=1)
-    src = src.refresh()
-    assert first not in {s.snapshot_id for s in src.metadata.snapshots}
-    assert sorted(r.id for r in src.to_df(spark).collect()) == [1, 2, 3]
-
-    tgt = warehouse.create_table("db.trunc_tgt",
-                                 _schema(spark, "id long, v string"))
-    n = apply_changes(src, tgt, spark, key_cols=["id"])
-    tgt = tgt.refresh()
-    got = sorted((r.id, r.v) for r in tgt.to_df(spark).collect())
-    assert got == [(1, "a"), (2, "b"), (3, "c")], got
-    assert n == 3
-
-
-def test_changes_rejects_non_ancestor_from_snapshot(spark, warehouse):
-    """changes() with a from_snapshot_id that is expired or on another
-    branch raises instead of silently replaying the full retained
-    history as if new (review r12)."""
-    from icelake_spark.maintenance import expire_snapshots
-
-    t = warehouse.create_table("db.badfrom",
-                               _schema(spark, "id long"))
-    t.append(spark.createDataFrame([(1,)], "id long"))
-    t = t.refresh()
-    gone = t.current_snapshot().snapshot_id
-    t.append(spark.createDataFrame([(2,)], "id long"))
-    t = t.refresh()
-    expire_snapshots(t, older_than_ms=int(time.time() * 1000) + 1000,
-                     retain_last=1)
-    t = t.refresh()
-    with pytest.raises(ValueError, match="not an ancestor"):
-        t.changes(spark, from_snapshot_id=gone)
-    # a WAP branch snapshot is known but not a main ancestor either
-    t.append(spark.createDataFrame([(9,)], "id long"), branch="wap")
-    t = t.refresh()
-    staged = t.metadata.refs["wap"].snapshot_id
-    with pytest.raises(ValueError, match="not an ancestor"):
-        t.changes(spark, from_snapshot_id=staged)
 
 
 def test_eq_delete_multi_key_groups_emit_one_event(spark, warehouse):
