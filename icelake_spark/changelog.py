@@ -99,8 +99,9 @@ def changes(table: IcebergTable, spark: SparkSession,
     A batch read of the DataSource's changelog mode."""
     from . import datasource
 
-    if to_snapshot_id is None and table.current_snapshot() is not None:
-        to_snapshot_id = table.current_snapshot().snapshot_id
+    head = table.current_snapshot()
+    if to_snapshot_id is None and head is not None:
+        to_snapshot_id = head.snapshot_id
     snapshot_window(table, from_snapshot_id, to_snapshot_id)  # fail early
     datasource.register(spark)
     read = (spark.read.format("icelake").option("path", table.path)
