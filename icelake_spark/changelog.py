@@ -6,11 +6,13 @@ no read-side changelog; engines are expected to reconstruct
 changes from the files each snapshot added/removed. This module is that
 read side. It has one decoder, the DataSource's changelog mode
 (datasource.py): `_plan_changelog_tasks` walks the window's ancestry
-chain once on the driver, reading each manifest once, and each
-snapshot becomes one task that an executor decodes with the batch
-reader's Arrow dead-row mask. `changes()` is the batch read of that
-mode; `spark.readStream.format("icelake").option("changelog", "true")`
-streams it.
+chain once on the driver, from the window's base snapshot, reading
+each manifest at most once, and each snapshot becomes one task that an
+executor decodes with the batch reader's Arrow dead-row mask
+(`_TableFileReader._changes`). `changes()` plans from the table
+object's own metadata and decodes with that reader;
+`spark.read.format("icelake").option("changelog", "true")` reads the
+same events, and `spark.readStream` with that option streams them.
 
 Semantics (matching Iceberg's changelog-table behavior):
 - append snapshot        → its added data files' rows as `insert`
@@ -31,7 +33,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .datasource import CHANGE_TYPE, COMMIT_ORDER, COMMIT_SNAPSHOT  # noqa: F401
+from .datasource import (CHANGE_TYPE, COMMIT_ORDER,  # noqa: F401
+                         COMMIT_SNAPSHOT, _plan_changelog_tasks,
+                         _source_schema, _TableFileReader)
 from .table import DeleteFileTask, FileScanTask, IcebergTable
 from .types.manifest import (MANIFEST_CONTENT_DELETES, STATUS_ADDED,
                              read_manifest, read_manifest_list)
@@ -61,8 +65,10 @@ def snapshot_window(table: IcebergTable, from_snapshot_id: int | None = None,
                     to_snapshot_id: int | None = None) -> tuple[list, set]:
     """(chain, window) of the changelog window (from, to]: the ancestry
     chain of `to_snapshot_id` (default: the current head), oldest
-    first, and the ids of its snapshots after `from_snapshot_id` (None:
-    all of them).
+    first, starting at `from_snapshot_id` (None: at the oldest retained
+    snapshot), and the ids of its snapshots after `from_snapshot_id`
+    (None: all of them). The planner seeds its state from the chain's
+    first snapshot, so the snapshots before the window are never read.
 
     The window is the head's ANCESTRY CHAIN, not a sequence-number
     range: every v1 snapshot carries sequence 0, and branch-staged WAP
@@ -85,7 +91,8 @@ def snapshot_window(table: IcebergTable, from_snapshot_id: int | None = None,
             f"from_snapshot_id {from_snapshot_id} is not an ancestor "
             f"of the changelog head {head} (expired or on another "
             f"branch); the incremental window is unreconstructable")
-    return chain, set(ids[ids.index(from_snapshot_id) + 1:])
+    start = ids.index(from_snapshot_id)
+    return chain[start:], set(ids[start + 1:])
 
 
 def changes(table: IcebergTable, spark: SparkSession,
@@ -96,21 +103,26 @@ def changes(table: IcebergTable, spark: SparkSession,
     _commit_snapshot_id + _commit_order (the commit's rank in the
     window). from_snapshot_id=None starts before the first retained
     snapshot; to_snapshot_id=None is this table object's current head.
-    A batch read of the DataSource's changelog mode."""
-    from . import datasource
 
-    head = table.current_snapshot()
-    if to_snapshot_id is None and head is not None:
-        to_snapshot_id = head.snapshot_id
-    snapshot_window(table, from_snapshot_id, to_snapshot_id)  # fail early
-    datasource.register(spark)
-    read = (spark.read.format("icelake").option("path", table.path)
-            .option("changelog", "true"))
-    for option, sid in (("start_snapshot_id", from_snapshot_id),
-                        ("end_snapshot_id", to_snapshot_id)):
-        if sid is not None:
-            read = read.option(option, str(sid))
-    return read.load()
+    Planned here, on the driver, from this table object's metadata (a
+    catalog-managed table has no metadata files to load by path), by
+    the DataSource's changelog planner; one Spark task per snapshot
+    decodes its events with the DataSource's reader."""
+    options = {"changelog": "true"}
+    schema = _source_schema(table, options)
+    reader = _TableFileReader()
+    reader._bind(table, options, schema)
+    tasks = _plan_changelog_tasks(
+        table, *snapshot_window(table, from_snapshot_id, to_snapshot_id),
+        reader._src)
+
+    def decode(batches):
+        for b in batches:
+            for i in b.column(0).to_pylist():
+                yield from reader.read(tasks[i])
+
+    return spark.range(0, len(tasks), 1, max(len(tasks), 1)).mapInArrow(
+        decode, schema)
 
 
 # ------------------------------------------------------- CDC replication

@@ -28,9 +28,11 @@ table's row-level changes (changelog.py), one task per snapshot.
 _plan_changelog_tasks walks the window's ancestry chain once and gives
 each file task its deletes from the same DeletePlan; _changes masks
 them with the batch reader's Arrow code (_TableFileReader._dead_mask).
-Rows carry _change_type, _commit_snapshot_id and _commit_order. A
-batch read's window is (start_snapshot_id, end_snapshot_id]; that is
-what IcebergTable.changes reads.
+Rows carry _change_type, _commit_snapshot_id and _commit_order, the
+commit's rank in the planned window (in a stream: within its
+micro-batch). A batch read's window is (start_snapshot_id,
+end_snapshot_id]. IcebergTable.changes runs the same planner and
+decoder, planned on the driver from the table object's metadata.
 
 Streams: `spark.readStream.format("icelake")` is the partition-based
 IcelakePartitionStreamReader — appended files, packed like the batch
@@ -186,23 +188,11 @@ class IcelakeDataSource(DataSource):
         return "icelake"
 
     def schema(self):
-        from pyspark.sql.types import (IntegerType, LongType, StringType,
-                                       StructField, StructType)
-
         from .table import IcebergTable
 
         self._install_io_registry()
-        t = IcebergTable.load(self.options["path"])
-        # sources report plain nullable fields: Spark normalizes scan
-        # output to nullable, and the streaming runner asserts the Arrow
-        # batches it prefetches round-trip to EXACTLY this schema — field
-        # metadata (our Iceberg column ids) would not survive Arrow
-        fields = [StructField(f.name, f.dataType, True)
-                  for f in _read_schema(t, self.options).to_spark().fields]
-        if _is_changelog(self.options):
-            fields += [StructField(n, t(), True) for n, t in zip(
-                _CHANGE_COLUMNS, (StringType, LongType, IntegerType))]
-        return StructType(fields)
+        return _source_schema(IcebergTable.load(self.options["path"]),
+                              self.options)
 
     def reader(self, schema) -> "IcelakeReader":
         self._install_io_registry()
@@ -219,6 +209,24 @@ class IcelakeDataSource(DataSource):
     def streamWriter(self, schema, overwrite: bool) -> "IcelakeStreamWriter":  # noqa: N802
         self._install_io_registry()
         return IcelakeStreamWriter(self.options, schema)
+
+
+def _source_schema(table, options: dict):
+    """The Spark schema a read of `table` under `options` produces: the
+    read schema's columns, plus the change columns in changelog mode.
+    Sources report plain nullable fields: Spark normalizes scan output
+    to nullable, and the streaming runner asserts the Arrow batches it
+    prefetches round-trip to EXACTLY this schema — field metadata (our
+    Iceberg column ids) would not survive Arrow."""
+    from pyspark.sql.types import (IntegerType, LongType, StringType,
+                                   StructField, StructType)
+
+    fields = [StructField(f.name, f.dataType, True)
+              for f in _read_schema(table, options).to_spark().fields]
+    if _is_changelog(options):
+        fields += [StructField(n, t(), True) for n, t in zip(
+            _CHANGE_COLUMNS, (StringType, LongType, IntegerType))]
+    return StructType(fields)
 
 
 def _read_avro_arrow(spark_schema, file_path: str, table_path: str,
@@ -376,13 +384,12 @@ class _TableFileReader:
     the merge-on-read dead-row mask and the projection to the declared
     schema."""
 
-    def _bind(self, options: dict, spark_schema) -> None:
+    def _bind(self, t, options: dict, spark_schema) -> None:
+        """Bind to table `t` as `options` read it."""
         from .fileio import is_uri, resolve_io
-        from .table import IcebergTable
 
-        self.path = path = options["path"]
+        self.path = path = t.path
         self.spark_schema = spark_schema
-        t = IcebergTable.load(path)
         self.table_schema = schema = _read_schema(t, options)
         self.binding = name_binding(t.metadata, schema)
         self.field_ids = {f.name: f.field_id for f in schema.fields}
@@ -567,9 +574,11 @@ class _TableFileReader:
 
 class IcelakeReader(_TableFileReader, DataSourceReader):
     def __init__(self, options: dict, schema):
+        from .table import IcebergTable
+
         self.options = options
         self.prune = None  # pruning expression of the pushed filters
-        self._bind(options, schema)
+        self._bind(IcebergTable.load(options["path"]), options, schema)
 
     def pushFilters(self, filters):  # noqa: N802 (API name)
         """Turn the filters Spark pushes into the scan's pruning
@@ -872,27 +881,38 @@ def _stream_files_range(table, s1: int, k1: int, s2: int, k2: int,
 
 
 def _stream_window(table, start_off: int, end_off: int) -> tuple[list, set]:
-    """(chain, window) of a changelog micro-batch: the main ancestry,
-    oldest first, up to stream offset `end_off`, and the ids of its
-    snapshots past `start_off` (changelog.snapshot_window's shape)."""
+    """(chain, window) of a changelog micro-batch: the main ancestry up
+    to stream offset `end_off`, oldest first, from the window's base
+    (the last snapshot before the first one past `start_off`), and the
+    ids of its snapshots past `start_off` (changelog.snapshot_window's
+    shape)."""
     chain = [s for s in table.metadata.ancestors()[::-1]
              if _stream_offset_of(table, s) <= end_off]
+    first = next((i for i, s in enumerate(chain)
+                  if _stream_offset_of(table, s) > start_off), len(chain))
+    chain = chain[max(first - 1, 0):]
     return chain, {s.snapshot_id for s in chain
                    if _stream_offset_of(table, s) > start_off}
 
 
 def _plan_changelog_tasks(table, chain: list, window: set, src) -> list:
     """Driver-side changelog planning with STRICTLY LINEAR manifest
-    I/O: one walk over `chain` (an ancestry chain, oldest first) reads
-    each manifest list once, and each manifest the first time a
-    snapshot lists it; a manifest the previous snapshot listed is
-    carried forward unchanged. The walk keeps the alive data files
-    (alive(s) = alive(parent) + added − dropped, where a dropped file
-    is one listed only by manifests s no longer lists — spec writers
-    also mark it DELETED there) and the delete files of every walked
-    snapshot. The first snapshot seeds both from its FULL manifest
-    list: files and deletes committed by since-expired snapshots live
-    on only in its carried-forward manifests.
+    I/O: one walk over `chain` (an ancestry chain, oldest first: the
+    window, after its base snapshot when it has one) reads each
+    manifest list once, and each manifest at most once; a manifest the
+    previous snapshot listed is carried forward unchanged. The walk
+    keeps the alive data files (alive(s) = alive(parent) + added −
+    dropped, where a dropped file is one listed only by manifests s no
+    longer lists — spec writers also mark it DELETED there) and the
+    delete files of every walked snapshot.
+
+    The first snapshot's manifests hold what was alive before the
+    window: files and deletes of earlier (perhaps expired) snapshots,
+    and of the first snapshot itself when it is the window's base. They
+    are read only when a window snapshot needs them: when it adds
+    deletes (its older alive files) or drops a manifest (the deletes
+    its dropped files had). So an append-only window reads only its own
+    snapshots' manifests, however long the history before it.
 
     Every non-replace snapshot of `window` becomes one
     _ChangeSnapshotTask, ranked in walk order, of _FileTasks whose
@@ -905,11 +925,49 @@ def _plan_changelog_tasks(table, chain: list, window: set, src) -> list:
 
     out = []
     schema, md = table.schema(), table.metadata
-    prior_pos: list = []   # DeleteFileTasks of every earlier walked
-    prior_eq: list = []    # snapshot, in or before the window
+    # delete files of every earlier walked snapshot, in or before the
+    # window, by path
+    prior_pos: dict[str, DeleteFileTask] = {}
+    prior_eq: dict[str, DeleteFileTask] = {}
     alive: dict[str, FileScanTask] = {}  # canon path → alive data file
-    listed: dict[str, set] = {}  # manifest path → canon paths it lists
+    # manifest path → canon paths it lists, or its ManifestListEntry
+    # while it is unread (one the first snapshot carried in)
+    listed: dict = {}
     positions: dict = {}   # position-delete file → its resolved rows
+
+    def take(mle, own: bool, added: list, added_pos: list,
+             added_eq: list) -> set:
+        """Read one manifest: entries its own snapshot added go to the
+        added lists, the rest to `alive` and the prior deletes. Returns
+        the canon paths of the data files it lists."""
+        files = set()
+        _, entries = read_manifest(table._resolve(mle.manifest_path), mle)
+        for e in entries:
+            if not e.is_alive:
+                continue
+            df, seq = e.data_file, e.sequence_number
+            df.file_path = table._resolve(df.file_path)
+            new = own and e.status == STATUS_ADDED
+            if df.content == 0:
+                task = FileScanTask(df, seq, mle.partition_spec_id)
+                c = canon_data_path(df.file_path)
+                files.add(c)
+                if new:
+                    added.append(task)
+                else:
+                    alive[c] = task
+            elif new:
+                (added_pos if df.content == 1 else added_eq).append(
+                    DeleteFileTask(df, seq))
+            else:
+                (prior_pos if df.content == 1 else prior_eq)[
+                    df.file_path] = DeleteFileTask(df, seq)
+        return files
+
+    def seed(manifests: dict) -> None:
+        for path, files in manifests.items():
+            if not isinstance(files, set):
+                manifests[path] = take(files, False, [], [], [])
 
     def file_tasks(files: list, pos: list, eq: list) -> list[_FileTask]:
         plan = plan_deletes(files, pos, eq, schema, md)
@@ -927,13 +985,14 @@ def _plan_changelog_tasks(table, chain: list, window: set, src) -> list:
         touched = [(d, ft) for d, ft in zip(older, tasks[len(added):])
                    if ft.has_deletes]
         gone = [d for d, _ in touched] + dropped
-        prior = file_tasks(gone, prior_pos, prior_eq) if gone else []
+        prior = file_tasks(gone, list(prior_pos.values()),
+                           list(prior_eq.values())) if gone else []
         return _ChangeSnapshotTask(
             snap.snapshot_id, len(out), tuple(tasks[:len(added)]),
             tuple(zip(prior, [ft for _, ft in touched]
                       + [None] * len(dropped))))
 
-    for snap in chain:
+    for i, snap in enumerate(chain):
         added, added_pos, added_eq = [], [], []
         before, listed, relisted = listed, {}, set()
         for mle in read_manifest_list(table._resolve(snap.manifest_list)):
@@ -941,45 +1000,33 @@ def _plan_changelog_tasks(table, chain: list, window: set, src) -> list:
             if path in before:  # carried forward unchanged
                 listed[path] = before.pop(path)
                 continue
-            # a manifest the snapshot did not write (only the first
-            # snapshot's carried-forward ones) lists what was alive
-            # before it
             own = mle.added_snapshot_id == snap.snapshot_id
-            files = listed[path] = set()
-            _, entries = read_manifest(table._resolve(path), mle)
-            for e in entries:
-                if not e.is_alive:
-                    continue
-                df, seq = e.data_file, e.sequence_number
-                df.file_path = table._resolve(df.file_path)
-                if df.content == 0:
-                    task = FileScanTask(df, seq, mle.partition_spec_id)
-                    c = canon_data_path(df.file_path)
-                    files.add(c)
-                    if own and e.status == STATUS_ADDED:
-                        added.append(task)
-                    else:
-                        alive[c] = task
-                elif own and e.status == STATUS_ADDED:
-                    (added_pos if df.content == 1 else added_eq).append(
-                        DeleteFileTask(df, seq))
-                elif not own:
-                    (prior_pos if df.content == 1 else prior_eq).append(
-                        DeleteFileTask(df, seq))
+            if i == 0 and not (own and snap.snapshot_id in window):
+                listed[path] = mle  # read when a later need seeds it
+                continue
+            listed[path] = files = take(mle, own, added, added_pos,
+                                        added_eq)
             relisted |= files
-        # files of the manifests no longer listed that no new one lists
-        dropped = [alive.pop(c) for files in before.values()
-                   for c in files if c not in relisted and c in alive]
         op = (snap.summary or {}).get("operation", "append")
-        if snap.snapshot_id in window and op != "replace":
+        emit = snap.snapshot_id in window and op != "replace"
+        if emit and (added_pos or added_eq or before):
+            seed(before)
+            seed(listed)
+        # files of the manifests no longer listed that no new one lists;
+        # an unread manifest dropped by a skipped snapshot put none of
+        # its files in `alive`
+        dropped = [alive.pop(c) for files in before.values()
+                   if isinstance(files, set)
+                   for c in files if c not in relisted and c in alive]
+        if emit:
             out.append(snapshot_task(snap, added, added_pos, added_eq,
                                      dropped))
         # deletes accumulate over EVERY walked snapshot, not just in-
         # window ones: a row an earlier micro-batch's delete killed must
         # not re-emit a delete event when a later snapshot's delete hits
         # it again, or batch boundaries change the changelog
-        prior_pos.extend(added_pos)
-        prior_eq.extend(added_eq)
+        prior_pos.update((t.delete_file.file_path, t) for t in added_pos)
+        prior_eq.update((t.delete_file.file_path, t) for t in added_eq)
         alive.update((canon_data_path(t.data_file.file_path), t)
                      for t in added)
     return out
@@ -1019,11 +1066,13 @@ class IcelakePartitionStreamReader(_TableFileReader, DataSourceStreamReader):
     model (table.rs:281-304)."""
 
     def __init__(self, options: dict, schema):
+        from .table import IcebergTable
+
         self.options = options
         # the same column identity and shipped FileIO as the batch
         # reader (a struct member renamed in an externally-written file
         # must bind by its nested field id in the STREAM too)
-        self._bind(options, schema)
+        self._bind(IcebergTable.load(options["path"]), options, schema)
         # rate limit (Iceberg's max-files-per-micro-batch analogue at
         # snapshot granularity): each trigger advances the offset by at
         # most N sequence numbers, so a backlogged stream catches up in

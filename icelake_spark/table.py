@@ -758,8 +758,9 @@ class IcebergTable:
                 to_snapshot_id: int | None = None) -> DataFrame:
         """Row-level changelog (CDC read) in (from, to]: table columns +
         _change_type/_commit_snapshot_id/_commit_order, from the one
-        changelog decoder (the DataSource's changelog mode, batch-read;
-        copy-on-write commits included). Raises ValueError when
+        changelog planner and decoder (the DataSource's changelog mode,
+        planned from this object's metadata; copy-on-write commits
+        included). Raises ValueError when
         from_snapshot_id is not an ancestor of the head. See
         changelog.py."""
         from .changelog import changes as _changes

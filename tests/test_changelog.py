@@ -856,9 +856,9 @@ def test_reused_changelog_frame_ignores_pushed_filters(spark, warehouse):
 
 def test_changelog_readers_agree_across_history(spark, warehouse,
                                                 arrow_rows):
-    """changes() (the whole history and a from_snapshot_id window), the
-    batch format("icelake") changelog read and the changelog stream
-    reader decode one history to the same events: append, CoW delete,
+    """changes() (the whole history and the window after each
+    snapshot), the batch format("icelake") changelog read and the
+    changelog stream reader decode one history to the same events: append, CoW delete,
     CoW update, MoR delete, upsert, compaction, rename, an upsert over
     the compacted files, DROP + ADD COLUMN c, append. The stream once
     dropped every copy-on-write commit and, after a compaction, emitted
@@ -918,9 +918,8 @@ def test_changelog_readers_agree_across_history(spark, warehouse,
         return sorted(tuple(r)[:5] for r in rows)
 
     schema = IcelakeDataSource({"path": t.path, "changelog": "true"}).schema()
-    for start, expected in ((None, want),
-                            (sid[3], [w for w in want
-                                      if w[4] in sid[4:]])):
+    for k, start in enumerate([None] + sid[:-1]):
+        expected = [w for w in want if w[4] in sid[k:]]
         kwargs = {} if start is None else {"from_snapshot_id": start}
         options = {} if start is None else {"start_snapshot_id": start}
         stream = IcelakePartitionStreamReader(
@@ -935,3 +934,61 @@ def test_changelog_readers_agree_across_history(spark, warehouse,
         assert events(streamed) == expected
         assert events(_read_changelog(spark, t, **options).collect()) \
             == expected
+
+
+def test_changelog_window_reads_only_its_own_manifests(
+        spark, warehouse, monkeypatch, arrow_rows):
+    """A window's planning starts at its base snapshot, so an append
+    window after a long history reads only the manifests its own
+    snapshots wrote, in changes() and in the stream. A window that
+    deletes reads the base's carried-forward manifests then, and
+    decodes the same events as the whole history."""
+    from pyspark.sql import types as T
+
+    from icelake_spark.datasource import (IcelakePartitionStreamReader,
+                                          _stream_offset_of)
+    from icelake_spark.types import manifest
+
+    t = warehouse.create_table("db.chbase",
+                               _schema(spark, "id long, v string"))
+    for i in range(6):
+        t.append(spark.createDataFrame([(i, f"v{i}")], "id long, v string"))
+    t = t.refresh()
+    base, head = t.metadata.ancestors()[1], t.current_snapshot()
+    reads = []
+    real = manifest.read_manifest
+
+    def spy(path, *a, **kw):
+        reads.append(path)
+        return real(path, *a, **kw)
+
+    monkeypatch.setattr(manifest, "read_manifest", spy)
+    own = {m.manifest_path for m in manifest.read_manifest_list(
+        t._resolve(head.manifest_list))
+        if m.added_snapshot_id == head.snapshot_id}
+    assert sorted((r.id, r._change_type) for r in t.changes(
+        spark, from_snapshot_id=base.snapshot_id).collect()) == [
+            (5, "insert")]
+    assert set(reads) == own
+
+    schema = T.StructType(list(t.schema().to_spark().fields)
+                          + [T.StructField("_change_type", T.StringType())])
+    stream = IcelakePartitionStreamReader(
+        {"path": t.path, "changelog": "true"}, schema)
+    reads.clear()
+    parts = stream.partitions({"seq": _stream_offset_of(t, base)},
+                              {"seq": _stream_offset_of(t, head)})
+    assert set(reads) == own
+    assert [r[:3] for p in parts for r in arrow_rows(stream.read(p))] == [
+        (5, "v5", "insert")]
+
+    t.delete_where(spark, "id in (1, 4)")
+    t = t.refresh()
+    reads.clear()
+    window = t.changes(spark, from_snapshot_id=head.snapshot_id)
+    assert len(set(reads)) > 1
+    assert sorted((r.id, r._change_type) for r in window.collect()) == [
+        (1, "delete"), (4, "delete")]
+    assert sorted(tuple(r)[:4] for r in window.collect()) == sorted(
+        tuple(r)[:4] for r in t.changes(spark).collect()
+        if r._commit_snapshot_id == t.current_snapshot().snapshot_id)

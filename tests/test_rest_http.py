@@ -311,6 +311,46 @@ def test_rest_staged_schema_commit_ships_schema(spark, rest_server):
     assert got == [(0, 0), (1, 2), (2, 4)]
 
 
+def test_rest_changes_and_apply_changes(spark, rest_server):
+    """changes() and apply_changes read a catalog-managed table from its
+    in-memory metadata: the client writes no metadata files, so a read
+    that reloads the table by path finds none."""
+    from icelake_spark.catalog.rest import RestCatalog
+    from icelake_spark.changelog import apply_changes
+
+    uri, _ = rest_server
+    cat = RestCatalog(uri)
+    cat.create_namespace("db.cdc")
+    src = spark.createDataFrame([(i, f"v{i}") for i in range(6)],
+                                "id long, v string")
+    s = cat.create_table("db.cdc.src", Schema.from_spark(src.schema))
+    tgt = cat.create_table("db.cdc.tgt", Schema.from_spark(src.schema))
+    s.append(src)
+    first = s.current_snapshot().snapshot_id
+    s.delete_where(spark, "id < 2")
+    s = cat.load_table("db.cdc.src")
+    second = s.current_snapshot().snapshot_id
+
+    got = sorted((r.id, r.v, r._change_type, r._commit_snapshot_id)
+                 for r in s.changes(spark).collect())
+    assert got == sorted([(i, f"v{i}", "insert", first) for i in range(6)]
+                         + [(0, "v0", "delete", second),
+                            (1, "v1", "delete", second)])
+    assert sorted((r.id, r._change_type) for r in s.changes(
+        spark, from_snapshot_id=first).collect()) == [
+            (0, "delete"), (1, "delete")]
+
+    assert apply_changes(s, tgt, spark, key_cols=["id"]) == 8
+    s.upsert(spark.createDataFrame([(3, "NEW")], "id long, v string"),
+             key_cols=["id"])
+    s = cat.load_table("db.cdc.src")
+    tgt = cat.load_table("db.cdc.tgt")
+    assert apply_changes(s, tgt, spark, key_cols=["id"]) == 2
+    tgt = cat.load_table("db.cdc.tgt")
+    assert sorted(map(tuple, tgt.to_df(spark).collect())) == \
+        sorted(map(tuple, s.to_df(spark).collect()))
+
+
 def test_rest_prefix_routing_and_config_merge():
     """Conforming servers assign a route prefix via /v1/config (spec:
     all table/namespace routes become /v1/{prefix}/...; the config
